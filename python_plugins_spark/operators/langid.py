@@ -62,6 +62,7 @@ import pandas as pd  # noqa: F401 — resolves postponed type hints in pandas UD
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from python_plugins_spark.session import stage_checkpoint
+from python_plugins_spark.sources.io import scan_width, spread_scan
 
 
 # Original prose fixture corpora (see module docstring: these exist to
@@ -451,7 +452,6 @@ def lang_id_ngram(
     id_col: str,
     mode: str = "arrow",
     carry: list[str] | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, pred_lang, n_trigrams, score_<lang>...) — trigram NB
     language ID with the script branch. Two equivalent scoring paths
@@ -475,19 +475,13 @@ def lang_id_ngram(
     input columns to pass through (the pipeline stage carries the whole
     row this way — a narrow projection, never a join-back shuffle)."""
     from python_plugins_spark.functions import norm_text
-    from python_plugins_spark.sources.io import spread_scan
 
     carry = [c for c in (carry or []) if c not in (id_col,)]
     nlangs = len(LANGS)
     # round 12 (guide §2.5): the trigram fold is CPU-bound (Python in
     # arrow mode, interpreted HOFs in expr mode); a 1-split scan would
-    # serialize it on one core. No-op on already-parallel inputs;
-    # callers that KNOW the input is parallel (lang_id_tiered's routed
-    # subsets of its spread+checkpointed base) pass spread=False to
-    # skip even the partition-count probe, which costs a physical
-    # planning pass of the input subtree.
-    if spread:
-        df = spread_scan(df)
+    # serialize it on one core.
+    df = spread_scan(df)
     if mode == "expr":
         # ONE generated SQL expression for the ~800-entry literal map —
         # building it from individual F.lit() Columns costs thousands
@@ -856,7 +850,6 @@ def lang_id_cyrillic(
     text_col: str,
     id_col: str,
     carry: list[str] | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, pred_lang, n_trigrams, margin, score_ru/uk/bg) — the
     per-script model downstream of the 'cyrillic' branch: multinomial
@@ -864,11 +857,8 @@ def lang_id_cyrillic(
     CYRILLIC_CORPORA. Same Arrow-batched sequential left-fold as the
     Latin flagship (bit-identical to the oracle's list_reduce), zero
     shuffles."""
-    from python_plugins_spark.sources.io import spread_scan
-
     carry = [c for c in (carry or []) if c != id_col]
-    if spread:
-        df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
+    df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
     logp, oov, nl = _CYR_LOGP, _CYR_OOV, len(CYR_LANGS)
 
     idx_map, mat = _profile_matrix(logp, oov)
@@ -1070,7 +1060,6 @@ def lang_id_cjk(
     text_col: str,
     id_col: str,
     carry: list[str] | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, pred_lang, n_trigrams, margin, score_zh/ja/ko) — the
     per-script model downstream of the CJK branch, mirroring
@@ -1080,11 +1069,8 @@ def lang_id_cjk(
     character choice. Same Arrow-batched sequential left-fold as the
     Latin flagship (bit-identical to the oracle's list_reduce), zero
     shuffles; the presence counts are JVM regexp expressions."""
-    from python_plugins_spark.sources.io import spread_scan
-
     carry = [c for c in (carry or []) if c != id_col]
-    if spread:
-        df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
+    df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
     logp, oov, nl = _CJK_LOGP, _CJK_OOV, len(CJK_LANGS)
 
     idx_map, mat = _profile_matrix(logp, oov)
@@ -1432,7 +1418,6 @@ def lang_id_devanagari(
     text_col: str,
     id_col: str,
     carry: list[str] | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, pred_lang, n_trigrams, margin, score_hi/mr/ne) — the
     per-script model downstream of the 'hi' branch, mirroring
@@ -1443,11 +1428,8 @@ def lang_id_devanagari(
     sequential left-fold as the Latin flagship (bit-identical to the
     oracle's list_reduce), zero shuffles; the presence count is a
     JVM regexp expression."""
-    from python_plugins_spark.sources.io import spread_scan
-
     carry = [c for c in (carry or []) if c != id_col]
-    if spread:
-        df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
+    df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
     logp, oov, nl = _DEV_LOGP, _DEV_OOV, len(DEV_LANGS)
 
     idx_map, mat = _profile_matrix(logp, oov)
@@ -1613,27 +1595,21 @@ def lang_id_tiered(
             "lang_id_tiered: carried columns may not be named "
             "'lang' or 'tier' (the verdict columns); rename them first"
         )
-    in_parts = (
-        df.sparkSession.sparkContext.defaultParallelism
-        if df.isStreaming
-        else df.rdd.getNumPartitions()
-    )
+    in_parts = scan_width(df)
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     base = lang_id_ngram(
         df, text_col, id_col,
         carry=[text_col] + [c for c in carry if c != text_col],
     )
     base = base.transform(stage_checkpoint)
-    if not df.isStreaming and in_parts < base.rdd.getNumPartitions():
-        # the scorer's spread_scan widened a small input so the heavy
-        # base pass used the cluster; but SIX downstream consumers
-        # (five tier branches + rest) each schedule one job over this
-        # checkpointed frame, and near-empty defaultParallelism-wide
-        # jobs cost more than they parallelize (measured: tiered 5.27 s
-        # min spread-only vs 3.62 s unspread at sf0.1). Coalescing the
-        # MATERIALIZED blocks back to the input's own width is narrow
-        # (no second shuffle) and keeps the base pass parallel. At
-        # corpus scale the input is already >= cluster width, nothing
-        # fires, and every branch keeps full parallelism.
+    if in_parts is not None and in_parts < parallelism:
+        # the scorer spread this small input so the base pass used the
+        # cluster; but six consumers (five tiers + rest) each run a job
+        # over the checkpoint, and near-empty cluster-wide jobs cost
+        # more than they parallelize (tiered 5.27 s min spread-only vs
+        # 3.62 s unspread at sf0.1). Coalescing the materialized blocks
+        # back to the input's width is narrow; the tiers never re-spread
+        # a checkpoint.
         base = base.coalesce(max(1, in_parts))
     routed = ("ru", "zh", "ja", "ko", "ar", "hi")
     rest = base.filter(~F.col("pred_lang").isin(*routed)).select(
@@ -1644,7 +1620,7 @@ def lang_id_tiered(
     )
     cyr = lang_id_cyrillic(
         base.filter(F.col("pred_lang") == "ru"), text_col, id_col,
-        carry=carry, spread=False,
+        carry=carry,
     ).select(
         F.col(id_col),
         *[F.col(c) for c in carry],
@@ -1655,7 +1631,7 @@ def lang_id_tiered(
         base.filter(F.col("pred_lang").isin("zh", "ja", "ko")),
         text_col,
         id_col,
-        carry=carry, spread=False,
+        carry=carry,
     ).select(
         F.col(id_col),
         *[F.col(c) for c in carry],
@@ -1673,7 +1649,7 @@ def lang_id_tiered(
     )
     dev = lang_id_devanagari(
         base.filter(F.col("pred_lang") == "hi"), text_col, id_col,
-        carry=carry, spread=False,
+        carry=carry,
     ).select(
         F.col(id_col),
         *[F.col(c) for c in carry],

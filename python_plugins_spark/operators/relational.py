@@ -120,7 +120,6 @@ def top_k_per_group(
     order_by: Sequence[Column],
     k: int,
     rank_col: str = "rn",
-    spread: bool = True,
 ) -> DataFrame:
     """Per-group top-k via row_number — one hash shuffle on the group
     keys, no global sort.
@@ -131,31 +130,20 @@ def top_k_per_group(
     carries ~k rows per (group, map task) regardless of input size.
     That makes the map-side SORT the whole cost, and its parallelism
     is the SCAN's split count: a small single-file table scans in 1-3
-    splits and sorts on 1-3 cores while the cluster idles. spread_scan
-    fixes exactly that regime (round-robin to cluster width, no-op
-    when the input already carries >= parallelism partitions — every
-    real corpus scan). Interleaved A/B at sf0.1: 1.78 s min plain vs
-    1.24 s spread; a salted two-phase window variant measured WORSE
-    (2.23 s — it re-buys the exchange WindowGroupLimit already
-    avoids). Low-cardinality groups do NOT bottleneck the reduce side
-    here precisely because the exchange moves only group-limit
-    survivors.
-
-    ``spread=False`` (round 13, ADVICE): the spread probe
-    (``df.rdd.getNumPartitions()``) physically plans the input subtree
-    on every invocation, and under AQE a shuffle-bearing input can
-    have upstream stages executed eagerly by the probe and again at
-    action time — the same reason the lang_id family gates its spread
-    behind a flag. Callers feeding a complex/non-scan frame should
-    pass ``spread=False``; the default keeps the measured bare-scan
-    win (the one registry caller feeds a bare lineitem scan)."""
+    splits and sorts on 1-3 cores while the cluster idles. The input
+    therefore goes through :func:`sources.io.spread_scan`, which widens
+    only an under-split scan, decided from the plan (shuffle output,
+    checkpoints and streams keep their width). Interleaved A/B at
+    sf0.1: 1.78 s min plain vs 1.24 s spread; a salted two-phase window
+    variant measured WORSE (2.23 s — it re-buys the exchange
+    WindowGroupLimit already avoids). Low-cardinality groups do NOT
+    bottleneck the reduce side: the exchange moves only group-limit
+    survivors."""
     from python_plugins_spark.sources.io import spread_scan
 
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    if spread:
-        df = spread_scan(df)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
+        spread_scan(df).withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
 

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from python_plugins_spark.functions import tokens
+from python_plugins_spark.sources.io import scan_width
 
 _EOW = "</w>"  # end-of-word marker (the standard BPE convention)
 
@@ -447,26 +448,19 @@ def bpe_encode(df: DataFrame, text_col: str, id_col: str, merges,
             )
 
     # Scale-adaptive repartition between the distinct and the encode
-    # pass (round 13, guide §2.5-class): the distinct's output is tiny
-    # in BYTES, so AQE's partition coalescing collapses it to ONE
-    # partition — and the rank-encode mapInPandas (the only Python CPU
-    # in this operator) then runs single-task no matter how many cores
-    # the cluster has. At a web-scale vocabulary (~1e6 words x ~30
-    # us/word) that is ~30 s of serial Python on one core per corpus
-    # encode. The repartition is gated on the INPUT already being at
-    # least cluster-wide (the spread_scan heuristic, inverted: a real
-    # corpus scan carries >= defaultParallelism splits and a
-    # correspondingly large vocabulary; the bench/test tables do not)
-    # because an UNCONDITIONAL repartition measured a real local
-    # regression — interleaved A/B at sf0.1: bpe_encode noop min
-    # 1.15 s without vs 1.40 s with (the extra vocabulary exchange is
-    # pure overhead when the vocab fits one Arrow batch anyway). The
-    # re-shuffled bytes are vocabulary-bounded, so at scale the extra
-    # exchange is noise while the encode parallelizes cluster-wide.
-    sc = df.sparkSession.sparkContext
+    # pass (round 13): AQE coalesces the byte-tiny distinct to ONE
+    # partition, so the rank-encode mapInPandas (this operator's only
+    # Python CPU) runs single-task — ~30 s of serial Python per encode
+    # at a web-scale vocabulary (~1e6 words x ~30 us). It fires only
+    # when the INPUT is a scan at least as wide as the cluster
+    # (spread_scan's plan-read width, inverted): an unconditional
+    # repartition measured a local regression (bpe_encode noop min
+    # 1.15 s without vs 1.40 s with at sf0.1), while at corpus scale
+    # the vocabulary-bounded exchange is noise.
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     encoded = words.select("w").distinct()
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        encoded = encoded.repartition(sc.defaultParallelism)
+    if (scan_width(df) or 0) >= parallelism:
+        encoded = encoded.repartition(parallelism)
     encoded = encoded.mapInPandas(encode_distinct, enc_schema)
 
     assembled = (

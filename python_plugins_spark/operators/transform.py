@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 
 from python_plugins_spark.schema import cdap_schema_to_spark
 from python_plugins_spark.session import stage_checkpoint
+from python_plugins_spark.sources.io import spread_scan
 
 PORT_OUT = "out"
 PORT_ERROR = "error"
@@ -407,15 +408,10 @@ def python_transform(
     args = args or {}
     lookups = lookups or {}
 
-    # The Python loop is CPU-bound per record; an under-partitioned
-    # input (one small parquet file -> 1-3 splits) would serialize it
-    # on a few cores. Repartitioning a small input costs a trivial
-    # shuffle; at real scale inputs already carry >= parallelism
-    # partitions and this is a no-op.
-    if not df.isStreaming:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < parallelism:
-            df = df.repartition(parallelism)
+    # The Python loop is CPU-bound per record; an under-split scan
+    # (one small parquet file -> 1-3 splits) would serialize it on a
+    # few cores.
+    df = spread_scan(df)
 
     accumulators: dict[str, Any] = {}
     if metrics:

@@ -69,30 +69,68 @@ def read_json(
     return reader.json(path)
 
 
-def spread_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
-    """Round-robin repartition an UNDER-PARTITIONED input before a
-    CPU-bound narrow stage (per-doc Python UDFs, tokenize/shingle/hash
-    pipelines), so the stage uses the whole cluster instead of one
-    core per input split.
+# Logical nodes whose physical operator maps each input partition to
+# one output partition (Union concatenates its children's).
+_NARROW_NODES = frozenset({
+    "Project", "Filter", "Union", "Generate", "Sample", "Expand",
+    "MapInPandas", "MapInArrow", "BatchEvalPython", "ArrowEvalPython",
+})
+_SCAN_LEAVES = frozenset({"LogicalRelation", "DataSourceV2ScanRelation", "Range"})
 
-    This is the optimization guide's input-skew fix (one small or
-    unsplittable file -> 1 scan task) generalized from the precedent
-    already in :func:`operators.transform.python_transform`. It is
-    scale-ADAPTIVE, not a local[32] constant: when the input already
-    carries at least ``defaultParallelism`` partitions — every real
-    corpus scan, whose file count dwarfs the core count — it is a
-    no-op and adds nothing to the plan. It only fires when the scan
-    cannot feed the cluster, where one extra exchange of the raw rows
-    (trivially small by construction: the whole input fits in fewer
-    splits than there are cores) buys parallelism for everything
-    downstream. Streaming frames pass through untouched (their
-    micro-batch partitioning is the source's contract)."""
+
+def _narrow_width(node, splits, scan_top=None) -> int | None:
+    """Sum of the scans' split counts under an all-narrow ``node``, else
+    None. A scan is planned with the subquery-free Project/Filter chain
+    directly on it (``scan_top``): path-based partition pruning happens
+    only at physical planning."""
+    name = node.getClass().getSimpleName()
+    if name in _SCAN_LEAVES:
+        return splits(scan_top or node)
+    if name not in _NARROW_NODES:
+        return None
+    chain = name in ("Project", "Filter") and node.subqueries().isEmpty()
+    scan_top = (scan_top or node) if chain else None
+    width = 0
+    it = node.children().iterator()
+    while it.hasNext():
+        child = _narrow_width(it.next(), splits, scan_top)
+        if child is None:
+            return None
+        width += child
+    return width
+
+
+def scan_width(df: DataFrame) -> int | None:
+    """Partition count of a batch frame that is only narrow nodes over
+    source scans, read from its optimized plan; None for every other
+    frame (shuffle output, checkpointed, cached or local data, a
+    stream). Only the scans are planned, so no job starts."""
     if df.isStreaming:
-        return df
+        return None
+    dataset = df._sc._jvm.org.apache.spark.sql.classic.Dataset  # type: ignore[attr-defined]
+    session = df.sparkSession._jsparkSession
+
+    def splits(scan) -> int:
+        return dataset.ofRows(session, scan).queryExecution().toRdd().getNumPartitions()
+
+    return _narrow_width(df._jdf.queryExecution().optimizedPlan(), splits)
+
+
+def spread_scan(df: DataFrame) -> DataFrame:
+    """Round-robin an UNDER-SPLIT scan to ``defaultParallelism`` before
+    a CPU-bound narrow stage (per-record Python, tokenize/shingle/hash),
+    so the stage uses every core instead of one per input split.
+
+    The library's one parallelism rule, read from the plan: a frame
+    whose :func:`scan_width` is below the core count is spread. Every
+    other frame keeps its width: a scan that already feeds the cluster
+    (every real corpus scan), shuffle output, a checkpoint or cache
+    (never re-spread), a stream (its source owns the partitioning)."""
+    width = scan_width(df)
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= (parts or parallelism):
+    if width is None or width >= parallelism:
         return df
-    return df.repartition(parts or parallelism)
+    return df.repartition(parallelism)
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
