@@ -9,7 +9,7 @@ as an idiomatic Spark DataFrame engine:
 - :mod:`python_plugins_spark.operators.transform` — the record-level
   Python transform with multi-port emit (emit / emitError / emitAlert),
   declared output schemas, runtime arguments, metrics, logging and
-  lookups, vectorized over Arrow batches via ``mapInPandas``.
+  lookups, vectorized over Arrow batches via ``mapInArrow``.
 - :mod:`python_plugins_spark.operators.relational` — named relational
   operators (filter/project/join/agg/window/topk/setops/...) as thin
   Catalyst-native wrappers.

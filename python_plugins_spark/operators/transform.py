@@ -33,9 +33,11 @@ Architecture vs the reference: the reference crosses a process boundary
 (``Py4jPythonExecutor.java:226-237``) or re-executes the script per
 record in Jython (``JythonPythonExecutor.java:78-81``). Here the user
 function crosses the JVM<->Python boundary once per **Arrow batch**
-(``mapInPandas``), the script is compiled once per executor, and Spark
+(``mapInArrow``), the script is compiled once per executor, and Spark
 reuses Python workers — the per-record cost is a plain Python function
-call. This is the single biggest architectural win and why no custom
+call. Records are decoded from and encoded to Arrow directly
+(``_batch_to_records`` / ``_records_to_batch``), with no pandas step.
+This is the single biggest architectural win and why no custom
 channel/TLS code (``KeyStores.java``) is needed: Spark owns the
 executor<->worker channel.
 
@@ -52,16 +54,23 @@ import logging
 import traceback
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
-from typing import Any
+from datetime import timezone
+from typing import TYPE_CHECKING, Any
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from python_plugins_spark.schema import cdap_schema_to_spark
 from python_plugins_spark.session import stage_checkpoint
 from python_plugins_spark.sources.io import spread_scan
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 PORT_OUT = "out"
 PORT_ERROR = "error"
@@ -249,35 +258,105 @@ class Emitter:
     emitAlert = emit_alert
 
 
-def _pdf_to_records(pdf: pd.DataFrame) -> list[dict]:
+def _is_numpy_type(t: pa.DataType) -> bool:
+    """Types whose values convert through one numpy ``tolist()`` —
+    5-30x faster than ``to_pylist``, which builds a scalar per value."""
+    return (
+        pa.types.is_integer(t)
+        or pa.types.is_floating(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_timestamp(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+    )
+
+
+def _has_map(t: pa.DataType) -> bool:
+    if pa.types.is_map(t):
+        return True
+    if pa.types.is_struct(t):
+        return any(_has_map(f.type) for f in t)
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return _has_map(t.value_type)
+    return False
+
+
+def _maps_as_dicts(value: Any, t: pa.DataType) -> Any:
+    """``to_pylist`` yields a map as (key, value) pairs; the script gets
+    a dict, at any depth (pyarrow 16 has no ``maps_as_pydicts``)."""
+    if value is None or not _has_map(t):
+        return value
+    if pa.types.is_map(t):
+        return {k: _maps_as_dicts(v, t.item_type) for k, v in value}
+    if pa.types.is_struct(t):
+        return {f.name: _maps_as_dicts(value[f.name], f.type) for f in t}
+    return [_maps_as_dicts(v, t.value_type) for v in value]
+
+
+def _column_values(col: pa.Array) -> list:
+    """One Arrow column -> plain Python values, nulls as None. Integers
+    stay ``int`` and arrays are ``list`` whether or not the batch holds
+    nulls (reference ``PythonObjectsEncoder.java:44-45,53-54``);
+    timestamps are naive ``datetime`` in the session time zone."""
+    t = col.type
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        col = pc.local_timestamp(col)
+    if not _is_numpy_type(t):
+        values = col.to_pylist()
+        return [_maps_as_dicts(v, t) for v in values] if _has_map(t) else values
+    if not col.null_count or pa.types.is_string(t) or pa.types.is_large_string(t):
+        # strings convert their nulls to None themselves
+        return col.to_numpy(zero_copy_only=False).tolist()
+    fill = pa.scalar(False if pa.types.is_boolean(t) else 0, col.type)
+    values = col.fill_null(fill).to_numpy(zero_copy_only=False).tolist()
+    for i in np.flatnonzero(col.is_null().to_numpy(zero_copy_only=False)).tolist():
+        values[i] = None
+    return values
+
+
+def _batch_to_records(batch: pa.RecordBatch) -> list[dict]:
     """Arrow batch -> list of plain-Python dicts (the reference's
     ``encodeRecord``, ``PythonObjectsEncoder.java:70-76``, done
-    batch-at-a-time). NaN/NaT normalize to None so user code sees the
-    same null convention as the reference.
-
-    Column-wise ``tolist()`` + zip is ~3.5x faster than
-    ``astype(object).where(...).to_dict('records')`` (no full-frame
-    object copy); the null mask is computed vectorized per column and
-    only applied to columns that actually contain nulls."""
-    names = list(pdf.columns)
-    columns = []
-    for c in names:
-        series = pdf[c]
-        vals = series.tolist()
-        isna = series.isna()
-        if isna.values.any():
-            vals = [None if m else v for v, m in zip(vals, isna.tolist())]
-        columns.append(vals)
+    batch-at-a-time, one column conversion each)."""
+    names = batch.schema.names
+    columns = [_column_values(col) for col in batch.columns]
     return [dict(zip(names, row)) for row in zip(*columns)]
 
 
-def _records_to_pdf(rows: list[dict], schema: T.StructType) -> pd.DataFrame:
-    """Emitted dicts -> batch under the declared output schema: schema
-    fields missing from a dict become null, extra dict keys are dropped
-    (reference ``PythonObjectsEncoder.java:148-156``)."""
-    names = schema.fieldNames()
-    data = {name: [row.get(name) for row in rows] for name in names}
-    return pd.DataFrame(data, columns=names, dtype=object)
+def _to_array(values: list, t: pa.DataType) -> pa.Array:
+    """Spark's own rule for pandas UDF output (``arrow_cast`` on,
+    safecheck off): convert to the declared type, else infer and cast
+    unsafely. NaN and NaT become null, as they did through pandas."""
+    if pa.types.is_timestamp(t):
+        # pyarrow keeps an aware datetime's wall time under a declared
+        # type; naive values already are session (UTC) wall time
+        values = [
+            v.astimezone(timezone.utc) if getattr(v, "tzinfo", None) is not None else v
+            for v in values
+        ]
+    try:
+        return pa.array(values, type=t, from_pandas=True)
+    except pa.ArrowInvalid:
+        return pa.array(values, from_pandas=True).cast(t, safe=False)
+
+
+def _records_to_batch(
+    rows: list[dict], schema: pa.Schema, tags: dict[str, list] | None = None
+) -> pa.RecordBatch:
+    """Emitted dicts -> one Arrow batch under the declared output schema:
+    schema fields missing from a dict become null, extra dict keys are
+    dropped (reference ``PythonObjectsEncoder.java:148-156``). ``tags``
+    gives whole columns by name (the multi-port frame's ``_port``,
+    ``_error``, ``_alert``); the row-derived columns are null past
+    ``len(rows)``."""
+    tags = tags or {}
+    n = len(next(iter(tags.values()))) if tags else len(rows)
+    pad = [None] * (n - len(rows))
+    arrays = [
+        _to_array(tags[name] if name in tags else [r.get(name) for r in rows] + pad, t)
+        for name, t in zip(schema.names, schema.types)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 @dataclass
@@ -432,6 +511,62 @@ def python_transform(
         )
 
     multi_port = emit_errors or emit_alerts
+    out_names = out_schema.fieldNames()
+    in_names = input_schema.fieldNames()
+    spark_schema = out_schema
+    if multi_port:
+        # One physical pass emits a tagged frame; each port is a filtered
+        # view (SURVEY.md §2a #2-4 mapping). The main-output fields are
+        # FLAT columns of the tagged frame (not a nested struct): the
+        # common case is ~all rows on the main port, and flat scalar
+        # columns convert to Arrow several times faster than per-row
+        # struct dicts.
+        reserved = {"_port", "_error", "_alert"}
+        if reserved & set(out_names):
+            raise ValueError(
+                f"output schema field names {reserved & set(out_names)} collide "
+                "with the multi-port tag columns"
+            )
+        error_struct = T.StructType(
+            [
+                T.StructField("errorCode", T.IntegerType(), True),
+                T.StructField("errorMsg", T.StringType(), True),
+                T.StructField("invalidRecord", input_schema, True),
+            ]
+        )
+        spark_schema = T.StructType(
+            [T.StructField("_port", T.StringType(), False)]
+            + [T.StructField(f.name, f.dataType, True) for f in out_schema.fields]
+            + [
+                T.StructField("_error", error_struct, True),
+                T.StructField("_alert", T.MapType(T.StringType(), T.StringType()), True),
+            ]
+        )
+    large_var_types = df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes", "false"
+    )
+    arrow_schema = to_arrow_schema(
+        spark_schema, prefers_large_types=large_var_types.lower() == "true"
+    )
+
+    def assemble(emitter: Emitter) -> pa.RecordBatch:
+        if not multi_port:
+            return _records_to_batch(emitter.rows, arrow_schema)
+        n_o, n_e, n_a = len(emitter.rows), len(emitter.errors), len(emitter.alerts)
+        error_rows = [
+            {
+                "errorCode": int(e.get("errorCode", 0) or 0),
+                "errorMsg": e.get("errorMsg"),
+                "invalidRecord": {n: (e.get("invalidRecord") or {}).get(n) for n in in_names},
+            }
+            for e in emitter.errors
+        ]
+        tags = {
+            "_port": [PORT_OUT] * n_o + [PORT_ERROR] * n_e + [PORT_ALERT] * n_a,
+            "_error": [None] * n_o + error_rows + [None] * n_a,
+            "_alert": [None] * (n_o + n_e) + emitter.alerts,
+        }
+        return _records_to_batch(emitter.rows, arrow_schema, tags)
 
     def make_fn():
         """Build the worker-side batch function. The script is compiled
@@ -445,15 +580,15 @@ def python_transform(
         captured_acc = accumulators
         route = on_error == "route"
 
-        def transform_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def transform_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             fn = captured_func if captured_func is not None else _load_transform_fn(captured_script)
             logger = logging.getLogger("python_transform")
             context = ScriptContext(
                 captured_args, _Metrics(captured_acc), captured_lookups, logger
             )
-            for pdf in batches:
+            for batch in batches:
                 emitter = Emitter()
-                for record in _pdf_to_records(pdf):
+                for record in _batch_to_records(batch):
                     try:
                         fn(record, emitter, context)
                     except Exception as exc:
@@ -472,84 +607,26 @@ def python_transform(
                                 "Could not transform input.\n"
                                 + traceback.format_exc()
                             ) from exc
-                yield _assemble(emitter)
+                yield assemble(emitter)
             local = context.get_metrics().local_counts()
             if local:
                 logger.info("python_transform local metrics: %s", local)
 
         return transform_batches
 
+    mapped = df.mapInArrow(make_fn(), spark_schema)
     if not multi_port:
-        def _assemble(emitter: Emitter) -> pd.DataFrame:
-            return _records_to_pdf(emitter.rows, out_schema)
+        return TransformResult(output=mapped, _accumulators=accumulators)
 
-        out_df = df.mapInPandas(make_fn(), out_schema)
-        return TransformResult(output=out_df, _accumulators=accumulators)
-
-    # Multi-port: one physical pass emits a tagged frame; each port is a
-    # filtered view (SURVEY.md §2a #2-4 mapping). The main-output fields
-    # are FLAT columns of the tagged frame (not a nested struct): the
-    # common case is ~all rows on the main port, and flat scalar columns
-    # convert to Arrow several times faster than per-row struct dicts.
-    error_struct = T.StructType(
-        [
-            T.StructField("errorCode", T.IntegerType(), True),
-            T.StructField("errorMsg", T.StringType(), True),
-            T.StructField("invalidRecord", input_schema, True),
-        ]
-    )
-    out_names = out_schema.fieldNames()
-    in_names = input_schema.fieldNames()
-    reserved = {"_port", "_error", "_alert"}
-    if reserved & set(out_names):
-        raise ValueError(
-            f"output schema field names {reserved & set(out_names)} collide "
-            "with the multi-port tag columns"
-        )
-    tagged_schema = T.StructType(
-        [T.StructField("_port", T.StringType(), False)]
-        + [T.StructField(f.name, f.dataType, True) for f in out_schema.fields]
-        + [
-            T.StructField("_error", error_struct, True),
-            T.StructField("_alert", T.MapType(T.StringType(), T.StringType()), True),
-        ]
-    )
-
-    def _assemble(emitter: Emitter) -> pd.DataFrame:
-        n_o, n_e, n_a = len(emitter.rows), len(emitter.errors), len(emitter.alerts)
-        data = {"_port": [PORT_OUT] * n_o + [PORT_ERROR] * n_e + [PORT_ALERT] * n_a}
-        pad = [None] * (n_e + n_a)
-        for name in out_names:
-            data[name] = [r.get(name) for r in emitter.rows] + pad
-        data["_error"] = (
-            [None] * n_o
-            + [
-                {
-                    "errorCode": int(e.get("errorCode", 0) or 0),
-                    "errorMsg": e.get("errorMsg"),
-                    "invalidRecord": {
-                        n: (e.get("invalidRecord") or {}).get(n) for n in in_names
-                    },
-                }
-                for e in emitter.errors
-            ]
-            + [None] * n_a
-        )
-        data["_alert"] = [None] * (n_o + n_e) + list(emitter.alerts)
-        return pd.DataFrame(
-            data, columns=["_port", *out_names, "_error", "_alert"], dtype=object
-        )
-
-    tagged = df.mapInPandas(make_fn(), tagged_schema)
-    output = tagged.filter(F.col("_port") == PORT_OUT).select(*out_names)
-    errors = tagged.filter(F.col("_port") == PORT_ERROR).select("_error.*")
+    output = mapped.filter(F.col("_port") == PORT_OUT).select(*out_names)
+    errors = mapped.filter(F.col("_port") == PORT_ERROR).select("_error.*")
     alerts = (
-        tagged.filter(F.col("_port") == PORT_ALERT).select(F.col("_alert").alias("alert"))
+        mapped.filter(F.col("_port") == PORT_ALERT).select(F.col("_alert").alias("alert"))
         if emit_alerts
         else None
     )
     return TransformResult(
-        output=output, errors=errors, alerts=alerts, _tagged=tagged, _accumulators=accumulators
+        output=output, errors=errors, alerts=alerts, _tagged=mapped, _accumulators=accumulators
     )
 
 

@@ -9,6 +9,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# Plan-node name fragments of every operator that runs Python per row or
+# per batch (python_transform's is ``MapInArrow``); a plan that claims to
+# stay in whole-stage codegen contains none of them.
+PYTHON_NODE_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
+
 
 def plan_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 # Arrow batch size: the unit of work crossing the JVM<->Python boundary in
-# mapInPandas/pandas_udf. 10k rows amortizes per-batch overhead while
+# mapInArrow/mapInPandas/pandas_udf. 10k rows amortizes per-batch overhead while
 # keeping per-batch memory bounded (~10-50 MB for wide rows).
 _ARROW_BATCH_ROWS = 10_000
 

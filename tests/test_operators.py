@@ -9,6 +9,7 @@ from python_plugins_spark.operators import dedup as D
 from python_plugins_spark.operators import relational as R
 from python_plugins_spark.operators import similarity as S
 from python_plugins_spark.operators.asof import asof_join, asof_join_pandas
+from python_plugins_spark.plans import PYTHON_NODE_MARKERS
 from python_plugins_spark.queries import QUERIES
 from python_plugins_spark.sources.io import load_table
 
@@ -1895,7 +1896,7 @@ def test_bloom_prefilter_dedup_plan_shape(spark, sf_dir):
     plan = plan_str(QUERIES["bloom_prefilter_dedup"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in PYTHON_NODE_MARKERS:
         assert marker not in plan
 
 
@@ -2144,7 +2145,7 @@ def test_jl_projection_preserves_distances_and_plan(spark, sf_dir):
 
     df = QUERIES["jl_projection_embeddings"](spark, sf_dir)
     plan = plan_str(df)
-    for marker in ("Exchange", "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in ("Exchange", *PYTHON_NODE_MARKERS):
         assert marker not in plan
 
     proj = {r["vec_id"]: np.array(r[1:]) for r in df.limit(60).collect()}

@@ -6,6 +6,7 @@ cartesian products, bounded shuffle counts."""
 from pyspark.sql import functions as F
 
 from python_plugins_spark.plans import (
+    PYTHON_NODE_MARKERS,
     count_shuffles,
     has_broadcast_join,
     has_codegen,
@@ -612,7 +613,7 @@ def test_round4_corpus_ops_scale_safe(spark, sf_dir):
         )
         plan = plan_str(df)
         assert "CartesianProduct" not in plan, name
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        for marker in PYTHON_NODE_MARKERS:
             assert marker not in plan, f"{name}: {marker} in plan (Python in hot path)"
 
 
@@ -749,7 +750,7 @@ def test_quality_gate_shuffle_budget(spark, sf_dir):
     assert count_shuffles(df) <= 8
     p = plan_str(df)
     assert "CartesianProduct" not in p
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in PYTHON_NODE_MARKERS:
         assert marker not in p, marker
 
 
@@ -771,7 +772,7 @@ def test_round6b_lm_queries_no_cartesian_and_bounded_joins(spark, sf_dir):
     ):
         plan = plan_str(QUERIES[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, name
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        for marker in PYTHON_NODE_MARKERS:
             assert marker not in plan, f"{name} has {marker}"
 
 

@@ -1,29 +1,20 @@
 """Property-based tests (hypothesis) for the pure-Python layers: the
-record codec that feeds mapInPandas and the CDAP schema bridge.
-Spark-free, so hundreds of examples run in milliseconds — the same
-role the reference's codec micro-tests played
+Arrow record codec that feeds ``python_transform``'s mapInArrow and the
+CDAP schema bridge. Spark-free, so hundreds of examples run in
+milliseconds — the same role the reference's codec micro-tests played
 (PythonObjectsEncoderTest.java:35-49), but generative."""
 
 from __future__ import annotations
 
-import math
+import datetime
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from python_plugins_spark.operators.transform import _pdf_to_records, _records_to_pdf
+from python_plugins_spark.operators.transform import _batch_to_records, _records_to_batch
 from python_plugins_spark.schema import cdap_schema_to_spark, spark_schema_to_cdap
-
-# scalar values a record field can carry (None models SQL null)
-scalars = st.one_of(
-    st.none(),
-    st.booleans(),
-    st.integers(min_value=-(2**53), max_value=2**53),
-    st.floats(allow_nan=False, allow_infinity=False, width=64),
-    st.text(max_size=40),
-)
 
 field_names = st.lists(
     st.text(
@@ -34,41 +25,90 @@ field_names = st.lists(
     unique=True,
 )
 
+# (Arrow column type, strategy for its non-null Python values, the one
+# Python type the script must see). Timestamps arrive as Spark sends
+# them — microseconds, tz-aware UTC — and reach the script naive.
+_ts_values = st.datetimes(
+    min_value=datetime.datetime(1900, 1, 1), max_value=datetime.datetime(2200, 1, 1)
+)
+_codec_columns = [
+    (pa.int64(), st.integers(min_value=-(2**63), max_value=2**63 - 1), int),
+    (pa.int32(), st.integers(min_value=-(2**31), max_value=2**31 - 1), int),
+    (pa.float64(), st.floats(allow_nan=False, allow_infinity=False), float),
+    (pa.bool_(), st.booleans(), bool),
+    (pa.string(), st.text(max_size=20), str),
+    (pa.timestamp("us", tz="UTC"), _ts_values, datetime.datetime),
+    (pa.list_(pa.int32()), st.lists(st.integers(-100, 100), max_size=4), list),
+    (
+        pa.map_(pa.string(), pa.map_(pa.string(), pa.int64())),
+        st.dictionaries(
+            st.text(max_size=4), st.dictionaries(st.text(max_size=4), st.integers(0, 9), max_size=3),
+            max_size=3,
+        ),
+        dict,
+    ),
+    (
+        pa.struct([("k", pa.int64()), ("m", pa.map_(pa.string(), pa.string()))]),
+        st.fixed_dictionaries({
+            "k": st.none() | st.integers(0, 9),
+            "m": st.dictionaries(st.text(max_size=4), st.text(max_size=4), max_size=3),
+        }),
+        dict,
+    ),
+]
+
+
+def _arrow_value(v, arrow_type):
+    """A Python value as pyarrow wants it for ``arrow_type``: maps as
+    (key, value) pairs at any depth, timestamps tz-aware UTC."""
+    if v is None:
+        return None
+    if pa.types.is_map(arrow_type):
+        return [(k, _arrow_value(x, arrow_type.item_type)) for k, x in v.items()]
+    if pa.types.is_struct(arrow_type):
+        return {f.name: _arrow_value(v[f.name], f.type) for f in arrow_type}
+    if pa.types.is_timestamp(arrow_type):
+        return v.replace(tzinfo=datetime.timezone.utc)
+    return v
+
 
 @settings(max_examples=200, deadline=None)
 @given(names=field_names, data=st.data())
-def test_pdf_records_roundtrip(names, data):
-    """pdf -> records -> pdf preserves values and null positions."""
+def test_batch_records_roundtrip(names, data):
+    """batch -> records keeps values, Python types and null positions:
+    nullable integers stay int, arrays are lists, maps are dicts at any
+    depth, timestamps are naive UTC datetimes."""
     n_rows = data.draw(st.integers(min_value=0, max_value=8))
-    rows = [
-        {name: data.draw(scalars) for name in names} for _ in range(n_rows)
+    specs = [data.draw(st.sampled_from(_codec_columns)) for _ in names]
+    columns = [
+        [data.draw(st.none() | values) for _ in range(n_rows)] for _, values, _ in specs
     ]
-    pdf = pd.DataFrame(
-        {name: [r[name] for r in rows] for name in names},
-        columns=names,
-        dtype=object,
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([_arrow_value(v, t) for v in col], type=t)
+            for col, (t, _, _) in zip(columns, specs)
+        ],
+        names=names,
     )
-    recs = _pdf_to_records(pdf)
+    recs = _batch_to_records(batch)
     assert len(recs) == n_rows
-    for rec, row in zip(recs, rows):
-        for name in names:
-            a, b = rec[name], row[name]
-            if isinstance(b, float):
-                assert a == b or (math.isnan(a) if a is not None else False) is False
-                assert a == b
+    for i, rec in enumerate(recs):
+        assert list(rec) == names
+        for name, col, (_, _, py_type) in zip(names, columns, specs):
+            got, want = rec[name], col[i]
+            if want is None:
+                assert got is None, (name, got)
             else:
-                assert a == b, (name, a, b)
+                assert type(got) is py_type and got == want, (name, got, want)
 
 
 @settings(max_examples=200, deadline=None)
 @given(names=field_names, data=st.data())
-def test_records_to_pdf_schema_projection(names, data):
+def test_records_to_batch_schema_projection(names, data):
     """Schema re-imposition semantics (the reference's decodeRecord,
     PythonObjectsEncoder.java:148-156): schema fields missing from an
     emitted dict become null; dict keys not in the schema are dropped."""
-    schema = T.StructType(
-        [T.StructField(n, T.StringType(), True) for n in names]
-    )
+    schema = pa.schema([pa.field(n, pa.string()) for n in names])
     n_rows = data.draw(st.integers(min_value=0, max_value=6))
     rows = []
     for _ in range(n_rows):
@@ -77,14 +117,38 @@ def test_records_to_pdf_schema_projection(names, data):
         d = {n: "v" for n in present}
         d["extra_key_not_in_schema"] = "dropped"
         rows.append(d)
-    pdf = _records_to_pdf(rows, schema)
-    assert list(pdf.columns) == names
-    for i, row in enumerate(rows):
-        for n in names:
-            expected = "v" if n in row else None
-            assert pdf[n].iloc[i] == expected or (
-                expected is None and pdf[n].iloc[i] is None
-            )
+    batch = _records_to_batch(rows, schema)
+    assert batch.schema == schema
+    got = batch.to_pylist()
+    assert got == [{n: "v" if n in row else None for n in names} for row in rows]
+
+
+def test_records_to_batch_coercions():
+    """The decode coercions of test_transform's numeric test, Spark-free:
+    an int into a double field, a float into a float32 field, 2**52 into
+    a long field, a missing numeric as null; and an aware datetime keeps
+    its instant in a UTC timestamp field, like a naive one read as UTC."""
+    schema = pa.schema([
+        ("as_double", pa.float64()),
+        ("as_float", pa.float32()),
+        ("big", pa.int64()),
+        ("missing", pa.float64()),
+        ("ts", pa.timestamp("us", tz="UTC")),
+    ])
+    plus2 = datetime.timezone(datetime.timedelta(hours=2))
+    emitted = [
+        {"as_double": 7, "as_float": 1.5, "big": 2**52,
+         "ts": datetime.datetime(2024, 1, 1, 5, tzinfo=plus2)},
+        {"ts": datetime.datetime(2024, 1, 1, 3)},
+    ]
+    batch = _records_to_batch(emitted, schema)
+    assert batch.schema == schema
+    row, naive = batch.to_pylist()
+    assert row["as_double"] == 7.0 and isinstance(row["as_double"], float)
+    assert abs(row["as_float"] - 1.5) < 1e-6
+    assert row["big"] == 2**52
+    assert row["missing"] is None
+    assert row["ts"] == naive["ts"] == datetime.datetime(2024, 1, 1, 3, tzinfo=datetime.timezone.utc)
 
 
 # a recursive strategy for Spark datatypes the bridge supports

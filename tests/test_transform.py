@@ -378,6 +378,44 @@ def transform(record, emitter, context):
     assert out.missing is None
 
 
+def test_record_types_do_not_depend_on_batch_nulls(spark):
+    """A nullable integer reaches the script as ``int`` — top-level and
+    as a nested struct field — and an array as ``list``, also when the
+    same Arrow batch holds a null (the reference passes LONG/INT and
+    ARRAY through as int and list, PythonObjectsEncoder.java:44-45,53-54)."""
+    src = spark.createDataFrame(
+        [(1, 2, {"b": 3}, [1, 2]), (None, None, {"b": None}, None)],
+        "l long, i int, s struct<b: long>, a array<int>",
+    ).coalesce(1)
+    script = """
+def transform(record, emitter, context):
+    if record['l'] is not None:
+        emitter.emit({k: type(v).__name__ for k, v in
+                      [('l', record['l']), ('i', record['i']),
+                       ('s_b', record['s']['b']), ('a', record['a'])]})
+"""
+    out = python_transform(
+        src, script=script, output_schema="l string, i string, s_b string, a string"
+    ).output.collect()
+    assert [r.asDict() for r in out] == [{"l": "int", "i": "int", "s_b": "int", "a": "list"}]
+
+
+def test_record_path_plans_map_in_arrow(spark, primitives):
+    """The per-record path crosses to Python as Arrow with no pandas
+    step; only ``batch_mode`` (a pandas contract) plans MapInPandas."""
+    from python_plugins_spark.plans import physical_plan
+
+    script = "def transform(record, emitter, context):\n    emitter.emit(record)\n"
+    for res in (
+        python_transform(primitives, script=script),
+        python_transform(primitives, script=script, emit_errors=True, emit_alerts=True),
+    ):
+        plan = physical_plan(res.output)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    batch = python_transform(primitives, func=lambda pdf: pdf, batch_mode=True)
+    assert "MapInPandas" in physical_plan(batch.output)
+
+
 def test_toarrow_driver_interchange(spark, sf_dir):
     """DataFrame.toArrow (Spark 4): the driver-side Arrow interchange
     surface — results hand off to pyarrow/polars/duckdb without a
