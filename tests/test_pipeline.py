@@ -1643,3 +1643,113 @@ def test_pipeline_perceptual_hash_stage(spark, tmp_path):
             ],
             "connections": [{"from": "src", "to": "bad"}],
         })
+
+
+_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+
+def test_pipeline_dry_run_leaves_state_store_conf_alone(spark, sf_dir):
+    """Compiling a max/topn stateful spec without running it (lineage,
+    ``pipeline --explain``) must not switch the session's state-store
+    provider: only a run that starts a query sets it."""
+    from python_plugins_spark.pipeline import pipeline_field_lineage
+
+    prev = spark.conf.get(_STATE_STORE_CONF, None)
+    spark.conf.unset(_STATE_STORE_CONF)
+    try:
+        lin = pipeline_field_lineage(spark, {
+            "stages": [
+                {"name": "src", "type": "streamingsource.file",
+                 "config": {"path": f"{sf_dir}/events.parquet"}},
+                {"name": "state", "type": "streamingtransform.stateful",
+                 "config": {"operation": "max", "keys": ["event_type"],
+                            "valueField": "value"}},
+                {"name": "sink", "type": "streamingsink.memory",
+                 "config": {"outputMode": "update"}},
+            ],
+            "connections": [{"from": "src", "to": "state"},
+                            {"from": "state", "to": "sink"}],
+        })
+        assert [o["name"] for o in lin["operations"]] == ["src", "state", "sink"]
+        assert spark.conf.get(_STATE_STORE_CONF, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(_STATE_STORE_CONF, prev)
+
+
+def test_pipeline_dry_run_makes_the_sink_checks(spark, sf_dir):
+    """A dry run refuses every spec a real run refuses at deploy time:
+    the raw-append memory sink and a foreachbatch script without
+    ``process`` raise the same error in both modes."""
+    events = {"name": "s", "type": "streamingsource.file",
+              "config": {"path": f"{sf_dir}/events.parquet"}}
+    sinks = [
+        {"name": "k", "type": "streamingsink.memory",
+         "config": {"queryName": "raw_refused_dry"}},
+        {"name": "k", "type": "streamingsink.foreachbatch",
+         "config": {"script": "def not_process(df, epoch_id):\n    pass\n"}},
+    ]
+    for sink in sinks:
+        spec = {"stages": [events, sink],
+                "connections": [{"from": "s", "to": "k"}]}
+        errors = []
+        for dry_run in (False, True):
+            with pytest.raises(PipelineSpecError) as e:
+                run_pipeline(spark, spec, dry_run=dry_run)
+            errors.append(str(e.value))
+        assert errors[0] == errors[1], sink["type"]
+
+
+@pytest.mark.parametrize("stype, config, key, stream", [
+    ("transform.python", {"schema": "id long"}, "script", False),
+    ("transform.filter", {}, "condition", False),
+    ("batchaggregator.groupby", {"groupByFields": ["n_regionkey"]},
+     "aggregates", False),
+    ("batchsink.msgbus", {"path": "/nonexistent/bus"}, "topic", False),
+    ("transform.watermark", {"eventTime": "event_time"}, "delay", True),
+    ("streamingsink.parquet", {"path": "/nonexistent/out"},
+     "checkpointLocation", True),
+])
+def test_pipeline_missing_required_key(spark, sf_dir, stype, config, key, stream):
+    """A missing required config key is a deploy-time PipelineSpecError
+    naming the stage and the key, not a bare KeyError from inside the
+    stage; a dry run refuses it too."""
+    src = (
+        {"name": "src", "type": "streamingsource.file",
+         "config": {"path": f"{sf_dir}/events.parquet"}}
+        if stream else
+        {"name": "src", "type": "batchsource.parquet",
+         "config": {"path": f"{sf_dir}/nation.parquet"}}
+    )
+    spec = {"stages": [src, {"name": "bad_stage", "type": stype,
+                             "config": config}],
+            "connections": [{"from": "src", "to": "bad_stage"}]}
+    for dry_run in (False, True):
+        with pytest.raises(PipelineSpecError, match=rf"'bad_stage'.*'{key}'"):
+            run_pipeline(spark, spec, dry_run=dry_run)
+
+
+def test_pipeline_stage_catalogue_matches_docs():
+    """docs/pipelines.md names exactly the stage types the runner
+    builds. A catalogue cell like ``batchsource.parquet\\|csv`` names
+    batchsource.parquet and batchsource.csv."""
+    import os
+    import re
+
+    from python_plugins_spark.pipeline import _STAGES
+
+    doc = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "docs", "pipelines.md",
+    )
+    documented = set()
+    with open(doc) as fh:
+        for line in fh:
+            m = re.match(r"\| `([^`]+)` \|", line)
+            if not m:
+                continue
+            first, *more = m.group(1).split("\\|")
+            documented.add(first)
+            prefix = first.rsplit(".", 1)[0]
+            documented.update(f"{prefix}.{fmt}" for fmt in more)
+    assert documented == set(_STAGES)
