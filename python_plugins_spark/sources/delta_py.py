@@ -608,7 +608,8 @@ def _put_if_absent(content: str, dst: str) -> bool:
     exist. POSIX ``link(2)`` fails with EEXIST atomically even on the
     same directory, which ``os.replace`` (silent overwrite) cannot —
     this is the primitive that makes two same-version writers a
-    detected conflict instead of a lost update."""
+    detected conflict instead of a lost update (Delta log entries and
+    Iceberg metadata files alike)."""
     tmp = dst + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         fh.write(content)
@@ -2376,6 +2377,44 @@ def optimize_delta(
 
 # --------------------------------------------------- change data feed
 
+def _commit_changes(
+    commit_file: str, version: int, rewrites_ok: bool = False
+) -> tuple[dict[str, dict], dict[str, dict], bool]:
+    """What commit ``version`` changed, from one parse of its actions
+    (``dataChange=False`` layout actions do not count): ``(adds,
+    dv_readds, removed)``. ``adds`` are the files it added (an add may
+    carry a deletionVector) and ``dv_readds`` the files it re-added
+    with a new deletionVector (a merge-on-read delete), both keyed by
+    path; ``removed`` says whether it removed any file. A file removed
+    without a DV re-add was rewritten in place, and its row-level
+    changes are not derivable from the log: that raises unless
+    ``rewrites_ok``."""
+    adds: dict[str, dict] = {}
+    removes: set[str] = set()
+    with open(commit_file) as fh:
+        for line in fh:
+            if not line.strip():
+                continue
+            action = json.loads(line)
+            if action.get("add", {}).get("dataChange"):
+                adds[action["add"]["path"]] = action["add"]
+            elif action.get("remove", {}).get("dataChange"):
+                removes.add(action["remove"]["path"])
+    readds = {
+        p: adds.pop(p)
+        for p in sorted(removes)
+        if adds.get(p, {}).get("deletionVector")
+    }
+    rewrites = sorted(removes - set(readds))
+    if rewrites and not rewrites_ok:
+        raise ValueError(
+            f"version {version} rewrites files in place ({rewrites[:3]}...): "
+            "row-level changes are not derivable from the log — use "
+            "merge-on-read deletes or materialized CDC for this table"
+        )
+    return adds, readds, bool(removes)
+
+
 def table_changes(
     spark: SparkSession,
     table_path: str,
@@ -2434,40 +2473,11 @@ def table_changes(
     for v in range(from_version, to_version + 1):
         if v not in commits:
             raise ValueError(f"version {v} not in log")
-        adds: dict[str, dict] = {}
-        removes: dict[str, dict] = {}
-        with open(commits[v]) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    removes[action["remove"]["path"]] = action["remove"]
-        data_adds = {p: a for p, a in adds.items() if a.get("dataChange")}
-        data_removes = {p: r for p, r in removes.items() if r.get("dataChange")}
-        if not data_adds and not data_removes:
-            continue  # layout-only (or metadata-only) commit
+        adds, dv_pairs, _ = _commit_changes(commits[v], v)
 
-        dv_pairs = {
-            p: a
-            for p, a in data_adds.items()
-            if p in data_removes and a.get("deletionVector")
-        }
-        plain_adds = {p: a for p, a in data_adds.items() if p not in dv_pairs}
-        plain_removes = {p: r for p, r in data_removes.items() if p not in dv_pairs}
-        if plain_removes:
-            raise ValueError(
-                f"version {v} rewrites files in place "
-                f"({sorted(plain_removes)[:3]}...): row-level changes are "
-                "not derivable from the log — use merge-on-read deletes "
-                "or materialized CDC for this table"
-            )
-
-        if plain_adds:
+        if adds:
             ins = _dv_scan(
-                spark, table_path, schema, plain_adds, part_cols=part_cols,
+                spark, table_path, schema, adds, part_cols=part_cols,
                 meta=end_state.meta,
             ).select(
                 *cols,

@@ -13,10 +13,15 @@ Simple variant):
   never changes after publication — the same property that makes
   replaying a batch between two offsets deterministic).
 - **partition planning is metadata-only**: ``partitions(start, end)``
-  replays just the commit JSONs in range and yields one InputPartition
-  per added data file — the driver never touches row data.
-- **reads are executor-side**: each task opens its one parquet file
-  with pyarrow. A 1000-file commit becomes a 1000-task micro-batch.
+  replays just the commit JSONs in range (through
+  :func:`delta_py._commit_changes`, the planner ``table_changes``
+  uses) and yields one InputPartition per added data file — the
+  driver never touches row data.
+- **reads are executor-side Arrow**: each task opens its one parquet
+  file with pyarrow and yields ``pyarrow.RecordBatch``es cast to the
+  declared schema (:func:`_file_batches`, shared with the Iceberg
+  source) — no per-row Python. A 1000-file commit becomes a 1000-task
+  micro-batch.
 
 Change semantics (same contract as the reference Delta streaming
 source): the stream is the APPEND stream. Commits that remove files
@@ -39,6 +44,16 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from .delta_dv import load_dv
+from .delta_py import (
+    _cm_map,
+    _commit_changes,
+    _commit_files,
+    _replay_state,
+    column_mapping_enabled,
+    table_version,
+)
+
 
 class DeltaStreamSource(DataSource):
     """Options: ``path`` (required), ``starting_version`` (default 0 —
@@ -53,13 +68,13 @@ class DeltaStreamSource(DataSource):
     def name(cls) -> str:
         return "delta_py_stream"
 
-    def schema(self) -> T.StructType:
-        from .delta_py import _replay_state
+    def _cdc(self) -> bool:
+        return str(self.options.get("readchangefeed", "false")).lower() == "true"
 
+    def schema(self) -> T.StructType:
         state = _replay_state(self.options["path"])
-        cdc = str(self.options.get("readchangefeed", "false")).lower() == "true"
         base = T.StructType.fromJson(json.loads(state.meta["schemaString"]))
-        if cdc:
+        if self._cdc():
             return T.StructType(
                 base.fields
                 + [
@@ -70,37 +85,28 @@ class DeltaStreamSource(DataSource):
         return base
 
     def streamReader(self, schema):
-        from .delta_py import (
-            _cm_map, _replay_state, column_mapping_enabled,
-        )
-
         state = _replay_state(self.options["path"])
-        cm = None
+        cm = {}
         if column_mapping_enabled(state.meta):
             base = T.StructType.fromJson(json.loads(state.meta["schemaString"]))
             cm = _cm_map(base)  # logical -> PHYSICAL file column names
-        common = (
-            self.options["path"],
-            int(self.options.get("starting_version", 0)),
-        )
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
+        path = self.options["path"]
+        start = int(self.options.get("starting_version", 0))
+        if self._cdc():
             return DeltaChangeFeedStreamReader(
-                *common,
+                path, start, schema, cm,
                 int(self.options.get("max_versions_per_batch", 0)) or None,
-                schema,
-                cm,
             )
         return DeltaStreamReader(
-            *common,
+            path, start, schema, cm,
             str(self.options.get("ignorechanges", "false")).lower() == "true",
-            schema,
-            cm,
         )
 
 
 def _pv_cast(v: str | None, dtype: T.DataType):
-    """Partition value string (the add action's partitionValues map)
-    -> Python value of the partition column's declared type."""
+    """Partition value string (a Delta add's partitionValues, an
+    Iceberg manifest's identity partition tuple) -> Python value of the
+    partition column's declared type."""
     if v is None or v == "__HIVE_DEFAULT_PARTITION__":
         return None
     import datetime as _dt
@@ -118,152 +124,156 @@ def _pv_cast(v: str | None, dtype: T.DataType):
     return v
 
 
+def _file_batches(path, schema, names, pvals, take=None, keys=None, tags=()):
+    """The parquet file at ``path`` as ``pyarrow.RecordBatch``es of the
+    declared ``schema``, whose last ``len(tags)`` fields are constant
+    change tags (``_change_type``, ``_commit_*``) with values ``tags``.
+    Each table field comes from the file column ``names.get(field,
+    field)`` (its physical name), is a typed constant when ``pvals``
+    (keyed by field name) holds its partition value, and is null when
+    the file predates the column. ``take`` keeps those row positions
+    (DV or position deletes); ``keys`` keeps the rows whose
+    ``keys.column_names`` values equal a key row (equality deletes,
+    matched after partition values are attached). Every column is cast
+    to ``to_arrow_schema(schema)``, so the batches cross to the JVM
+    as they are."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    table = pq.read_table(path)
+    if take is not None:
+        table = table.take(pa.array(take, pa.int64()))
+    n_base = len(schema.fields) - len(tags)
+    consts = {
+        f.name: _pv_cast(pvals[f.name], f.dataType)
+        for f in schema.fields[:n_base]
+        if f.name in pvals
+    }
+    consts.update(zip(schema.names[n_base:], tags))
+    cols = []
+    for field in target:
+        src = names.get(field.name, field.name)
+        if field.name in consts:
+            col = pa.repeat(pa.scalar(consts[field.name], field.type), table.num_rows)
+        elif src in table.column_names:
+            col = table[src].cast(field.type)
+        else:  # added by schema evolution after this file was written
+            col = pa.nulls(table.num_rows, field.type)
+        cols.append(col)
+    out = pa.Table.from_arrays(cols, schema=target)
+    if keys is not None:
+        on = keys.column_names
+        row = pa.array(np.arange(out.num_rows))
+        hits = out.select(on).append_column("__row", row).join(
+            pa.table([keys[c].cast(out.schema.field(c).type) for c in on], names=on),
+            keys=on, join_type="left semi",
+        )
+        out = out.filter(pc.is_in(row, value_set=hits["__row"].combine_chunks()))
+    yield from out.to_batches()
+
+
 class _FilePartition(InputPartition):
-    def __init__(self, abs_path: str, pvals: dict | None = None):
+    """One task: the data file at ``abs_path``, its partition values
+    (by logical name) and change tags. Its rows are ``keep_dv``'s
+    positions (all rows when None) minus ``drop_dv``'s — an add's own
+    DV for an insert, the new DV minus the old for a DV delete."""
+
+    def __init__(self, abs_path, pvals, tags=(), keep_dv=None, drop_dv=None):
         self.abs_path = abs_path
-        self.pvals = pvals or {}
+        self.pvals = pvals
+        self.tags = tags
+        self.keep_dv = keep_dv
+        self.drop_dv = drop_dv
 
 
 class DeltaStreamReader(DataSourceStreamReader):
     def __init__(self, table_path: str, starting_version: int,
-                 ignore_changes: bool, schema: T.StructType | None = None,
-                 cm: dict[str, str] | None = None):
+                 schema: T.StructType, cm: dict[str, str],
+                 ignore_changes: bool = False):
         self.table_path = table_path
         self.starting_version = starting_version
-        self.ignore_changes = ignore_changes
         self.table_schema = schema
         # column mapping: files store PHYSICAL names; lookups go
         # logical -> physical (physicalName is rename-stable)
-        self.cm = cm or {}
+        self.cm = cm
+        self.ignore_changes = ignore_changes
 
     def initialOffset(self) -> dict:
         return {"version": self.starting_version - 1}
 
     def latestOffset(self) -> dict:
-        from .delta_py import table_version
-
         return {"version": table_version(self.table_path)}
 
-    def partitions(self, start: dict, end: dict):
-        from .delta_py import _commit_files
+    def _part(self, path, add, tags=(), keep_dv=None, drop_dv=None):
+        logical = {pn: ln for ln, pn in self.cm.items()}
+        pvals = {
+            logical.get(k, k): v
+            for k, v in (add.get("partitionValues") or {}).items()
+        }
+        return _FilePartition(
+            os.path.join(self.table_path, path), pvals, tags, keep_dv, drop_dv
+        )
 
+    def partitions(self, start: dict, end: dict):
         commits = dict(_commit_files(self.table_path))
         parts: list[_FilePartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
             if v not in commits:
                 continue
-            adds, removes = [], []
-            with open(commits[v]) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action and action["add"].get("dataChange"):
-                        adds.append(action["add"])
-                    elif "remove" in action and action["remove"].get("dataChange"):
-                        removes.append(action["remove"])
-            if removes and not self.ignore_changes:
+            adds, _, removed = _commit_changes(commits[v], v, rewrites_ok=True)
+            if removed and not self.ignore_changes:
                 raise ValueError(
                     f"version {v} of {self.table_path} is not append-only "
                     "(contains removes); set ignoreChanges=true to stream "
                     "only the newly added files"
                 )
-            for add in adds:
-                if add.get("deletionVector"):
-                    continue  # re-add of an existing file (DV attach)
-                parts.append(
-                    _FilePartition(
-                        os.path.join(self.table_path, add["path"]),
-                        add.get("partitionValues") or {},
-                    )
-                )
+            parts += [
+                self._part(p, a, drop_dv=a.get("deletionVector"))
+                for p, a in adds.items()
+            ]
         return parts
 
     def read(self, partition: _FilePartition):
-        import pyarrow.parquet as pq
+        take = None
+        if partition.keep_dv or partition.drop_dv:
+            import numpy as np
+            import pyarrow.parquet as pq
 
-        table = pq.read_table(partition.abs_path)
-        names = (
-            [self.cm.get(f.name, f.name) for f in self.table_schema.fields]
-            if self.table_schema is not None
-            else None
+            take = (
+                np.asarray(load_dv(self.table_path, partition.keep_dv), np.int64)
+                if partition.keep_dv
+                else np.arange(pq.read_metadata(partition.abs_path).num_rows)
+            )
+            if partition.drop_dv:
+                take = np.setdiff1d(take, load_dv(self.table_path, partition.drop_dv))
+        yield from _file_batches(
+            partition.abs_path, self.table_schema, self.cm, partition.pvals,
+            take=take, tags=partition.tags,
         )
-        if not partition.pvals and not self.cm and (
-            names is None or list(table.schema.names) == names
-        ):
-            for batch in table.to_batches():
-                cols = [batch.column(i).to_pylist() for i in range(batch.num_columns)]
-                yield from zip(*cols)
-            return
-        # hive-partitioned: data files omit the partition columns —
-        # reattach each column's constant (typed) value in declared
-        # field order
-        fields = self.table_schema.fields
-        file_cols = {
-            n: table.column(i).to_pylist()
-            for i, n in enumerate(table.schema.names)
-        }
-        consts = {
-            f.name: _pv_cast(
-                partition.pvals.get(self.cm.get(f.name, f.name)), f.dataType
-            )
-            for f in fields
-            if self.cm.get(f.name, f.name) in partition.pvals
-        }
-        none_col = [None] * table.num_rows
-        for r in range(table.num_rows):
-            # columns absent from the file (added later by schema
-            # evolution) null-fill, matching the batch reader
-            yield tuple(
-                consts[f.name]
-                if f.name in consts
-                else file_cols.get(self.cm.get(f.name, f.name), none_col)[r]
-                for f in fields
-            )
 
     def commit(self, end: dict) -> None:
         pass  # the engine's checkpoint IS the consumption record
 
 
-class _ChangePartition(InputPartition):
-    """One CDC task: either a whole added file ('insert') or a
-    DV-delta over one file ('delete' — the NEW deleted positions minus
-    the OLD, decoded and diffed on the executor)."""
-
-    def __init__(self, abs_path, change_type, version, table_path,
-                 new_desc=None, old_desc=None, pvals=None):
-        self.abs_path = abs_path
-        self.change_type = change_type
-        self.version = version
-        self.table_path = table_path
-        self.new_desc = new_desc
-        self.old_desc = old_desc
-        self.pvals = pvals or {}
-
-
-class DeltaChangeFeedStreamReader(DataSourceStreamReader):
+class DeltaChangeFeedStreamReader(DeltaStreamReader):
     """CDC tail of the log (streaming twin of
-    :func:`delta_py.table_changes`): append commits plan one 'insert'
+    :func:`delta_py.table_changes`, planned by the same
+    :func:`delta_py._commit_changes`): append commits plan one 'insert'
     partition per added file; DV-delete commits plan one 'delete'
     partition per (file, new DV, old DV) pair; layout commits plan
     nothing; in-place rewrites raise (not row-derivable)."""
 
-    def __init__(self, table_path, starting_version, max_versions=None,
-                 schema: T.StructType | None = None,
-                 cm: dict[str, str] | None = None):
-        self.table_path = table_path
-        self.starting_version = starting_version
+    def __init__(self, table_path, starting_version, schema, cm,
+                 max_versions=None):
+        super().__init__(table_path, starting_version, schema, cm)
         self.max_versions = max_versions
-        self.table_schema = schema
-        self.cm = cm or {}
         self._consumed: int | None = None  # last version handed out
 
-    def initialOffset(self) -> dict:
-        return {"version": self.starting_version - 1}
-
     def latestOffset(self) -> dict:
-        from .delta_py import table_version
-
         cur = table_version(self.table_path)
         if self.max_versions is not None and self._consumed is not None:
             # admission control (maxFilesPerTrigger analogue): bound a
@@ -276,127 +286,25 @@ class DeltaChangeFeedStreamReader(DataSourceStreamReader):
         return {"version": cur}
 
     def partitions(self, start: dict, end: dict):
-        from .delta_py import _commit_files, _replay_state
-
         commits = dict(_commit_files(self.table_path))
-        lo, hi = start["version"] + 1, end["version"]
-        self._consumed = hi
-        parts: list[_ChangePartition] = []
-        for v in range(lo, hi + 1):
+        self._consumed = end["version"]
+        parts: list[_FilePartition] = []
+        for v in range(start["version"] + 1, end["version"] + 1):
             if v not in commits:
                 continue
-            adds, removes = {}, {}
-            with open(commits[v]) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        adds[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        removes[action["remove"]["path"]] = action["remove"]
-            data_adds = {p: a for p, a in adds.items() if a.get("dataChange")}
-            data_removes = {
-                p: r for p, r in removes.items() if r.get("dataChange")
-            }
-            if not data_adds and not data_removes:
-                continue
-            dv_pairs = {
-                p: a
-                for p, a in data_adds.items()
-                if p in data_removes and a.get("deletionVector")
-            }
-            plain_removes = {
-                p: r for p, r in data_removes.items() if p not in dv_pairs
-            }
-            if plain_removes:
-                raise ValueError(
-                    f"version {v} rewrites files in place: CDC rows are "
-                    "not derivable from the log for this commit"
+            adds, readds, _ = _commit_changes(commits[v], v)
+            old = _replay_state(self.table_path, v - 1).active if readds else {}
+            parts += [
+                self._part(p, a, ("insert", v), drop_dv=a.get("deletionVector"))
+                for p, a in adds.items()
+            ] + [
+                self._part(
+                    p, a, ("delete", v), keep_dv=a["deletionVector"],
+                    drop_dv=old.get(p, {}).get("deletionVector"),
                 )
-            old_state = _replay_state(self.table_path, v - 1) if dv_pairs else None
-            for p, a in data_adds.items():
-                if p in dv_pairs:
-                    old_add = old_state.active.get(p, {})
-                    parts.append(
-                        _ChangePartition(
-                            os.path.join(self.table_path, p),
-                            "delete",
-                            v,
-                            self.table_path,
-                            new_desc=a["deletionVector"],
-                            old_desc=old_add.get("deletionVector"),
-                            pvals=a.get("partitionValues") or {},
-                        )
-                    )
-                elif not a.get("deletionVector"):
-                    parts.append(
-                        _ChangePartition(
-                            os.path.join(self.table_path, p),
-                            "insert",
-                            v,
-                            self.table_path,
-                            pvals=a.get("partitionValues") or {},
-                        )
-                    )
+                for p, a in readds.items()
+            ]
         return parts
-
-    def read(self, partition: _ChangePartition):
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.abs_path)
-        if partition.change_type == "insert":
-            rows = range(table.num_rows)
-        else:
-            from .delta_dv import load_dv
-
-            new_idx = set(load_dv(partition.table_path, partition.new_desc))
-            if partition.old_desc is not None:
-                new_idx -= set(load_dv(partition.table_path, partition.old_desc))
-            rows = sorted(new_idx)
-        base_names = (
-            [self.cm.get(f.name, f.name)
-             for f in self.table_schema.fields[:-2]]
-            if self.table_schema is not None
-            else None
-        )
-        if not partition.pvals and not self.cm and (
-            base_names is None or list(table.schema.names) == base_names
-        ):
-            cols = [table.column(i).to_pylist() for i in range(table.num_columns)]
-            for r in rows:
-                yield tuple(c[r] for c in cols) + (
-                    partition.change_type,
-                    partition.version,
-                )
-            return
-        # partitioned (or schema-aware) reassembly: the CDC schema is
-        # table columns + (_change_type, _commit_version); partition
-        # values are constants from the add action, evolution-added
-        # columns null-fill
-        fields = self.table_schema.fields[:-2]
-        file_cols = {
-            n: table.column(i).to_pylist()
-            for i, n in enumerate(table.schema.names)
-        }
-        consts = {
-            f.name: _pv_cast(
-                partition.pvals.get(self.cm.get(f.name, f.name)), f.dataType
-            )
-            for f in fields
-            if self.cm.get(f.name, f.name) in partition.pvals
-        }
-        none_col = [None] * table.num_rows
-        for r in rows:
-            yield tuple(
-                consts[f.name]
-                if f.name in consts
-                else file_cols.get(self.cm.get(f.name, f.name), none_col)[r]
-                for f in fields
-            ) + (partition.change_type, partition.version)
-
-    def commit(self, end: dict) -> None:
-        pass
 
 
 def register(spark) -> None:

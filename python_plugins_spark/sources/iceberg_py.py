@@ -55,13 +55,16 @@ import os
 import shutil
 import time
 import uuid
+from collections import defaultdict
 from datetime import date, datetime
 from decimal import Decimal
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from python_plugins_spark.sources.avro_py import read_container, write_container
+from python_plugins_spark.sources.delta_py import _put_if_absent
 
 _META_DIR = "metadata"
 _DATA_DIR = "data"
@@ -267,24 +270,6 @@ class IcebergConcurrentWriteError(RuntimeError):
     was built against (or the retry budget ran out). The operation's
     scan results are tied to the snapshot it read, so the safe recovery
     is to re-run the whole operation against the new snapshot."""
-
-
-def _put_if_absent(content: str, dst: str) -> bool:
-    """Atomically create ``dst`` iff absent — POSIX ``link(2)`` fails
-    with EEXIST atomically, unlike ``os.replace`` (silent overwrite).
-    This is the primitive that turns two same-version committers into
-    a detected conflict instead of a lost update (same mechanism as
-    delta_py's commit)."""
-    tmp = dst + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        fh.write(content)
-    try:
-        os.link(tmp, dst)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.remove(tmp)
 
 
 def _advance_hint(path: str, version: int) -> None:
@@ -1521,6 +1506,75 @@ def snapshot_at_timestamp(meta: dict, ts_ms) -> int:
     return best
 
 
+def _layout_scans(spark, path, meta, node, files) -> list[DataFrame]:
+    """Spark scans of ``files`` (plan_files entries) under schema
+    ``node``: one per partition layout, each with the schema's logical
+    column names (files store PHYSICAL names, stable across renames).
+    A file keeps the spec it was written with. Transform and
+    unpartitioned layouts are plain file lists; identity layouts
+    reattach partition columns from hive dirs under a basePath. A
+    snapshot fork (snapshot_iceberg) references files under the
+    SOURCE's root, so an identity layout is grouped by hive root (strip
+    the filename, one dir per spec field, and the data dir) and each
+    root scanned under its own basePath; the virtual _metadata column
+    does not survive a union, so a multi-root scan materializes it per
+    branch for downstream row identity."""
+    from pyspark.sql import functions as F
+
+    schema = iceberg_schema_to_spark(node)
+    pairs = [(fd["name"], _physical_name(fd)) for fd in node["fields"]]
+    phys_schema = T.StructType(
+        [
+            T.StructField(pn, f.dataType, f.nullable)
+            for (ln, pn), f in zip(pairs, schema.fields)
+        ]
+    )
+    spec_fields = {
+        sp.get("spec-id", 0): sp.get("fields") or []
+        for sp in (meta.get("partition-specs") or [])
+    }
+    by_spec: dict[int, list[str]] = defaultdict(list)
+    for f in files:
+        by_spec[f.get("spec_id", 0)].append(os.path.join(path, f["path"]))
+
+    def to_logical(scan):
+        if all(ln == pn for ln, pn in pairs):
+            return scan.select(*[ln for ln, _ in pairs])
+        return scan.select(*[F.col(pn).alias(ln) for ln, pn in pairs])
+
+    scans = []
+    for spec_id, paths in sorted(by_spec.items()):
+        fields = spec_fields.get(spec_id, [])
+        if not (fields and any(f["transform"] == "identity" for f in fields)):
+            scans.append(to_logical(spark.read.schema(phys_schema).parquet(*paths)))
+            continue
+        roots: dict[str, list[str]] = {}
+        for p in paths:
+            root = p
+            for _ in range(len(fields) + 2):
+                root = os.path.dirname(root)
+            roots.setdefault(root, []).append(p)
+        if len(roots) == 1:
+            ((root, grp),) = roots.items()
+            scans.append(to_logical(
+                spark.read.option("basePath", root)
+                .schema(phys_schema)
+                .parquet(*grp)
+            ))  # partitionBy writes the partition col last; restore order
+            continue
+        scans.append(reduce(DataFrame.unionByName, [
+            spark.read.option("basePath", root)
+            .schema(phys_schema)
+            .parquet(*grp)
+            .select(
+                *[F.col(pn).alias(ln) for ln, pn in pairs],
+                F.col("_metadata").alias("_metadata"),
+            )
+            for root, grp in sorted(roots.items())
+        ]))
+    return scans
+
+
 def read_iceberg(
     spark: SparkSession,
     path: str,
@@ -1539,9 +1593,6 @@ def read_iceberg(
     to Iceberg's split planning + Spark residual filters."""
     from pyspark.sql import functions as F
 
-    from collections import defaultdict
-    from functools import reduce
-
     meta = _load_metadata(path)
     if sum(x is not None for x in (snapshot_id, ref, as_of_timestamp)) > 1:
         raise ValueError(
@@ -1558,7 +1609,7 @@ def read_iceberg(
     # per-snapshot schema-id) — a rename after snapshot N must not
     # relabel N's time-travel view; snapshots predating the stamp fall
     # back to the current schema
-    _schema_node = _current_schema_node(meta)
+    node = _current_schema_node(meta)
     if snapshot_id is not None:
         _snap = next(
             (s for s in meta.get("snapshots", [])
@@ -1566,95 +1617,23 @@ def read_iceberg(
             None,
         )
         if _snap is not None and "schema-id" in _snap:
-            _schema_node = next(
+            node = next(
                 (sc for sc in meta.get("schemas", [])
                  if sc.get("schema-id", 0) == _snap["schema-id"]),
-                _schema_node,
+                node,
             )
-    schema = iceberg_schema_to_spark(_schema_node)
-    spec_fields_by_id = {
-        sp.get("spec-id", 0): sp.get("fields") or []
-        for sp in (meta.get("partition-specs") or [])
-    }
+    schema = iceberg_schema_to_spark(node)
     files = plan_files(path, snapshot_id, eq=eq, ranges=ranges)
     if not files:
         return spark.createDataFrame([], schema)
-    # spec evolution: files may live under different layouts (a file
-    # keeps the spec it was written with); group by spec and build one
-    # scan per layout — identity layouts need basePath reattachment,
-    # transform/unpartitioned layouts are plain file lists
-    groups: dict[int, list[dict]] = defaultdict(list)
-    for f in files:
-        groups[f.get("spec_id", 0)].append(f)
-
-    # files store PHYSICAL column names (stable across renames); the
-    # scan reads them and aliases back to the (snapshot's) logical names
-    node = _schema_node
-    pairs = [(fd["name"], _physical_name(fd)) for fd in node["fields"]]
-    phys_schema = T.StructType(
-        [
-            T.StructField(pn, f.dataType, f.nullable)
-            for (ln, pn), f in zip(pairs, schema.fields)
-        ]
-    )
-
-    def _to_logical(scan):
-        if all(ln == pn for ln, pn in pairs):
-            return scan.select(*[ln for ln, _ in pairs])
-        return scan.select(*[F.col(pn).alias(ln) for ln, pn in pairs])
-
-    def _build_scan(flist, fields):
-        paths = [os.path.join(path, f["path"]) for f in flist]
-        if not (fields and any(f["transform"] == "identity" for f in fields)):
-            return _to_logical(spark.read.schema(phys_schema).parquet(*paths))
-        # identity layouts reattach partition columns from hive dirs
-        # under a basePath. A snapshot fork (snapshot_iceberg)
-        # references files under the SOURCE's root, so group by hive
-        # root (strip the filename, one dir per spec field, and the
-        # data dir) and scan each root under its own basePath; the
-        # virtual _metadata column does not survive a union, so
-        # multi-root scans materialize it per branch for downstream
-        # row identity (read_iceberg projects it away at the end).
-        groups: dict[str, list[str]] = {}
-        for p in paths:
-            root = p
-            for _ in range(len(fields) + 2):
-                root = os.path.dirname(root)
-            groups.setdefault(root, []).append(p)
-        if len(groups) == 1:
-            ((root, grp),) = groups.items()
-            return _to_logical(
-                spark.read.option("basePath", root)
-                .schema(phys_schema)
-                .parquet(*grp)
-            )  # partitionBy writes the partition col last; restore order
-        branches = [
-            spark.read.option("basePath", root)
-            .schema(phys_schema)
-            .parquet(*grp)
-            .select(
-                *[F.col(pn).alias(ln) for ln, pn in pairs],
-                F.col("_metadata").alias("_metadata"),
-            )
-            for root, grp in sorted(groups.items())
-        ]
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
+    scans = _layout_scans(spark, path, meta, node, files)
 
     delete_entries = plan_delete_files(path, snapshot_id)
     pos_dels = [d for d in delete_entries if d["content"] == 1]
     eq_dels = [d for d in delete_entries if d["content"] == 2]
     out_cols = [f.name for f in schema.fields]
     if not delete_entries and not with_row_identity:
-        plain = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                _build_scan(g, spec_fields_by_id.get(sid, []))
-                for sid, g in sorted(groups.items())
-            ],
-        )
+        plain = reduce(DataFrame.unionByName, scans)
         # multi-root identity scans carry a materialized _metadata
         if "_metadata" in plain.columns:
             plain = plain.select(*out_cols)
@@ -1673,9 +1652,9 @@ def read_iceberg(
     )
     fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
     scan = reduce(
-        lambda a, b: a.unionByName(b),
+        DataFrame.unionByName,
         [
-            _build_scan(g, spec_fields_by_id.get(sid, [])).withColumns(
+            sc.withColumns(
                 {
                     "__abs_file": F.col("_metadata.file_path"),
                     "__file": fname,
@@ -1683,7 +1662,7 @@ def read_iceberg(
                     "__snap": snap_map[fname],
                 }
             )
-            for sid, g in sorted(groups.items())
+            for sc in scans
         ],
     )
     if pos_dels:
@@ -2356,6 +2335,60 @@ def remove_orphan_files(
 
 # ------------------------------------------------- change data feed
 
+def _snapshot_changes(path: str, v: int, rewrites_ok: bool = False) -> list[dict]:
+    """The files snapshot ``v`` ADDED, walked from its own metadata
+    file and the manifests it added (``added_snapshot_id == v``):
+    ``[{path, partition, spec_id, content (0 data, 1 position deletes,
+    2 equality deletes), equality_ids}]``. Empty when metadata version
+    v made no snapshot (a maintenance-only commit such as an expiry)
+    or only compacted manifests. An overwrite after the table-creating
+    snapshot raises unless ``rewrites_ok``: a wholesale rewrite is not
+    row-derivable. A snapshot whose manifests expire_snapshots deleted
+    raises too — its changes are lost (Kafka's failOnDataLoss stance),
+    never silently skipped."""
+    if not os.path.exists(os.path.join(_meta_dir(path), f"v{v}.metadata.json")):
+        return []
+    snap = next(
+        (s for s in _load_metadata(path, v).get("snapshots", [])
+         if s["snapshot-id"] == v),
+        None,
+    )
+    if snap is None:
+        return []
+    summary = snap.get("summary", {})
+    op = summary.get("operation", "append")
+    if op == "replace" and summary.get("manifests-rewritten"):
+        return []  # manifest compaction: zero row-level changes
+    if op in ("overwrite", "replace") and v != 1 and not rewrites_ok:
+        raise ValueError(
+            f"snapshot {v} of {path} is an {op}, not append-only: its "
+            "row-level changes are not derivable from metadata (an append "
+            "stream can set ignoreChanges=true to stream only newly added "
+            "data files)"
+        )
+    try:
+        manifests = list(read_container(os.path.join(path, snap["manifest-list"])))
+    except FileNotFoundError:
+        raise ValueError(
+            f"snapshot {v} of {path} was expired before its changes were "
+            "read (data loss); a stream must restart with a fresh "
+            "starting_snapshot"
+        )
+    return [
+        {
+            "path": e[1],
+            "partition": dict(e[3] or {}),
+            "spec_id": int(ml[2]),
+            "content": e[8],
+            "equality_ids": list(e[9]),
+        }
+        for ml in manifests
+        if int(ml[3]) == v  # not a manifest carried forward
+        for e in read_container(os.path.join(path, ml[0]))
+        if e[0] == 1  # ADDED
+    ]
+
+
 def table_changes_iceberg(
     spark: SparkSession,
     path: str,
@@ -2363,132 +2396,86 @@ def table_changes_iceberg(
     to_snapshot: int | None = None,
 ) -> DataFrame:
     """Derived CDC between snapshots (the Iceberg twin of
-    delta_py.table_changes): append snapshots yield their added data
-    files' rows as 'insert'; delete snapshots yield 'delete' rows —
-    position deletes via the delete file's (file_path, pos) rows
-    joined back to the data scan, equality deletes via the value rows
-    joined on the equality columns (scoped to earlier-snapshot data
-    files, mirroring the read path). Overwrite snapshots (operation
-    'overwrite'/'replace') are refused — a wholesale rewrite is not
-    row-derivable. Returns table columns + _change_type +
-    _commit_snapshot."""
+    delta_py.table_changes), planned per snapshot by
+    :func:`_snapshot_changes` like the CDC stream: append snapshots
+    yield their added data files' rows as 'insert'; delete snapshots
+    yield 'delete' rows — position deletes via the delete file's
+    (file_path, pos) rows joined back to the snapshot's data files,
+    equality deletes via the value rows joined on the equality columns
+    (scoped to earlier-snapshot data files, mirroring the read path).
+    Data files are scanned per partition layout like read_iceberg, so
+    identity partition values and a fork's source-rooted files resolve.
+    Overwrite snapshots (operation 'overwrite'/'replace') are refused —
+    a wholesale rewrite is not row-derivable. Returns table columns +
+    _change_type + _commit_snapshot."""
     from pyspark.sql import functions as F
 
     meta = _load_metadata(path)
-    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
     if to_snapshot is None:
         to_snapshot = meta.get("current-snapshot-id")
-    schema = iceberg_schema_to_spark(_current_schema_node(meta))
+    node = _current_schema_node(meta)
+    schema = iceberg_schema_to_spark(node)
     cols = [f.name for f in schema.fields]
-    id_to_name = {f["id"]: f["name"] for f in _current_schema_node(meta)["fields"]}
-    # files store PHYSICAL names; emit under current logical names
-    _node = _current_schema_node(meta)
-    pairs = [(fd["name"], _physical_name(fd)) for fd in _node["fields"]]
-    phys_schema = T.StructType(
-        [
-            T.StructField(pn, f.dataType, f.nullable)
-            for (ln, pn), f in zip(pairs, schema.fields)
-        ]
-    )
-    log_cols = [F.col(pn).alias(ln) for ln, pn in pairs]
-    id_to_phys = {fd["id"]: _physical_name(fd) for fd in _node["fields"]}
+    id_to_name = {f["id"]: f["name"] for f in node["fields"]}
+    # delete files store PHYSICAL names (stable across renames)
+    id_to_phys = {f["id"]: _physical_name(f) for f in node["fields"]}
 
-    def _entries(snapshot):
-        out = []
-        for ml in read_container(os.path.join(path, snapshot["manifest-list"])):
-            if int(ml[3]) != snapshot["snapshot-id"]:
-                continue  # carried-forward manifest, not this commit's
-            for e in read_container(os.path.join(path, ml[0])):
-                if e[0] != 2:
-                    out.append(e)
-        return out
+    def scan(files):
+        return reduce(DataFrame.unionByName, _layout_scans(spark, path, meta, node, files))
+
+    def tagged(df, change_type, sid):
+        return df.select(
+            *cols,
+            F.lit(change_type).alias("_change_type"),
+            F.lit(sid).alias("_commit_snapshot"),
+        )
 
     frames = []
     for sid in range(from_snapshot, to_snapshot + 1):
-        snap = snaps.get(sid)
-        if snap is None:
-            continue
-        op = snap.get("summary", {}).get("operation", "append")
-        if op == "replace" and snap.get("summary", {}).get("manifests-rewritten"):
-            continue  # manifest compaction: zero row-level changes
-        new_entries = _entries(snap)
-        if op in ("overwrite", "replace") and sid != 1:
-            raise ValueError(
-                f"snapshot {sid} is an overwrite: row-level changes are "
-                "not derivable; use snapshot-state diffing instead"
-            )
-        data_new = [e for e in new_entries if e[8] == 0]
-        pos_new = [e for e in new_entries if e[8] == 1]
-        eq_new = [e for e in new_entries if e[8] == 2]
-
+        added = _snapshot_changes(path, sid)
+        data_new = [e for e in added if e["content"] == 0]
+        pos_new = [e for e in added if e["content"] == 1]
+        eq_new = [e for e in added if e["content"] == 2]
         if data_new:
-            scan = spark.read.schema(phys_schema).parquet(
-                *[os.path.join(path, e[1]) for e in data_new]
-            )
-            frames.append(
-                scan.select(
-                    *log_cols,
-                    F.lit("insert").alias("_change_type"),
-                    F.lit(sid).alias("_commit_snapshot"),
-                )
-            )
+            frames.append(tagged(scan(data_new), "insert", sid))
+        # the deleted rows live in the snapshot's (earlier) data files
+        live = plan_files(path, sid) if pos_new or eq_new else []
         if pos_new:
             pos_df = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
-                *[os.path.join(path, e[1]) for e in pos_new]
+                *[os.path.join(path, e["path"]) for e in pos_new]
             ).select(
                 F.element_at(F.split("file_path", "/"), -1).alias("__f"),
                 F.col("pos").alias("__p"),
             )
-            # the deleted rows live in data files of EARLIER snapshots
-            victims = [f["path"] for f in plan_files(path, sid)]
-            dscan = spark.read.schema(phys_schema).parquet(
-                *[os.path.join(path, p) for p in victims]
-            ).withColumns(
-                {
+            dscan = reduce(DataFrame.unionByName, [
+                sc.withColumns({
                     "__f": F.element_at(
                         F.split(F.col("_metadata.file_path"), "/"), -1
                     ),
                     "__p": F.col("_metadata.row_index"),
-                }
-            )
-            frames.append(
-                dscan.join(F.broadcast(pos_df), on=["__f", "__p"], how="leftsemi")
-                .select(
-                    *log_cols,
-                    F.lit("delete").alias("_change_type"),
-                    F.lit(sid).alias("_commit_snapshot"),
-                )
-            )
-        if eq_new:
-            files = plan_files(path, sid)
-            earlier = [
-                f["path"] for f in files if f["snapshot_id"] < sid
-            ]
-            if earlier:
-                dscan = spark.read.schema(phys_schema).parquet(
-                    *[os.path.join(path, p) for p in earlier]
-                )
-                for e in eq_new:
-                    eq_cols = [id_to_name[i] for i in e[9]]
-                    eq_phys = [id_to_phys[i] for i in e[9]]
-                    keys = spark.read.parquet(os.path.join(path, e[1])).select(
-                        *[
-                            F.col(pc).alias(f"__k_{c}")
-                            for c, pc in zip(eq_cols, eq_phys)
-                        ]
-                    )
-                    cond = [
-                        dscan[pc] == F.col(f"__k_{c}")
-                        for c, pc in zip(eq_cols, eq_phys)
+                })
+                for sc in _layout_scans(spark, path, meta, node, live)
+            ])
+            frames.append(tagged(
+                dscan.join(F.broadcast(pos_df), on=["__f", "__p"], how="leftsemi"),
+                "delete", sid,
+            ))
+        earlier = [f for f in live if f["snapshot_id"] < sid]
+        if eq_new and earlier:
+            dscan = scan(earlier)
+            for e in eq_new:
+                eq_cols = [id_to_name[i] for i in e["equality_ids"]]
+                keys = spark.read.parquet(os.path.join(path, e["path"])).select(
+                    *[
+                        F.col(id_to_phys[i]).alias(f"__k_{c}")
+                        for i, c in zip(e["equality_ids"], eq_cols)
                     ]
-                    frames.append(
-                        dscan.join(F.broadcast(keys), on=cond, how="leftsemi")
-                        .select(
-                            *log_cols,
-                            F.lit("delete").alias("_change_type"),
-                            F.lit(sid).alias("_commit_snapshot"),
-                        )
-                    )
+                )
+                cond = [dscan[c] == F.col(f"__k_{c}") for c in eq_cols]
+                frames.append(tagged(
+                    dscan.join(F.broadcast(keys), on=cond, how="leftsemi"),
+                    "delete", sid,
+                ))
 
     if not frames:
         out_schema = T.StructType(
@@ -2499,10 +2486,7 @@ def table_changes_iceberg(
             ]
         )
         return spark.createDataFrame([], out_schema)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return reduce(DataFrame.unionByName, frames)
 
 
 # ------------------------------------------------- add_files (import)

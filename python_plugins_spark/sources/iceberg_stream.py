@@ -14,12 +14,16 @@ of :mod:`.delta_stream`.
   (Kafka's failOnDataLoss stance) rather than silently skipping rows —
   size the retention window to the slowest consumer.
 - **partition planning is metadata-only**: for each snapshot in range
-  the planner opens that snapshot's OWN metadata file, walks its
-  manifest list, and keeps only manifests added BY that snapshot
-  (``added_snapshot_id == N``) — one InputPartition per added data
-  file; the driver never touches row data.
-- **reads are executor-side**: each task opens its one parquet file
-  with pyarrow.
+  :func:`iceberg_py._snapshot_changes` (the planner
+  ``table_changes_iceberg`` uses) opens that snapshot's OWN metadata
+  file, walks its manifest list, and keeps only manifests added BY that
+  snapshot (``added_snapshot_id == N``) — one InputPartition per added
+  data file; the driver never touches row data.
+- **reads are executor-side Arrow**: each task opens its one parquet
+  file with pyarrow and yields ``pyarrow.RecordBatch``es cast to the
+  declared schema (:func:`.delta_stream._file_batches`), so TIMESTAMP
+  columns, identity partition values and renamed columns all resolve
+  column by column, with no per-row Python.
 
 Change semantics: the stream is the APPEND stream. Snapshots that add
 delete files (position or equality) or that overwrite the table raise
@@ -39,28 +43,37 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from .delta_stream import _file_batches
+from .iceberg_py import (
+    _current_schema_node,
+    _load_metadata,
+    _phys_map,
+    _snapshot_changes,
+    current_metadata_version,
+    iceberg_schema_to_spark,
+    plan_files,
+)
+
 
 class IcebergStreamSource(DataSource):
     """Options: ``path`` (required), ``starting_snapshot`` (default 1 —
     first batch replays the table from its beginning),
-    ``ignoreChanges`` (default false)."""
+    ``ignoreChanges`` (default false), ``readChangeFeed`` (default
+    false — when true the stream is the CDC stream: table columns plus
+    ``_change_type`` and ``_commit_snapshot``, derived per snapshot
+    exactly like :func:`iceberg_py.table_changes_iceberg`)."""
 
     @classmethod
     def name(cls) -> str:
         return "iceberg_py_stream"
 
-    def schema(self) -> T.StructType:
-        from .iceberg_py import (
-            _current_schema_node,
-            _load_metadata,
-            iceberg_schema_to_spark,
-        )
+    def _cdc(self) -> bool:
+        return str(self.options.get("readchangefeed", "false")).lower() == "true"
 
+    def schema(self) -> T.StructType:
         meta = _load_metadata(self.options["path"])
-        spec = (meta.get("partition-specs") or [{}])[0].get("fields") or []
-        cdc = str(self.options.get("readchangefeed", "false")).lower() == "true"
         base = iceberg_schema_to_spark(_current_schema_node(meta))
-        if cdc:
+        if self._cdc():
             return T.StructType(
                 base.fields
                 + [
@@ -71,451 +84,153 @@ class IcebergStreamSource(DataSource):
         return base
 
     def streamReader(self, schema):
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
-            return IcebergChangeFeedStreamReader(
-                self.options["path"],
-                int(self.options.get("starting_snapshot", 1)),
-                schema,
-            )
+        path = self.options["path"]
+        start = int(self.options.get("starting_snapshot", 1))
+        if self._cdc():
+            return IcebergChangeFeedStreamReader(path, start, schema)
         return IcebergStreamReader(
-            self.options["path"],
-            int(self.options.get("starting_snapshot", 1)),
+            path, start, schema,
             str(self.options.get("ignorechanges", "false")).lower() == "true",
-            schema,
         )
 
 
 class _FilePartition(InputPartition):
-    def __init__(
-        self,
-        abs_path: str,
-        pvals: dict | None = None,
-        pmap: dict | None = None,
-    ):
+    """One task: the data file at ``abs_path`` with its partition values
+    and change tags; with ``delete_path`` the delete file that selects
+    its rows. An equality-delete file keeps the rows matching its
+    ``eq_cols`` values. A position-delete file (``victims`` set: data
+    file name -> (path, partition values) for the snapshot's data
+    files, ``abs_path`` unused) names its victim files and positions
+    itself."""
+
+    def __init__(self, abs_path, pvals, tags=(), delete_path=None,
+                 eq_cols=(), victims=None):
         self.abs_path = abs_path
-        self.pvals = pvals or {}
-        # logical -> physical column names (renamed columns keep their
-        # stable on-disk write-name; see iceberg_py's rename block)
-        self.pmap = pmap or {}
+        self.pvals = pvals
+        self.tags = tags
+        self.delete_path = delete_path
+        self.eq_cols = eq_cols
+        self.victims = victims
 
 
 class IcebergStreamReader(DataSourceStreamReader):
     def __init__(self, table_path: str, starting_snapshot: int,
-                 ignore_changes: bool, schema: T.StructType | None = None):
+                 schema: T.StructType, ignore_changes: bool = False):
         self.table_path = table_path
         self.starting_snapshot = starting_snapshot
-        self.ignore_changes = ignore_changes
         self.table_schema = schema
+        self.ignore_changes = ignore_changes
+        # logical -> physical column names (renamed columns keep their
+        # stable on-disk write-name; see iceberg_py's rename block)
+        self.pmap = _phys_map(_current_schema_node(_load_metadata(table_path)))
 
     def initialOffset(self) -> dict:
         return {"snapshot": self.starting_snapshot - 1}
 
     def latestOffset(self) -> dict:
-        from .iceberg_py import current_metadata_version
-
         return {"snapshot": current_metadata_version(self.table_path) or 0}
 
-    def partitions(self, start: dict, end: dict):
-        from .avro_py import read_container
-        from .iceberg_py import (
-            _current_schema_node,
-            _load_metadata,
-            _meta_dir,
-            _phys_map,
+    def _part(self, entry, tags=(), **deletes):
+        return _FilePartition(
+            os.path.join(self.table_path, entry["path"]),
+            dict(entry["partition"] or {}), tags, **deletes,
         )
 
-        pmap = _phys_map(_current_schema_node(_load_metadata(self.table_path)))
-        if all(ln == pn for ln, pn in pmap.items()):
-            pmap = {}
+    def partitions(self, start: dict, end: dict):
         parts: list[_FilePartition] = []
         for v in range(start["snapshot"] + 1, end["snapshot"] + 1):
-            meta_file = os.path.join(_meta_dir(self.table_path), f"v{v}.metadata.json")
-            if not os.path.exists(meta_file):
-                continue  # e.g. a maintenance-only metadata rewrite gap
-            meta = _load_metadata(self.table_path, v)
-            snap = next(
-                (s for s in meta.get("snapshots", []) if s["snapshot-id"] == v),
-                None,
+            added = _snapshot_changes(
+                self.table_path, v, rewrites_ok=self.ignore_changes
             )
-            if snap is None:
-                continue  # snapshot-less metadata commit (expire, etc.)
-            op = snap.get("summary", {}).get("operation")
-            ml_path = os.path.join(self.table_path, snap["manifest-list"])
-            try:
-                ml_rows = list(read_container(ml_path))
-            except FileNotFoundError:
-                # expire_snapshots deleted this snapshot's manifests
-                # before the stream consumed it — exactly-once resume
-                # is impossible past this point; fail loudly (the
-                # Kafka failOnDataLoss stance) instead of silently
-                # skipping rows
+            if any(e["content"] for e in added) and not self.ignore_changes:
                 raise ValueError(
-                    f"snapshot {v} of {self.table_path} was expired "
-                    "before the stream consumed it; restart with a "
-                    "fresh starting_snapshot (data loss)"
+                    f"snapshot {v} of {self.table_path} adds delete "
+                    "files; set ignoreChanges=true to stream only "
+                    "newly added data files"
                 )
-            if op == "replace" and snap.get("summary", {}).get(
-                "manifests-rewritten"
-            ):
-                continue  # manifest compaction: adds no rows
-            if op not in (None, "append") and not self.ignore_changes:
-                # only the table-CREATING overwrite (v == 1, nothing
-                # replaced) is append-equivalent; any later overwrite
-                # retracted rows the stream cannot express
-                if v > 1:
-                    raise ValueError(
-                        f"snapshot {v} of {self.table_path} is {op!r}, not "
-                        "append-only; set ignoreChanges=true to stream "
-                        "only newly added data files"
-                    )
-            for ml in ml_rows:
-                if int(ml[3]) != v:  # added_snapshot_id: not this commit's
-                    continue
-                manifest_rel = ml[0]
-                for e in read_container(os.path.join(self.table_path, manifest_rel)):
-                    status, file_path, _fmt, part, _n, _sz, _lo, _hi, content, _eq = e[:10]
-                    if status != 1:  # only ADDED entries
-                        continue
-                    if content != 0:  # a delete file in this commit
-                        if self.ignore_changes:
-                            continue
-                        raise ValueError(
-                            f"snapshot {v} of {self.table_path} adds delete "
-                            "files; set ignoreChanges=true to stream only "
-                            "newly added data files"
-                        )
-                    parts.append(
-                        _FilePartition(
-                            os.path.join(self.table_path, file_path),
-                            dict(part or {}),
-                            pmap,
-                        )
-                    )
+            parts += [self._part(e) for e in added if e["content"] == 0]
         return parts
 
     def read(self, partition: _FilePartition):
         import pyarrow.parquet as pq
 
-        table = pq.read_table(partition.abs_path)
-        names = (
-            [f.name for f in self.table_schema.fields]
-            if self.table_schema is not None
-            else None
-        )
-        if not partition.pvals and not partition.pmap and (
-            names is None or list(table.schema.names) == names
-        ):
-            for batch in table.to_batches():
-                cols = [batch.column(i).to_pylist() for i in range(batch.num_columns)]
-                yield from zip(*cols)
+        schema, pmap = self.table_schema, self.pmap
+        if partition.victims is not None:
+            dels = pq.read_table(partition.delete_path, columns=["file_path", "pos"])
+            by_file = dels.group_by("file_path").aggregate([("pos", "list")])
+            for fp, positions in zip(
+                by_file["file_path"].to_pylist(), by_file["pos_list"].to_pylist()
+            ):
+                victim = partition.victims.get(os.path.basename(fp))
+                if victim is not None:
+                    yield from _file_batches(
+                        victim[0], schema, pmap, victim[1],
+                        take=sorted(positions), tags=partition.tags,
+                    )
             return
-        # identity-partitioned: data files omit the partition column —
-        # reattach its constant (typed) value in declared field order
-        from .delta_stream import _pv_cast
-
-        fields = self.table_schema.fields
-        file_cols = {
-            n: table.column(i).to_pylist()
-            for i, n in enumerate(table.schema.names)
-        }
-        # NULL identity-partition values must stay None — str(None) would
-        # mangle them into the literal "None" (or raise on numeric casts)
-        consts = {
-            f.name: _pv_cast(
-                None if partition.pvals.get(f.name) is None
-                else str(partition.pvals.get(f.name)),
-                f.dataType,
-            )
-            for f in fields
-            if f.name in partition.pvals
-        }
-        none_col = [None] * table.num_rows
-        pmap = partition.pmap
-        for r in range(table.num_rows):
-            # columns absent from the file (added later by schema
-            # evolution) null-fill, matching the batch reader; renamed
-            # columns resolve through their stable physical name
-            yield tuple(
-                consts[f.name]
-                if f.name in consts
-                else file_cols.get(pmap.get(f.name, f.name), none_col)[r]
-                for f in fields
-            )
+        keys = None
+        if partition.eq_cols:
+            keys = pq.read_table(
+                partition.delete_path,
+                columns=[pmap.get(c, c) for c in partition.eq_cols],
+            ).rename_columns(list(partition.eq_cols))
+        yield from _file_batches(
+            partition.abs_path, schema, pmap, partition.pvals,
+            keys=keys, tags=partition.tags,
+        )
 
     def commit(self, end: dict) -> None:
         pass  # the engine's checkpoint IS the consumption record
 
 
+class IcebergChangeFeedStreamReader(IcebergStreamReader):
+    """Streaming twin of :func:`iceberg_py.table_changes_iceberg`,
+    planned by the same :func:`iceberg_py._snapshot_changes`: append
+    snapshots plan one 'insert' partition per added data file;
+    position-delete snapshots one partition per delete file, whose
+    victims resolve through the snapshot's manifests (so a fork's
+    source-rooted files are found); equality-delete snapshots one
+    partition per (earlier data file, delete file) pair — every row
+    read happens executor-side. Overwrite snapshots (other than the
+    table-creating one) raise: a wholesale rewrite is not
+    row-derivable."""
+
+    def partitions(self, start: dict, end: dict):
+        node = _current_schema_node(_load_metadata(self.table_path))
+        id_to_name = {f["id"]: f["name"] for f in node["fields"]}
+        parts: list[_FilePartition] = []
+        for v in range(start["snapshot"] + 1, end["snapshot"] + 1):
+            added = _snapshot_changes(self.table_path, v)
+            live = (
+                plan_files(self.table_path, v)
+                if any(e["content"] for e in added) else []
+            )
+            for e in added:
+                delete_path = os.path.join(self.table_path, e["path"])
+                if e["content"] == 0:
+                    parts.append(self._part(e, ("insert", v)))
+                elif e["content"] == 1:
+                    victims = {
+                        os.path.basename(f["path"]): (
+                            os.path.join(self.table_path, f["path"]),
+                            dict(f["partition"] or {}),
+                        )
+                        for f in live
+                    }
+                    parts.append(_FilePartition(
+                        None, {}, ("delete", v), delete_path, victims=victims
+                    ))
+                else:
+                    eq_cols = [id_to_name[i] for i in e["equality_ids"]]
+                    parts += [
+                        self._part(f, ("delete", v), delete_path=delete_path,
+                                   eq_cols=eq_cols)
+                        for f in live
+                        if f["snapshot_id"] < v
+                    ]
+        return parts
+
+
 def register(spark) -> None:
     """Idempotent registration of the streaming format."""
     spark.dataSource.register(IcebergStreamSource)
-
-
-class _CdcPartition(InputPartition):
-    """One CDC task. kinds:
-    - 'insert': whole added data file;
-    - 'pos-delete': one position-delete file — the task reads its
-      (file_path, pos) rows, then each victim data file, and emits the
-      deleted rows;
-    - 'eq-delete': one (earlier data file, equality delete file) pair —
-      the task filters the data file by the delete file's key values.
-    """
-
-    def __init__(self, kind, version, table_path, data_path=None,
-                 delete_path=None, eq_cols=None, pvals=None, pmap=None):
-        self.kind = kind
-        self.version = version
-        self.table_path = table_path
-        self.data_path = data_path
-        self.delete_path = delete_path
-        self.eq_cols = eq_cols or []
-        self.pvals = pvals or {}
-        # logical -> physical column names (stable across renames)
-        self.pmap = pmap or {}
-
-
-class IcebergChangeFeedStreamReader(DataSourceStreamReader):
-    """Streaming twin of :func:`iceberg_py.table_changes_iceberg`:
-    append snapshots plan one 'insert' partition per added data file;
-    position-delete snapshots one partition per delete file;
-    equality-delete snapshots one partition per (earlier data file,
-    delete file) pair — every row read happens executor-side.
-    Overwrite snapshots (other than the table-creating one) raise:
-    a wholesale rewrite is not row-derivable."""
-
-    def __init__(self, table_path: str, starting_snapshot: int,
-                 schema: T.StructType | None = None):
-        self.table_path = table_path
-        self.starting_snapshot = starting_snapshot
-        self.table_schema = schema
-
-    def initialOffset(self) -> dict:
-        return {"snapshot": self.starting_snapshot - 1}
-
-    def latestOffset(self) -> dict:
-        from .iceberg_py import current_metadata_version
-
-        return {"snapshot": current_metadata_version(self.table_path) or 0}
-
-    def partitions(self, start: dict, end: dict):
-        from .avro_py import read_container
-        from .iceberg_py import (
-            _current_schema_node,
-            _load_metadata,
-            _meta_dir,
-            _phys_map,
-            plan_files,
-        )
-
-        pmap = _phys_map(_current_schema_node(_load_metadata(self.table_path)))
-        if all(ln == pn for ln, pn in pmap.items()):
-            pmap = {}
-        parts: list[_CdcPartition] = []
-        for v in range(start["snapshot"] + 1, end["snapshot"] + 1):
-            meta_file = os.path.join(_meta_dir(self.table_path), f"v{v}.metadata.json")
-            if not os.path.exists(meta_file):
-                continue
-            meta = _load_metadata(self.table_path, v)
-            snap = next(
-                (s for s in meta.get("snapshots", []) if s["snapshot-id"] == v),
-                None,
-            )
-            if snap is None:
-                continue
-            op = snap.get("summary", {}).get("operation", "append")
-            if op == "replace" and snap.get("summary", {}).get(
-                "manifests-rewritten"
-            ):
-                continue  # manifest compaction: zero row-level changes
-            if op in ("overwrite", "replace") and v != 1:
-                raise ValueError(
-                    f"snapshot {v} is an overwrite: row-level changes are "
-                    "not derivable from metadata"
-                )
-            from .iceberg_py import _current_schema_node
-
-            id_to_name = {
-                f["id"]: f["name"]
-                for f in _current_schema_node(meta)["fields"]
-            }
-            new_entries = []
-            for ml in read_container(
-                os.path.join(self.table_path, snap["manifest-list"])
-            ):
-                if int(ml[3]) != v:
-                    continue
-                for e in read_container(os.path.join(self.table_path, ml[0])):
-                    if e[0] != 2:
-                        new_entries.append(e)
-            for e in new_entries:
-                if e[8] == 0:  # data file -> inserts
-                    parts.append(
-                        _CdcPartition(
-                            "insert", v, self.table_path,
-                            data_path=os.path.join(self.table_path, e[1]),
-                            pvals=dict(e[3] or {}),
-                            pmap=pmap,
-                        )
-                    )
-                elif e[8] == 1:  # position delete file
-                    parts.append(
-                        _CdcPartition(
-                            "pos-delete", v, self.table_path,
-                            delete_path=os.path.join(self.table_path, e[1]),
-                            pmap=pmap,
-                        )
-                    )
-                elif e[8] == 2:  # equality delete file
-                    eq_cols = [id_to_name[i] for i in e[9]]
-                    for f in plan_files(self.table_path, v):
-                        if f["snapshot_id"] < v:
-                            parts.append(
-                                _CdcPartition(
-                                    "eq-delete", v, self.table_path,
-                                    data_path=os.path.join(
-                                        self.table_path, f["path"]
-                                    ),
-                                    delete_path=os.path.join(
-                                        self.table_path, e[1]
-                                    ),
-                                    eq_cols=eq_cols,
-                                    pvals=dict(f["partition"] or {}),
-                                    pmap=pmap,
-                                )
-                            )
-        return parts
-
-    def read(self, partition: _CdcPartition):
-        import pyarrow.parquet as pq
-
-        from .delta_stream import _pv_cast
-
-        tag = {
-            "insert": "insert", "pos-delete": "delete", "eq-delete": "delete"
-        }[partition.kind]
-        fields = (
-            self.table_schema.fields[:-2]
-            if self.table_schema is not None
-            else None
-        )
-
-        def emit(table, pvals, idx=None):
-            """Schema-ordered rows + (change_type, version): partition
-            constants reattached, evolution-added columns null-filled;
-            positional fast path when the file already matches the
-            schema exactly."""
-            if fields is None or (
-                not pvals
-                and not partition.pmap
-                and list(table.schema.names) == [f.name for f in fields]
-            ):
-                cols = [
-                    table.column(i).to_pylist()
-                    for i in range(table.num_columns)
-                ]
-                rng = range(table.num_rows) if idx is None else idx
-                for r in rng:
-                    yield tuple(c[r] for c in cols) + (tag, partition.version)
-                return
-            file_cols = {
-                n: table.column(i).to_pylist()
-                for i, n in enumerate(table.schema.names)
-            }
-            consts = {
-                f.name: _pv_cast(
-                    None if pvals[f.name] is None else str(pvals[f.name]),
-                    f.dataType,
-                )
-                for f in fields
-                if f.name in pvals
-            }
-            none_col = [None] * table.num_rows
-            rng = range(table.num_rows) if idx is None else idx
-            for r in rng:
-                yield tuple(
-                    consts[f.name]
-                    if f.name in consts
-                    else file_cols.get(
-                        partition.pmap.get(f.name, f.name), none_col
-                    )[r]
-                    for f in fields
-                ) + (tag, partition.version)
-
-        if partition.kind == "insert":
-            yield from emit(pq.read_table(partition.data_path), partition.pvals)
-            return
-        if partition.kind == "pos-delete":
-            dels = pq.read_table(partition.delete_path).to_pylist()
-            by_file: dict[str, list[int]] = {}
-            for d in dels:
-                fp = d["file_path"]
-                # the delete file records the victim's full path; keep
-                # the table-relative part so partitioned layouts
-                # (data/k=v/...) resolve and carry their values
-                if fp.startswith("data/"):
-                    rel = fp  # already table-relative (this layer's writer)
-                elif "/data/" in fp:
-                    # LAST '/data/' — a table rooted under a path that
-                    # itself contains '/data/' must not split early
-                    rel = "data/" + fp.rsplit("/data/", 1)[1]
-                else:
-                    rel = os.path.join("data", os.path.basename(fp))
-                by_file.setdefault(rel, []).append(int(d["pos"]))
-            for rel, positions in sorted(by_file.items()):
-                pvals = {
-                    k: v
-                    for seg in rel.split("/")[1:-1]
-                    for k, _, v in [seg.partition("=")]
-                }
-                table = pq.read_table(os.path.join(partition.table_path, rel))
-                yield from emit(table, pvals, sorted(positions))
-            return
-        # eq-delete: filter the data file by the delete file's keys —
-        # key columns may include the partition column, so match on
-        # the fully reassembled rows
-        keys = pq.read_table(partition.delete_path).to_pylist()
-        _pm = partition.pmap
-        keyset = {
-            tuple(k[_pm.get(c, c)] for c in partition.eq_cols) for k in keys
-        }
-        table = pq.read_table(partition.data_path)
-        if fields is not None:
-            from .delta_stream import _pv_cast as _pvc
-
-            file_cols = {
-                n: table.column(i).to_pylist()
-                for i, n in enumerate(table.schema.names)
-            }
-            consts = {
-                f.name: _pvc(str(partition.pvals[f.name]), f.dataType)
-                for f in fields
-                if f.name in partition.pvals
-            }
-            none_col = [None] * table.num_rows
-
-            def cell(name, r):
-                if name in consts:
-                    return consts[name]
-                return file_cols.get(_pm.get(name, name), none_col)[r]
-
-            idx = [
-                r for r in range(table.num_rows)
-                if tuple(cell(c, r) for c in partition.eq_cols) in keyset
-            ]
-            for r in idx:
-                yield tuple(cell(f.name, r) for f in fields) + (
-                    tag, partition.version
-                )
-        else:
-            names = table.schema.names
-            cols = {n: table.column(i).to_pylist() for i, n in enumerate(names)}
-            for r in range(table.num_rows):
-                if tuple(
-                    cols[_pm.get(c, c)][r] for c in partition.eq_cols
-                ) in keyset:
-                    yield tuple(cols[n][r] for n in names) + (
-                        tag, partition.version
-                    )
-
-    def commit(self, end: dict) -> None:
-        pass

@@ -1295,6 +1295,35 @@ def test_iceberg_metadata_commits_cas_on_race(spark):
     assert {r.id for r in I.read_iceberg(spark, path).collect()} == set(range(12))
 
 
+def test_iceberg_cdc_identity_partition_values(spark):
+    """Derived CDC over an identity-partitioned table reattaches the
+    partition column (data files omit it) on insert, position-delete
+    and equality-delete rows alike, as read_iceberg does."""
+    import python_plugins_spark.sources.iceberg_py as I
+
+    path = _fresh("ice_cdc_identity")
+    I.write_iceberg(
+        spark.range(12).selectExpr("id", "concat('g', id % 2) AS g"),
+        path, "overwrite", partition_by="g",
+    )
+    I.delete_iceberg(spark, path, "id < 2")
+    I.equality_delete_iceberg(
+        spark, path, spark.createDataFrame([("g1",)], "g string")
+    )
+    assert {(r.id, r.g) for r in I.read_iceberg(spark, path).collect()} == {
+        (i, "g0") for i in range(2, 12, 2)
+    }
+    cdc = I.table_changes_iceberg(spark, path, 1).collect()
+    assert {(r.id, r.g) for r in cdc if r._change_type == "insert"} == {
+        (i, f"g{i % 2}") for i in range(12)
+    }
+    assert sorted(
+        (r.id, r.g, r._commit_snapshot) for r in cdc if r._change_type == "delete"
+    ) == sorted(
+        [(0, "g0", 2), (1, "g1", 2)] + [(i, "g1", 3) for i in range(1, 12, 2)]
+    )
+
+
 def test_iceberg_cdc_on_transform_partitioned_table(spark):
     """Derived CDC over a bucket-partitioned table: inserts and
     equality deletes replay correctly (transform partition keys are

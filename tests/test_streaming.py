@@ -1064,6 +1064,102 @@ def test_iceberg_stream_null_partition_value(spark, tmp_path):
     assert got == {(1, "a"), (2, None), (3, "a"), (4, None)}
 
 
+def _drain_table_stream(spark, fmt, table, **options):
+    """Run a ``<fmt>_py_stream`` read of ``table`` to a memory sink
+    until it is caught up; return the sink's rows as a frame."""
+    reader = spark.readStream.format(f"{fmt}_py_stream").option("path", table)
+    for key, value in options.items():
+        reader = reader.option(key, value)
+    name = f"tstream_{uuid.uuid4().hex[:8]}"
+    q = (
+        reader.load().writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
+def _rows(df, columns):
+    return sorted(tuple(r) for r in df.select(*columns).collect())
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "by_g"])
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_table_stream_reads_match_batch_reads(spark, tmp_path, fmt, partitioned):
+    """Batch/stream parity on a table with a TIMESTAMP column, flat or
+    identity-partitioned: the append stream equals the snapshot read,
+    and after a DV / position delete (plus an equality delete on
+    Iceberg) the readChangeFeed stream equals table_changes /
+    table_changes_iceberg row for row."""
+    from python_plugins_spark.sources import delta_py as D
+    from python_plugins_spark.sources import delta_stream, iceberg_stream
+    from python_plugins_spark.sources import iceberg_py as I
+
+    delta_stream.register(spark)
+    iceberg_stream.register(spark)
+    df = spark.range(24).selectExpr(
+        "id", "concat('g', id % 2) AS g", "timestamp_seconds(id * 3600) AS ts"
+    )
+    table = str(tmp_path / f"parity_{fmt}")
+    if fmt == "delta":
+        pb = ["g"] if partitioned else None
+        D.write_delta(df.filter("id < 12"), table, "overwrite", partition_by=pb)
+        D.write_delta(df.filter("id >= 12"), table, "append", partition_by=pb)
+        snapshot = D.read_delta(spark, table)
+    else:
+        pb = "g" if partitioned else None
+        I.write_iceberg(df.filter("id < 12"), table, "overwrite", partition_by=pb)
+        I.write_iceberg(df.filter("id >= 12"), table, "append")
+        snapshot = I.read_iceberg(spark, table)
+    cols = ["id", "g", "ts"]
+    appended = _drain_table_stream(spark, fmt, table)
+    assert _rows(appended, cols) == _rows(snapshot, cols) == _rows(df, cols)
+
+    if fmt == "delta":
+        D.delete_delta(spark, table, "id % 3 = 0", mode="dv")
+        batch = D.table_changes(spark, table, 0)
+    else:
+        I.delete_iceberg(spark, table, "id % 3 = 0")
+        I.equality_delete_iceberg(
+            spark, table, spark.createDataFrame([("g1",)], "g string")
+        )
+        batch = I.table_changes_iceberg(spark, table, 1)
+    streamed = _drain_table_stream(spark, fmt, table, readChangeFeed="true")
+    assert streamed.columns == batch.columns
+    want = _rows(batch, batch.columns)
+    assert _rows(streamed, batch.columns) == want
+    assert {r[:3] for r in want if r[3] == "insert"} == set(_rows(df, cols))
+    assert {r[0] for r in want if r[3] == "delete"} >= {0, 3, 6, 9}
+
+
+def test_iceberg_cdc_stream_on_snapshot_fork(spark, tmp_path):
+    """The CDC stream of a snapshot_iceberg fork resolves position-
+    delete victims from the manifests (they live under the SOURCE's
+    root) and matches table_changes_iceberg."""
+    from python_plugins_spark.sources import iceberg_py as I
+    from python_plugins_spark.sources import iceberg_stream
+
+    iceberg_stream.register(spark)
+    src, fork = str(tmp_path / "fork_src"), str(tmp_path / "fork_dst")
+    I.write_iceberg(
+        spark.range(12).selectExpr("id", "concat('g', id % 2) AS g"),
+        src, "overwrite", partition_by="g",
+    )
+    I.snapshot_iceberg(src, fork)
+    I.delete_iceberg(spark, fork, "id % 3 = 0")
+
+    batch = I.table_changes_iceberg(spark, fork, 1)
+    deleted = batch.filter("_change_type = 'delete'").select("id", "g")
+    assert _rows(deleted, ["id", "g"]) == [
+        (0, "g0"), (3, "g1"), (6, "g0"), (9, "g1")
+    ]
+    streamed = _drain_table_stream(spark, "iceberg", fork, readChangeFeed="true")
+    assert _rows(streamed, batch.columns) == _rows(batch, batch.columns)
+
+
 def test_msgbus_stream_resumes_exactly_once(spark, tmp_path):
     """The Kafka-shaped source checkpoints {partition: consumed} and a
     restarted stream resumes after the last committed record — each
