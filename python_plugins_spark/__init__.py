@@ -23,22 +23,15 @@ as an idiomatic Spark DataFrame engine:
   over Structured Streaming plus watermark/window/session helpers.
 """
 
-# Worker-shim bootstrap AT IMPORT TIME, not only in get_spark(): an
+from python_plugins_spark.session import ensure_worker_hook, get_spark, stop_spark
+
+# Worker start-up hook AT IMPORT TIME, not only in get_spark(): an
 # externally-built SparkSession (the driver's correctness gate builds
 # its own) launches its JVM whenever getOrCreate first runs — which is
 # after this package is imported but possibly never through get_spark.
 # Python workers inherit the JVM's env, so PYTHONPATH must carry the
-# sitecustomize dir (vendored-protobuf shim for transformWithState)
-# before that launch. Idempotent; harmless if the JVM already exists.
-import os as _os
-
-_shim_dir = _os.path.join(_os.path.dirname(_os.path.abspath(__file__)), "vendor", "pythonpath")
-_pp = _os.environ.get("PYTHONPATH", "")
-if _shim_dir not in _pp.split(":"):
-    _os.environ["PYTHONPATH"] = f"{_shim_dir}:{_pp}" if _pp else _shim_dir
-del _os, _shim_dir, _pp
-
-from python_plugins_spark.session import get_spark, stop_spark
+# hook dir before that launch. Harmless if the JVM already exists.
+ensure_worker_hook()
 from python_plugins_spark.schema import cdap_schema_to_spark, spark_schema_to_cdap
 from python_plugins_spark.operators.transform import (
     PythonTransformError,

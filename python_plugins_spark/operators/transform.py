@@ -33,10 +33,11 @@ Architecture vs the reference: the reference crosses a process boundary
 (``Py4jPythonExecutor.java:226-237``) or re-executes the script per
 record in Jython (``JythonPythonExecutor.java:78-81``). Here the user
 function crosses the JVM<->Python boundary once per **Arrow batch**
-(``mapInArrow``), the script is compiled once per executor, and Spark
-reuses Python workers — the per-record cost is a plain Python function
-call. Records are decoded from and encoded to Arrow directly
-(``_batch_to_records`` / ``_records_to_batch``), with no pandas step.
+(``mapInArrow``), the script is compiled once per Python worker process
+(and ``exec``-ed once per task), and Spark reuses Python workers — the
+per-record cost is a plain Python function call. Records are decoded
+from and encoded to Arrow directly (``_batch_to_records`` /
+``_records_to_batch``), with no pandas step.
 This is the single biggest architectural win and why no custom
 channel/TLS code (``KeyStores.java``) is needed: Spark owns the
 executor<->worker channel.
@@ -50,6 +51,7 @@ JVM-side in whole-stage codegen, and (b) users should ``select``/
 
 from __future__ import annotations
 
+import functools
 import logging
 import traceback
 from collections.abc import Callable, Iterator
@@ -105,12 +107,15 @@ def _python2_rewrite(script: str) -> str:
     return python2_to_3(script)
 
 
+@functools.lru_cache(maxsize=64)
 def _compile_script(script: str):
     """Compile, falling back to the Python-2 shim on SyntaxError.
     Returns the code object; raises :class:`ScriptValidationError`
     (carrying the ORIGINAL syntax error) if neither parse succeeds.
-    Used on the driver (validation) and on executors (fn load), so a
-    py2 script behaves identically in both places."""
+    Used on the driver (validation) and in Python workers (fn load), so
+    a py2 script behaves identically in both places. Memoized per
+    process on the script text, so a reused worker compiles (and
+    rewrites) a script once; a failure is not cached."""
     try:
         return compile(script, "<python_transform>", "exec")
     except SyntaxError as exc:
@@ -570,9 +575,10 @@ def python_transform(
 
     def make_fn():
         """Build the worker-side batch function. The script is compiled
-        once per executor process (parity with the reference's
-        compile-once, ``JythonPythonExecutor.java:58-62``) — not per
-        record."""
+        once per Python worker process (parity with the reference's
+        compile-once, ``JythonPythonExecutor.java:58-62``) and executed
+        once per task, so module-level script state starts fresh in
+        each task — never per record."""
         captured_script = script
         captured_func = func
         captured_args = args

@@ -28,6 +28,17 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def ensure_worker_hook() -> None:
+    """Prepend the worker start-up hook's dir (``vendor/pythonpath``,
+    whose ``sitecustomize.py`` every Python worker runs at interpreter
+    start) to ``PYTHONPATH``. Workers inherit the env of the JVM, so this
+    reaches only workers of a JVM launched after the call. Idempotent."""
+    hook_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor", "pythonpath")
+    pp = os.environ.get("PYTHONPATH", "")
+    if hook_dir not in pp.split(":"):
+        os.environ["PYTHONPATH"] = f"{hook_dir}:{pp}" if pp else hook_dir
+
+
 def get_spark(
     app_name: str = "python_plugins_spark",
     master: str | None = None,
@@ -57,16 +68,12 @@ def get_spark(
         shuffle_partitions = cpus
 
     # Vendored protobuf for transformWithStateInPandas (see
-    # vendor/protobuf_shim.py): shim the driver now, and prepend the
-    # sitecustomize dir to PYTHONPATH so python WORKERS run the same
-    # shim at interpreter startup. Must happen before the JVM forks.
+    # vendor/protobuf_shim.py): shim the driver now; workers run the
+    # same shim from the start-up hook. Must happen before the JVM forks.
     from python_plugins_spark.vendor import protobuf_shim
 
     protobuf_shim.ensure_protobuf()
-    _shim_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor", "pythonpath")
-    _pp = os.environ.get("PYTHONPATH", "")
-    if _shim_dir not in _pp.split(":"):
-        os.environ["PYTHONPATH"] = f"{_shim_dir}:{_pp}" if _pp else _shim_dir
+    ensure_worker_hook()
 
     builder = (
         SparkSession.builder.appName(app_name)

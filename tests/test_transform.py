@@ -487,6 +487,28 @@ def test_python2_shim_still_rejects_garbage(spark):
         validate_script("def transform(record, emitter context):\n  pass\n")
 
 
+def test_compile_script_memoizes_code_per_script(monkeypatch):
+    """A reused worker compiles a script once: the second
+    ``_compile_script`` call returns the same code object and does not
+    run the py2 rewriter again. Failures are not memoized."""
+    from python_plugins_spark.operators import transform as tr
+
+    calls = []
+    rewrite = tr._python2_rewrite
+    monkeypatch.setattr(tr, "_python2_rewrite", lambda s: calls.append(s) or rewrite(s))
+    tr._compile_script.cache_clear()
+    script = "def transform(record, emitter, context):\n  print 'memo'\n  emitter.emit(record)\n"
+    first = tr._compile_script(script)
+    assert tr._compile_script(script) is first
+    assert calls == [script]
+
+    bad = "def transform(record, emitter context):\n  pass\n"
+    for _ in range(2):
+        with pytest.raises(ScriptValidationError):
+            tr._compile_script(bad)
+    assert calls == [script, bad, bad]
+
+
 def test_python_binary_and_path_e2e(tmp_path):
     """Reference parity row 17 (PythonTransformNativeTest.java:55-77):
     run the transform under an ALTERNATE interpreter (a venv python,
