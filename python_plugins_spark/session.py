@@ -28,6 +28,24 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def is_local_master(master: str) -> bool:
+    """True for a single-JVM master (``local``, ``local[N]``,
+    ``local[*]``, ``local[N,F]``): driver and executors share one
+    process and one file system, so no executor can be lost on its own.
+    ``local-cluster[...]`` and every cluster master are not local."""
+    return master == "local" or master.startswith("local[")
+
+
+#: Spark's checkpoint file manager over the Hadoop FileSystem API. Its
+#: default, the FileContext manager, forks ``readlink`` and ``chmod``
+#: children of the JVM for most operations on a ``file:`` path when
+#: Hadoop's native library is absent (docs/streaming.md, Checkpoint I/O).
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def ensure_worker_hook() -> None:
     """Prepend the worker start-up hook's dir (``vendor/pythonpath``,
     whose ``sitecustomize.py`` every Python worker runs at interpreter
@@ -60,6 +78,13 @@ def get_spark(
     - shuffle partitions default to local core count in local mode; on a
       real cluster pass ``shuffle_partitions`` sized to ~2-3x total
       executor cores (AQE coalesces the excess).
+    - on a ``local[...]`` master, streaming checkpoints (offset, commit
+      and file-source logs, state-store files) are written through the
+      Hadoop FileSystem API instead of FileContext: same files, same
+      rename protocol, a fraction of the forked subprocesses
+      (docs/streaming.md, Checkpoint I/O).
+
+    ``extra_conf`` overrides any of these except the UTC pin.
     """
     cpus = _default_parallelism()
     if master is None:
@@ -137,6 +162,10 @@ def get_spark(
         if pkg_root not in parts:
             parts.append(pkg_root)
         builder = builder.config("spark.executorEnv.PYTHONPATH", ":".join(parts))
+    if is_local_master(master):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER
+        )
     for key, value in (extra_conf or {}).items():
         if key == "spark.sql.session.timeZone" and value != "UTC":
             # Value-identity of naive-parquet timestamp reads (and every
@@ -164,6 +193,16 @@ def stop_spark() -> None:
 STAGE_MATERIALIZE_CONF = "spark.python_plugins.stageMaterialize"
 
 
+def _materialize_mode(df) -> str:
+    """The session's :data:`STAGE_MATERIALIZE_CONF`; when unset,
+    ``localCheckpoint`` on a local master (no executor can be lost on
+    its own) and ``persist`` on any other (lineage kept, so a lost
+    executor's blocks are recomputed)."""
+    spark = df.sparkSession
+    default = "localCheckpoint" if is_local_master(spark.sparkContext.master) else "persist"
+    return spark.conf.get(STAGE_MATERIALIZE_CONF, default)
+
+
 def stage_checkpoint(df):
     """Materialize an intermediate frame that several downstream
     subtrees consume — the library's one choke point for the
@@ -171,18 +210,23 @@ def stage_checkpoint(df):
     materialization STRATEGY is a runtime choice instead of being
     hard-coded at ~60 call sites.
 
-    Modes (session conf ``spark.python_plugins.stageMaterialize``):
+    Modes (session conf ``spark.python_plugins.stageMaterialize``;
+    when it is unset, ``localCheckpoint`` on a ``local[...]`` master
+    and ``persist`` on every other master, see
+    :func:`_materialize_mode`):
 
-    - ``localCheckpoint`` (default): truncates lineage and stores
-      blocks on the executors; blocks release on driver GC of the
-      frame, not at session end — the right trade for single-box
-      runs (bench, the 400-query sweep, tests), where executor loss
-      is impossible. DOCUMENTED FAILURE MODE on a real cluster: if an
-      executor holding checkpoint blocks dies (spot nodes, dynamic
-      allocation), the job fails unrecoverably because the truncated
-      lineage cannot recompute them — Spark's own docs carry the same
-      warning.
-    - ``persist``: StorageLevel MEMORY_AND_DISK with lineage KEPT —
+    - ``localCheckpoint`` (default on a local master): truncates
+      lineage and stores blocks on the executors; blocks release on
+      driver GC of the frame, not at session end — the right trade
+      for single-box runs (bench, the 400-query sweep, tests), where
+      executor loss is impossible. DOCUMENTED FAILURE MODE when it is
+      set explicitly on a real cluster: if an executor holding
+      checkpoint blocks dies (spot nodes, dynamic allocation), the job
+      fails unrecoverably because the truncated lineage cannot
+      recompute them — Spark's own docs carry the same warning. The
+      cluster default is ``persist`` for this reason.
+    - ``persist`` (default on a cluster master): StorageLevel
+      MEMORY_AND_DISK with lineage KEPT —
       executor loss recomputes the lost partitions; blocks are still
       GC-released (ContextCleaner unpersists cached data whose driver
       reference is collected). The cluster-safe setting for 100 TB
@@ -198,7 +242,7 @@ def stage_checkpoint(df):
     subtree running exactly once even when they fan out into several
     actions, so laziness here would silently re-run it per consumer.
     """
-    mode = df.sparkSession.conf.get(STAGE_MATERIALIZE_CONF, "localCheckpoint")
+    mode = _materialize_mode(df)
     if mode == "persist":
         df = df.persist()
         df.count()
@@ -220,13 +264,14 @@ def stage_checkpoint_iterative(df):
     round's frame must be one iteration deep, or by round N the plan
     nests N rounds and Catalyst analysis time / driver memory grow
     without bound. The ``persist`` mode is therefore NOT honored
-    as-is at these sites: under ``persist``, iterative stages use the
+    as-is at these sites: under ``persist`` (set explicitly, or the
+    default on a cluster master), iterative stages use the
     reliable checkpoint when a checkpoint dir is configured (both
     properties: truncation + executor-loss safety) and fall back to
     localCheckpoint otherwise — accepting the documented
     executor-loss caveat, because unbounded plan growth is the worse
     failure on every run, not just on executor loss."""
-    mode = df.sparkSession.conf.get(STAGE_MATERIALIZE_CONF, "localCheckpoint")
+    mode = _materialize_mode(df)
     if mode == "checkpoint":
         return df.checkpoint(eager=True)
     if mode == "persist":

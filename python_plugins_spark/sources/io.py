@@ -100,18 +100,59 @@ def _narrow_width(node, splits, scan_top=None) -> int | None:
     return width
 
 
+def _parquet_splits_with_rows(jvm, session, scan_exec) -> int:
+    """Splits of a parquet ``FileSourceScanExec`` that hold rows. A
+    parquet reader reads a row group in the one split holding its
+    midpoint, so a split cut out of a file with fewer row groups than
+    pieces reads nothing. A piece that is a whole file counts without a
+    footer read, and a split stops at its first piece that counts; a
+    piece of a cut file counts when Spark's own range filter over its
+    footer keeps a row group."""
+    conf = footers = input_file = None  # looked up at the first cut piece
+
+    def holds_rows(piece) -> bool:
+        nonlocal conf, footers, input_file
+        if piece.length() == piece.fileSize():
+            return True
+        if conf is None:
+            conf = session.sessionState().newHadoopConf()
+            footers = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+            input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+        footer = footers.readFooter(
+            input_file.fromPath(piece.toPath(), conf), footers.buildFilter(conf, piece, False)
+        )
+        return not footer.getBlocks().isEmpty()
+
+    held = 0
+    it = scan_exec.inputRDD().filePartitions().iterator()
+    while it.hasNext():
+        held += any(holds_rows(piece) for piece in it.next().files())
+    return held
+
+
 def scan_width(df: DataFrame) -> int | None:
-    """Partition count of a batch frame that is only narrow nodes over
-    source scans, read from its optimized plan; None for every other
-    frame (shuffle output, checkpointed, cached or local data, a
-    stream). Only the scans are planned, so no job starts."""
+    """Number of partitions that hold rows in a batch frame that is only
+    narrow nodes over source scans, read from its optimized plan; None
+    for every other frame (shuffle output, checkpointed, cached or local
+    data, a stream). A parquet scan counts only the splits that hold a
+    row group (:func:`_parquet_splits_with_rows`); every other scan
+    counts all its splits. Only the scans are planned and at most their
+    footers read, so no job starts."""
     if df.isStreaming:
         return None
-    dataset = df._sc._jvm.org.apache.spark.sql.classic.Dataset  # type: ignore[attr-defined]
+    jvm = df._sc._jvm  # type: ignore[attr-defined]
+    dataset = jvm.org.apache.spark.sql.classic.Dataset
     session = df.sparkSession._jsparkSession
 
     def splits(scan) -> int:
-        return dataset.ofRows(session, scan).queryExecution().toRdd().getNumPartitions()
+        qe = dataset.ofRows(session, scan).queryExecution()
+        leaf = qe.executedPlan().collectLeaves().head()
+        if (
+            leaf.getClass().getSimpleName() == "FileSourceScanExec"
+            and leaf.relation().fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+        ):
+            return _parquet_splits_with_rows(jvm, session, leaf)
+        return qe.toRdd().getNumPartitions()
 
     return _narrow_width(df._jdf.queryExecution().optimizedPlan(), splits)
 

@@ -4328,6 +4328,37 @@ def test_stage_checkpoint_modes(spark):
         spark.conf.unset(STAGE_MATERIALIZE_CONF)
 
 
+def test_stage_checkpoint_default_follows_master(spark, monkeypatch):
+    """With the conf unset, a local master materializes through
+    ``localCheckpoint`` and any other master through ``persist``
+    (lineage kept); an explicit conf wins on either."""
+    from python_plugins_spark.session import (
+        STAGE_MATERIALIZE_CONF, stage_checkpoint, stage_checkpoint_iterative,
+    )
+
+    sc = spark.sparkContext
+    df = spark.range(50).selectExpr("id", "id + 1 AS v")
+    want = sorted((r.id, r.v) for r in df.collect())
+    spark.conf.unset(STAGE_MATERIALIZE_CONF)
+    local = df.transform(stage_checkpoint)
+    assert not local.storageLevel.useMemory and not local.storageLevel.useDisk
+    monkeypatch.setattr(sc, "master", "spark://host:7077")
+    try:
+        cluster = df.transform(stage_checkpoint)
+        assert cluster.storageLevel.useMemory or cluster.storageLevel.useDisk
+        assert sorted((r.id, r.v) for r in cluster.collect()) == want
+        cluster.unpersist()
+        # the iterative variant's persist rule truncates lineage (a
+        # reliable or a local checkpoint); it never caches
+        it = df.transform(stage_checkpoint_iterative)
+        assert not it.storageLevel.useMemory and not it.storageLevel.useDisk
+        spark.conf.set(STAGE_MATERIALIZE_CONF, "localCheckpoint")
+        explicit = df.transform(stage_checkpoint)
+        assert not explicit.storageLevel.useMemory and not explicit.storageLevel.useDisk
+    finally:
+        spark.conf.unset(STAGE_MATERIALIZE_CONF)
+
+
 def test_ann_topk_queries_matches_exact(spark):
     """The serving-shape exact scan (bounded query batch x corpus)
     returns exactly the self-search exact result restricted to the

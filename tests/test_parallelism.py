@@ -1,11 +1,12 @@
 """The library's one parallelism rule (``sources.io.spread_scan``).
 
 The rule is read from the optimized plan: a batch frame that is narrow
-over source scans and has fewer splits than ``defaultParallelism`` is
-spread; every other frame keeps its width. These tests pin the width
-against Spark's own partition count (the reference, used only here)
-and check that building the operators that apply the rule runs nothing
-of the caller's subtree."""
+over source scans and has fewer splits holding rows than
+``defaultParallelism`` is spread; every other frame keeps its width.
+These tests pin the width against the number of partitions Spark
+actually fills with rows (the reference, used only here) and check that
+building the operators that apply the rule runs nothing of the caller's
+subtree."""
 
 import os
 
@@ -18,15 +19,24 @@ from pyspark.sql import functions as F
 from python_plugins_spark.sources.io import load_table, scan_width, spread_scan
 
 
-def _write(path, n_rows, payload_bytes=8, seed=0):
+def _write(path, n_rows, payload_bytes=8, seed=0, row_group_rows=None):
     """One uncompressed parquet file of ``n_rows`` rows with a random
     ``payload_bytes``-wide binary column (incompressible, so the file
-    size is predictable)."""
+    size is predictable), in row groups of ``row_group_rows`` rows (one
+    row group by default)."""
     rng = np.random.default_rng(seed)
     blob = rng.bytes(n_rows * payload_bytes)
     payload = [blob[i * payload_bytes:(i + 1) * payload_bytes] for i in range(n_rows)]
     table = pa.table({"id": pa.array(range(n_rows), pa.int64()), "payload": payload})
-    pq.write_table(table, path, compression="none", use_dictionary=False)
+    pq.write_table(
+        table, path, compression="none", use_dictionary=False,
+        row_group_size=row_group_rows or n_rows,
+    )
+
+
+def _filled_partitions(df) -> int:
+    """Partitions that hold at least one row, counted by running ``df``."""
+    return df.select(F.spark_partition_id()).distinct().count()
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +46,11 @@ def inputs(spark, tmp_path_factory):
     max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     wide_bytes = int(parallelism * max_split * 1.05)
     _write(str(root / "one.parquet"), 1000)
-    _write(str(root / "wide.parquet"), wide_bytes // 1024, payload_bytes=1024)
+    # row groups of a quarter split, so every split holds row groups
+    _write(
+        str(root / "wide.parquet"), wide_bytes // 1024, payload_bytes=1024,
+        row_group_rows=max_split // 4096,
+    )
     assert os.path.getsize(root / "wide.parquet") > wide_bytes
     (root / "many").mkdir()
     for i in range(3 * parallelism):
@@ -67,13 +81,35 @@ def test_scan_width_matches_spark(spark, inputs):
     parallelism = spark.sparkContext.defaultParallelism
     decisions = set()
     for name, df in _narrow_cases(spark, inputs).items():
-        reference = df.rdd.getNumPartitions()
+        reference = _filled_partitions(df)
         assert scan_width(df) == reference, name
         spreads = reference < parallelism
         assert (spread_scan(df) is not df) == spreads, name
         decisions.add(spreads)
     # the table covers both outcomes of the rule
     assert decisions == {True, False}
+
+
+def test_scan_width_counts_only_splits_with_row_groups(spark, tmp_path):
+    """A parquet file cut into more splits than it has row groups fills
+    only the splits that hold a row group's midpoint; the others read
+    nothing and are not counted."""
+    _write(str(tmp_path / "one_group.parquet"), 1000, payload_bytes=1024)
+    _write(str(tmp_path / "four_groups.parquet"), 1000, payload_bytes=1024, row_group_rows=250)
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        one = spark.read.parquet(str(tmp_path / "one_group.parquet"))
+        four = spark.read.parquet(str(tmp_path / "four_groups.parquet"))
+        assert one.rdd.getNumPartitions() > 4 and four.rdd.getNumPartitions() > 4
+        assert scan_width(one) == _filled_partitions(one) == 1
+        assert scan_width(four) == _filled_partitions(four) == 4
+        assert scan_width(one.union(four)) == 5
+        if spark.sparkContext.defaultParallelism > 1:
+            assert spread_scan(one) is not one
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_spread_is_to_parallelism(spark, inputs):

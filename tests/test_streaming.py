@@ -199,6 +199,162 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert got == [2, 4, 6, 20, 40], got  # first file NOT duplicated
 
 
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FS_MANAGER = _CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+_FC_MANAGER = _CKPT_PKG + "FileContextBasedCheckpointFileManager"
+
+
+def _uuids_out(names):
+    """``names`` sorted, with every UUID replaced by ``<uuid>``."""
+    import re
+
+    uuid_re = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    return sorted(uuid_re.sub("<uuid>", n) for n in names)
+
+
+def _checkpoint_manager(spark, path):
+    """The checkpoint file manager Spark picks for ``path`` under the
+    session's current confs."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), conf
+    )
+
+
+@pytest.mark.parametrize("master, local", [
+    ("local", True), ("local[1]", True), ("local[4]", True), ("local[*]", True),
+    ("local[4,2]", True), ("local[*,3]", True),
+    ("local-cluster[2,1,1024]", False), ("spark://host:7077", False), ("yarn", False),
+    ("k8s://https://host:6443", False), ("mesos://host:5050", False),
+])
+def test_local_master_predicate(master, local):
+    from python_plugins_spark.session import is_local_master
+
+    assert is_local_master(master) is local
+
+
+def test_local_session_checkpoints_through_filesystem_api(spark, tmp_path):
+    """``get_spark`` on a local master makes Spark resolve a ``file:``
+    checkpoint to the FileSystem-API manager; an ``extra_conf`` value
+    for the same conf wins."""
+    from python_plugins_spark import get_spark
+
+    path = "file:" + str(tmp_path / "ckpt")
+    assert _checkpoint_manager(spark, path).getClass().getName() == _FS_MANAGER
+    before = spark.conf.get(_CKPT_MANAGER_CONF)
+    try:
+        again = get_spark(
+            "tests", master="local[4]",
+            shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+            extra_conf={_CKPT_MANAGER_CONF: _FC_MANAGER},
+        )
+        assert again is spark
+        assert _checkpoint_manager(spark, path).getClass().getName() == _FC_MANAGER
+    finally:
+        spark.conf.set(_CKPT_MANAGER_CONF, before)
+    assert _checkpoint_manager(spark, path).getClass().getName() == _FS_MANAGER
+
+
+def test_checkpoint_atomic_create_refuses_overwrite(spark, tmp_path):
+    """Under both managers, ``createAtomic(p, overwriteIfPossible=false)``
+    over an existing file raises ``FileAlreadyExistsException``, keeps
+    the existing file and leaves the same files behind."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    before = spark.conf.get(_CKPT_MANAGER_CONF)
+    listings = []
+    try:
+        for manager in (_FS_MANAGER, _FC_MANAGER):
+            spark.conf.set(_CKPT_MANAGER_CONF, manager)
+            root = tmp_path / manager.rsplit(".", 1)[1]
+            target = spark._jvm.org.apache.hadoop.fs.Path("file:" + str(root / "0"))
+            fm = _checkpoint_manager(spark, "file:" + str(root))
+            assert fm.getClass().getName() == manager
+            fm.mkdirs(target.getParent())
+            out = fm.createAtomic(target, False)
+            out.write(bytearray(b"first"))
+            out.close()
+            listing = sorted(os.listdir(root))
+            second = fm.createAtomic(target, False)
+            second.write(bytearray(b"second"))
+            with pytest.raises(Py4JJavaError) as err:
+                second.close()
+            exists_error = spark._jvm.org.apache.hadoop.fs.FileAlreadyExistsException
+            assert exists_error._java_lang_class.isInstance(err.value.java_exception), manager
+            assert (root / "0").read_bytes() == b"first", manager
+            assert listing == [".0.crc", "0"], manager
+            listings.append(_uuids_out(sorted(os.listdir(root))))
+    finally:
+        spark.conf.set(_CKPT_MANAGER_CONF, before)
+    # both leave the refused write's temp file (and its .crc) behind
+    assert listings[0] == listings[1], listings
+
+
+def test_checkpoint_resumes_across_file_managers(spark, tmp_path):
+    """A stateful stream (file source, deduplication, parquet sink)
+    checkpointed under one manager resumes exactly once under the other,
+    in both directions, and both leave the same checkpoint and sink
+    files (``.crc`` sidecars included) up to the UUIDs in file names."""
+    import os
+    import time
+
+    def write_file(src, vals):
+        spark.createDataFrame([(v,) for v in vals], "v long").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        time.sleep(1.1)
+
+    def run(root, manager):
+        spark.conf.set(_CKPT_MANAGER_CONF, manager)
+        q = (
+            spark.readStream.schema("v long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(root, "src"))
+            .dropDuplicates(["v"])
+            .writeStream.format("parquet")
+            .option("path", os.path.join(root, "out"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def listing(root):
+        return _uuids_out(
+            os.path.relpath(os.path.join(d, f), root) for d, _, files in os.walk(root) for f in files
+        )
+
+    before = spark.conf.get(_CKPT_MANAGER_CONF)
+    listings = []
+    try:
+        for first, second in ((_FC_MANAGER, _FS_MANAGER), (_FS_MANAGER, _FC_MANAGER)):
+            root = str(tmp_path / first.rsplit(".", 1)[1])
+            write_file(os.path.join(root, "src"), [1, 2, 3])
+            run(root, first)
+            # arrives while the query is down; 2 and 3 are duplicates the
+            # restored dedup state must drop
+            write_file(os.path.join(root, "src"), [2, 3, 10])
+            run(root, second)
+            got = sorted(r.v for r in spark.read.parquet(os.path.join(root, "out")).collect())
+            assert got == [1, 2, 3, 10], (first, got)
+            listings.append(listing(root))
+    finally:
+        spark.conf.set(_CKPT_MANAGER_CONF, before)
+    assert listings[0] == listings[1]
+    assert "ckpt/offsets/.1.crc" in listings[0] and "ckpt/commits/.1.crc" in listings[0]
+    # state-store files (HDFS-backed `.delta`, or RocksDB's, whichever
+    # provider the session has) are in the compared listing too
+    assert any(p.startswith("ckpt/state/0/0/") and ".crc" not in p for p in listings[0])
+    assert not any(p.endswith(".tmp") for p in listings[0])
+
+
 def test_stream_stream_left_outer_join(spark, tmp_path):
     """Watermarked stream-stream LEFT OUTER join (impressions left,
     clicks right, click within 10 min of impression): matched rows emit
