@@ -8,7 +8,8 @@ Three tiers:
   ~10^4 vectors per side.
 - **Vectorized brute-force top-k** (``ann_topk_numpy``) — the single-
   node throughput path: the corpus matrix is broadcast once, each
-  Arrow batch of queries does one BLAS matmul + argpartition. Exact
+  Arrow batch of queries does one BLAS matmul + one vectorized top-k
+  (``_topk``, the kernel every exact and bucketed path shares). Exact
   results, ~100x the expression path.
 - **IVF (inverted-file) top-k** (``ivf_ann_topk``) — the 100 TB path:
   vectors are partitioned by nearest centroid; queries probe only
@@ -24,7 +25,8 @@ Three tiers:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,6 +40,141 @@ from python_plugins_spark.functions import oracle_fragments as O
 #: 10^10 pair evaluations — already minutes of compute; anything
 #: larger must use the bucketed/blocked scale paths.
 PAIRWISE_MAX_ROWS = 100_000
+
+#: Schema of every block-local top-k frame :func:`_topk` emits.
+_TOPK_SCHEMA = "query_id long, neighbor_id long, {} double, rk int"
+
+
+def _matrix(arr) -> np.ndarray:
+    """One row per value of an Arrow ``list<float|double>`` column as a
+    C-contiguous float64 ``(n, dim)`` matrix (null elements become NaN),
+    or of a ``binary`` column of packed SQ8/PQ codes as uint8 — both
+    reshaped straight from the flattened values buffer, with no per-row
+    Python objects. Rows of unequal length raise ``ValueError``: the
+    reshape of a ragged batch whose total happens to divide would
+    silently misalign it."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    if n == 0:
+        return np.empty((0, 0))
+    if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
+        lens = pc.binary_length(arr)
+        offsets = np.frombuffer(
+            arr.buffers()[1], np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        )
+        flat = np.frombuffer(arr.buffers()[2], np.uint8)[offsets[arr.offset]:]
+    else:
+        lens = pc.list_value_length(arr)
+        flat = np.array(arr.flatten().to_numpy(zero_copy_only=False), dtype=np.float64)
+    lens = lens.to_numpy(zero_copy_only=False)
+    if not (lens == lens[0]).all():
+        raise ValueError(
+            f"vectors of unequal length in one batch (lengths {sorted(set(lens.tolist()))[:4]})"
+        )
+    dim = int(lens[0])
+    return flat[: n * dim].reshape(n, dim)
+
+
+def _rows(mat: np.ndarray) -> pa.Array:
+    """The inverse of :func:`_matrix`: a uint8 matrix becomes one
+    ``binary`` blob per row, any other matrix one Arrow list per row."""
+    n, d = mat.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * d
+    if mat.dtype == np.uint8:
+        return pa.BinaryArray.from_buffers(
+            pa.binary(), n,
+            [None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(mat))],
+        )
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(mat.ravel()))
+
+
+def _topk(q_ids, c_ids, scores, k: int, score_col: str,
+          descending: bool = True) -> pa.RecordBatch:
+    """Top ``k`` neighbors of every query row of a ``(len(q_ids),
+    len(c_ids))`` score block, under the one rule every search path and
+    its SQL oracle share: score (descending, or ascending for
+    distances), then neighbor id ascending. A self-pair (equal ids), a
+    candidate scoring -inf (+inf for distances) and a NaN never rank —
+    they are dropped, not emitted at the tail. Pruning per block is
+    safe: a query's global top-k is a subset of the union of its
+    block-local top-k sets. Emits ``_TOPK_SCHEMA`` rows, ``rk`` the
+    1-based rank inside this block."""
+    key = -scores if descending else np.array(scores, dtype=np.float64)
+    key[q_ids[:, None] == c_ids[None, :]] = np.inf
+    order = np.lexsort((np.broadcast_to(c_ids, key.shape), key), axis=-1)[:, :k]
+    rows, rk = np.nonzero(np.take_along_axis(key, order, axis=1) < np.inf)
+    cols = order[rows, rk]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(q_ids[rows], pa.int64()),
+            pa.array(c_ids[cols], pa.int64()),
+            pa.array(scores[rows, cols], pa.float64()),
+            pa.array(rk + 1, pa.int32()),
+        ],
+        names=["query_id", "neighbor_id", score_col, "rk"],
+    )
+
+
+def _rank(local: DataFrame, k: int, score_col: str,
+          descending: bool = True) -> DataFrame:
+    """The global reduce after a block-local :func:`_topk`: one
+    ``row_number`` per query under the same (score, neighbor_id asc)
+    rule, first ``k`` kept — ``query_id, neighbor_id, <score_col>, rk``."""
+    score = F.col(score_col).desc() if descending else F.col(score_col).asc()
+    w = Window.partitionBy("query_id").orderBy(score, F.col("neighbor_id").asc())
+    return local.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def _block_grid(queries: DataFrame, corpus: DataFrame, n_query_blocks: int,
+                n_corpus_blocks: int, k: int, score_col: str, score) -> DataFrame:
+    """Block-local top-k of every (query block, corpus block) pair —
+    classic block-matrix KNN (Cannon-style 2D replication). Each side,
+    an ``(id, payload)`` frame, is hash-packed into blocks
+    (``groupBy(block).agg(collect_list)``) and replicated across the
+    other side's block indices, and the Qb x Cb grid is assembled with
+    a plain EQUI-join on the composite (qblk, cblk) key — no
+    CartesianProduct, no broadcast of either side, no table data through
+    the driver. Each grid cell decodes both sides with :func:`_matrix`,
+    scores them with ``score(q, c)`` (one BLAS matmul; the path's own
+    arithmetic) and keeps its :func:`_topk`; :func:`_rank` then reduces
+    the Qb*Cb*k survivors."""
+
+    def pack(frame, side, n_blocks, other, n_other):
+        ident, payload = frame.columns
+        return (
+            frame.select(
+                F.col(ident).alias(f"{side}_id"),
+                F.col(payload).alias(f"{side}_vec"),
+                F.pmod(F.hash(F.col(ident)), F.lit(n_blocks)).alias(f"{side}blk"),
+            )
+            .groupBy(f"{side}blk")
+            .agg(
+                F.collect_list(f"{side}_id").alias(f"{side}_ids"),
+                F.collect_list(f"{side}_vec").alias(f"{side}_vecs"),
+            )
+            .withColumn(other, F.explode(F.sequence(F.lit(0), F.lit(n_other - 1))))
+        )
+
+    grid = pack(queries, "q", n_query_blocks, "cblk", n_corpus_blocks).join(
+        pack(corpus, "c", n_corpus_blocks, "qblk", n_query_blocks), on=["qblk", "cblk"]
+    )
+
+    def cells(batches):
+        for b in batches:
+            q_ids, q_vecs, c_ids, c_vecs = (
+                b.column(c) for c in ("q_ids", "q_vecs", "c_ids", "c_vecs")
+            )
+            for i in range(b.num_rows):
+                out = _topk(
+                    q_ids[i].values.to_numpy(), c_ids[i].values.to_numpy(),
+                    score(_matrix(q_vecs[i].values), _matrix(c_vecs[i].values)),
+                    k, score_col,
+                )
+                if out.num_rows:
+                    yield out
+
+    return grid.mapInArrow(cells, _TOPK_SCHEMA.format(score_col))
 
 
 def _gate_pairwise(df: DataFrame, id_col: str, fn_name: str,
@@ -149,7 +286,7 @@ def ann_topk_numpy(
 ) -> DataFrame:
     """Exact top-k, vectorized: corpus broadcast as one float64 matrix,
     queries scored batch-at-a-time with a BLAS matmul inside
-    ``mapInPandas``. Same results as :func:`ann_topk` (cosine recomputed
+    ``mapInArrow``. Same results as :func:`ann_topk` (cosine recomputed
     in float64 for the emitted value); ~100x faster single-node.
 
     SIZE-GATED UTILITY, not a flagship path: the corpus matrix is
@@ -169,45 +306,22 @@ def ann_topk_numpy(
     # Arrow-batched transfer of the projected frame (no per-row
     # Row-object materialization as with .collect()).
     tbl = projected.toArrow()
-    ids = tbl.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-    mat = np.array(tbl.column(1).to_pylist(), dtype=np.float64)
+    ids = tbl.column(0).to_numpy().astype(np.int64)
+    mat = _matrix(tbl.column(1))
     norms = np.sqrt((mat * mat).sum(axis=1))
     b_ids = spark.sparkContext.broadcast(ids)
     b_mat = spark.sparkContext.broadcast(mat)
     b_norms = spark.sparkContext.broadcast(norms)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rk", T.IntegerType()),
-        ]
-    )
-
     def score(batches):
         ids_all, mat_all, norms_all = b_ids.value, b_mat.value, b_norms.value
-        for pdf in batches:
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
+        for b in batches:
+            q = _matrix(b.column(1))
             q_norms = np.sqrt((q * q).sum(axis=1))
-            sims = (q @ mat_all.T) / (q_norms[:, None] * norms_all[None, :])
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": [], "rk": []}
-            for row_i in range(len(q_ids)):
-                s = np.round(sims[row_i], 6)
-                self_mask = ids_all == q_ids[row_i]
-                s[self_mask] = -np.inf
-                # rank by (ROUNDED sim desc, id asc) — the same ordering
-                # the expression path and the SQL oracle use, so the
-                # selected set and rk values are identical
-                idx = np.lexsort((ids_all, -s))[:k]
-                out["query_id"].extend([q_ids[row_i]] * len(idx))
-                out["neighbor_id"].extend(ids_all[idx])
-                out["cos_sim"].extend(s[idx])
-                out["rk"].extend(range(1, len(idx) + 1))
-            yield pd.DataFrame(out)
+            sims = np.round((q @ mat_all.T) / (q_norms[:, None] * norms_all[None, :]), 6)
+            yield _topk(b.column(0).to_numpy(), ids_all, sims, k, "cos_sim")
 
-    return df.select(id_col, vec_col).mapInPandas(score, out_schema)
+    return projected.mapInArrow(score, _TOPK_SCHEMA.format("cos_sim"))
 
 
 def ann_topk_blocked(
@@ -226,7 +340,7 @@ def ann_topk_blocked(
     versa, and the (qblk, cblk) grid is assembled with a plain
     EQUI-join on the composite key — no CartesianProduct, no
     broadcast of either side. Each grid cell is scored with one BLAS
-    matmul inside ``mapInPandas`` keeping only the block-local top-k
+    matmul inside ``mapInArrow`` keeping only the block-local top-k
     per query; a partitioned window reduces the Qb*Cb*k survivors to
     the global top-k.
 
@@ -240,86 +354,15 @@ def ann_topk_blocked(
 
     Ranking matches :func:`ann_topk` and the SQL oracle exactly:
     (round(cos, 6) DESC, neighbor_id ASC), self-pairs excluded."""
-    qb = (
-        df.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).alias("qblk"),
-        )
-        .groupBy("qblk")
-        .agg(F.collect_list("q_id").alias("q_ids"), F.collect_list("q_vec").alias("q_vecs"))
-    )
-    cb = (
-        df.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_corpus_blocks)).alias("cblk"),
-        )
-        .groupBy("cblk")
-        .agg(F.collect_list("c_id").alias("c_ids"), F.collect_list("c_vec").alias("c_vecs"))
-    )
-    # 2D grid via block replication: Qb x Cb packed rows, equi-joined
-    # on the composite (qblk, cblk) key — full Qb*Cb-way parallelism.
-    qb_exp = qb.withColumn(
-        "cblk", F.explode(F.sequence(F.lit(0), F.lit(n_corpus_blocks - 1)))
-    )
-    cb_exp = cb.withColumn(
-        "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-    )
-    grid = qb_exp.join(cb_exp, on=["qblk", "cblk"])
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
+    def cosine(q, c):
+        qn = np.sqrt((q * q).sum(axis=1))
+        cn = np.sqrt((c * c).sum(axis=1))
+        return np.round((q @ c.T) / (qn[:, None] * cn[None, :]), 6)
 
-    def score_blocks(batches):
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                q = np.array(list(row["q_vecs"]), dtype=np.float64)
-                c_ids = np.asarray(row["c_ids"], dtype=np.int64)
-                c = np.array(list(row["c_vecs"]), dtype=np.float64)
-                qn = np.sqrt((q * q).sum(axis=1))
-                cn = np.sqrt((c * c).sum(axis=1))
-                sims = np.round((q @ c.T) / (qn[:, None] * cn[None, :]), 6)
-                # self-pair exclusion within the block
-                self_mask = q_ids[:, None] == c_ids[None, :]
-                sims[self_mask] = -np.inf
-                kk = min(k, sims.shape[1])
-                for i in range(len(q_ids)):
-                    s = sims[i]
-                    # block-local top-k under the global ordering
-                    # (rounded sim desc, id asc) — safe to prune: the
-                    # global top-k per query is a subset of the union
-                    # of block-local top-k sets
-                    idx = np.lexsort((c_ids, -s))[:kk]
-                    idx = idx[s[idx] > -np.inf]
-                    out["query_id"].extend([q_ids[i]] * len(idx))
-                    out["neighbor_id"].extend(c_ids[idx])
-                    out["cos_sim"].extend(s[idx])
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                        "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                        "cos_sim": np.asarray(out["cos_sim"], dtype=np.float64),
-                    }
-                )
-
-    local = grid.mapInPandas(score_blocks, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    side = df.select(id_col, vec_col)
+    local = _block_grid(side, side, n_query_blocks, n_corpus_blocks, k, "cos_sim", cosine)
+    return _rank(local, k, "cos_sim")
 
 
 def default_n_corpus_blocks(n_rows: int) -> int:
@@ -366,92 +409,21 @@ def ann_topk_queries(
     when the size is known."""
     if n_corpus_blocks is None:
         n_corpus_blocks = default_n_corpus_blocks(corpus.count())
-    qb = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).alias("qblk"),
-        )
-        .groupBy("qblk")
-        .agg(
-            F.collect_list("q_id").alias("q_ids"),
-            F.collect_list("q_vec").alias("q_vecs"),
-        )
-    )
-    cb = (
-        corpus.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_corpus_blocks)).alias("cblk"),
-        )
-        .groupBy("cblk")
-        .agg(
-            F.collect_list("c_id").alias("c_ids"),
-            F.collect_list("c_vec").alias("c_vecs"),
-        )
-    )
-    qb_exp = qb.withColumn(
-        "cblk", F.explode(F.sequence(F.lit(0), F.lit(n_corpus_blocks - 1)))
-    )
-    cb_exp = cb.withColumn(
-        "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-    )
-    grid = qb_exp.join(cb_exp, on=["qblk", "cblk"])
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score_blocks(batches):
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                q = np.array(list(row["q_vecs"]), dtype=np.float64)
-                c_ids = np.asarray(row["c_ids"], dtype=np.int64)
-                c = np.array(list(row["c_vecs"]), dtype=np.float64)
-                qn = np.sqrt((q * q).sum(axis=1))
-                cn = np.sqrt((c * c).sum(axis=1))
-                sims = np.round(
-                    (q @ c.T)
-                    / (np.where(qn == 0, 1, qn)[:, None]
-                       * np.where(cn == 0, 1, cn)[None, :]),
-                    6,
-                )
-                sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                for i in range(len(q_ids)):
-                    s = sims[i]
-                    idx = np.lexsort((c_ids, -s))[:kk]
-                    idx = idx[s[idx] > -np.inf]
-                    out["query_id"].extend([q_ids[i]] * len(idx))
-                    out["neighbor_id"].extend(c_ids[idx])
-                    out["cos_sim"].extend(s[idx])
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                        "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                        "cos_sim": np.asarray(out["cos_sim"], dtype=np.float64),
-                    }
-                )
-
-    local = grid.mapInPandas(score_blocks, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
+    def cosine(q, c):
+        qn = np.sqrt((q * q).sum(axis=1))
+        cn = np.sqrt((c * c).sum(axis=1))
+        return np.round(
+            (q @ c.T)
+            / (np.where(qn == 0, 1, qn)[:, None] * np.where(cn == 0, 1, cn)[None, :]),
+            6,
         )
+
+    local = _block_grid(
+        queries.select(id_col, vec_col), corpus.select(id_col, vec_col),
+        n_query_blocks, n_corpus_blocks, k, "cos_sim", cosine,
     )
+    return _rank(local, k, "cos_sim")
 
 
 def ann_topk_queries_oracle_sql(
@@ -520,8 +492,6 @@ def ivf_ann_topk(
     query for the final partitioned-window reduce. Approximate:
     recall vs brute force is tested and measured per round
     (bench_detail.json ann_recall), not assumed."""
-    import pandas as _pd
-
     from python_plugins_spark.sources.io import spread_scan
 
     # Round 12 (guide §2.4): bucket ASSIGNMENT used to be a broadcast
@@ -553,24 +523,16 @@ def ivf_ann_topk(
         c_id_vals = np.asarray([int(r[0]) for r in crows], dtype=np.int64)
     npb = min(nprobe, len(C))
 
-    assign_schema = T.StructType(
-        [
-            T.StructField("_id", T.LongType()),
-            T.StructField("_vec", T.ArrayType(T.DoubleType())),
-            T.StructField("_cids", T.ArrayType(T.LongType())),
-        ]
-    )
-
     def _assign(batches, _C=C, _ids=c_id_vals, _np=npb):
         dim = _C.shape[1]
         nb2 = _C[:, 0] * _C[:, 0]
         for i in range(1, dim):
             nb2 = nb2 + _C[:, i] * _C[:, i]
         nb = np.sqrt(nb2)
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            V = _matrix(b.column(1))
             dot = V[:, 0:1] * _C[:, 0][None, :]
             na2 = V[:, 0] * V[:, 0]
             for i in range(1, dim):
@@ -579,16 +541,14 @@ def ivf_ann_topk(
             sim = dot / (np.sqrt(na2)[:, None] * nb[None, :])
             key = np.where(np.isnan(sim), np.inf, sim)
             order = np.argsort(-key, axis=1, kind="stable")[:, :_np]
-            yield _pd.DataFrame(
-                {
-                    "_id": pdf[id_col].values,
-                    "_vec": pdf[vec_col].values,
-                    "_cids": [_ids[order[r]] for r in range(len(order))],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).cast(pa.int64()), b.column(1).cast(pa.list_(pa.float64())),
+                 _rows(_ids[order])],
+                names=["_id", "_vec", "_cids"],
             )
 
-    ranked = spread_scan(df.select(id_col, vec_col)).mapInPandas(
-        _assign, assign_schema
+    ranked = spread_scan(df.select(id_col, vec_col)).mapInArrow(
+        _assign, "_id long, _vec array<double>, _cids array<long>"
     )
     # the member side's key gets a FRESH attribute (alias) — both
     # sides descend from `ranked`, and a self-cogroup on the same
@@ -604,53 +564,42 @@ def ivf_ann_topk(
         F.col("_vec").alias("q_vec"),
         F.explode("_cids").alias("c_id"),
     )
+    return _ivf_topk(probes, assignments, k)
 
-    def _score_bucket(key, p_pdf, m_pdf):
-        if len(p_pdf) == 0 or len(m_pdf) == 0:
-            return _pd.DataFrame({"q_id": [], "m_id": [], "cos_sim": []})
-        q = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in p_pdf["q_vec"]]
-        )
-        m = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in m_pdf["m_vec"]]
-        )
+
+def _ivf_topk(probes: DataFrame, members: DataFrame, k: int, sq8=None) -> DataFrame:
+    """The IVF bucket search shared by :func:`ivf_ann_topk` and
+    :func:`search_ivf_index`: probes ``(q_id, q_vec, c_id)`` cogroup
+    with the members ``(m_id, m_vec, c_id_m)`` of the same centroid
+    bucket (``applyInArrow``; at cluster scale both sides
+    hash-partition on the centroid id), each bucket is scored with ONE
+    BLAS matmul of the L2-normalised sides and keeps its :func:`_topk`,
+    and :func:`_rank` reduces the nprobe*k rows per query. With ``sq8``
+    = ``(mn, scale)`` the members are packed SQ8 codes, dequantized in
+    the bucket (asymmetric: float query x dequantized member)."""
+
+    def bucket(p, m):
+        if not (p.num_rows and m.num_rows):
+            return pa.table({})
+        q = _matrix(p.column("q_vec"))
+        v = _matrix(m.column("m_vec"))
+        if sq8 is not None:
+            v = sq8[0][None, :] + v.astype(np.float64) * sq8[1][None, :]
         qn = np.linalg.norm(q, axis=1, keepdims=True)
-        mn = np.linalg.norm(m, axis=1, keepdims=True)
+        vn = np.linalg.norm(v, axis=1, keepdims=True)
         sims = np.round(
-            (q / np.where(qn == 0, 1, qn)) @ (m / np.where(mn == 0, 1, mn)).T,
-            6,
+            (q / np.where(qn == 0, 1, qn)) @ (v / np.where(vn == 0, 1, vn)).T, 6
         )
-        qids = p_pdf["q_id"].to_numpy()
-        mids = m_pdf["m_id"].to_numpy()
-        oq, om, os_ = [], [], []
-        for i in range(len(qids)):
-            s = sims[i]
-            midx = np.nonzero(mids != qids[i])[0]
-            # block-local top-k by (sim desc, m_id asc)
-            sel = midx[np.lexsort((mids[midx], -s[midx]))][:k]
-            oq.extend([qids[i]] * len(sel))
-            om.extend(mids[sel])
-            os_.extend(s[sel])
-        return _pd.DataFrame({"q_id": oq, "m_id": om, "cos_sim": os_})
+        return pa.Table.from_batches([
+            _topk(p.column("q_id").to_numpy(), m.column("m_id").to_numpy(), sims, k, "cos_sim")
+        ])
 
     local = (
         probes.groupBy("c_id")
-        .cogroup(assignments.groupBy("c_id_m"))
-        .applyInPandas(_score_bucket, "q_id long, m_id long, cos_sim double")
+        .cogroup(members.groupBy("c_id_m"))
+        .applyInArrow(bucket, _TOPK_SCHEMA.format("cos_sim"))
     )
-    w_top = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("m_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("m_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _rank(local, k, "cos_sim")
 
 
 def l2_normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -711,7 +660,7 @@ def ivf_train_centroids(
     :func:`ivf_ann_topk`'s cosine bucket assignment. Returns a
     ``(k, dim)`` float64 array of unit-norm centroids."""
     rng = np.random.RandomState(seed)
-    # Arrow toPandas, not a row collect: the sample is sample_rows x
+    # Arrow toArrow, not a row collect: the sample is sample_rows x
     # dim doubles, and the pickled-row path costs several times the
     # Arrow transfer for identical values (guide §6, driver transfers)
     # The hash sort key is MATERIALIZED as a column before the
@@ -727,9 +676,9 @@ def ivf_train_centroids(
         .orderBy("_h")
         .limit(sample_rows)
         .select(vec_col)
-        .toPandas()
+        .toArrow()
     )
-    X = np.asarray(sample[vec_col].tolist(), dtype=np.float64)
+    X = _matrix(sample.column(0))
     if len(X) < k:
         # same refusal contract as pq_train_codebooks: silently
         # seeding duplicate centroids would degrade recall with no
@@ -773,22 +722,16 @@ def ivf_train_centroids(
     # spherical k-means: the new centroid is the NORMALIZED component
     # sum, so per-centroid counts never enter the update — partials
     # carry only (cid, sum-vector)
-    part_schema = T.StructType(
-        [
-            T.StructField("cid", T.IntegerType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-        ]
-    )
     for _ in range(refine_iters):
         Cb = C.copy()
 
         def partials(batches, _C=Cb):
             S = np.zeros_like(_C)
             hit_any = np.zeros(len(_C), dtype=bool)
-            for pdf in batches:
-                if not len(pdf):
+            for b in batches:
+                if not b.num_rows:
                     continue
-                V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+                V = _matrix(b.column(0))
                 vn = np.linalg.norm(V, axis=1, keepdims=True)
                 V = V / np.where(vn == 0, 1, vn)
                 assign = (V @ _C.T).argmax(axis=1)
@@ -798,16 +741,13 @@ def ivf_train_centroids(
                     hit_any[ci] = True
             hit = np.nonzero(hit_any)[0]
             if len(hit):
-                yield pd.DataFrame(
-                    {
-                        "cid": hit.astype(np.int32),
-                        "s": [S[i].tolist() for i in hit],
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(hit.astype(np.int32)), _rows(S[hit])], names=["cid", "s"]
                 )
 
         combined = (
             df.select(vec_col)
-            .mapInPandas(partials, part_schema)
+            .mapInArrow(partials, "cid int, s array<double>")
             .select("cid", F.posexplode("s").alias("d", "v"))
             .groupBy("cid", "d")
             .agg(F.sum("v").alias("sv"))
@@ -1004,34 +944,29 @@ def _ivf_assign_frame(
     )
 
     def assign(batches, _C=C, _st=stats):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            V = _matrix(b.column(1))
             vn = np.linalg.norm(V, axis=1, keepdims=True)
             sims = (V / np.where(vn == 0, 1, vn)) @ _C.T
             a = sims.argmax(axis=1)
             best = sims[np.arange(len(sims)), a]
             if _st is None:
-                payload = {"vec": pdf[vec_col]}
-                n_clip = np.zeros(len(pdf), dtype=np.int32)
+                payload = b.column(1).cast(pa.list_(pa.float64()))
+                n_clip = np.zeros(len(V), dtype=np.int32)
             else:
                 mn_, scale_ = _st
                 raw = np.floor((V - mn_[None, :]) / scale_[None, :] + 0.5)
                 n_clip = ((raw < 0) | (raw > 255)).sum(axis=1).astype(np.int32)
-                codes = np.clip(raw, 0, 255).astype(np.uint8)
-                payload = {"codes": [c.tobytes() for c in codes]}
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    **payload,
-                    "c_id": a.astype(np.int32),
-                    "assign_cos": best,
-                    "n_clipped": n_clip,
-                }
+                payload = _rows(np.clip(raw, 0, 255).astype(np.uint8))
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).cast(pa.int64()), payload, pa.array(a.astype(np.int32)),
+                 pa.array(best), pa.array(n_clip)],
+                names=out_schema.names,
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    return emb.select(id_col, vec_col).mapInArrow(assign, out_schema)
 
 
 def ingest_ivf_index(
@@ -1218,25 +1153,17 @@ def retrain_ivf_index(
         mn_, scale_ = stats
 
         def dequant(batches):
-            for pdf in batches:
-                if not len(pdf):
+            for b in batches:
+                if not b.num_rows:
                     continue
-                u8 = np.frombuffer(
-                    b"".join(pdf["codes"]), dtype=np.uint8
-                ).reshape(len(pdf), dim)
+                u8 = _matrix(b.column(1))
                 vals = mn_[None, :] + u8.astype(np.float64) * scale_[None, :]
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "vec": list(vals)}
+                yield pa.RecordBatch.from_arrays(
+                    [b.column(0).cast(pa.int64()), _rows(vals)], names=[id_col, "vec"]
                 )
 
-        emb = vectors.select(id_col, "codes").mapInPandas(
-            dequant,
-            T.StructType(
-                [
-                    T.StructField(id_col, T.LongType()),
-                    T.StructField("vec", T.ArrayType(T.DoubleType())),
-                ]
-            ),
+        emb = vectors.select(id_col, "codes").mapInArrow(
+            dequant, f"`{id_col}` long, vec array<double>"
         )
     else:
         emb = vectors.select(id_col, "vec")
@@ -1348,93 +1275,32 @@ def search_ivf_index(
             np.asarray(srow["scale"], dtype=np.float64),
         )
 
-    probe_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("q_vec", T.ArrayType(T.DoubleType())),
-            T.StructField("c_id", T.IntegerType()),
-        ]
-    )
-
     def probe(batches, _C=C, _np=nprobe):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            V = _matrix(b.column(1))
             vn = np.linalg.norm(V, axis=1, keepdims=True)
             sims = (V / np.where(vn == 0, 1, vn)) @ _C.T
             top = np.argsort(-sims, axis=1, kind="stable")[:, :_np]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(pdf[id_col].to_numpy(), _np),
-                    "q_vec": [
-                        v for v in pdf[vec_col] for _ in range(_np)
-                    ],
-                    "c_id": top.reshape(n * _np).astype(np.int32),
-                }
+            rep = pa.array(np.repeat(np.arange(b.num_rows), _np))
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(rep).cast(pa.int64()),
+                 b.column(1).take(rep).cast(pa.list_(pa.float64())),
+                 pa.array(top.ravel().astype(np.int32))],
+                names=["q_id", "q_vec", "c_id"],
             )
 
-    probes = queries.select(id_col, vec_col).mapInPandas(probe, probe_schema)
+    probes = queries.select(id_col, vec_col).mapInArrow(
+        probe, "q_id long, q_vec array<double>, c_id int"
+    )
     member_col = "codes" if sq8 else "vec"
     members = read_delta(spark, f"{index_path}/vectors").select(
         F.col(id_col).alias("m_id"),
         F.col(member_col).alias("m_vec"),
         F.col("c_id").alias("c_id_m"),
     )
-    dim = C.shape[1]
-    _st, _dim = sq8_stats, dim  # closure captures (cogroup UDFs must
-    # declare exactly (key, left, right) — no default-arg smuggling)
-
-    def _score_bucket(key, p_pdf, m_pdf):
-        if len(p_pdf) == 0 or len(m_pdf) == 0:
-            return pd.DataFrame({"q_id": [], "m_id": [], "cos_sim": []})
-        q = np.asarray([np.asarray(v, dtype=np.float64) for v in p_pdf["q_vec"]])
-        if _st is None:
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in m_pdf["m_vec"]]
-            )
-        else:
-            mn_, scale_ = _st
-            u8 = np.frombuffer(
-                b"".join(m_pdf["m_vec"]), dtype=np.uint8
-            ).reshape(len(m_pdf), _dim)
-            m = mn_[None, :] + u8.astype(np.float64) * scale_[None, :]
-        qn = np.linalg.norm(q, axis=1, keepdims=True)
-        mn = np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(
-            (q / np.where(qn == 0, 1, qn)) @ (m / np.where(mn == 0, 1, mn)).T, 6
-        )
-        qids = p_pdf["q_id"].to_numpy()
-        mids = m_pdf["m_id"].to_numpy()
-        oq, om, os_ = [], [], []
-        for i in range(len(qids)):
-            s = sims[i]
-            midx = np.nonzero(mids != qids[i])[0]
-            sel = midx[np.lexsort((mids[midx], -s[midx]))][:k]
-            oq.extend([qids[i]] * len(sel))
-            om.extend(mids[sel])
-            os_.extend(s[sel])
-        return pd.DataFrame({"q_id": oq, "m_id": om, "cos_sim": os_})
-
-    local = (
-        probes.groupBy("c_id")
-        .cogroup(members.groupBy("c_id_m"))
-        .applyInPandas(_score_bucket, "q_id long, m_id long, cos_sim double")
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("m_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("m_id").alias("neighbor_id"),
-            "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _ivf_topk(probes, members, k, sq8_stats)
 
 
 def lsh_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
@@ -1646,10 +1512,6 @@ def pq_encode(df, id_col: str, vec_col: str, books):
     one distributed Arrow pass — at 100 TB this is the compression
     step that turns a 256-byte float64[32] into m bytes, a 32x memory
     cut for ANN serving."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     m, k, sub = books.shape
     if k > 256:
         raise ValueError(
@@ -1658,30 +1520,21 @@ def pq_encode(df, id_col: str, vec_col: str, books):
         )
     B = books.copy()
 
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("code", T.BinaryType()),
-        ]
-    )
-
     def enc(batches):
-        for pdf in batches:
-            vecs = np.array(list(pdf["v"]), dtype=np.float64)
+        for b in batches:
+            vecs = _matrix(b.column(1))
             codes = np.zeros((len(vecs), m), dtype=np.uint8)
             for mi in range(m):
                 Xi = vecs[:, mi * sub : (mi + 1) * sub]
                 d = ((Xi[:, None, :] - B[mi][None, :, :]) ** 2).sum(axis=2)
                 codes[:, mi] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "code": [c.tobytes() for c in codes]}
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).cast(pa.int64()), _rows(codes)], names=["id", "code"]
             )
-
-    from pyspark.sql import functions as F
 
     return (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .mapInPandas(enc, schema)
+        .mapInArrow(enc, "id long, code binary")
         .withColumnRenamed("id", id_col)
     )
 
@@ -1707,12 +1560,6 @@ def pq_topk(
     shortlist. Returns (query_id, neighbor_id, adist, rk) with rk by
     (distance asc, neighbor_id asc). Approximate by construction —
     recall is asserted against exact search in tests, like IVF."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     m, k, sub = books.shape
     B = books.copy()
 
@@ -1731,112 +1578,70 @@ def pq_topk(
             "large use ann_topk_blocked / ivf_ann_topk (join-shaped, "
             "both sides distributed)"
         )
-    q_rows = queries_df.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["qv"] for r in q_rows], dtype=np.float64)
+    q_tbl = queries_df.select(id_col, vec_col).toArrow()
+    q_ids = q_tbl.column(0).to_numpy().astype(np.int64)
+    Q = _matrix(q_tbl.column(1))
     # m x k exact subspace distances per query, shipped as a task const
     luts = np.zeros((len(Q), m, k))
     for mi in range(m):
         Qi = Q[:, mi * sub : (mi + 1) * sub]
         luts[:, mi, :] = ((Qi[:, None, :] - B[mi][None, :, :]) ** 2).sum(axis=2)
 
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adist", T.DoubleType()),
-        ]
-    )
-
     def score(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            # unpack the m-byte blobs: ADC runs DIRECTLY over the
-            # packed serving format, like sq8_adc_topk
-            codes = (
-                np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8)
-                .reshape(len(ids), m)
-                .astype(np.int64)
-            )
-            out_q, out_n, out_d = [], [], []
-            for qi in range(len(q_ids)):
-                lut = luts[qi]  # m x k
-                d = lut[np.arange(m)[None, :], codes].sum(axis=1)
+        ar = np.arange(m)[None, :]
+        for b in batches:
+            ids = b.column(0).to_numpy()
+            # ADC runs DIRECTLY over the packed m-byte serving format,
+            # like sq8_adc_topk
+            codes = _matrix(b.column(1)).astype(np.int64)
+            # query chunks bound the (queries x rows x m) lookup array;
+            # indexing every axis keeps it C-ordered, so a row's m
+            # lookups sum in one fixed order whatever the chunk size
+            for lo in range(0, len(q_ids), 64):
+                qs = np.arange(lo, min(lo + 64, len(q_ids)))[:, None, None]
+                d = luts[qs, ar, codes].sum(axis=2)
                 # per-batch cap must be the SHORTLIST size: a
                 # batch-local top-k smaller than the global shortlist
                 # silently drops candidates at batch boundaries
-                top = np.argsort(d, kind="stable")[: kk * 10]
-                out_q.extend([q_ids[qi]] * len(top))
-                out_n.extend(ids[top])
-                out_d.extend(d[top])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adist": out_d}
-            )
+                out = _topk(q_ids[lo : lo + 64], ids, d, kk * 10, "adist", descending=False)
+                if out.num_rows:
+                    yield out
 
-    cand = (
-        df_codes.select(F.col(id_col).alias("id"), "code")
-        .mapInPandas(score, schema)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
+    cand = df_codes.select(F.col(id_col).alias("id"), "code").mapInArrow(
+        score, _TOPK_SCHEMA.format("adist")
     )
     if rerank_vectors is None:
-        return (
-            cand.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= kk)
-            .select(
-                "query_id", "neighbor_id",
-                F.round("adist", 6).alias("adist"), "rk",
-            )
+        return _rank(cand, kk, "adist", descending=False).select(
+            "query_id", "neighbor_id", F.round("adist", 6).alias("adist"), "rk",
         )
 
     # exact re-rank of the ADC shortlist (the standard PQ serving
     # shape: codes prune 99% of the corpus, exact math runs only on
     # the shortlist — distributed equi-join on neighbor_id)
-    shortlist = cand.withColumn("srk", F.row_number().over(w)).filter(
-        F.col("srk") <= kk * 10
-    )
+    shortlist = _rank(cand, kk * 10, "adist", descending=False)
     vecs = rerank_vectors.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
     )
-    q_map = {int(q): Q[i] for i, q in enumerate(q_ids)}
-
-    rs = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("dist", T.DoubleType()),
-        ]
-    )
+    by_id = np.argsort(q_ids, kind="stable")
 
     def exact(batches):
-        for pdf in batches:
-            qv = np.array([q_map[int(q)] for q in pdf["query_id"]])
-            nv = np.array(list(pdf["nv"]), dtype=np.float64)
+        for b in batches:
+            at = np.searchsorted(q_ids[by_id], b.column(0).to_numpy(), side="right") - 1
+            qv = Q[by_id[at]]
+            nv = _matrix(b.column(2))
             d = ((qv - nv) ** 2).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "dist": d,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), b.column(1).cast(pa.int64()), pa.array(d)],
+                names=["query_id", "neighbor_id", "dist"],
             )
 
     reranked = (
         shortlist.join(vecs, on="neighbor_id")
         .select("query_id", "neighbor_id", "nv")
-        .mapInPandas(exact, rs)
+        .mapInArrow(exact, "query_id long, neighbor_id long, dist double")
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        reranked.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= kk)
-        .select("query_id", "neighbor_id", F.round("dist", 6).alias("adist"), "rk")
+    return _rank(reranked, kk, "dist", descending=False).select(
+        "query_id", "neighbor_id", F.round("dist", 6).alias("adist"), "rk"
     )
 
 
@@ -1949,38 +1754,33 @@ def embedding_covariance(
 
     The 100 TB shape of PCA's first half: ONE corpus pass accumulates
     per-partition Gram matrices + dimension sums in numpy
-    (``mapInPandas``, Arrow-batched, float64), then the d^2-sized
+    (``mapInArrow``, float64), then the d^2-sized
     partials — one row per task, never per input row — combine with a
     tiny posexplode + sum. No N x d^2 explosion exists at any scale;
     cost is O(N d^2 / tasks) compute and O(tasks x d^2) shuffle.
 
     cov_ij = (G_ij - s_i s_j / n) / (n - 1), the same operation order
     mirrored in the oracle SQL."""
-    out_schema = T.StructType(
-        [
-            T.StructField("g", T.ArrayType(T.DoubleType())),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
     def gram_partial(batches):
         G = np.zeros((dim, dim))
         s = np.zeros(dim)
         n = 0
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            X = _matrix(b.column(0))
             G += X.T @ X
             s += X.sum(axis=0)
             n += len(X)
         if n:
-            yield pd.DataFrame(
-                {"g": [G.ravel().tolist()], "s": [s.tolist()], "n": [n]}
+            yield pa.RecordBatch.from_arrays(
+                [_rows(G.reshape(1, -1)), _rows(s[None, :]), pa.array([n], pa.int64())],
+                names=["g", "s", "n"],
             )
 
-    partials = df.select(vec_col).mapInPandas(gram_partial, out_schema)
+    partials = df.select(vec_col).mapInArrow(
+        gram_partial, "g array<double>, s array<double>, n long"
+    )
     # the combine runs over tasks x d^2 rows — trivial at any corpus
     # size (tasks ~ thousands, d^2 ~ thousands)
     gsum = (
@@ -2076,14 +1876,13 @@ def pca_project(
     )
 
     def project(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            Y = np.round(X @ P, 6)
-            yield pd.DataFrame({id_col: pdf[id_col], "pc": list(map(list, Y))})
+            Y = np.round(_matrix(b.column(1)) @ P, 6)
+            yield pa.RecordBatch.from_arrays([b.column(0), _rows(Y)], names=[id_col, "pc"])
 
-    out = df.select(id_col, vec_col).mapInPandas(project, out_schema)
+    out = df.select(id_col, vec_col).mapInArrow(project, out_schema)
     out._pca_explained_variance = explained.tolist()  # test introspection
     return out
 
@@ -2125,7 +1924,6 @@ def quantize_embeddings_int8(
     through per-dim hex/lpad/unhex string round-trips, a real per-row
     cost at corpus scale. The final 6 dp rounding stays JVM-side
     (``F.round``) so its half-up decimal semantics are untouched.)"""
-    spark = df.sparkSession
     if stats_row is None:
         # one exact map-side-combined aggregate; 2*dim doubles through
         # the driver (the bounded class — same as _collect_int8_extrema)
@@ -2149,10 +1947,10 @@ def quantize_embeddings_int8(
     )
 
     def quantize(batches, _mn=mn, _scale=scale):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
+            x = _matrix(b.column(1))
             # identical op order to the JVM expression tree it replaces:
             # floor((x - mn) / scale + 0.5) -> int, clamped to [0, 255]
             code = np.floor((x - _mn[None, :]) / _scale[None, :] + 0.5)
@@ -2174,13 +1972,9 @@ def quantize_embeddings_int8(
             den = na * nb
             cos = np.where((na == 0) | (nb == 0), 0.0,
                            dot / np.where(den == 0, 1.0, den))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "codes": [code[r].tobytes() for r in range(len(pdf))],
-                    "_err_raw": err,
-                    "_cos_raw": cos,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), _rows(code), pa.array(err), pa.array(cos)],
+                names=out_schema.names,
             )
 
     from python_plugins_spark.sources.io import spread_scan
@@ -2188,7 +1982,7 @@ def quantize_embeddings_int8(
     # §2.5: the vectorized quantize pass is CPU-bound; spread a
     # 1-split scan so it runs at cluster parallelism (no-op on
     # already-parallel corpora)
-    return spread_scan(df.select(id_col, vec_col)).mapInPandas(quantize, out_schema).select(
+    return spread_scan(df.select(id_col, vec_col)).mapInArrow(quantize, out_schema).select(
         F.col(id_col),
         F.col("codes"),
         F.round(F.col("_err_raw"), 6).alias("max_abs_err"),
@@ -2227,93 +2021,22 @@ def sq8_adc_topk(
     # its own full-corpus aggregate (it ran once, one line up)
     codes = quantize_embeddings_int8(
         df, id_col, vec_col, dim, stats_row=st
-    ).select(F.col(id_col).alias("c_id"), "codes")
-    cb = (
-        codes.withColumn(
-            "cblk", F.pmod(F.hash(F.col("c_id")), F.lit(n_corpus_blocks))
-        )
-        .groupBy("cblk")
-        .agg(
-            F.collect_list("c_id").alias("c_ids"),
-            F.collect_list("codes").alias("c_codes"),
-        )
-        .withColumn(
-            "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_query_blocks - 1)))
-        )
-    )
-    qb = (
-        df.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).alias("qblk"),
-        )
-        .groupBy("qblk")
-        .agg(
-            F.collect_list("q_id").alias("q_ids"),
-            F.collect_list("q_vec").alias("q_vecs"),
-        )
-        .withColumn(
-            "cblk", F.explode(F.sequence(F.lit(0), F.lit(n_corpus_blocks - 1)))
-        )
-    )
-    grid = qb.join(cb, on=["qblk", "cblk"])
+    ).select(id_col, "codes")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adc_cos", T.DoubleType()),
-        ]
-    )
-
-    def score_blocks(batches, _mn=mn, _scale=scale):
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "adc_cos": []}
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                q = np.array(list(row["q_vecs"]), dtype=np.float64)
-                c_ids = np.asarray(row["c_ids"], dtype=np.int64)
-                u8 = np.frombuffer(
-                    b"".join(row["c_codes"]), dtype=np.uint8
-                ).reshape(len(c_ids), dim)
-                c = _mn[None, :] + u8.astype(np.float64) * _scale[None, :]
-                qn = np.sqrt((q * q).sum(axis=1))
-                cn = np.sqrt((c * c).sum(axis=1))
-                den = qn[:, None] * cn[None, :]
-                sims = np.round(
-                    np.where(den == 0, 0.0, (q @ c.T) / np.where(den == 0, 1, den)),
-                    6,
-                )
-                sims[q_ids[:, None] == c_ids[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                for i in range(len(q_ids)):
-                    s = sims[i]
-                    idx = np.lexsort((c_ids, -s))[:kk]
-                    idx = idx[s[idx] > -np.inf]
-                    out["query_id"].extend([q_ids[i]] * len(idx))
-                    out["neighbor_id"].extend(c_ids[idx])
-                    out["adc_cos"].extend(s[idx])
-            if out["query_id"]:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.asarray(out["query_id"], dtype=np.int64),
-                        "neighbor_id": np.asarray(out["neighbor_id"], dtype=np.int64),
-                        "adc_cos": np.asarray(out["adc_cos"], dtype=np.float64),
-                    }
-                )
-
-    local = grid.mapInPandas(score_blocks, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "adc_cos",
-            F.col("rk").cast("int").alias("rk"),
+    def adc(q, u8, _mn=mn, _scale=scale):
+        c = _mn[None, :] + u8.astype(np.float64) * _scale[None, :]
+        qn = np.sqrt((q * q).sum(axis=1))
+        cn = np.sqrt((c * c).sum(axis=1))
+        den = qn[:, None] * cn[None, :]
+        return np.round(
+            np.where(den == 0, 0.0, (q @ c.T) / np.where(den == 0, 1, den)), 6
         )
+
+    local = _block_grid(
+        df.select(id_col, vec_col), codes, n_query_blocks, n_corpus_blocks, k,
+        "adc_cos", adc,
     )
+    return _rank(local, k, "adc_cos")
 
 
 def sq8_adc_topk_oracle_sql(

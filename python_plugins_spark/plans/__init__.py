@@ -9,10 +9,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Plan-node name fragments of every operator that runs Python per row or
-# per batch (python_transform's is ``MapInArrow``); a plan that claims to
-# stay in whole-stage codegen contains none of them.
-PYTHON_NODE_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
+# Plan-node name fragments of every operator that runs Python per row,
+# per batch or per group (python_transform's is ``MapInArrow``; grouped
+# and cogrouped maps are ``FlatMapGroupsIn*`` / ``FlatMapCoGroupsIn*``,
+# pandas aggregate and window UDFs ``ArrowAggregatePython`` /
+# ``ArrowWindowPython``); a plan that claims to stay in whole-stage
+# codegen contains none of them.
+PYTHON_NODE_MARKERS = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsIn",
+    "FlatMapCoGroupsIn",
+    "ArrowAggregatePython",
+    "ArrowWindowPython",
+)
 
 
 def plan_str(df: DataFrame, mode: str = "formatted") -> str:

@@ -1065,7 +1065,7 @@ def embedding_neardup_exact_baseline(spark, sf_dir):
 def ann_topk_cosine(spark, sf_dir):
     """Exact top-k via the distributed block-matrix path: hash-packed
     query/corpus blocks, one BLAS matmul per block pair in
-    ``mapInPandas``, partitioned-window global reduce. No table data
+    ``mapInArrow``, partitioned-window global reduce. No table data
     transits the driver (the size-gated single-node broadcast variant
     is ``S.ann_topk_numpy``; the sub-quadratic approximate path is
     ``ann_topk_ivf``)."""

@@ -11,6 +11,8 @@ matters at 100 TB.
 from __future__ import annotations
 
 import os
+import weakref
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -100,6 +102,20 @@ def _narrow_width(node, splits, scan_top=None) -> int | None:
     return width
 
 
+#: JVM classes already looked up, per gateway (:func:`_jvm_class`).
+_JVM_CLASSES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _jvm_class(jvm, name: str):
+    """The JVM class ``name``, looked up once per gateway: py4j resolves
+    a dotted name one package segment per round trip (~4 ms for
+    ``org.apache.spark.sql.classic.Dataset``)."""
+    classes = _JVM_CLASSES.setdefault(jvm, {})
+    if name not in classes:
+        classes[name] = reduce(getattr, name.split("."), jvm)
+    return classes[name]
+
+
 def _parquet_splits_with_rows(jvm, session, scan_exec) -> int:
     """Splits of a parquet ``FileSourceScanExec`` that hold rows. A
     parquet reader reads a row group in the one split holding its
@@ -116,8 +132,10 @@ def _parquet_splits_with_rows(jvm, session, scan_exec) -> int:
             return True
         if conf is None:
             conf = session.sessionState().newHadoopConf()
-            footers = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
-            input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+            footers = _jvm_class(
+                jvm, "org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader"
+            )
+            input_file = _jvm_class(jvm, "org.apache.parquet.hadoop.util.HadoopInputFile")
         footer = footers.readFooter(
             input_file.fromPath(piece.toPath(), conf), footers.buildFilter(conf, piece, False)
         )
@@ -141,7 +159,7 @@ def scan_width(df: DataFrame) -> int | None:
     if df.isStreaming:
         return None
     jvm = df._sc._jvm  # type: ignore[attr-defined]
-    dataset = jvm.org.apache.spark.sql.classic.Dataset
+    dataset = _jvm_class(jvm, "org.apache.spark.sql.classic.Dataset")
     session = df.sparkSession._jsparkSession
 
     def splits(scan) -> int:

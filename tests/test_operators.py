@@ -177,7 +177,31 @@ def test_simhash_close_for_neardups(spark):
     assert ham01 < ham02
 
 
-def test_ann_numpy_matches_expression_topk(spark, sf_dir):
+@pytest.fixture(scope="module")
+def tie_embeddings(spark):
+    """Tie-heavy exact-path input: 0/1 vectors, zero-padded prefixes
+    and shifted runs of ones, most of them duplicated, so whole groups
+    of neighbors share one cosine and only the (score desc, neighbor id
+    asc) rule orders them. Every dimension holds both 0 and 1, so the
+    SQ8 quantizer reproduces the values exactly and ADC cosine equals
+    exact cosine."""
+    dim, rows = 6, []
+    for start in range(3):
+        for ones in range(1, dim - start + 1):
+            vec = [0.0] * start + [1.0] * ones + [0.0] * (dim - start - ones)
+            rows += [vec] * (1 + (start + ones) % 3)
+    return spark.createDataFrame(
+        [(i, v) for i, v in enumerate(rows)], "vec_id long, embedding array<double>"
+    ).localCheckpoint(eager=True)
+
+
+def _ranked(frame, score="cos_sim"):
+    return sorted(
+        (r.query_id, r.neighbor_id, r[score], r.rk) for r in frame.collect()
+    )
+
+
+def test_ann_numpy_matches_expression_topk(spark, sf_dir, tie_embeddings):
     emb = load_table(spark, "embeddings", sf_dir)
     expr = {(r.query_id, r.rk): r.neighbor_id for r in S.ann_topk(emb, "vec_id", "embedding", 3).collect()}
     fast = {(r.query_id, r.rk): r.neighbor_id for r in S.ann_topk_numpy(emb, "vec_id", "embedding", 3).collect()}
@@ -185,9 +209,13 @@ def test_ann_numpy_matches_expression_topk(spark, sf_dir):
     # flips a near-tie; require >= 99% agreement
     agree = sum(1 for k in expr if fast.get(k) == expr[k])
     assert agree / len(expr) >= 0.99
+    # 0/1 vectors have exact dot products: the rows must match exactly
+    assert _ranked(S.ann_topk_numpy(tie_embeddings, "vec_id", "embedding", 3)) == _ranked(
+        S.ann_topk(tie_embeddings, "vec_id", "embedding", 3)
+    )
 
 
-def test_ann_blocked_matches_expression_topk(spark, sf_dir):
+def test_ann_blocked_matches_expression_topk(spark, sf_dir, tie_embeddings):
     """The distributed block-matrix path must reproduce the expression
     path's exact ranking bit-for-bit (both rank by rounded-6 cosine
     desc, id asc), regardless of block layout."""
@@ -204,6 +232,57 @@ def test_ann_blocked_matches_expression_topk(spark, sf_dir):
     }
     agree = sum(1 for k in expr if blocked.get(k) == expr[k])
     assert agree / len(expr) >= 0.99
+    want = _ranked(S.ann_topk(tie_embeddings, "vec_id", "embedding", 3))
+    for blocks in (1, 3):
+        assert _ranked(S.ann_topk_blocked(
+            tie_embeddings, "vec_id", "embedding", 3,
+            n_query_blocks=blocks, n_corpus_blocks=4,
+        )) == want
+
+
+def test_matrix_decodes_arrow_vectors_and_rejects_ragged_rows():
+    """``_matrix`` reshapes the flattened values buffer: a sliced
+    column decodes from its own offset, float32 widens to float64, a
+    null element becomes NaN, and packed codes decode to uint8. A
+    ragged batch raises even when its total length divides evenly."""
+    import numpy as np
+    import pyarrow as pa
+
+    vecs = pa.array(
+        [[9.0, 9.0], [1.5, None], [3.0, 4.0]], pa.list_(pa.float32())
+    ).slice(1)
+    got = S._matrix(vecs)
+    assert got.dtype == np.float64 and got.shape == (2, 2)
+    assert np.isnan(got[0, 1]) and got[[0, 1, 1], [0, 0, 1]].tolist() == [1.5, 3.0, 4.0]
+    codes = pa.array([b"\x00\x01", b"\x02\xff"], pa.binary()).slice(1)
+    assert S._matrix(codes).tolist() == [[2, 255]]
+    ragged = pa.array([[1.0, 2.0], [3.0], [4.0, 5.0, 6.0]], pa.list_(pa.float64()))
+    with pytest.raises(ValueError, match="unequal length"):
+        S._matrix(ragged)
+    with pytest.raises(ValueError, match="unequal length"):
+        S._matrix(pa.array([b"\x00\x01", b"\x02"], pa.binary()))
+
+
+def test_pq_topk_breaks_shortlist_ties_by_neighbor_id(spark):
+    """300 identical vectors share one PQ code, so every ADC (and
+    exact re-rank) distance ties. The batch-local shortlist must keep
+    the lowest neighbor ids, the final window's rule, not the first
+    rows of the batch: with ids stored 299..0 in one partition the
+    answer is [0, 1]."""
+    vec = [0.5, -0.25, 1.0, 0.0]
+    corpus = spark.createDataFrame(
+        [(i, vec) for i in range(299, -1, -1)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    query = spark.createDataFrame(
+        [(1000, [0.4, -0.2, 0.9, 0.1])], "vec_id long, embedding array<double>"
+    )
+    books = S.pq_train_codebooks(corpus, "embedding", dim=4, m=2, k=2)
+    codes = S.pq_encode(corpus, "vec_id", "embedding", books)
+    for rerank in (None, corpus):
+        got = S.pq_topk(
+            codes, query, "vec_id", "embedding", books, kk=2, rerank_vectors=rerank
+        ).orderBy("rk").collect()
+        assert [(r.neighbor_id, r.rk) for r in got] == [(0, 1), (1, 2)]
 
 
 def test_ann_numpy_size_gate(spark, sf_dir):
@@ -4359,7 +4438,7 @@ def test_stage_checkpoint_default_follows_master(spark, monkeypatch):
         spark.conf.unset(STAGE_MATERIALIZE_CONF)
 
 
-def test_ann_topk_queries_matches_exact(spark):
+def test_ann_topk_queries_matches_exact(spark, tie_embeddings):
     """The serving-shape exact scan (bounded query batch x corpus)
     returns exactly the self-search exact result restricted to the
     query ids — same rounding, same tie-breaks — and default_n_centroids
@@ -4381,17 +4460,24 @@ def test_ann_topk_queries_matches_exact(spark):
         if r.query_id < 20
     )
     assert got == want and len(got) == 20 * 5
+    ties = tie_embeddings
+    got = _ranked(S.ann_topk_queries(
+        ties, ties.filter("vec_id % 4 = 1"), "vec_id", "embedding", 4, n_corpus_blocks=3
+    ))
+    want = [r for r in _ranked(S.ann_topk(ties, "vec_id", "embedding", 4)) if r[0] % 4 == 1]
+    assert got == want and len(got) > 0
 
     assert S.default_n_centroids(0) == 4
     assert S.default_n_centroids(10_000) == 100
     assert S.default_n_centroids(1_000_000) == 1000
 
 
-def test_sq8_adc_topk_preserves_neighbors(spark):
+def test_sq8_adc_topk_preserves_neighbors(spark, tie_embeddings):
     """ADC search over packed SQ8 codes must track exact cosine
     top-k closely (cos_recon > 0.999 implies near-identical ranking):
     recall@5 >= 0.8 on the clustered fixture, and every returned
-    query has exactly k ranked rows."""
+    query has exactly k ranked rows. On the tie-heavy fixture the
+    codes are exact, so the rows equal the expression top-k."""
     from python_plugins_spark.operators import similarity as S
 
     emb = S.clustered_embeddings(
@@ -4409,6 +4495,9 @@ def test_sq8_adc_topk_preserves_neighbors(spark):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
     recall = len(exact & adc) / len(exact)
     assert recall >= 0.8, f"SQ8 ADC recall too low: {recall:.3f}"
+    assert _ranked(
+        S.sq8_adc_topk(tie_embeddings, "vec_id", "embedding", dim=6, k=3), "adc_cos"
+    ) == _ranked(S.ann_topk(tie_embeddings, "vec_id", "embedding", 3))
 
 
 def test_span_index_ingest_second_batch(spark, tmp_path):

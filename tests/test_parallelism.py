@@ -112,6 +112,30 @@ def test_scan_width_counts_only_splits_with_row_groups(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
+def test_scan_width_looks_up_jvm_classes_once(spark, tmp_path, monkeypatch):
+    """py4j resolves a dotted JVM class name one package segment per
+    round trip (~4 ms each time); scan_width resolves its classes once
+    per gateway, so a repeat call, footer reads included, sends no
+    lookup of an ``org`` package or class."""
+    _write(str(tmp_path / "groups.parquet"), 1000, payload_bytes=1024, row_group_rows=250)
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        frame = spark.read.parquet(str(tmp_path / "groups.parquet"))
+        assert scan_width(frame) == 4
+        client = spark.sparkContext._gateway._gateway_client
+        send, sent = client.send_command, []
+        monkeypatch.setattr(
+            client, "send_command", lambda cmd, *a, **k: (sent.append(cmd), send(cmd, *a, **k))[1]
+        )
+        assert scan_width(frame) == 4
+        monkeypatch.undo()
+    finally:
+        spark.conf.set(key, saved)
+    assert sent and not [c for c in sent if c.startswith("r\nu\norg")]
+
+
 def test_spread_is_to_parallelism(spark, inputs):
     df = spread_scan(spark.read.parquet(str(inputs / "one.parquet")))
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

@@ -754,6 +754,33 @@ def test_quality_gate_shuffle_budget(spark, sf_dir):
         assert marker not in p, marker
 
 
+def test_python_node_markers_cover_grouped_python(spark):
+    """Every no-Python plan guard relies on PYTHON_NODE_MARKERS, so
+    grouped Python must hit a marker too: a grouped pandas map, a
+    cogrouped Arrow map (the IVF bucket search), a pandas grouped
+    aggregate and a pandas window UDF."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def mean_(v: pd.Series) -> float:
+        return v.mean()
+
+    df = spark.range(6).selectExpr("id", "id % 2 AS g")
+    frames = {
+        "applyInPandas": df.groupBy("g").applyInPandas(lambda p: p, df.schema),
+        "cogroup": df.groupBy("g").cogroup(df.groupBy("g")).applyInArrow(
+            lambda a, b: a, df.schema
+        ),
+        "pandas aggregate": df.groupBy("g").agg(mean_("id")),
+        "pandas window": df.withColumn("m", mean_("id").over(Window.partitionBy("g"))),
+    }
+    for name, frame in frames.items():
+        plan = plan_str(frame)
+        assert any(m in plan for m in PYTHON_NODE_MARKERS), f"{name}: no marker in\n{plan}"
+
+
 def test_round6b_lm_queries_no_cartesian_and_bounded_joins(spark, sf_dir):
     """KN / PMI / Zipf / JSD / curation-pipeline plans: no cartesian
     products, no Python eval nodes in the relational paths (all model
