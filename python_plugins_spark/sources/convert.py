@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -42,14 +41,7 @@ from pyspark.sql import types as T
 from python_plugins_spark.sources import delta_py as DP
 from python_plugins_spark.sources import iceberg_py as IP
 from python_plugins_spark.sources.avro_py import write_container
-
-
-def _link_or_copy(src: str, dst: str) -> None:
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
+from python_plugins_spark.sources.parquet_files import claim_parquet, hive_dir
 
 
 def convert_iceberg_to_delta(ice_path: str, delta_path: str) -> int:
@@ -100,24 +92,12 @@ def convert_iceberg_to_delta(ice_path: str, delta_path: str) -> int:
         },
     ]
     for f in IP.plan_files(ice_path):
-        src = os.path.join(ice_path, f["path"])
-        base = os.path.basename(f["path"])
         pvals = {k: str(v) for k, v in (f["partition"] or {}).items()}
         # Delta hive layout: partition dirs between table root and file
-        rel_dir = "/".join(f"{k}={v}" for k, v in pvals.items())
-        rel = f"{rel_dir}/{base}" if rel_dir else base
-        _link_or_copy(src, os.path.join(delta_path, rel))
-        add = {
-            "path": rel,
-            "partitionValues": pvals,
-            "size": os.path.getsize(src),
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        stats = DP._file_stats(src)
-        if stats is not None:
-            add["stats"] = json.dumps(stats)
-        actions.append({"add": add})
+        rel = os.path.join(hive_dir(pvals), os.path.basename(f["path"]))
+        actions.append(DP._add_action(claim_parquet(
+            os.path.join(ice_path, f["path"]), delta_path, rel, pvals
+        ), now_ms))
 
     commit = os.path.join(DP._log_path(delta_path), f"{0:020d}.json")
     body = "".join(json.dumps(a) + "\n" for a in actions)
@@ -167,38 +147,19 @@ def convert_delta_to_iceberg(delta_path: str, ice_path: str) -> int:
             "identity layouts key on the partition column's name)"
         )
     # bounds (and the linked files' columns) use PHYSICAL names
-    data_schema = T.StructType(
-        [
-            T.StructField(_phys[f.name], f.dataType, f.nullable)
-            for f in schema.fields
-            if f.name not in part_cols
-        ]
-    )
+    names = {_phys[f.name] for f in schema.fields if f.name not in part_cols}
 
     os.makedirs(IP._meta_dir(ice_path), exist_ok=True)
     os.makedirs(os.path.join(ice_path, "data"), exist_ok=True)
     now_ms = int(time.time() * 1000)
     snapshot_id = 1
-    entries = []
-    for rel, add in sorted(state.active.items()):
-        src = os.path.join(delta_path, rel)
-        dst_rel = os.path.join("data", rel)
-        _link_or_copy(src, os.path.join(ice_path, dst_rel))
-        n_rows, lower, upper = IP._file_column_bounds(src, data_schema)
-        entries.append(
-            (
-                1,  # ADDED
-                dst_rel,
-                "PARQUET",
-                dict(add.get("partitionValues") or {}),
-                n_rows,
-                os.path.getsize(src),
-                lower,
-                upper,
-                0,  # content: DATA
-                [],
-            )
-        )
+    entries = [
+        IP._added(claim_parquet(
+            os.path.join(delta_path, rel), ice_path, os.path.join("data", rel),
+            dict(add.get("partitionValues") or {}),
+        ), names)
+        for rel, add in sorted(state.active.items())
+    ]
 
     manifest_name = f"manifest-{snapshot_id}-{uuid.uuid4().hex}.avro"
     manifest_path = os.path.join(IP._meta_dir(ice_path), manifest_name)

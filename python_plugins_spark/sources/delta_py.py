@@ -67,6 +67,7 @@ materialized _change_data files.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -75,6 +76,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from python_plugins_spark.sources.parquet_files import (
+    Footer, StagedFile, stage_parquet, unstage,
+)
 
 _LOG_DIR = "_delta_log"
 _CHECKPOINT_INTERVAL = 10
@@ -396,8 +401,6 @@ def version_at_timestamp(table_path: str, ts_ms) -> int:
     (file mtime for commits predating commitInfo). Raises if the
     timestamp predates the table — the same error surface as Delta."""
     if isinstance(ts_ms, str):
-        import datetime
-
         dt = datetime.datetime.fromisoformat(ts_ms)
         if dt.tzinfo is None:
             dt = dt.replace(tzinfo=datetime.timezone.utc)
@@ -622,58 +625,38 @@ def _put_if_absent(content: str, dst: str) -> bool:
         os.remove(tmp)
 
 
-def _file_stats(parquet_path: str) -> dict | None:
-    """Per-file stats for the ``add`` action's ``stats`` field
-    (protocol "Per-file Statistics"): numRecords plus min/maxValues
-    for primitive leaf columns, straight from the parquet footer —
+def _stats(footer: Footer) -> str:
+    """The ``add`` action's ``stats`` (protocol "Per-file Statistics"):
+    numRecords plus min/maxValues straight from the parquet footer —
     the same numbers a Java Delta writer persists, and what
-    :func:`read_delta`'s ``prune`` uses for data skipping."""
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(parquet_path).metadata
-    except Exception:
-        return None
-
+    :func:`read_delta`'s ``prune`` uses for data skipping. Dates and
+    timestamps are ISO strings; decimal columns and dotted names carry
+    no min/max (the protocol allows a subset)."""
     def _plain(v):
-        if isinstance(v, bytes):
-            try:
-                return v.decode()
-            except UnicodeDecodeError:
-                return None
         if isinstance(v, (datetime.date, datetime.datetime)):
             return v.isoformat()
-        if isinstance(v, (int, float, str, bool)):
-            return v
-        return None
+        return v if isinstance(v, (int, float, str, bool)) else None
 
     mins: dict = {}
     maxs: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested leaf — skip (protocol allows subset)
-                continue
-            try:
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                mn, mx = _plain(st.min), _plain(st.max)
-            except Exception:
-                # pyarrow can't cast stats for some logical types
-                # (e.g. decimal) — stats are optional, skip the column
-                continue
-            if mn is None or mx is None:
-                continue
-            if name not in mins or mn < mins[name]:
-                mins[name] = mn
-            if name not in maxs or mx > maxs[name]:
-                maxs[name] = mx
-    return {"numRecords": md.num_rows, "minValues": mins, "maxValues": maxs}
+    for name, (mn, mx) in footer.bounds.items():
+        mn, mx = _plain(mn), _plain(mx)
+        if "." not in name and mn is not None and mx is not None:
+            mins[name], maxs[name] = mn, mx
+    return json.dumps(
+        {"numRecords": footer.num_rows, "minValues": mins, "maxValues": maxs}
+    )
+
+
+def _add_action(f: StagedFile, now_ms: int) -> dict:
+    return {"add": {
+        "path": f.path,
+        "partitionValues": f.partition,
+        "size": f.size,
+        "modificationTime": now_ms,
+        "dataChange": True,
+        "stats": _stats(f.footer),
+    }}
 
 
 def _stage_data_files(
@@ -690,44 +673,10 @@ def _stage_data_files(
     dirs and each add carries the protocol's ``partitionValues`` map
     (data files themselves omit the partition columns, exactly as the
     protocol specifies — readers reconstruct them from the add)."""
-    staging = os.path.join(table_path, f".staging-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    adds = []
-    for root, _dirs, fnames in os.walk(staging):
-        for f in sorted(fnames):
-            if not f.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            pvals: dict[str, str] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = v
-            name = f"part-{uuid.uuid4().hex}.parquet"
-            src = os.path.join(root, f)
-            dst_dir = (
-                os.path.join(table_path, rel_dir) if rel_dir != "." else table_path
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, name)
-            size = os.path.getsize(src)
-            stats = _file_stats(src)
-            os.replace(src, dst)
-            add = {
-                "path": os.path.relpath(dst, table_path),
-                "partitionValues": pvals,
-                "size": size,
-                "modificationTime": now_ms,
-                "dataChange": True,
-            }
-            if stats is not None:
-                add["stats"] = json.dumps(stats)
-            adds.append({"add": add})
-    shutil.rmtree(staging, ignore_errors=True)
-    return adds
+    return [
+        _add_action(f, now_ms)
+        for f in stage_parquet(df, table_path, "", partition_by, "part-{}.parquet")
+    ]
 
 
 class DeltaSchemaMismatchError(ValueError):
@@ -1519,11 +1468,8 @@ def write_delta(
     if obs is not None:
         violated = {n: v for n, v in obs.get.items() if v}
         if violated:
-            for a in adds:  # staged files are invisible; remove them
-                try:
-                    os.remove(os.path.join(table_path, a["add"]["path"]))
-                except FileNotFoundError:
-                    pass
+            # staged files are invisible; remove them
+            unstage(table_path, [a["add"]["path"] for a in adds])
             details = ", ".join(
                 f"{checks[n][0]} ({checks[n][1]}): {v} row(s)"
                 for n, v in sorted(violated.items())
@@ -1606,11 +1552,7 @@ def write_delta(
                 # a racing writer committed this batch between our
                 # pre-check and this attempt: clean the invisible
                 # staged files and skip
-                for a in adds:
-                    try:
-                        os.remove(os.path.join(table_path, a["add"]["path"]))
-                    except FileNotFoundError:
-                        pass
+                unstage(table_path, [a["add"]["path"] for a in adds])
                 return -1
             actions.append(
                 {"txn": {"appId": txn[0], "version": int(txn[1]),
@@ -1997,16 +1939,8 @@ def delete_delta(
                 )
             return version
         # lost the race: drop our sidecars / staged parts, re-run
-        for f in new_dv_files:
-            try:
-                os.remove(f)
-            except FileNotFoundError:
-                pass
-        for a in adds_staged:
-            try:
-                os.remove(os.path.join(table_path, a["add"]["path"]))
-            except FileNotFoundError:
-                pass
+        unstage(table_path, new_dv_files)
+        unstage(table_path, [a["add"]["path"] for a in adds_staged])
     raise DeltaConcurrentWriteError(
         f"lost the delete commit race {max_retries + 1} times at {table_path}"
     )
@@ -2213,11 +2147,7 @@ def merge_delta(
             return version
         # lost the race: undo our staged parts and re-run the whole
         # merge against the new snapshot (serializable isolation)
-        for a in adds:
-            try:
-                os.remove(os.path.join(table_path, a["add"]["path"]))
-            except FileNotFoundError:
-                pass
+        unstage(table_path, [a["add"]["path"] for a in adds])
     raise DeltaConcurrentWriteError(
         f"lost the merge commit race {max_retries + 1} times at {table_path}"
     )
@@ -2365,11 +2295,7 @@ def optimize_delta(
                 "removed": sorted(victims),
                 "added": [a["add"]["path"] for a in adds],
             }
-        for a in adds:
-            try:
-                os.remove(os.path.join(table_path, a["add"]["path"]))
-            except FileNotFoundError:
-                pass
+        unstage(table_path, [a["add"]["path"] for a in adds])
     raise DeltaConcurrentWriteError(
         f"lost the optimize commit race {max_retries + 1} times at {table_path}"
     )
@@ -2663,11 +2589,7 @@ def update_delta(
         if not desc_rows:
             # predicate matched nothing after all (race with the write
             # above staging empty parts shouldn't happen, but be safe)
-            for a in adds_staged:
-                try:
-                    os.remove(os.path.join(table_path, a["add"]["path"]))
-                except FileNotFoundError:
-                    pass
+            unstage(table_path, [a["add"]["path"] for a in adds_staged])
             return read_version
         touched_descs = {
             name_to_rel[r["path"]]: json.loads(r["desc_json"]) for r in desc_rows
@@ -2725,16 +2647,8 @@ def update_delta(
                     table_path, version, _replay_state(table_path, version)
                 )
             return version
-        for f in new_dv_files:
-            try:
-                os.remove(f)
-            except FileNotFoundError:
-                pass
-        for a in adds_staged:
-            try:
-                os.remove(os.path.join(table_path, a["add"]["path"]))
-            except FileNotFoundError:
-                pass
+        unstage(table_path, new_dv_files)
+        unstage(table_path, [a["add"]["path"] for a in adds_staged])
     raise DeltaConcurrentWriteError(
         f"lost the update commit race {max_retries + 1} times at {table_path}"
     )

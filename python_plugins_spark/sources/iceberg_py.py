@@ -52,7 +52,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from collections import defaultdict
@@ -65,6 +64,15 @@ from pyspark.sql import types as T
 
 from python_plugins_spark.sources.avro_py import read_container, write_container
 from python_plugins_spark.sources.delta_py import _put_if_absent
+from python_plugins_spark.sources.parquet_files import (
+    StagedFile,
+    claim_parquet,
+    hive_dir,
+    hive_values,
+    read_footer,
+    stage_parquet,
+    unstage,
+)
 
 _META_DIR = "metadata"
 _DATA_DIR = "data"
@@ -625,43 +633,52 @@ def table_snapshots(path: str) -> list[dict]:
 
 # ------------------------------------------------- write path
 
-def _file_column_bounds(parquet_path: str, schema: T.StructType):
-    """(record_count, lower, upper) from the parquet FOOTER via
-    pyarrow — real statistics, the same ones a Java Iceberg writer
-    would persist."""
-    import pyarrow.parquet as pq
+def _added(f: StagedFile, names=(), content: int = 0, eq_ids=()) -> tuple:
+    """The ADDED manifest entry for a staged or claimed file. The
+    footer's (min, max) of the columns in ``names`` (the table's
+    physical data columns) become the entry's bounds — real
+    statistics, the same ones a Java Iceberg writer would persist."""
+    b = {n: v for n, v in f.footer.bounds.items() if n in names}
+    return (
+        1,  # ADDED
+        f.path,
+        "PARQUET",
+        f.partition,
+        f.footer.num_rows,
+        f.size,
+        {n: _enc_bound(lo) for n, (lo, _) in b.items()},
+        {n: _enc_bound(hi) for n, (_, hi) in b.items()},
+        content,  # 0 DATA, 1 POSITION_DELETES, 2 EQUALITY_DELETES
+        list(eq_ids),
+    )
 
-    md = pq.ParquetFile(parquet_path).metadata
-    names = {f.name for f in schema.fields}
-    lower: dict[str, str] = {}
-    upper: dict[str, str] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name not in names:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            try:
-                mn, mx = st.min, st.max
-            except Exception:
-                # pyarrow can't decode stats for every physical type
-                # (e.g. FIXED_LEN_BYTE_ARRAY decimals); the column
-                # simply contributes no pruning bounds
-                continue
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    continue
-            if name not in lower or _cmp_key(mn) < _cmp_key(_dec_bound(lower[name])):
-                lower[name] = _enc_bound(mn)
-            if name not in upper or _cmp_key(mx) > _cmp_key(_dec_bound(upper[name])):
-                upper[name] = _enc_bound(mx)
-    return md.num_rows, lower, upper
+
+def _stage_data(
+    df: DataFrame, path: str, pspecs: list[dict], phys: dict
+) -> list[tuple]:
+    """Stage ``df`` as data files under the partition layout
+    ``pspecs``; return their manifest entries. Renamed columns write
+    under their stable PHYSICAL name (:func:`rename_column_iceberg`;
+    partition sources can't be renamed, so the directory keys are
+    unaffected). A hidden transform's derived value keys the layout
+    while the SOURCE column stays in the data files (lossy)."""
+    from pyspark.sql import functions as F
+
+    out_df = df
+    if any(phys.get(c, c) != c for c in df.columns):
+        out_df = out_df.select(
+            *[F.col(c).alias(phys.get(c, c)) for c in df.columns]
+        )
+    for p_ in pspecs:
+        if p_["kind"] != "identity":
+            src_type = df.schema[p_["source"]].dataType
+            out_df = out_df.withColumn(p_["pname"], _transform_col(p_, src_type))
+    keys = [p_["pname"] for p_ in pspecs]
+    names = {phys.get(c, c) for c in df.columns if c not in keys}
+    return [
+        _added(f, names)
+        for f in stage_parquet(out_df, path, _DATA_DIR, keys, "{}.parquet")
+    ]
 
 
 def write_iceberg(
@@ -814,75 +831,11 @@ def write_iceberg(
         pspecs = _normalize_pspecs(partition_by)
 
     # ---- data files via Spark, staged then moved under data/
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    out_df = df
-    # renamed columns write under their stable PHYSICAL name (see the
-    # id-based rename block); partition sources can't be renamed, so
-    # the dir layout keys below are unaffected
     commit_node = evolved_node if evolved_node is not None else (
         _current_schema_node(meta) if meta is not None else None
     )
     phys = _phys_map(commit_node) if commit_node is not None else {}
-    if any(phys.get(c, c) != c for c in df.columns):
-        from pyspark.sql import functions as F
-
-        out_df = out_df.select(
-            *[F.col(c).alias(phys.get(c, c)) for c in df.columns]
-        )
-    for p_ in pspecs:
-        if p_["kind"] != "identity":
-            # hidden partitioning: the derived value keys the layout;
-            # the SOURCE column stays in the data files (lossy)
-            src_type = df.schema[p_["source"]].dataType
-            out_df = out_df.withColumn(p_["pname"], _transform_col(p_, src_type))
-    writer = out_df.write.mode("overwrite")
-    if pspecs:
-        writer = writer.partitionBy(*[p_["pname"] for p_ in pspecs])
-    writer.parquet(staging)
-
-    _dir_keys = {p_["pname"] for p_ in pspecs}
-    data_schema = T.StructType(
-        [
-            T.StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-            for f in df.schema.fields
-            if f.name not in _dir_keys
-        ]
-    )
-    entries = []
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            src = os.path.join(root, f)
-            rel = os.path.relpath(root, staging)
-            part: dict[str, str] = {}
-            if rel != ".":
-                # nested 'col=value' dirs (hive layout, one level per
-                # partition field)
-                for comp in rel.split(os.sep):
-                    k, _, v = comp.partition("=")
-                    part[k] = v
-            dst_dir = os.path.join(path, _DATA_DIR, rel) if rel != "." else os.path.join(path, _DATA_DIR)
-            os.makedirs(dst_dir, exist_ok=True)
-            name = f"{uuid.uuid4().hex}.parquet"
-            dst = os.path.join(dst_dir, name)
-            os.replace(src, dst)
-            n_rows, lower, upper = _file_column_bounds(dst, data_schema)
-            entries.append(
-                (
-                    1,  # ADDED
-                    os.path.relpath(dst, path),
-                    "PARQUET",
-                    part,
-                    n_rows,
-                    os.path.getsize(dst),
-                    lower,
-                    upper,
-                    0,  # content: DATA
-                    [],  # equality_ids
-                )
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    entries = _stage_data(df, path, pspecs, phys)
 
     # ---- one manifest for this commit
     manifest_name = f"manifest-{snapshot_id}-{uuid.uuid4().hex}.avro"
@@ -914,15 +867,7 @@ def write_iceberg(
         # this writer's data files and manifest are invisible (no
         # metadata references them) but would otherwise linger until
         # remove_orphan_files; delete them on a CAS/conflict abort
-        for e in entries:
-            try:
-                os.remove(os.path.join(path, e[1]))
-            except FileNotFoundError:
-                pass
-        try:
-            os.remove(manifest_path)
-        except FileNotFoundError:
-            pass
+        unstage(path, [e[1] for e in entries] + [manifest_path])
 
     if expected_version is not None and (cur_version or 0) != expected_version:
         _abort_cleanup()
@@ -1142,49 +1087,20 @@ def delete_iceberg(spark: SparkSession, path: str, predicate: str) -> int:
     )
 
     # stage the delete file via Spark, then move under data/
-    staging = os.path.join(path, f".staging-del-{uuid.uuid4().hex}")
-    matched.coalesce(1).write.mode("overwrite").parquet(staging)
-    parts = [
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
+    entries = [
+        _added(f, content=1)
+        for f in stage_parquet(
+            matched.coalesce(1), path, _DATA_DIR, None, "{}-deletes.parquet",
+            skip_empty=True,
+        )
     ]
-    import pyarrow.parquet as pq
-
-    n_deleted = sum(
-        pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows for f in parts
-    )
-    if n_deleted == 0:
-        shutil.rmtree(staging, ignore_errors=True)
+    if not entries:
         return meta.get("current-snapshot-id")
-
     now_ms = int(time.time() * 1000)
     snapshot_id = (base_version or 0) + 1  # pinned to the PLANNED base
-    entries = []
-    for f in parts:
-        name = f"{uuid.uuid4().hex}-deletes.parquet"
-        dst = os.path.join(path, _DATA_DIR, name)
-        src = os.path.join(staging, f)
-        size = os.path.getsize(src)
-        n_rows = pq.ParquetFile(src).metadata.num_rows
-        os.replace(src, dst)
-        entries.append(
-            (
-                1,  # ADDED
-                os.path.relpath(dst, path),
-                "PARQUET",
-                {},
-                n_rows,
-                size,
-                {},
-                {},
-                1,  # content: POSITION_DELETES
-                [],  # equality_ids
-            )
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-
     return _commit_delete_snapshot(
         path, meta, snapshot_id, now_ms, entries,
-        {"added-position-deletes": str(n_deleted)},
+        {"added-position-deletes": str(sum(e[4] for e in entries))},
     )
 
 
@@ -1254,16 +1170,7 @@ def _commit_delete_snapshot(
         # Remove everything this commit staged (delete parquet files,
         # manifest, manifest list) — no metadata references them, and
         # leaving them would orphan files until remove_orphan_files.
-        for e in entries:
-            try:
-                os.remove(os.path.join(path, e[1]))
-            except FileNotFoundError:
-                pass
-        for p in (manifest_path, ml_path):
-            try:
-                os.remove(p)
-            except FileNotFoundError:
-                pass
+        unstage(path, [e[1] for e in entries] + [manifest_path, ml_path])
         raise IcebergConcurrentWriteError(
             f"concurrent commit at version {snapshot_id}: delete was "
             "planned against a stale snapshot; re-run it"
@@ -1303,53 +1210,35 @@ def equality_delete_iceberg(
             )
     eq_ids = sorted(name_to_id[c] for c in keys_df.columns)
 
-    staging = os.path.join(path, f".staging-eqdel-{uuid.uuid4().hex}")
-    # delete files store PHYSICAL column names (stable across renames)
-    phys = _phys_map(_current_schema_node(meta))
-    if any(phys.get(c, c) != c for c in keys_df.columns):
-        from pyspark.sql import functions as F
-
-        keys_df = keys_df.select(
-            *[F.col(c).alias(phys.get(c, c)) for c in keys_df.columns]
-        )
-    keys_df.distinct().coalesce(1).write.mode("overwrite").parquet(staging)
-    import pyarrow.parquet as pq
-
+    entries = _stage_eq_deletes(
+        keys_df, path, _phys_map(_current_schema_node(meta)), eq_ids
+    )
     now_ms = int(time.time() * 1000)
     snapshot_id = (base_version or 0) + 1  # pinned to the PLANNED base
-    entries = []
-    for f in sorted(os.listdir(staging)):
-        if not f.endswith(".parquet"):
-            continue
-        src = os.path.join(staging, f)
-        n_rows = pq.ParquetFile(src).metadata.num_rows
-        if n_rows == 0:
-            continue
-        name = f"{uuid.uuid4().hex}-eq-deletes.parquet"
-        dst = os.path.join(path, _DATA_DIR, name)
-        size = os.path.getsize(src)
-        os.replace(src, dst)
-        entries.append(
-            (
-                1,  # ADDED
-                os.path.relpath(dst, path),
-                "PARQUET",
-                {},
-                n_rows,
-                size,
-                {},
-                {},
-                2,  # content: EQUALITY_DELETES
-                eq_ids,
-            )
-        )
-    shutil.rmtree(staging, ignore_errors=True)
     if not entries:
         return meta.get("current-snapshot-id")
     return _commit_delete_snapshot(
         path, meta, snapshot_id, now_ms, entries,
         {"added-equality-deletes": str(sum(e[4] for e in entries))},
     )
+
+
+def _stage_eq_deletes(
+    keys: DataFrame, path: str, phys: dict, eq_ids: list[int]
+) -> list[tuple]:
+    """Stage the distinct rows of ``keys`` as one equality-delete file
+    (under PHYSICAL column names, stable across renames); return its
+    manifest entry, or none when ``keys`` is empty."""
+    from pyspark.sql import functions as F
+
+    keys = keys.select(*[F.col(c).alias(phys.get(c, c)) for c in keys.columns])
+    return [
+        _added(f, content=2, eq_ids=eq_ids)
+        for f in stage_parquet(
+            keys.distinct().coalesce(1), path, _DATA_DIR, None,
+            "{}-eq-deletes.parquet", skip_empty=True,
+        )
+    ]
 
 
 def plan_delete_files(path: str, snapshot_id: int | None = None) -> list[dict]:
@@ -2015,11 +1904,7 @@ def rewrite_manifests(path: str) -> dict:
     ]
     meta_file = os.path.join(_meta_dir(path), f"v{snapshot_id}.metadata.json")
     if not _put_if_absent(json.dumps(new_meta), meta_file):
-        for p_ in staged:
-            try:
-                os.remove(p_)
-            except FileNotFoundError:
-                pass
+        unstage(path, staged)
         raise IcebergConcurrentWriteError(
             f"concurrent commit at version {snapshot_id}: re-run "
             "rewrite_manifests against the current snapshot"
@@ -2515,8 +2400,6 @@ def add_files_iceberg(path: str, files: list[str]) -> int:
     matching hive); every file's parquet schema must carry exactly the
     table's remaining (physical) column set. Returns the new snapshot
     id."""
-    import pyarrow.parquet as pq
-
     base_version = current_metadata_version(path)
     meta = _load_metadata(path, base_version)
     pspecs = _pspecs_from_meta(meta)
@@ -2531,34 +2414,26 @@ def add_files_iceberg(path: str, files: list[str]) -> int:
     schema = iceberg_schema_to_spark(node)
     phys = _phys_map(node)
     pnames = [p_["pname"] for p_ in pspecs]
-    data_schema = T.StructType(
-        [
-            T.StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-            for f in schema.fields
-            if f.name not in set(pnames)
-        ]
-    )
-    want = set(data_schema.fieldNames())
+    want = {phys.get(f.name, f.name) for f in schema.fields if f.name not in pnames}
 
     def _hive_tuple(src: str) -> dict[str, str]:
-        comps = src.split(os.sep)[:-1]
+        segs = [hive_values(c) for c in src.split(os.sep)[:-1] if "=" in c]
         part: dict[str, str] = {}
         for pn in pnames:
-            hits = [c for c in comps if c.startswith(pn + "=")]
+            hits = [seg[pn] for seg in segs if pn in seg]
             if len(hits) != 1:
                 raise ValueError(
                     f"add_files_iceberg: {src} must carry exactly one "
                     f"hive '{pn}=<value>' path segment (found "
                     f"{len(hits)}) — the table partitions by {pnames}"
                 )
-            part[pn] = hits[0].partition("=")[2]
+            part[pn] = hits[0]
         return part
 
-    tuples = [_hive_tuple(src) for src in files] if pnames else [
-        {} for _ in files
-    ]
-    for src in files:
-        have = set(pq.ParquetFile(src).schema_arrow.names)
+    tuples = [_hive_tuple(src) for src in files]
+    footers = [read_footer(src) for src in files]
+    for src, footer in zip(files, footers):
+        have = set(footer.schema.names)
         if have != want:
             raise ValueError(
                 f"add_files_iceberg: {src} columns {sorted(have)} != "
@@ -2568,29 +2443,14 @@ def add_files_iceberg(path: str, files: list[str]) -> int:
     now_ms = int(time.time() * 1000)
     snapshot_id = (base_version or 0) + 1
     entries = []
-    staged: list[str] = []
     try:
-        for src, part in zip(files, tuples):
-            rel_dir = os.sep.join(f"{pn}={part[pn]}" for pn in pnames)
-            name = f"{uuid.uuid4().hex}-imported.parquet"
-            dst = os.path.join(path, _DATA_DIR, rel_dir, name)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(src, dst)  # zero-copy claim of the bytes
-            except OSError:
-                shutil.copy2(src, dst)
-            staged.append(dst)
-            n_rows, lower, upper = _file_column_bounds(dst, data_schema)
-            entries.append(
-                (1, os.path.relpath(dst, path), "PARQUET", part, n_rows,
-                 os.path.getsize(dst), lower, upper, 0, [])
+        for src, part, footer in zip(files, tuples, footers):
+            rel = os.path.join(
+                _DATA_DIR, hive_dir(part), f"{uuid.uuid4().hex}-imported.parquet"
             )
+            entries.append(_added(claim_parquet(src, path, rel, part, footer), want))
     except BaseException:
-        for dst in staged:
-            try:
-                os.unlink(dst)
-            except FileNotFoundError:
-                pass
+        unstage(path, [e[1] for e in entries])
         raise
     if not entries:
         return meta.get("current-snapshot-id")
@@ -2731,8 +2591,6 @@ def upsert_iceberg(
     makes a key that MOVES partitions correct: the delete erases the
     old row wherever it lives, the new file carries the row in its new
     partition. Returns the new snapshot id."""
-    import pyarrow.parquet as pq
-
     base_version = current_metadata_version(path)
     meta = _load_metadata(path, base_version)
     pspecs = _pspecs_from_meta(meta)
@@ -2750,87 +2608,11 @@ def upsert_iceberg(
 
     now_ms = int(time.time() * 1000)
     snapshot_id = (base_version or 0) + 1  # pinned to the PLANNED base
-    entries = []
-
-    # equality-delete file: just the distinct source keys (stored
-    # under PHYSICAL names, stable across renames)
-    from pyspark.sql import functions as F
-
+    # the equality-delete file holds just the distinct source keys; the
+    # data files land under the table's committed partition layout
     phys = _phys_map(_current_schema_node(meta))
-    staging = os.path.join(path, f".staging-ups-{uuid.uuid4().hex}")
-    source.select(
-        *[F.col(c).alias(phys.get(c, c)) for c in on]
-    ).distinct().coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(staging, "del")
-    )
-    # data files under the table's committed partition layout (hidden
-    # transforms derive the directory key; the source column stays in
-    # the data files — mirrors write_iceberg's staging walk)
-    out_df = source
-    if any(phys.get(c, c) != c for c in source.columns):
-        out_df = out_df.select(
-            *[F.col(c).alias(phys.get(c, c)) for c in source.columns]
-        )
-    for p_ in pspecs:
-        if p_["kind"] != "identity":
-            src_type = source.schema[p_["source"]].dataType
-            out_df = out_df.withColumn(p_["pname"], _transform_col(p_, src_type))
-    writer = out_df.write.mode("overwrite")
-    if pspecs:
-        writer = writer.partitionBy(*[p_["pname"] for p_ in pspecs])
-    writer.parquet(os.path.join(staging, "data"))
-
-    for f in sorted(os.listdir(os.path.join(staging, "del"))):
-        if not f.endswith(".parquet"):
-            continue
-        src = os.path.join(staging, "del", f)
-        n_rows = pq.ParquetFile(src).metadata.num_rows
-        if n_rows == 0:
-            continue
-        name = f"{uuid.uuid4().hex}-eq-deletes.parquet"
-        dst = os.path.join(path, _DATA_DIR, name)
-        size = os.path.getsize(src)
-        os.replace(src, dst)
-        entries.append(
-            (1, os.path.relpath(dst, path), "PARQUET", {}, n_rows, size,
-             {}, {}, 2, eq_ids)
-        )
-    _dir_keys = {p_["pname"] for p_ in pspecs}
-    data_schema = T.StructType(
-        [
-            T.StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-            for f in schema.fields
-            if f.name not in _dir_keys
-        ]
-    )
-    data_staging = os.path.join(staging, "data")
-    for root_, _dirs, fs in os.walk(data_staging):
-        for f in sorted(fs):
-            if not f.endswith(".parquet"):
-                continue
-            src = os.path.join(root_, f)
-            rel = os.path.relpath(root_, data_staging)
-            part: dict[str, str] = {}
-            if rel != ".":
-                for comp in rel.split(os.sep):
-                    k, _, v = comp.partition("=")
-                    part[k] = v
-            dst_dir = (
-                os.path.join(path, _DATA_DIR, rel)
-                if rel != "."
-                else os.path.join(path, _DATA_DIR)
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            name = f"{uuid.uuid4().hex}.parquet"
-            dst = os.path.join(dst_dir, name)
-            size = os.path.getsize(src)
-            n_rows, lower, upper = _file_column_bounds(src, data_schema)
-            os.replace(src, dst)
-            entries.append(
-                (1, os.path.relpath(dst, path), "PARQUET", part, n_rows,
-                 size, lower, upper, 0, [])
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    entries = _stage_eq_deletes(source.select(*on), path, phys, eq_ids)
+    entries += _stage_data(source, path, pspecs, phys)
     if not entries:
         return meta.get("current-snapshot-id")
     return _commit_delete_snapshot(

@@ -1712,3 +1712,55 @@ def test_delta_generated_columns(spark):
     # declaring over rows that disagree refuses
     with pytest.raises(dp.DeltaConstraintViolationError, match="disagree"):
         dp.set_generated_column(spark, p, "amount", "cast(id AS DOUBLE)")
+
+
+# ------------------------------------------------------- write path
+
+def test_delta_escaped_partition_values(spark, tmp_path):
+    """Spark escapes hive directory names (``a:b`` -> ``k=a%3Ab``);
+    the log stores the value itself, so pruning on it finds the row."""
+    from python_plugins_spark.sources.delta_py import _replay
+
+    path = str(tmp_path / "esc")
+    df = spark.createDataFrame(
+        [(1, "a:b"), (2, "x/y"), (3, "p%q")], "id long, k string"
+    )
+    write_delta(df, path, "overwrite", partition_by=["k"])
+    _, active = _replay(path)
+    assert sorted(a["partitionValues"]["k"] for a in active.values()) == [
+        "a:b", "p%q", "x/y",
+    ]
+    assert sorted(os.listdir(path)) == [
+        "_delta_log", "k=a%3Ab", "k=p%25q", "k=x%2Fy",
+    ]
+    for v, want in (("a:b", 1), ("x/y", 2), ("p%q", 3)):
+        rows = read_delta(spark, path, prune={"k": (v, v)}).collect()
+        assert [(r.id, r.k) for r in rows] == [(want, v)]
+
+
+def test_failed_table_write_leaves_no_staging_dir(spark, tmp_path):
+    """A write whose frame fails mid-job removes its staging directory
+    (nothing else ever would: vacuum and orphan cleanup skip it) and
+    leaves the table as it was."""
+    import pytest
+
+    from python_plugins_spark.sources.iceberg_py import read_iceberg, write_iceberg
+
+    bad = spark.range(20).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id")
+    )
+    for fmt, write, read in (
+        ("delta", write_delta, read_delta),
+        ("iceberg", write_iceberg, read_iceberg),
+    ):
+        path = str(tmp_path / fmt)
+        write(spark.range(3), path, "overwrite")
+        with pytest.raises(Exception, match="boom"):
+            write(bad, path, "append")
+        leftovers = [
+            d for root, dirs, _ in os.walk(path) for d in dirs
+            if d.startswith(".staging")
+        ]
+        assert leftovers == [], (fmt, leftovers)
+        assert read(spark, path).count() == 3

@@ -2085,3 +2085,142 @@ def test_iceberg_add_files_partitioned(spark, sf_dir, tmp_path):
     )
     with pytest.raises(NotImplementedError, match="hidden"):
         add_files_iceberg(p2, lake_files)
+
+
+# ------------------------------------------------------- write path
+
+def test_iceberg_escaped_partition_values(spark, tmp_path):
+    """Partition values Spark escapes in directory names (``:``, ``/``)
+    are stored as the values themselves: equality pruning finds them,
+    add_files parses an escaped hive path, and a Delta -> Iceberg ->
+    Delta conversion keeps ``a:b`` (and its escaped directory)."""
+    import os
+
+    from python_plugins_spark.sources.convert import (
+        convert_delta_to_iceberg, convert_iceberg_to_delta,
+    )
+    from python_plugins_spark.sources.delta_py import _replay, read_delta, write_delta
+    from python_plugins_spark.sources.iceberg_py import add_files_iceberg
+
+    df = spark.createDataFrame([(1, "a:b"), (2, "x/y")], "id long, k string")
+    path = str(tmp_path / "ice")
+    write_iceberg(df, path, "overwrite", partition_by="k")
+    for v, want in (("a:b", 1), ("x/y", 2)):
+        assert [f["partition"] for f in plan_files(path, eq={"k": v})] == [{"k": v}]
+        rows = read_iceberg(spark, path, eq={"k": v}).collect()
+        assert [(r.id, r.k) for r in rows] == [(want, v)]
+
+    lake = str(tmp_path / "lake")
+    df.write.partitionBy("k").parquet(lake)
+    imported = str(tmp_path / "imported")
+    write_iceberg(df.limit(0), imported, "overwrite", partition_by="k")
+    add_files_iceberg(imported, sorted(
+        os.path.join(r, f) for r, _, fs in os.walk(lake)
+        for f in fs if f.endswith(".parquet")
+    ))
+    assert sorted(f["partition"]["k"] for f in plan_files(imported)) == ["a:b", "x/y"]
+    assert sorted(os.listdir(os.path.join(imported, "data"))) == ["k=a%3Ab", "k=x%2Fy"]
+    assert read_iceberg(spark, imported, eq={"k": "a:b"}).count() == 1
+
+    dlt, ice2, dlt2 = (str(tmp_path / n) for n in ("dlt", "ice2", "dlt2"))
+    write_delta(df, dlt, "overwrite", partition_by=["k"])
+    convert_delta_to_iceberg(dlt, ice2)
+    assert sorted(f["partition"]["k"] for f in plan_files(ice2)) == ["a:b", "x/y"]
+    convert_iceberg_to_delta(ice2, dlt2)
+    _, active = _replay(dlt2)
+    assert sorted(a["partitionValues"]["k"] for a in active.values()) == ["a:b", "x/y"]
+    assert sorted(os.path.dirname(p) for p in active) == ["k=a%3Ab", "k=x%2Fy"]
+    rows = read_delta(spark, dlt2, prune={"k": ("a:b", "a:b")}).collect()
+    assert [(r.id, r.k) for r in rows] == [(1, "a:b")]
+
+
+def test_footer_metadata_pinned(spark, tmp_path):
+    """The exact Iceberg bounds (add_files_iceberg) and Delta stats
+    (convert_iceberg_to_delta, write_delta) a parquet footer yields:
+    two row groups folded per column; Iceberg keeps decimals tagged and
+    writes timestamps with a space, Delta writes ISO ``T`` timestamps
+    and drops decimals and nested leaves; a row group whose binary
+    min/max is not UTF-8 contributes nothing."""
+    import datetime as dt
+    import json
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_plugins_spark.sources.convert import convert_iceberg_to_delta
+    from python_plugins_spark.sources.delta_py import _replay, write_delta
+    from python_plugins_spark.sources.iceberg_py import add_files_iceberg
+
+    utc = dt.timezone.utc
+    t = pa.table({
+        "l": pa.array([1, 5, -3, 9], pa.int64()),
+        "bin": pa.array([b"\xff\x00", b"ab", b"cd", b"zz"]),
+        "i": pa.array([7, None, 2, 4], pa.int32()),
+        "d": pa.array([1.5, -2.25, 3.0, 0.0]),
+        "b": pa.array([True, True, False, True]),
+        "s": pa.array(["b", "a:b", "zz", "é"]),
+        "dt": pa.array([dt.date(2020, 1, 2), dt.date(2019, 12, 31),
+                        dt.date(2021, 3, 4), None]),
+        "ts": pa.array([dt.datetime(2020, 1, 1, 0, 0, 0, 500000, utc),
+                        dt.datetime(2020, 1, 1, tzinfo=utc),
+                        dt.datetime(2022, 5, 5, 1, 2, 3, tzinfo=utc),
+                        dt.datetime(1999, 1, 1, tzinfo=utc)],
+                       pa.timestamp("us", tz="UTC")),
+        "dec": pa.array([Decimal("1.5"), Decimal("-2.0000000001"),
+                         Decimal("3"), Decimal("0")], pa.decimal128(38, 10)),
+    })
+    src = str(tmp_path / "two_groups.parquet")
+    pq.write_table(t, src, row_group_size=2)
+    assert pq.ParquetFile(src).metadata.num_row_groups == 2
+
+    ice = str(tmp_path / "ice")
+    schema = (
+        "l long, bin binary, i int, d double, b boolean, s string, "
+        "dt date, ts timestamp, dec decimal(38,10)"
+    )
+    write_iceberg(spark.createDataFrame([], schema), ice, "overwrite")
+    add_files_iceberg(ice, [src])
+    (f,) = [f for f in plan_files(ice) if f["record_count"]]
+    assert f["record_count"] == 4
+    assert f["lower"] == {
+        "l": "-3", "i": "2", "d": "-2.25", "b": "false", "s": '"a:b"',
+        "dt": '"2019-12-31"', "ts": '"1999-01-01 00:00:00+00:00"',
+        "dec": '{"__dec__": "-2.0000000001"}', "bin": '"cd"',
+    }
+    assert f["upper"] == {
+        "l": "9", "i": "7", "d": "3.0", "b": "true", "s": '"\\u00e9"',
+        "dt": '"2021-03-04"', "ts": '"2022-05-05 01:02:03+00:00"',
+        "dec": '{"__dec__": "3.0000000000"}', "bin": '"zz"',
+    }
+
+    dlt = str(tmp_path / "dlt")
+    convert_iceberg_to_delta(ice, dlt)
+    _, active = _replay(dlt)
+    (stats,) = [json.loads(a["stats"]) for a in active.values()
+                if json.loads(a["stats"])["numRecords"]]
+    assert stats == {
+        "numRecords": 4,
+        "minValues": {"l": -3, "i": 2, "d": -2.25, "b": False, "s": "a:b",
+                      "dt": "2019-12-31", "ts": "1999-01-01T00:00:00+00:00",
+                      "bin": "cd"},
+        "maxValues": {"l": 9, "i": 7, "d": 3.0, "b": True, "s": "é",
+                      "dt": "2021-03-04", "ts": "2022-05-05T01:02:03+00:00",
+                      "bin": "zz"},
+    }
+    # key order is part of the bytes: the first row group's columns
+    # come first, a column first seen in a later row group after them
+    assert list(stats["minValues"]) == ["l", "i", "d", "b", "s", "dt", "ts", "bin"]
+    assert list(f["lower"]) == ["l", "i", "d", "b", "s", "dt", "ts", "dec", "bin"]
+
+    # nested leaves carry no Delta stats (Iceberg tables are flat)
+    nested = str(tmp_path / "nested")
+    write_delta(
+        spark.range(5).selectExpr("id", "named_struct('x', id * 2) AS st"),
+        nested, "overwrite",
+    )
+    _, active = _replay(nested)
+    for a in active.values():
+        st = json.loads(a["stats"])
+        if st["numRecords"]:
+            assert set(st["minValues"]) == set(st["maxValues"]) == {"id"}
