@@ -36,6 +36,8 @@ def is_local_master(master: str) -> bool:
     return master == "local" or master.startswith("local[")
 
 
+_OPEN_COST = "spark.sql.files.openCostInBytes"
+
 #: Spark's checkpoint file manager over the Hadoop FileSystem API. Its
 #: default, the FileContext manager, forks ``readlink`` and ``chmod``
 #: children of the JVM for most operations on a ``file:`` path when
@@ -57,35 +59,16 @@ def ensure_worker_hook() -> None:
         os.environ["PYTHONPATH"] = f"{hook_dir}:{pp}" if pp else hook_dir
 
 
-def get_spark(
-    app_name: str = "python_plugins_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-    python_binary: str | None = None,
-    python_path: list[str] | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-aware defaults.
-
-    Defaults are chosen for correctness-at-scale first:
-
-    - AQE on (runtime join-strategy switches, skew-join splitting,
-      partition coalescing) so small-SF test plans and 100 TB plans both
-      come out right without hand-tuning.
-    - Arrow on for every JVM<->Python crossing.
-    - ``spark.sql.session.timeZone=UTC`` so timestamp semantics match a
-      UTC-naive oracle (DuckDB) and are cluster-location-independent.
-    - shuffle partitions default to local core count in local mode; on a
-      real cluster pass ``shuffle_partitions`` sized to ~2-3x total
-      executor cores (AQE coalesces the excess).
-    - on a ``local[...]`` master, streaming checkpoints (offset, commit
-      and file-source logs, state-store files) are written through the
-      Hadoop FileSystem API instead of FileContext: same files, same
-      rename protocol, a fraction of the forked subprocesses
-      (docs/streaming.md, Checkpoint I/O).
-
-    ``extra_conf`` overrides any of these except the UTC pin.
-    """
+def _builder(
+    app_name: str,
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+    python_binary: str | None,
+    python_path: list[str] | None,
+) -> SparkSession.Builder:
+    """The session builder :func:`get_spark` starts from: every conf
+    except those derived from the running session."""
     cpus = _default_parallelism()
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -117,12 +100,17 @@ def get_spark(
         # tz-sensitive function catalog (unix_micros, window(), ...)
         # stays usable. See sources/io.py:ensure_session_confs.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Write TIMESTAMP as INT64 micros (the Iceberg spec's mapping):
+        # parquet keeps no min/max for Spark's default INT96, so table
+        # stats and bounds would never hold a timestamp column.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Scan-split size. Default 128m means a local single-file table
         # under 128 MB scans on ONE core; 4m keeps every core busy at
         # test SFs while still being a reasonable floor on a cluster
         # (AQE coalesces over-split outputs; at 100 TB per-file row
         # groups dominate and this knob matters far less). Override via
-        # SPARK_GRAFT_MAX_PARTITION_BYTES for cluster deployments.
+        # SPARK_GRAFT_MAX_PARTITION_BYTES for cluster deployments. On a
+        # local master get_spark derives the file open cost from it.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
@@ -166,6 +154,16 @@ def get_spark(
         builder = builder.config(
             "spark.sql.streaming.checkpointFileManagerClass", _FS_CHECKPOINT_MANAGER
         )
+    # Spark keeps one Python worker daemon per worker environment, and
+    # its SQL Python runners add this variable while RDD jobs do not:
+    # set it for every worker so both share one daemon. Workers inherit
+    # it for the life of the context, so only a session created with
+    # the traceback conf off leaves it unset.
+    simplified = (extra_conf or {}).get(
+        "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "true"
+    )
+    if simplified.lower() != "false":
+        builder = builder.config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     for key, value in (extra_conf or {}).items():
         if key == "spark.sql.session.timeZone" and value != "UTC":
             # Value-identity of naive-parquet timestamp reads (and every
@@ -177,8 +175,65 @@ def get_spark(
                 "session timezone is UTC (see sources/io.py:ensure_session_confs)"
             )
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    return builder
+
+
+def get_spark(
+    app_name: str = "python_plugins_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+    python_binary: str | None = None,
+    python_path: list[str] | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession with scale-aware defaults.
+
+    Defaults are chosen for correctness-at-scale first:
+
+    - AQE on (runtime join-strategy switches, skew-join splitting,
+      partition coalescing) so small-SF test plans and 100 TB plans both
+      come out right without hand-tuning.
+    - Arrow on for every JVM<->Python crossing.
+    - ``spark.sql.session.timeZone=UTC`` so timestamp semantics match a
+      UTC-naive oracle (DuckDB) and are cluster-location-independent.
+    - shuffle partitions default to local core count in local mode; on a
+      real cluster pass ``shuffle_partitions`` sized to ~2-3x total
+      executor cores (AQE coalesces the excess).
+    - on a ``local[...]`` master, streaming checkpoints (offset, commit
+      and file-source logs, state-store files) are written through the
+      Hadoop FileSystem API instead of FileContext: same files, same
+      rename protocol, a fraction of the forked subprocesses
+      (docs/streaming.md, Checkpoint I/O), and a file costs
+      ``maxPartitionBytes / cores`` to open, so a file of a few splits
+      is cut into one split per core (docs/scaling.md, Scans).
+    - every Python worker, RDD and SQL alike, runs with
+      ``SPARK_SIMPLIFIED_TRACEBACK=1``, so one worker daemon serves both
+      (docs/python_transform.md, Execution model). For full worker
+      tracebacks pass
+      ``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled=false``
+      in ``extra_conf``; setting it on a running session does not
+      reach the workers' environment.
+    - TIMESTAMP columns are written as INT64 micros, which parquet
+      keeps min/max statistics for (INT96 has none), so Delta stats and
+      Iceberg bounds can prune on them.
+
+    ``extra_conf`` overrides any of these except the UTC pin.
+    """
+    spark = _builder(
+        app_name, master, shuffle_partitions, extra_conf, python_binary, python_path
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if is_local_master(spark.sparkContext.master) and (
+        _OPEN_COST not in (extra_conf or {})
+    ):
+        # Spark cuts files into splits of min(maxPartitionBytes,
+        # max(openCostInBytes, bytes / cores)); its 4 MB open cost (an
+        # HDFS seek) floors that at one max split, so a file of two or
+        # three splits fills fewer cores than it has row groups for.
+        # Opening a local file costs little: maxPartitionBytes / cores
+        # lets the bytes-per-core term cut it into one split per core.
+        max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        spark.conf.set(_OPEN_COST, str(max_split // spark.sparkContext.defaultParallelism))
     return spark
 
 

@@ -78,7 +78,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from python_plugins_spark.sources.parquet_files import (
-    Footer, StagedFile, stage_parquet, unstage,
+    Footer, StagedFile, bounds_may_match, stage_parquet, timestamp_key, unstage,
 )
 
 _LOG_DIR = "_delta_log"
@@ -459,13 +459,18 @@ def read_delta(
     active = state.active
     part_cols = state.meta.get("partitionColumns") or []
     mapped = column_mapping_enabled(state.meta)
+    timestamps = {
+        f.name for f in schema.fields
+        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
+    }
     if prune and mapped:
         # logged stats key on PHYSICAL parquet names
         cm = _cm_map(schema)
         prune = {cm.get(c, c): rng for c, rng in prune.items()}
+        timestamps = {cm.get(c, c) for c in timestamps}
     keep = list(active)
     if prune:
-        keep = [p for p in keep if _stats_may_match(active[p], prune)]
+        keep = [p for p in keep if _stats_may_match(active[p], prune, timestamps)]
     if not keep:
         return spark.createDataFrame([], schema)
     if mapped:
@@ -551,10 +556,13 @@ def _scan_files(
     return out
 
 
-def _stats_may_match(add: dict, prune: dict[str, tuple]) -> bool:
+def _stats_may_match(
+    add: dict, prune: dict[str, tuple], timestamps=frozenset()
+) -> bool:
     """False only when the file's logged stats PROVE no row can match
     every (lo, hi) range — missing stats keep the file (correctness
-    over skipping)."""
+    over skipping). Columns named in ``timestamps`` compare as instants
+    (:func:`~python_plugins_spark.sources.parquet_files.timestamp_key`)."""
     raw = add.get("stats")
     if not raw:
         return True
@@ -583,9 +591,8 @@ def _stats_may_match(add: dict, prune: dict[str, tuple]) -> bool:
             continue
         if col not in mins or col not in maxs:
             continue
-        if lo is not None and maxs[col] < lo:
-            return False
-        if hi is not None and mins[col] > hi:
+        key = timestamp_key if col in timestamps else None
+        if not bounds_may_match(mins[col], maxs[col], lo, hi, key):
             return False
     return True
 

@@ -66,11 +66,13 @@ from python_plugins_spark.sources.avro_py import read_container, write_container
 from python_plugins_spark.sources.delta_py import _put_if_absent
 from python_plugins_spark.sources.parquet_files import (
     StagedFile,
+    bounds_may_match,
     claim_parquet,
     hive_dir,
     hive_values,
     read_footer,
     stage_parquet,
+    timestamp_key,
     unstage,
 )
 
@@ -234,8 +236,8 @@ _MANIFEST_FILE_NODE = {
 
 def _enc_bound(v) -> str:
     """JSON-encode a stats value canonically (dates/timestamps as ISO
-    strings, which order lexicographically — the property pruning
-    relies on)."""
+    strings: dates order lexicographically, timestamps are compared as
+    instants through ``timestamp_key``)."""
     if isinstance(v, datetime):
         return json.dumps(v.isoformat(sep=" "))
     if isinstance(v, date):
@@ -1309,7 +1311,21 @@ def plan_files(
         for sp in (meta.get("partition-specs") or [])
     }
     # manifest bounds are keyed by the files' PHYSICAL column names
-    phys = _phys_map(_current_schema_node(meta))
+    schema_node = _current_schema_node(meta)
+    phys = _phys_map(schema_node)
+    types = {fd["name"]: fd["type"] for fd in schema_node["fields"]}
+
+    def bounds_overlap(lower, upper, col, lo, hi) -> bool:
+        # False only when a file's bounds on ``col`` miss [lo, hi]; a
+        # column without bounds keeps the file
+        pc = phys.get(col, col)
+        if pc not in lower or pc not in upper:
+            return True
+        key = timestamp_key if types.get(col) == "timestamp" else _cmp_key
+        return bounds_may_match(
+            _dec_bound(lower[pc]), _dec_bound(upper[pc]), lo, hi, key
+        )
+
     out: list[dict] = []
     for ml in read_container(os.path.join(path, snap["manifest-list"])):
         manifest_rel = ml[0]
@@ -1337,24 +1353,14 @@ def plan_files(
                     if part[col] != str(v):
                         keep = False
                         break
-                elif phys.get(col, col) in lower and phys.get(col, col) in upper:
-                    pc = phys.get(col, col)
-                    vk = _cmp_key(v)
-                    if not (_cmp_key(_dec_bound(lower[pc])) <= vk
-                            <= _cmp_key(_dec_bound(upper[pc]))):
-                        keep = False
-                        break
+                elif not bounds_overlap(lower, upper, col, v, v):
+                    keep = False
+                    break
             if keep:
                 for col, (lo, hi) in (ranges or {}).items():
-                    pc = phys.get(col, col)
-                    if pc in lower and pc in upper:
-                        f_lo = _cmp_key(_dec_bound(lower[pc]))
-                        f_hi = _cmp_key(_dec_bound(upper[pc]))
-                        if (hi is not None and f_lo > _cmp_key(hi)) or (
-                            lo is not None and f_hi < _cmp_key(lo)
-                        ):
-                            keep = False
-                            break
+                    if not bounds_overlap(lower, upper, col, lo, hi):
+                        keep = False
+                        break
             if keep:
                 out.append(
                     {

@@ -14,6 +14,8 @@ reader and one hive path codec under both ``delta_py`` and
   schema and per top-level column the (min, max) folded over row
   groups. Each format encodes that on its own (Delta's ``stats``,
   Iceberg's manifest bounds).
+- :func:`bounds_may_match` is the one file-skipping test over such
+  bounds, as either format stores them; timestamps compare as instants.
 - :func:`hive_values` / :func:`hive_dir` decode and encode hive
   ``col=value`` directories with Spark's path escaping
   (``ExternalCatalogUtils.escapePathName``), so a stored partition
@@ -27,6 +29,7 @@ import re
 import shutil
 import uuid
 from dataclasses import dataclass
+from datetime import date, datetime, time, timezone
 
 # characters Spark escapes in a partition directory name as %XX
 _ESCAPED = frozenset(
@@ -111,6 +114,45 @@ def read_footer(path: str) -> Footer:
             if name not in hi or mx > hi[name]:
                 hi[name] = mx
     return Footer(md.num_rows, schema, {n: (lo[n], hi[n]) for n in lo})
+
+
+def timestamp_key(v) -> datetime | None:
+    """A timestamp bound or range literal (ISO string, ``datetime`` or
+    ``date``) as a naive UTC ``datetime``, or None when it is not one.
+    Aware values are converted; naive ones are taken as UTC, the
+    session's pinned zone. The footer bounds of a Spark TIMESTAMP column
+    are UTC-aware, so their ISO strings carry ``+00:00`` and do not
+    order against a naive or space-separated literal as strings."""
+    if isinstance(v, str):
+        s = v.strip()
+        if s[-1:] in ("Z", "z"):
+            s = s[:-1] + "+00:00"
+        try:
+            v = datetime.fromisoformat(s)
+        except ValueError:
+            return None
+    elif isinstance(v, date) and not isinstance(v, datetime):
+        v = datetime.combine(v, time())
+    if not isinstance(v, datetime):
+        return None
+    if v.tzinfo is not None:
+        v = v.astimezone(timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def bounds_may_match(f_min, f_max, lo, hi, key=None) -> bool:
+    """False only when a file's bounds ``[f_min, f_max]`` prove that no
+    value lies in the closed range ``[lo, hi]`` (None = unbounded side).
+    ``key`` maps bounds and literals to comparable forms
+    (:func:`timestamp_key` for timestamp columns); a value it cannot map
+    (None) keeps the file."""
+    values = (f_min, f_max, lo, hi)
+    f_min, f_max, lo, hi = keys = [
+        v if v is None or key is None else key(v) for v in values
+    ]
+    if any(k is None and v is not None for k, v in zip(keys, values)):
+        return True
+    return not ((lo is not None and f_max < lo) or (hi is not None and f_min > hi))
 
 
 def stage_parquet(

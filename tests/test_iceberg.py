@@ -2224,3 +2224,73 @@ def test_footer_metadata_pinned(spark, tmp_path):
         st = json.loads(a["stats"])
         if st["numRecords"]:
             assert set(st["minValues"]) == set(st["maxValues"]) == {"id"}
+
+
+def test_timestamp_bounds_prune_files(spark, tmp_path):
+    """Spark-written TIMESTAMP columns carry min/max (INT64 micros; INT96
+    has none), so Delta stats and Iceberg bounds hold them, and a range
+    on the timestamp skips a file. Bounds and literals compare as
+    instants: an ISO string with ``T`` or a space, with or without an
+    offset, or a naive or aware ``datetime`` at a file's exact bound
+    keeps that file."""
+    import datetime as dt
+    import json
+
+    from python_plugins_spark.sources.delta_py import _replay, read_delta, write_delta
+
+    def frame(start, month):
+        return spark.range(start, start + 10, numPartitions=1).select(
+            "id", F.make_timestamp(F.lit(2024), F.lit(month), F.lit(1),
+                                   F.col("id") % 24, F.lit(0), F.lit(0)).alias("ts")
+        )
+
+    # January file: 00:00-09:00 on Jan 1; June file: 04:00-13:00 on Jun 1
+    dlt, ice = str(tmp_path / "dlt"), str(tmp_path / "ice")
+    for start, month in ((0, 1), (100, 6)):
+        write_delta(frame(start, month), dlt)
+        write_iceberg(frame(start, month), ice)
+
+    _, active = _replay(dlt)
+    stats = [json.loads(a["stats"]) for a in active.values()]
+    assert len(stats) == 2
+    assert all("ts" in s["minValues"] and "ts" in s["maxValues"] for s in stats)
+    june = read_delta(spark, dlt, prune={"ts": ("2024-06-01T00:00:00+00:00", None)})
+    assert len(june.inputFiles()) == 1
+    assert sorted(r.id for r in june.collect()) == list(range(100, 110))
+
+    files = plan_files(ice)
+    assert len(files) == 2 and all("ts" in f["lower"] and "ts" in f["upper"] for f in files)
+    since = dt.datetime(2024, 6, 1, tzinfo=dt.timezone.utc)
+    assert len(plan_files(ice, ranges={"ts": (since, None)})) == 1
+    assert read_iceberg(spark, ice, ranges={"ts": (since, None)}).count() == 10
+
+    utc = dt.timezone.utc
+    # (lo, hi) -> files kept; each literal sits at the June file's min
+    # (04:00) or max (13:00), or just short of its min
+    cases = [
+        ((None, "2024-06-01T04:00:00"), 2),
+        ((None, "2024-06-01 04:00:00"), 2),
+        ((None, "2024-06-01T04:00:00Z"), 2),
+        ((None, "2024-06-01T06:00:00+02:00"), 2),
+        ((None, dt.datetime(2024, 6, 1, 4)), 2),
+        ((None, "2024-06-01 03:59:59"), 1),
+        ((None, dt.datetime(2024, 6, 1, 3, 59, 59, tzinfo=utc)), 1),
+        (("2024-06-01T13:00:00", None), 1),
+        (("2024-06-01 13:00:00", None), 1),
+        ((dt.datetime(2024, 6, 1, 13), None), 1),
+        ((dt.datetime(2024, 6, 1, 13, 0, 1), None), 0),
+        (("2024-06-01 13:00:01+00:00", None), 0),
+        (("2024-01-01 09:00:00", "2024-06-01 04:00:00"), 2),
+        (("2024-01-01 09:00:01", "2024-06-01 03:59:59"), 0),
+    ]
+    for rng, kept in cases:
+        got = read_delta(spark, dlt, prune={"ts": rng}).inputFiles()
+        assert len(got) == kept, ("delta", rng)
+        assert len(plan_files(ice, ranges={"ts": rng})) == kept, ("iceberg", rng)
+    for point, kept in [
+        (dt.datetime(2024, 6, 1, 4), 1),
+        ("2024-06-01 13:00:00", 1),
+        ("2024-01-01T00:00:00Z", 1),
+        (dt.datetime(2024, 3, 1), 0),
+    ]:
+        assert len(plan_files(ice, eq={"ts": point})) == kept, ("iceberg eq", point)

@@ -52,6 +52,13 @@ def inputs(spark, tmp_path_factory):
         row_group_rows=max_split // 4096,
     )
     assert os.path.getsize(root / "wide.parquet") > wide_bytes
+    # a file of a few splits, short of one per core, in row groups of a
+    # quarter split: the session's open cost cuts it into one per core
+    under_bytes = int(max(parallelism - 1, 1) * max_split * 0.9)
+    _write(
+        str(root / "under.parquet"), under_bytes // 1024, payload_bytes=1024,
+        row_group_rows=max_split // 4096,
+    )
     (root / "many").mkdir()
     for i in range(3 * parallelism):
         _write(str(root / "many" / f"part-{i}.parquet"), 100, seed=i)
@@ -67,6 +74,9 @@ def _narrow_cases(spark, root):
     return {
         "one split": one,
         "over parallelism x maxPartitionBytes": wide,
+        "about (parallelism - 1) x maxPartitionBytes": spark.read.parquet(
+            str(root / "under.parquet")
+        ),
         "many small files": spark.read.parquet(str(root / "many")),
         "hive partitions, partition filter": spark.read.parquet(str(root / "hive"))
         .filter(F.col("p") == 1),
@@ -79,15 +89,18 @@ def _narrow_cases(spark, root):
 
 def test_scan_width_matches_spark(spark, inputs):
     parallelism = spark.sparkContext.defaultParallelism
-    decisions = set()
+    decisions, widths = set(), {}
     for name, df in _narrow_cases(spark, inputs).items():
-        reference = _filled_partitions(df)
+        reference = widths[name] = _filled_partitions(df)
         assert scan_width(df) == reference, name
         spreads = reference < parallelism
         assert (spread_scan(df) is not df) == spreads, name
         decisions.add(spreads)
     # the table covers both outcomes of the rule
     assert decisions == {True, False}
+    # under the session's open cost a file of a few max splits, with row
+    # groups to spare, fills one split per core and is not spread
+    assert widths["about (parallelism - 1) x maxPartitionBytes"] == parallelism
 
 
 def test_scan_width_counts_only_splits_with_row_groups(spark, tmp_path):

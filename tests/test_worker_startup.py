@@ -4,7 +4,8 @@ Spark calls ``importlib.invalidate_caches()`` once per Python task. On
 Python 3.10/3.11 every ``zipimporter`` then re-parses its archive's
 central directory; the hook makes that re-read happen only when the
 archive changed. The first test checks those semantics on a temp zip
-without Spark; the second checks that real workers run the hook.
+without Spark; the second checks that real workers run the hook. The
+last checks that RDD and SQL Python tasks run under one worker daemon.
 """
 
 import importlib
@@ -117,3 +118,35 @@ def test_workers_run_the_hook(spark):
     if (3, 10) <= tuple(version) < (3, 12):
         assert owner == "sitecustomize"
     assert seconds < 0.010
+
+
+def test_rdd_and_sql_python_share_one_daemon(spark):
+    """Spark keys worker daemons by worker environment; with every
+    worker's environment the same, an RDD task and a ``mapInArrow`` task
+    are forked by one daemon, so warming either warms both."""
+
+    def sql_parent(batches):
+        import os
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"ppid": [os.getppid()]})
+
+    [rdd_ppid] = spark.sparkContext.parallelize([0], 1).map(lambda _: os.getppid()).collect()
+    [row] = spark.range(1, numPartitions=1).mapInArrow(sql_parent, "ppid long").collect()
+    assert rdd_ppid == row.ppid
+
+
+def test_traceback_conf_off_leaves_workers_env_alone():
+    """``extra_conf`` turning simplified tracebacks off keeps the
+    variable out of the workers' environment; by default it is set."""
+    from python_plugins_spark.session import _builder
+
+    env = "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"
+    conf = "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled"
+    on = _builder("t", "local[1]", 1, None, None, None)._options
+    off = _builder("t", "local[1]", 1, {conf: "false"}, None, None)._options
+    assert on[env] == "1"
+    assert env not in off and off[conf] == "false"
