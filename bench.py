@@ -51,8 +51,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from python_plugins_spark import SCRATCH  # noqa: E402
+
 N_RUNS = 3
-_SCRATCH = "/root/repo/.scratch/bench_lakehouse"
+_SCRATCH = os.path.join(SCRATCH, "bench_lakehouse")
 
 
 def _env_fingerprint(prev_detail: dict | None) -> dict:
@@ -1127,7 +1129,7 @@ def _bench_scaling(spark) -> dict:
             print("# scaling: no testdata SF dirs present", file=sys.stderr)
             return out
         doc_dirs = _synth_scaling_docs(
-            spark, "/root/repo/.scratch/scaling_docs", DOC_SIZES
+            spark, os.path.join(SCRATCH, "scaling_docs"), DOC_SIZES
         )
 
         def _mat(df) -> int:
@@ -1285,7 +1287,7 @@ def _bench_ann_serving(spark, sf_dir: str) -> dict:
                 _mat(S.ann_topk_queries(emb, q, "vec_id", "embedding", K))
                 ex.append(time.perf_counter() - t0)
             t_exact = _stats.median(ex)
-            path = f"/root/repo/.scratch/ann_serving_{n}"
+            path = os.path.join(SCRATCH, f"ann_serving_{n}")
             shutil.rmtree(path, ignore_errors=True)
             t0 = time.perf_counter()
             S.build_ivf_index(
@@ -1564,7 +1566,7 @@ def _bench_msgbus_phases(spark, sf_dir: str) -> dict[str, float]:
     out: dict[str, float] = {}
     try:
         msgbus.register(spark)
-        root = os.path.join("/root/repo/.scratch", "bench_msgbus_phases")
+        root = os.path.join(SCRATCH, "bench_msgbus_phases")
         shutil.rmtree(root, ignore_errors=True)
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         payload = ev.select(

@@ -23,6 +23,13 @@ as an idiomatic Spark DataFrame engine:
   over Structured Streaming plus watermark/window/session helpers.
 """
 
+import os
+
+#: Scratch directory of this checkout, ``<checkout>/.scratch`` (git-ignored):
+#: fixtures, tables and indexes that queries, tests and ``bench.py`` write.
+#: Derived from the package's own location, so two checkouts never share it.
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+
 from python_plugins_spark.session import ensure_worker_hook, get_spark, stop_spark
 
 # Worker start-up hook AT IMPORT TIME, not only in get_spark(): an

@@ -25,12 +25,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
-from python_plugins_spark.operators.multimodal import fanout_ids
+from python_plugins_spark.operators.multimodal import map_rows, synth_payloads
 
 _BLOCK = 4096
 
@@ -526,56 +524,21 @@ def triangle_pcm16(seed: int, n: int) -> np.ndarray:
 
 def synth_flac_payloads(df, id_col: str = "doc_id", n: int = 2048):
     """Per-row FLAC of the deterministic triangle PCM16 signal."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                ids.append(rid)
-                payloads.append(flac_encode(triangle_pcm16(rid, n)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, lambda rid: flac_encode(triangle_pcm16(rid, n)))
 
 
 def decode_flac_stats(df, id_col: str = "doc_id", payload_col: str = "payload"):
     """REAL FLAC decode per row; exact integer stats + compressed size
     (the compression ratio proves prediction actually models the
     signal — raw would be 2 bytes/sample)."""
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("sum_sq", T.LongType()),
-            T.StructField("peak", T.IntegerType()),
-            T.StructField("compressed_bytes", T.IntegerType()),
-        ]
+    def decode(rid, payload):
+        rate, pcm = flac_decode(payload)
+        pcm = pcm.astype(np.int64)
+        yield rid, rate, len(pcm), int((pcm * pcm).sum()), int(np.abs(pcm).max()), len(payload)
+
+    schema = (
+        f"`{id_col}` long, sample_rate int, n_frames int, sum_sq long, peak int, "
+        "compressed_bytes int"
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, pcm = flac_decode(bytes(payload))
-                pcm = pcm.astype(np.int64)
-                out[id_col].append(int(rid))
-                out["sample_rate"].append(int(rate))
-                out["n_frames"].append(len(pcm))
-                out["sum_sq"].append(int((pcm * pcm).sum()))
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["compressed_bytes"].append(len(bytes(payload)))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    return map_rows(df, [id_col, payload_col], schema, decode)

@@ -16,19 +16,20 @@ WAV integration: RIFF files with audio format 7 (mu-law, 8 bits per
 sample) written and parsed here — the stdlib ``wave`` module only
 does PCM, so the chunk walk is hand-rolled like the round-4 parser.
 
-Spark shape: Arrow-batched ``mapInPandas``, vectorized numpy
-companding (no per-sample Python), zero shuffles.
+Spark shape: per-row functions in the Arrow-batched
+``multimodal.map_rows``, vectorized numpy companding (no per-sample
+Python), zero shuffles.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
-from python_plugins_spark.operators.multimodal import fanout_ids
+from python_plugins_spark.operators.multimodal import (
+    map_rows, synth_pcm16_array, synth_payloads,
+)
 
 _BIAS = 0x84  # 132
 _CLIP14 = 8159  # 14-bit clip after the >>2 scaling
@@ -167,53 +168,13 @@ def synth_mulaw_wav_payloads(df, id_col: str = "doc_id", n: int = 2048):
     """Per-row format-7 WAV of the shared Weyl-sequence PCM16 signal
     (multimodal.synth_pcm16_array), mu-law companded by the REAL
     encoder."""
-    from pyspark.sql import types as T
-
-    from python_plugins_spark.operators.multimodal import synth_pcm16_array
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                ids.append(rid)
-                payloads.append(wav_mulaw_bytes(synth_pcm16_array(rid, n)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, lambda rid: wav_mulaw_bytes(synth_pcm16_array(rid, n)))
 
 
 def synth_alaw_wav_payloads(df, id_col: str = "doc_id", n: int = 2048):
     """Per-row format-6 WAV of the shared Weyl-sequence PCM16 signal,
     A-law companded by the REAL encoder."""
-    from pyspark.sql import types as T
-
-    from python_plugins_spark.operators.multimodal import synth_pcm16_array
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                ids.append(rid)
-                payloads.append(wav_alaw_bytes(synth_pcm16_array(rid, n)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, lambda rid: wav_alaw_bytes(synth_pcm16_array(rid, n)))
 
 
 def decode_alaw_wav_stats(df, id_col: str = "doc_id", payload_col: str = "payload"):
@@ -228,31 +189,10 @@ def decode_mulaw_wav_stats(df, id_col: str = "doc_id", payload_col: str = "paylo
 
 
 def _decode_g711_wav_stats(df, parser, id_col: str, payload_col: str):
-    from pyspark.sql import types as T
+    def decode(rid, payload):
+        rate, n, pcm = parser(payload)
+        mag = np.abs(pcm.astype(np.int64))
+        yield rid, rate, n, int(pcm.sum(dtype=np.int64)), int(mag.sum()), int(mag.max())
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("sum_dec", T.LongType()),
-            T.StructField("sum_abs", T.LongType()),
-            T.StructField("peak", T.IntegerType()),
-        ]
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, n, pcm = parser(bytes(payload))
-                pcm = pcm.astype(np.int64)
-                out[id_col].append(int(rid))
-                out["sample_rate"].append(int(rate))
-                out["n_frames"].append(int(n))
-                out["sum_dec"].append(int(pcm.sum()))
-                out["sum_abs"].append(int(np.abs(pcm).sum()))
-                out["peak"].append(int(np.abs(pcm).max()))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    schema = f"`{id_col}` long, sample_rate int, n_frames int, sum_dec long, sum_abs long, peak int"
+    return map_rows(df, [id_col, payload_col], schema, decode)

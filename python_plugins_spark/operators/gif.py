@@ -17,18 +17,19 @@ A 13x12 formula image has ≤156 distinct colors, so GIF holds the
 EXACT RGB pixels (palette indirection, but lossless) — the registry
 query ``image_gif_roundtrip_real`` reuses the same generator-formula
 oracle as BMP/PPM/PNG: four wire formats, one SQL statement. Spark
-integration is the standard Arrow-batched ``mapInPandas`` shape.
+integration is the standard shape: per-row functions in the
+Arrow-batched ``multimodal.map_rows``.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
-from python_plugins_spark.operators.multimodal import fanout_ids
+from python_plugins_spark.operators.multimodal import (
+    decode_rgb_stats, formula_rgb, synth_payloads,
+)
 
 
 # ----------------------------------------------------------------- LZW
@@ -247,64 +248,9 @@ def _decode(data: bytes) -> np.ndarray:
 def synth_gif_payloads(df, id_col: str = "doc_id", width: int = 13, height: int = 12):
     """Per-row GIF with the shared generator-formula pixels (≤ w*h
     distinct colors, so the palette holds them exactly)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs, ys = np.meshgrid(np.arange(width), np.arange(height), indexing="xy")
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                img = np.stack(
-                    [
-                        (rid * 9 + 13 * xs + ys) % 256,
-                        (rid * 5 + xs + 11 * ys) % 256,
-                        (rid + 3 * xs + 7 * ys) % 256,
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                ids.append(rid)
-                payloads.append(gif_encode(img))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, lambda rid: gif_encode(formula_rgb(rid, width, height)))
 
 
 def decode_gif_stats(df, id_col: str = "doc_id", payload_col: str = "payload"):
     """REAL GIF decode per row; exact per-channel pixel sums."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-        ]
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = gif_decode(bytes(payload))
-                hh, ww, _ = img.shape
-                sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                out[id_col].append(int(rid))
-                out["width"].append(ww)
-                out["height"].append(hh)
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    return decode_rgb_stats(df, id_col, payload_col, gif_decode)

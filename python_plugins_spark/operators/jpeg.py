@@ -34,8 +34,9 @@ Determinism contract: quantization rounds HALF AWAY FROM ZERO
 reproduce the DC-only quantization chain in closed form.
 
 Spark integration is the repo's standard multimodal shape: payloads
-are synthesized and decoded inside Arrow-batched ``mapInPandas``
-stages (see ``synth_jpeg_payloads`` / ``decode_jpeg_block_means``),
+are synthesized and decoded by per-row functions inside the
+Arrow-batched ``multimodal.map_rows`` (see ``synth_jpeg_payloads`` /
+``decode_jpeg_block_means``),
 bytes cross the JVM boundary once per batch. At 100 TB both stages
 are narrow maps — no shuffle anywhere in the codec path.
 """
@@ -43,12 +44,10 @@ are narrow maps — no shuffle anywhere in the codec path.
 from __future__ import annotations
 
 import functools as _functools
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
-from python_plugins_spark.operators.multimodal import fanout_ids
+from python_plugins_spark.operators.multimodal import map_rows, synth_payloads
 
 # ---------------------------------------------------------------- tables
 
@@ -762,28 +761,14 @@ def synth_jpeg_payloads(
     decode side EXACTLY reproducible in closed form (the registry
     oracle's contract) while still driving the full bitstream path:
     nonzero DC diffs, byte stuffing, EOBs, both Huffman tables."""
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def encode(rid):
+        img = np.empty((16, 16), dtype=np.uint8)
+        for b, (by, bx) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
+            img[by: by + 8, bx: bx + 8] = (rid * 37 + b * 11) % 256
+        return jpeg_encode_gray(img, quality)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                img = np.empty((16, 16), dtype=np.uint8)
-                for b, (by, bx) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                    img[by: by + 8, bx: bx + 8] = (rid * 37 + b * 11) % 256
-                ids.append(rid)
-                payloads.append(jpeg_encode_gray(img, quality))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, encode)
 
 
 _MCU_ORIGINS = ((0, 0), (0, 16), (16, 0), (16, 16))
@@ -797,30 +782,16 @@ def synth_color_jpeg_payloads(df, id_col: str = "doc_id", quality: int = 50):
     for the registry oracle while driving the full interleaved
     bitstream: both quant/Huffman table pairs, three DC predictor
     chains, chroma subsampling, byte stuffing."""
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def encode(rid):
+        rgb = np.empty((32, 32, 3), dtype=np.uint8)
+        for m, (my, mx) in enumerate(_MCU_ORIGINS):
+            rgb[my: my + 16, mx: mx + 16, 0] = (rid * 37 + m * 53) % 256
+            rgb[my: my + 16, mx: mx + 16, 1] = (rid * 59 + m * 31) % 256
+            rgb[my: my + 16, mx: mx + 16, 2] = (rid * 83 + m * 17) % 256
+        return jpeg_encode_color(rgb, quality)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                rgb = np.empty((32, 32, 3), dtype=np.uint8)
-                for m, (my, mx) in enumerate(_MCU_ORIGINS):
-                    rgb[my: my + 16, mx: mx + 16, 0] = (rid * 37 + m * 53) % 256
-                    rgb[my: my + 16, mx: mx + 16, 1] = (rid * 59 + m * 31) % 256
-                    rgb[my: my + 16, mx: mx + 16, 2] = (rid * 83 + m * 17) % 256
-                ids.append(rid)
-                payloads.append(jpeg_encode_color(rgb, quality))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, encode)
 
 
 def decode_color_jpeg_mcu_rgb(
@@ -829,90 +800,43 @@ def decode_color_jpeg_mcu_rgb(
     """REAL color JPEG decode per row; one output row per 16x16 MCU
     with the reconstructed constant RGB (refuses non-constant decodes
     — the constancy IS the proof the whole 4:2:0 chain is DC-only)."""
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("mcu", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("r_rec", T.IntegerType()),
-            T.StructField("g_rec", T.IntegerType()),
-            T.StructField("b_rec", T.IntegerType()),
-        ]
-    )
+    def decode(rid, payload):
+        rgb = jpeg_decode_color(payload)
+        hh, ww = rgb.shape[:2]
+        if (hh, ww) != (32, 32):
+            # _MCU_ORIGINS walks a fixed 2x2 grid of 16x16 MCUs;
+            # a smaller decode would otherwise surface as a raw
+            # IndexError on an empty slice (ADVICE r7)
+            raise ValueError(
+                f"decode_color_jpeg_mcu_rgb expects the 32x32 "
+                f"synth fixture, got {hh}x{ww} at id={rid}"
+            )
+        for m, (my, mx) in enumerate(_MCU_ORIGINS):
+            quad = rgb[my: my + 16, mx: mx + 16]
+            if not (quad == quad[0, 0]).all():
+                raise ValueError(f"constant fixture decoded non-constant at id={rid} mcu={m}")
+            yield (rid, m, ww, hh, *map(int, quad[0, 0]))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                rgb = jpeg_decode_color(bytes(payload))
-                hh, ww = rgb.shape[:2]
-                if (hh, ww) != (32, 32):
-                    # _MCU_ORIGINS walks a fixed 2x2 grid of 16x16 MCUs;
-                    # a smaller decode would otherwise surface as a raw
-                    # IndexError on an empty slice (ADVICE r7)
-                    raise ValueError(
-                        f"decode_color_jpeg_mcu_rgb expects the 32x32 "
-                        f"synth fixture, got {hh}x{ww} at id={rid}"
-                    )
-                for m, (my, mx) in enumerate(_MCU_ORIGINS):
-                    quad = rgb[my: my + 16, mx: mx + 16]
-                    for c in range(3):
-                        if not (quad[..., c] == quad[0, 0, c]).all():
-                            raise ValueError(
-                                f"constant fixture decoded non-constant "
-                                f"at id={rid} mcu={m}"
-                            )
-                    out[id_col].append(int(rid))
-                    out["mcu"].append(m)
-                    out["width"].append(ww)
-                    out["height"].append(hh)
-                    out["r_rec"].append(int(quad[0, 0, 0]))
-                    out["g_rec"].append(int(quad[0, 0, 1]))
-                    out["b_rec"].append(int(quad[0, 0, 2]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    schema = f"`{id_col}` long, mcu int, width int, height int, r_rec int, g_rec int, b_rec int"
+    return map_rows(df, [id_col, payload_col], schema, decode)
 
 
 def decode_jpeg_block_means(df, id_col: str = "doc_id", payload_col: str = "payload"):
     """REAL JPEG decode per row; emits dimensions + the mean of each
     8x8 block as exact integers (constant blocks decode to constant
     values, so the mean IS the reconstructed level)."""
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("b00", T.IntegerType()),
-            T.StructField("b01", T.IntegerType()),
-            T.StructField("b10", T.IntegerType()),
-            T.StructField("b11", T.IntegerType()),
-        ]
-    )
+    def decode(rid, payload):
+        img = jpeg_decode_gray(payload)
+        hh, ww = img.shape
+        levels = []
+        for by, bx in ((0, 0), (0, 8), (8, 0), (8, 8)):
+            blk = img[by: by + 8, bx: bx + 8]
+            if not (blk == blk[0, 0]).all():
+                raise ValueError(f"constant fixture decoded non-constant at id={rid}")
+            levels.append(int(blk[0, 0]))
+        yield rid, ww, hh, *levels
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = jpeg_decode_gray(bytes(payload))
-                hh, ww = img.shape
-                out[id_col].append(int(rid))
-                out["width"].append(ww)
-                out["height"].append(hh)
-                for name, (by, bx) in zip(
-                    ("b00", "b01", "b10", "b11"), ((0, 0), (0, 8), (8, 0), (8, 8))
-                ):
-                    blk = img[by: by + 8, bx: bx + 8].astype(np.int64)
-                    if not (blk == blk.ravel()[0]).all():
-                        raise ValueError(
-                            f"constant fixture decoded non-constant at id={rid}"
-                        )
-                    out[name].append(int(blk.ravel()[0]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    schema = f"`{id_col}` long, width int, height int, b00 int, b01 int, b10 int, b11 int"
+    return map_rows(df, [id_col, payload_col], schema, decode)

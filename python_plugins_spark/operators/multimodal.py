@@ -5,9 +5,10 @@ The engine's convention for image/audio/video data at 100 TB scale:
 - the raw bytes live in a ``binary`` column (``payload``),
 - a sibling ``StructType`` column carries typed metadata
   (``n_bytes``, ``content_md5``, ``mime``),
-- decode / feature-extraction / resize / frame-sampling run as Arrow-
-  batched ``mapInPandas`` stages so the bytes cross the JVM<->Python
-  boundary once per batch, never per row.
+- decode / feature-extraction / synthesis run through one Arrow-
+  batched row map (:func:`map_rows`, on ``mapInArrow``) so the bytes
+  cross the JVM<->Python boundary once per batch, never per row. Each
+  codec keeps only its per-row function and its output schema.
 
 External codec libraries (PIL/opencv/ffmpeg) are not in this
 container. The one format still needing them (MP3) keeps the STUB:
@@ -34,12 +35,18 @@ independent of the byte-level codecs entirely.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from python_plugins_spark.operators.transform import (
+    _arrow_schema, _column_values, _to_array,
+)
 
 METADATA_TYPE = T.StructType(
     [
@@ -83,37 +90,19 @@ def decode_stub_features(
     full binary pipeline). Otherwise raises NotImplementedError — the
     real implementation would call PIL/opencv here, batch-wise.
     """
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("fake_width", T.IntegerType()),
-            T.StructField("fake_height", T.IntegerType()),
-            T.StructField("fake_channels", T.IntegerType()),
-            T.StructField("fake_brightness", T.DoubleType()),
-        ]
-    )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def decode(rid, payload):
+        if not fake:
+            raise NotImplementedError(
+                "image/audio codecs not available in this environment; "
+                "pass fake=True for deterministic pseudo-decode"
+            )
+        h = hashlib.md5(payload).hexdigest()
+        yield (rid, int(h[0:2], 16), int(h[2:4], 16), 1 + int(h[4:5], 16) % 4,
+               round(int(h[5:8], 16) / 4095.0, 6))
 
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "image/audio codecs not available in this environment; "
-                    "pass fake=True for deterministic pseudo-decode"
-                )
-            out = {id_col: [], "fake_width": [], "fake_height": [],
-                   "fake_channels": [], "fake_brightness": []}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                h = hashlib.md5(bytes(payload)).hexdigest()
-                out[id_col].append(rid)
-                out["fake_width"].append(int(h[0:2], 16))
-                out["fake_height"].append(int(h[2:4], 16))
-                out["fake_channels"].append(1 + int(h[4:5], 16) % 4)
-                out["fake_brightness"].append(round(int(h[5:8], 16) / 4095.0, 6))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    schema = f"`{id_col}` long, {FEATURE_SCHEMA_SUFFIX}"
+    return map_rows(df, [id_col, payload_col], schema, decode)
 
 
 def decode_stub_features_oracle_sql(table: str, content_col: str, id_col: str) -> str:
@@ -186,6 +175,48 @@ def fanout_ids(df, id_col: str):
     actual bytes."""
     ids = df.select(id_col)
     return ids.repartition(ids.sparkSession.sparkContext.defaultParallelism)
+
+
+def _row_map(fn: Callable[..., Iterable[tuple]], schema: pa.Schema):
+    """The worker side of :func:`map_rows`: each Arrow batch in becomes
+    one batch under ``schema`` out, holding every tuple ``fn`` yields
+    for the batch's rows, in order."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [out for row in zip(*map(_column_values, batch.columns)) for out in fn(*row)]
+            columns = list(zip(*rows, strict=True)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [_to_array(list(v), t) for v, t in zip(columns, schema.types)], schema=schema
+            )
+
+    return run
+
+
+def map_rows(
+    df: DataFrame, cols: list[str], ddl: str, fn: Callable[..., Iterable[tuple]]
+) -> DataFrame:
+    """Run ``fn`` on every row of ``df.select(*cols)`` in one narrow
+    ``mapInArrow`` pass: ``fn(*values)`` gets one row's plain Python
+    values (``bytes`` for binary, ``None`` for null) and yields zero or
+    more tuples in the field order of the DDL schema ``ddl``. Values
+    cross through the record transform's codec
+    (``transform._column_values`` in, ``transform._to_array`` out, which
+    is Spark's own pandas-UDF output rule), so the engine's per-record
+    Python paths share one Arrow<->Python value rule."""
+    schema = T._parse_datatype_string(ddl)
+    run = _row_map(fn, _arrow_schema(df.sparkSession, schema))
+    return df.select(*cols).mapInArrow(run, schema)
+
+
+def synth_payloads(df: DataFrame, id_col: str, encode: Callable[[int], bytes]) -> DataFrame:
+    """``(id_col long, payload binary)`` with ``payload = encode(id)``
+    for every id, after :func:`fanout_ids` spreads the ids over the
+    cores: the shape of every ``synth_*_payloads`` fixture."""
+    return map_rows(
+        fanout_ids(df, id_col), [id_col], f"`{id_col}` long, payload binary",
+        lambda rid: [(rid, encode(rid))],
+    )
 
 
 def synth_pcm16_samples(seed: int, n: int) -> list[int]:
@@ -303,34 +334,16 @@ def decode_wav_features(
     payload, compute frame stats from the actual samples. RMS is
     returned as the exact integer sum of squares plus the frame count
     (portable across engines; callers derive sqrt presentation-side)."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("sum_sq", T.LongType()),
-            T.StructField("peak", T.IntegerType()),
-        ]
+
+    def decode(rid, payload):
+        nch, sr, n, samples = _wav_pcm_array(payload)
+        s64 = samples.astype("int64")
+        yield rid, nch, sr, n, int((s64 * s64).sum()), int(abs(s64).max()) if len(s64) else 0
+
+    schema = (
+        f"`{id_col}` long, n_channels int, sample_rate int, n_frames long, sum_sq long, peak int"
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k.name: [] for k in schema.fields}
-            for pid, payload in zip(b[id_col], b[payload_col]):
-                nch, sr, n, samples = _wav_pcm_array(bytes(payload))
-                s64 = samples.astype("int64")
-                out[id_col].append(int(pid))
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(sr)
-                out["n_frames"].append(n)
-                out["sum_sq"].append(int((s64 * s64).sum()))
-                out["peak"].append(
-                    int(abs(s64).max()) if len(s64) else 0
-                )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    return map_rows(df, [id_col, payload_col], schema, decode)
 
 
 def bmp_bytes(width: int, height: int, pixel_fn) -> bytes:
@@ -533,40 +546,47 @@ def decode_image_stats(
     """REAL image decode (BMP or PPM, auto-detected by magic) over the
     Arrow batch path: per-image width/height and exact per-channel
     pixel sums from the decoded pixel array."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-        ]
-    )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode(payload):
+        if payload[:2] == b"BM":
+            return parse_bmp_array(payload)[2]
+        if payload[:2] == b"P6":
+            return parse_ppm_array(payload)[2]
+        raise ValueError("unknown image payload")
 
-        for bt in batches:
-            out = {k.name: [] for k in schema.fields}
-            for pid, payload in zip(bt[id_col], bt[payload_col]):
-                raw = bytes(payload)
-                if raw[:2] == b"BM":
-                    w, h, arr = parse_bmp_array(raw)
-                elif raw[:2] == b"P6":
-                    w, h, arr = parse_ppm_array(raw)
-                else:
-                    raise ValueError("unknown image payload")
-                sums = arr.sum(axis=(0, 1), dtype=np.int64)
-                out[id_col].append(int(pid))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
+    return decode_rgb_stats(df, id_col, payload_col, decode)
 
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+
+def decode_rgb_stats(
+    df: DataFrame, id_col: str, payload_col: str, decode: Callable[[bytes], np.ndarray]
+) -> DataFrame:
+    """``(id, width, height, sum_r, sum_g, sum_b)`` per payload: its
+    size and exact per-channel pixel sums after ``decode`` turns it
+    into an (h, w, 3) RGB array. The stats every lossless image codec
+    checks against the one generator-formula oracle."""
+
+    def stats(rid, payload):
+        img = decode(payload)
+        if img.ndim != 3:
+            raise ValueError("RGB payload expected")
+        hh, ww, _ = img.shape
+        yield (rid, ww, hh, *map(int, img.reshape(-1, 3).sum(axis=0, dtype=np.int64)))
+
+    schema = f"`{id_col}` long, width int, height int, sum_r long, sum_g long, sum_b long"
+    return map_rows(df, [id_col, payload_col], schema, stats)
+
+
+def formula_rgb(seed: int, width: int, height: int) -> np.ndarray:
+    """The shared generator-formula image, (height, width, 3) uint8:
+    r = 9s+13x+y, g = 5s+x+11y, b = s+3x+7y, mod 256. The BMP, PPM,
+    PNG, GIF and TIFF fixtures all encode it, so one SQL oracle covers
+    every lossless wire format."""
+    x = np.arange(width, dtype=np.int64)[None, :]
+    y = np.arange(height, dtype=np.int64)[:, None]
+    r = (seed * 9 + 13 * x + y) % 256
+    g = (seed * 5 + x + 11 * y) % 256
+    b = (seed + 3 * x + 7 * y) % 256
+    return np.stack([r, g, b], axis=-1).astype(np.uint8)
 
 
 def synth_wav_payloads(
@@ -580,26 +600,9 @@ def synth_wav_payloads(
     column, encoded by the stdlib ``wave`` writer — so the hand-rolled
     RIFF parser in :func:`decode_wav_features` is cross-validated
     against an independent encoder implementation."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
+    return synth_payloads(
+        df, id_col, lambda rid: wav_bytes(synth_pcm16_array(rid, n_samples), sample_rate)
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for pid in b[id_col]:
-                ids.append(int(pid))
-                payloads.append(
-                    wav_bytes(
-                        synth_pcm16_array(int(pid), n_samples), sample_rate
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
 
 
 def synth_image_payloads(
@@ -613,33 +616,5 @@ def synth_image_payloads(
     integer pixel formulas seeded by the id column, encoded as 24bpp
     BMP (bottom-up, BGR, padded rows) or P6 PPM. width=13 is chosen so
     BMP rows need padding — the classic decode bug surface."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
     enc = {"bmp": bmp_bytes_array, "ppm": ppm_bytes_array}[fmt]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        x = np.arange(width, dtype=np.int64)[None, :]
-        y = np.arange(height, dtype=np.int64)[:, None]
-        for b in batches:
-            ids, payloads = [], []
-            for pid in b[id_col]:
-                s = int(pid)
-                arr = np.stack(
-                    [
-                        (s * 9 + 13 * x + y) % 256,
-                        (s * 5 + x + 11 * y) % 256,
-                        (s + 3 * x + 7 * y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                ids.append(s)
-                payloads.append(enc(arr))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, lambda rid: enc(formula_rgb(rid, width, height)))

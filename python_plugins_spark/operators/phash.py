@@ -19,23 +19,27 @@ replay the hash bit-for-bit from generating formulas):
   56-bit hash — inside BIGINT.
 
 Spark shape: decode + hash is an Arrow-batched narrow map over the
-payload scan (embarrassingly parallel, zero shuffles); the radius-0
-dedup verdict is ONE hash-partitioned window over the 8-byte
-fingerprint — the same one-shuffle shape as exact text dedup, at any
-corpus size. Hamming-radius>0 matching is :func:`phash_neardup_pairs`:
-the SimHash pigeonhole band join (d <= bands-1 guarantees a shared
-band), never an O(n²) cross join.
+payload scan (``multimodal.map_rows``, on ``mapInArrow``;
+embarrassingly parallel, zero shuffles); the radius-0 dedup verdict
+is ONE hash-partitioned window over the 8-byte fingerprint — the same
+one-shuffle shape as exact text dedup, at any corpus size.
+Hamming-radius>0 matching is :func:`phash_neardup_pairs`: the SimHash
+pigeonhole band join (d <= bands-1 guarantees a shared band), never an
+O(n²) cross join.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from python_plugins_spark.operators.multimodal import (
+    _wav_pcm_array, bmp_bytes_array, map_rows, parse_bmp_array, parse_ppm_array,
+    ppm_bytes_array, synth_payloads, wav_bytes,
+)
 from python_plugins_spark.session import stage_checkpoint
 
 
@@ -79,31 +83,14 @@ def image_dhash(
     """(id, phash) through the REAL decode chain: parse the BMP/PPM
     payload (operators/multimodal.py), luma-pool, difference-hash.
     Arrow-batched narrow map; zero shuffles."""
-    from python_plugins_spark.operators.multimodal import (
-        parse_bmp_array, parse_ppm_array,
-    )
-
     # array parsers (round 12, guide §4.2): one frombuffer/reshape per
     # payload instead of w*h Python tuple builds; dhash_bits consumes
     # the (h, w, 3) array directly (np.asarray is a no-op on it)
     parse = {"bmp": parse_bmp_array, "ppm": parse_ppm_array}[fmt]
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("phash", T.LongType()),
-        ]
+    return map_rows(
+        df, [id_col, payload_col], f"`{id_col}` long, phash long",
+        lambda rid, payload: [(rid, dhash_bits(*parse(payload), block=block))],
     )
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, pixels = parse(bytes(payload))
-                ids.append(int(rid))
-                hashes.append(dhash_bits(w, h, pixels, block=block))
-            yield pd.DataFrame({id_col: ids, "phash": hashes})
-
-    return df.select(id_col, payload_col).mapInPandas(hash_batches, schema)
 
 
 def _block_channel_array(base_r: int, base_g: int, base_b: int, grid: int, block: int):
@@ -149,17 +136,7 @@ def synth_block_image_payloads(
     ONE gradient comparison (row*7+6 — there is no column to its
     right), so the variant's dHash differs from its group's base hash
     by AT MOST v bits — the Hamming-radius near-dup fixture."""
-    from python_plugins_spark.operators.multimodal import (
-        bmp_bytes_array, fanout_ids, ppm_bytes_array,
-    )
-
     enc = {"bmp": bmp_bytes_array, "ppm": ppm_bytes_array}[fmt]
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
     # Vectorized rendering (round 12, guide §4.2): the scalar form
     # called a Python ``px(x, y)`` closure once per pixel — ~1k
@@ -168,22 +145,16 @@ def synth_block_image_payloads(
     # (same formulas, same variant/noise order of application —
     # whitening checks the block BEFORE the (0,0) noise, and (0,0)
     # is never in the whitened column for grid > 1).
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for pid in b[id_col]:
-                s = int(pid)
-                g = s % groups
-                n = s % noise_mod
-                img = _block_channel_array(g * 31, g * 17, g * 23, grid, block)
-                if variant_blocks and n:
-                    img[0 : n * block, (grid - 1) * block :, :] = 255
-                img[0, 0, :] += n
-                ids.append(s)
-                payloads.append(enc(img.astype(np.uint8)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def encode(s):
+        g = s % groups
+        n = s % noise_mod
+        img = _block_channel_array(g * 31, g * 17, g * 23, grid, block)
+        if variant_blocks and n:
+            img[0 : n * block, (grid - 1) * block :, :] = 255
+        img[0, 0, :] += n
+        return enc(img.astype(np.uint8))
 
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, encode)
 
 
 # ---------------------------------------------------------------- audio
@@ -229,29 +200,14 @@ def audio_fingerprint(
     """(id, afp) through the REAL decode chain: hand-rolled RIFF walk
     (operators/multimodal.py), exact integer frame energies,
     delta-sign bits. Arrow-batched narrow map; zero shuffles."""
-    from python_plugins_spark.operators.multimodal import _wav_pcm_array
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("afp", T.LongType()),
-        ]
-    )
+    def fp(rid, payload):
+        n_ch, _rate, _n, pcm = _wav_pcm_array(payload)
+        if n_ch != 1:
+            raise ValueError(f"audio_fingerprint: expected mono, got {n_ch} channels")
+        yield rid, audio_energy_bits(pcm, frames=frames)
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps = [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                n_ch, _rate, _n, pcm = _wav_pcm_array(bytes(payload))
-                if n_ch != 1:
-                    raise ValueError(
-                        f"audio_fingerprint: expected mono, got {n_ch} channels"
-                    )
-                ids.append(int(rid))
-                fps.append(audio_energy_bits(pcm, frames=frames))
-            yield pd.DataFrame({id_col: ids, "afp": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(fp, schema)
+    return map_rows(df, [id_col, payload_col], f"`{id_col}` long, afp long", fp)
 
 
 def synth_fingerprint_wav_payloads(
@@ -271,40 +227,24 @@ def synth_fingerprint_wav_payloads(
     i % (v+1) == 0, v > 0) — the bytes (and any exact hash) change,
     the squared samples don't, so rows sharing a group are perceptual
     duplicates with distinct payloads."""
-    from python_plugins_spark.operators.multimodal import (
-        fanout_ids, wav_bytes,
-    )
-
     n = frames * frame_len
     base_pattern = np.array([2, 1, 0, 1] * (frame_len // 4), dtype=np.int64)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for pid in b[id_col]:
-                s = int(pid)
-                g, v = s % groups, s % variant_mod
-                amps = np.array(
-                    [100 + (g * 11 + f * 23) % 173 for f in range(frames)],
-                    dtype=np.int64,
-                )
-                pcm = (amps[:, None] * base_pattern[None, :]).reshape(n)
-                pcm = -pcm  # pattern is magnitudes; make it bipolar
-                if v:
-                    idx = np.arange(n)
-                    mask = np.where(idx % (v + 1) == 0, -1, 1)
-                    pcm = pcm * mask
-                ids.append(s)
-                payloads.append(wav_bytes(pcm))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def encode(s):
+        g, v = s % groups, s % variant_mod
+        amps = np.array(
+            [100 + (g * 11 + f * 23) % 173 for f in range(frames)],
+            dtype=np.int64,
+        )
+        pcm = (amps[:, None] * base_pattern[None, :]).reshape(n)
+        pcm = -pcm  # pattern is magnitudes; make it bipolar
+        if v:
+            idx = np.arange(n)
+            mask = np.where(idx % (v + 1) == 0, -1, 1)
+            pcm = pcm * mask
+        return wav_bytes(pcm)
 
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, encode)
 
 
 # ---------------------------------------------------------------- video
@@ -355,39 +295,15 @@ def video_fingerprint(
     makes the fingerprint robust to edits in UNSAMPLED frames — the
     property the fixture exercises. Arrow-batched narrow map; zero
     shuffles."""
-    from python_plugins_spark.operators.multimodal import parse_bmp_array
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("vfp", T.StringType()),
-        ]
-    )
+    def fp(rid, payload):
+        frames = parse_bmp_stream(payload)
+        n = len(frames)
+        picks = sorted({(j * n) // k for j in range(k)})
+        hashes = [dhash_bits(*parse_bmp_array(frames[j]), block=block) for j in picks]
+        yield rid, n, hashlib.md5(":".join(str(h) for h in hashes).encode()).hexdigest()
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            ids, counts, fps = [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = parse_bmp_stream(bytes(payload))
-                n = len(frames)
-                picks = sorted({(j * n) // k for j in range(k)})
-                hashes = [
-                    dhash_bits(*parse_bmp_array(frames[j]), block=block)
-                    for j in picks
-                ]
-                ids.append(int(rid))
-                counts.append(n)
-                fps.append(
-                    hashlib.md5(
-                        ":".join(str(h) for h in hashes).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame({id_col: ids, "n_frames": counts, "vfp": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(fp, schema)
+    return map_rows(df, [id_col, payload_col], f"`{id_col}` long, n_frames int, vfp string", fp)
 
 
 def synth_video_payloads(
@@ -408,46 +324,30 @@ def synth_video_payloads(
     //block²). Rows sharing a group therefore differ in bytes AND in
     whole unsampled frames, yet share the sampled-frame
     fingerprint."""
-    from python_plugins_spark.operators.multimodal import (
-        bmp_bytes_array, fanout_ids,
-    )
-
     picks = {(j * frames) // 4 for j in range(4)}
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
     # Vectorized rendering (round 12, guide §4.2) — the scalar form
     # paid frames * side^2 Python ``px`` calls per row; the numpy form
     # produces the identical BMP stream byte-for-byte (same per-block
     # formulas via _block_channel_array, same (0,0) variant noise).
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for pid in b[id_col]:
-                s = int(pid)
-                g, v = s % groups, s % variant_mod
-                chunks = []
-                for j in range(frames):
-                    seed = g if j in picks else (g * 7 + v * 13 + 5)
-                    fj = j if j in picks else j + v
-                    img = _block_channel_array(
-                        seed * 31 + fj * 41,
-                        seed * 17 + fj * 29,
-                        seed * 23 + fj * 37,
-                        grid,
-                        block,
-                    )
-                    img[0, 0, :] += v
-                    chunks.append(bmp_bytes_array(img.astype(np.uint8)))
-                ids.append(s)
-                payloads.append(b"".join(chunks))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def encode(s):
+        g, v = s % groups, s % variant_mod
+        chunks = []
+        for j in range(frames):
+            seed = g if j in picks else (g * 7 + v * 13 + 5)
+            fj = j if j in picks else j + v
+            img = _block_channel_array(
+                seed * 31 + fj * 41,
+                seed * 17 + fj * 29,
+                seed * 23 + fj * 37,
+                grid,
+                block,
+            )
+            img[0, 0, :] += v
+            chunks.append(bmp_bytes_array(img.astype(np.uint8)))
+        return b"".join(chunks)
 
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, encode)
 
 
 def phash_neardup_pairs(
@@ -472,7 +372,7 @@ def phash_neardup_pairs(
 
     Shape: the banded (id, hash, band_id, band_val) projection is
     materialized ONCE (localCheckpoint — the decode+hash subtree
-    upstream is a Python mapInPandas pass; a plain self-join would
+    upstream is a Python ``mapInArrow`` pass; a plain self-join would
     run it per join side), then candidates come from a whole-stage-
     codegen self-equi-join on the band key (measured ~2x the
     interpreted array-HOF in-bucket expansion this replaced).
@@ -823,34 +723,14 @@ def audio_spectral_fingerprint(
     """(id, sfp) through the REAL decode chain: RIFF walk, FFT band
     energies, Haitsma-Kalker double-difference bits. Arrow-batched
     narrow map; zero shuffles."""
-    from python_plugins_spark.operators.multimodal import _wav_pcm_array
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("sfp", T.LongType()),
-        ]
-    )
+    def fp(rid, payload):
+        n_ch, _rate, _n, pcm = _wav_pcm_array(payload)
+        if n_ch != 1:
+            raise ValueError(f"audio_spectral_fingerprint: expected mono, got {n_ch} channels")
+        yield rid, audio_spectral_bits(pcm, frames=frames, frame_len=frame_len, bands=bands)
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps = [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                n_ch, _rate, _n, pcm = _wav_pcm_array(bytes(payload))
-                if n_ch != 1:
-                    raise ValueError(
-                        "audio_spectral_fingerprint: expected mono, got "
-                        f"{n_ch} channels"
-                    )
-                ids.append(int(rid))
-                fps.append(
-                    audio_spectral_bits(
-                        pcm, frames=frames, frame_len=frame_len, bands=bands
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "sfp": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(fp, schema)
+    return map_rows(df, [id_col, payload_col], f"`{id_col}` long, sfp long", fp)
 
 
 # fixture constants shared with the oracle replay (SQL is generated
@@ -886,37 +766,21 @@ def synth_spectral_wav_payloads(
     applies a GLOBAL PHASE SHIFT of v*pi/2 — every byte changes (sin
     -> cos for v=1), no |X_k| does, so rows sharing a group are
     perceptual duplicates with distinct payloads."""
-    from python_plugins_spark.operators.multimodal import (
-        fanout_ids, wav_bytes,
-    )
-
     per = (frame_len // 2) // bands
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    t = np.arange(frame_len)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = np.arange(frame_len)
-        for batch in batches:
-            ids, payloads = [], []
-            for pid in batch[id_col]:
-                s = int(pid)
-                g, v = s % groups, s % variant_mod
-                phase = v * np.pi / 2
-                chunks = []
-                for f in range(frames):
-                    sig = np.zeros(frame_len)
-                    for b in range(bands):
-                        k = 1 + per * b + per // 2
-                        sig += spectral_amp(g, f, b) * np.sin(
-                            2 * np.pi * k * t / frame_len + phase
-                        )
-                    chunks.append(np.round(sig).astype(np.int64))
-                ids.append(s)
-                payloads.append(wav_bytes(np.concatenate(chunks)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def encode(s):
+        g, v = s % groups, s % variant_mod
+        phase = v * np.pi / 2
+        chunks = []
+        for f in range(frames):
+            sig = np.zeros(frame_len)
+            for b in range(bands):
+                k = 1 + per * b + per // 2
+                sig += spectral_amp(g, f, b) * np.sin(
+                    2 * np.pi * k * t / frame_len + phase
+                )
+            chunks.append(np.round(sig).astype(np.int64))
+        return wav_bytes(np.concatenate(chunks))
 
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
+    return synth_payloads(df, id_col, encode)

@@ -21,20 +21,20 @@ PNG is LOSSLESS, so unlike JPEG the registry roundtrip query
 against the same generator-formula oracle the BMP and PPM queries use
 — the three wire formats cross-validate byte-for-byte through one
 shared SQL oracle. Spark integration is the standard multimodal
-shape: Arrow-batched ``mapInPandas``, bytes cross the JVM boundary
-once per batch, zero shuffles.
+shape: per-row functions in the Arrow-batched ``multimodal.map_rows``,
+bytes cross the JVM boundary once per batch, zero shuffles.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
-from python_plugins_spark.operators.multimodal import fanout_ids
+from python_plugins_spark.operators.multimodal import (
+    decode_rgb_stats, formula_rgb, synth_payloads,
+)
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -217,68 +217,13 @@ def synth_png_payloads(
     one oracle covers all three wire formats. Default filter is Paeth
     — the decode exercises the hardest de-filter path in production,
     not just the trivial one."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
+    return synth_payloads(
+        df, id_col, lambda rid: png_encode(formula_rgb(rid, width, height), filter_type)
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs, ys = np.meshgrid(np.arange(width), np.arange(height), indexing="xy")
-        for pdf in batches:
-            ids, payloads = [], []
-            for rid in pdf[id_col]:
-                rid = int(rid)
-                img = np.stack(
-                    [
-                        (rid * 9 + 13 * xs + ys) % 256,
-                        (rid * 5 + xs + 11 * ys) % 256,
-                        (rid + 3 * xs + 7 * ys) % 256,
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                ids.append(rid)
-                payloads.append(png_encode(img, filter_type))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return fanout_ids(df, id_col).mapInPandas(synth, schema)
 
 
 def decode_png_stats(df, id_col: str = "doc_id", payload_col: str = "payload"):
     """REAL PNG decode per row; exact per-channel pixel sums from the
     decoded array (lossless, so they match the generator formulas
     bit-for-bit)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-        ]
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = png_decode(bytes(payload))
-                if img.ndim != 3:
-                    raise ValueError("RGB payload expected")
-                hh, ww, _ = img.shape
-                sums = img.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                out[id_col].append(int(rid))
-                out["width"].append(ww)
-                out["height"].append(hh)
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema)
+    return decode_rgb_stats(df, id_col, payload_col, png_decode)

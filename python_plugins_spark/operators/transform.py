@@ -345,6 +345,13 @@ def _to_array(values: list, t: pa.DataType) -> pa.Array:
         return pa.array(values, from_pandas=True).cast(t, safe=False)
 
 
+def _arrow_schema(spark, schema: T.StructType) -> pa.Schema:
+    """``schema`` in Arrow, with the string and binary widths Spark's
+    Python workers read (``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
+    return to_arrow_schema(schema, prefers_large_types=large.lower() == "true")
+
+
 def _records_to_batch(
     rows: list[dict], schema: pa.Schema, tags: dict[str, list] | None = None
 ) -> pa.RecordBatch:
@@ -547,12 +554,7 @@ def python_transform(
                 T.StructField("_alert", T.MapType(T.StringType(), T.StringType()), True),
             ]
         )
-    large_var_types = df.sparkSession.conf.get(
-        "spark.sql.execution.arrow.useLargeVarTypes", "false"
-    )
-    arrow_schema = to_arrow_schema(
-        spark_schema, prefers_large_types=large_var_types.lower() == "true"
-    )
+    arrow_schema = _arrow_schema(df.sparkSession, spark_schema)
 
     def assemble(emitter: Emitter) -> pa.RecordBatch:
         if not multi_port:

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.functions import hash32
 from python_plugins_spark.queries._core import _global_index_part, register
 from python_plugins_spark.sources.io import load_table
@@ -1317,7 +1318,7 @@ def warc_file_source_scan(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     out_dir = os.path.join(
-        "/root/repo/.scratch",
+        SCRATCH,
         f"warc_files_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     manifest = W.write_warc_files(docs, out_dir)

@@ -8,6 +8,7 @@ import pandas as pd  # noqa: F401 — resolves postponed type hints in pandas UD
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from python_plugins_spark import SCRATCH as _SCRATCH
 from python_plugins_spark.functions import oracle_fragments as OF  # noqa: F401
 from python_plugins_spark.operators import dedup as D  # noqa: F401
 from python_plugins_spark.operators import multimodal as MM  # noqa: F401
@@ -27,9 +28,6 @@ from python_plugins_spark.session import stage_checkpoint
 # Batch 3: sources & sinks (partitioned parquet, CSV, JSON) and the
 # LSH-bucketed embedding near-dup scale path
 # =====================================================================
-
-_SCRATCH = "/root/repo/.scratch"
-
 
 @register(
     "sink_partitioned_pruning",
@@ -1508,7 +1506,7 @@ def training_shard_files_end_to_end(spark, sf_dir):
     from python_plugins_spark.operators.shards import write_training_shards
 
     sharded = _training_shards_frame(spark, sf_dir, with_pieces=True)
-    out = "/root/repo/.scratch/training_shards"
+    out = f"{_SCRATCH}/training_shards"
     write_training_shards(sharded, out)
     return (
         spark.read.parquet(out)

@@ -16,7 +16,8 @@ import shutil
 
 import duckdb
 
-_SCRATCH = "/root/repo/.scratch"
+from python_plugins_spark import SCRATCH as _SCRATCH
+
 _BUILT: set[tuple[str, str]] = set()
 
 

@@ -11,13 +11,12 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.sources.avro_py import (
     read_container,
     register,
     write_container,
 )
-
-SCRATCH = "/root/repo/.scratch"
 
 
 def test_avro_all_types_roundtrip(spark):

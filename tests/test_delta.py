@@ -6,13 +6,12 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.sources.delta_py import (
     read_delta,
     table_version,
     write_delta,
 )
-
-SCRATCH = "/root/repo/.scratch"
 
 
 def _fresh(name: str) -> str:

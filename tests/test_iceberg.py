@@ -8,14 +8,13 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.sources.iceberg_py import (
     plan_files,
     read_iceberg,
     table_snapshots,
     write_iceberg,
 )
-
-SCRATCH = "/root/repo/.scratch"
 
 
 def _fresh(name: str) -> str:

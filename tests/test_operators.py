@@ -5,6 +5,7 @@ alternative implementations, recall of approximate paths."""
 import pytest
 from pyspark.sql import functions as F
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.operators import dedup as D
 from python_plugins_spark.operators import relational as R
 from python_plugins_spark.operators import similarity as S
@@ -1461,6 +1462,57 @@ def test_wrangler_mask_shorter_than_n(spark):
 
 
 # ------------------------------------------------------- real codecs
+
+
+def test_row_map_batches():
+    """The codec row map's worker side, without Spark: an empty batch
+    gives a typed empty batch; a row yields 0, 1 or 4 output rows, in
+    order; a Python int fills an IntegerType (int32) field; a null
+    payload reaches the row function as None."""
+    import pyarrow as pa
+
+    from python_plugins_spark.operators.multimodal import _row_map
+
+    out_schema = pa.schema([("doc_id", pa.int64()), ("k", pa.int32()), ("payload", pa.binary())])
+    seen = []
+
+    def fn(rid, payload):
+        seen.append(payload)
+        for k in range({1: 0, 2: 1, 3: 4}[rid]):
+            yield rid, k, payload
+
+    run = _row_map(fn, out_schema)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2, 3], pa.int64()), pa.array([b"a", None, b"c"], pa.binary())],
+        names=["doc_id", "payload"],
+    )
+    empty, full = run(iter([batch.slice(0, 0), batch]))
+    assert empty.schema == out_schema and empty.num_rows == 0
+    assert full.schema == out_schema
+    assert full.to_pydict() == {
+        "doc_id": [2, 3, 3, 3, 3],
+        "k": [0, 0, 1, 2, 3],
+        "payload": [None, b"c", b"c", b"c", b"c"],
+    }
+    assert seen == [b"a", None, b"c"]
+
+
+def test_stub_decode_refuses_when_run(spark):
+    """Without ``fake=True`` the stub decoder builds, then refuses when
+    its map runs; with it, every row decodes."""
+    from python_plugins_spark.operators.multimodal import attach_payload, decode_stub_features
+
+    docs = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
+    docs = attach_payload(docs, "text")
+    real = decode_stub_features(docs)
+    with pytest.raises(Exception, match="NotImplementedError"):
+        real.collect()
+    fake = decode_stub_features(docs, fake=True)
+    assert fake.schema.simpleString() == (
+        "struct<doc_id:bigint,fake_width:int,fake_height:int,fake_channels:int,"
+        "fake_brightness:double>"
+    )
+    assert fake.count() == 2
 
 
 def test_wav_codec_roundtrip_and_chunk_walk():
@@ -4386,7 +4438,7 @@ def test_stage_checkpoint_modes(spark):
             spark.conf.set(STAGE_MATERIALIZE_CONF, mode)
             if mode == "checkpoint":
                 spark.sparkContext.setCheckpointDir(
-                    "/root/repo/.scratch/ckpt_modes"
+                    f"{SCRATCH}/ckpt_modes"
                 )
             out = df.transform(stage_checkpoint)
             assert sorted((r.id, r.v) for r in out.collect()) == sorted(want)

@@ -5,6 +5,7 @@ cartesian products, bounded shuffle counts."""
 
 from pyspark.sql import functions as F
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.plans import (
     PYTHON_NODE_MARKERS,
     count_shuffles,
@@ -642,7 +643,7 @@ def test_round6_selection_pca_plan_shapes(spark, sf_dir):
 
 
 def test_codec_queries_plan_shapes(spark, sf_dir):
-    """Codec/crawl plan contracts, two classes:
+    """Codec/crawl plan contracts, three classes:
 
     (a) SYNTHESIZE-from-id codecs: scan(doc_id) -> ONE RoundRobin
         exchange of the bare 8-byte id column -> synth -> decode.
@@ -657,7 +658,10 @@ def test_codec_queries_plan_shapes(spark, sf_dir):
     (b) payload-through-the-row stages (WARC/HTML/unicode/robots):
         the document bytes travel with the row, so ZERO exchanges —
         shuffling would move the corpus; parallelism comes from input
-        splits, which a real crawl store has plenty of."""
+        splits, which a real crawl store has plenty of.
+
+    (c) every query that reaches a codec map runs it on ``mapInArrow``
+        and never on ``mapInPandas``."""
     from python_plugins_spark.plans import physical_plan, plan_str
     from python_plugins_spark.queries import QUERIES
 
@@ -698,6 +702,55 @@ def test_codec_queries_plan_shapes(spark, sf_dir):
         plan = plan_str(QUERIES[name](spark, sf_dir))
         assert "Exchange" not in plan, f"{name} shuffles payload rows"
         assert "CartesianProduct" not in plan, name
+
+    # (c) every codec synthesizer, decoder and fingerprinter is one
+    # Arrow row map (multimodal.map_rows): no pandas step. Three of
+    # these queries checkpoint or write the hashed frame while they
+    # build, so the plans of the executions the build ran count too.
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark._jsparkSession.sparkContext().listenerBus()
+
+    def newest_executions():
+        # by id, oldest first; the store drops its oldest executions
+        # past spark.sql.ui.retainedExecutions, so counts are no clock
+        bus.waitUntilEmpty()
+        n = min(int(store.executionsCount()), 50)
+        execs = store.executionsList(int(store.executionsCount()) - n, n) if n else None
+        return [execs.apply(i) for i in range(n)]
+
+    for name in CODEC_MAP_QUERIES:
+        before = max((int(e.executionId()) for e in newest_executions()), default=-1)
+        df = QUERIES[name](spark, sf_dir)
+        plans = [physical_plan(df)] + [
+            str(e.physicalPlanDescription())
+            for e in newest_executions()
+            if int(e.executionId()) > before
+        ]
+        assert any("MapInArrow" in p for p in plans), f"{name}: no MapInArrow"
+        assert not any("MapInPandas" in p for p in plans), f"{name}: MapInPandas"
+
+
+CODEC_MAP_QUERIES = (
+    "multimodal_fake_decode",
+    "multimodal_wav_rms_real",
+    "image_bmp_patch_real",
+    "image_ppm_decode_real",
+    "image_png_roundtrip_real",
+    "image_gif_roundtrip_real",
+    "image_tiff_roundtrip_real",
+    "image_jpeg_roundtrip_real",
+    "image_jpeg_color_roundtrip_real",
+    "audio_mulaw_roundtrip_real",
+    "audio_alaw_roundtrip_real",
+    "audio_flac_roundtrip_real",
+    "image_dhash_dedup",
+    "image_phash_neardup_pairs",
+    "incremental_phash_ingest",
+    "incremental_phash_radius_ingest",
+    "audio_fingerprint_dedup",
+    "audio_spectral_dedup",
+    "video_fingerprint_dedup",
+)
 
 
 def test_training_shards_shuffle_budget(spark, sf_dir):
@@ -912,7 +965,7 @@ def test_incremental_phash_ingest_join_shape(spark, sf_dir):
         synth_block_image_payloads(ids, "doc_id", groups=29),
         "doc_id", "payload",
     )
-    idx = "/root/repo/.scratch/phash_plan_idx"
+    idx = f"{SCRATCH}/phash_plan_idx"
     shutil.rmtree(idx, ignore_errors=True)
     phash_index_build(h, "doc_id", idx)
     _, dups = phash_index_ingest(h, "doc_id", idx, append=False)

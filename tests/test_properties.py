@@ -13,6 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.operators.transform import _batch_to_records, _records_to_batch
 from python_plugins_spark.schema import cdap_schema_to_spark, spark_schema_to_cdap
 
@@ -255,7 +256,7 @@ def test_avro_codec_roundtrip_property(values, tmp_path_factory):
         fields.append({"name": f"c{i}", "type": [node, "null"] if node != "null" else "null"})
     schema = {"type": "record", "name": "r", "fields": fields}
     row = tuple(values)
-    path = os.path.join("/root/repo/.scratch", f"avro_prop_{_uuid.uuid4().hex}.avro")
+    path = os.path.join(SCRATCH, f"avro_prop_{_uuid.uuid4().hex}.avro")
     try:
         write_container(path, schema, [row, row], codec="deflate")
         got = list(read_container(path))

@@ -6,6 +6,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from python_plugins_spark import SCRATCH
 from python_plugins_spark.sources.io import fix_nanos_ts, load_table
 from python_plugins_spark.streaming import (
     read_stream_parquet,
@@ -547,7 +548,7 @@ def test_transform_with_state_processing_time_timer(spark):
 
     import time as _t
 
-    src = "/root/repo/.scratch/tws_timer_src"
+    src = f"{SCRATCH}/tws_timer_src"
     shutil.rmtree(src, ignore_errors=True)
     os.makedirs(src)
     # distinct mtimes -> deterministic file order/batching under
@@ -729,7 +730,7 @@ def test_transform_with_state_initial_state(spark):
         StatefulProcessorHandle,
     )
 
-    src = "/root/repo/.scratch/tws_init_src"
+    src = f"{SCRATCH}/tws_init_src"
     shutil.rmtree(src, ignore_errors=True)
     os.makedirs(src)
     pq.write_table(
@@ -926,7 +927,7 @@ def test_online_dedup_cross_batch(spark):
 
     from python_plugins_spark.streaming.ops import online_exact_dedup
 
-    scratch = "/root/repo/.scratch/online_dedup_test"
+    scratch = f"{SCRATCH}/online_dedup_test"
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch, exist_ok=True)
 
@@ -1481,7 +1482,7 @@ def test_online_perceptual_image_dedup(spark):
     )
     from python_plugins_spark.streaming.ops import online_exact_dedup
 
-    scratch = "/root/repo/.scratch/online_phash_test"
+    scratch = f"{SCRATCH}/online_phash_test"
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch, exist_ok=True)
 
@@ -1514,7 +1515,7 @@ def test_online_radius_phash_dedup(spark):
     )
     from python_plugins_spark.streaming.ops import online_radius_phash_dedup
 
-    scratch = "/root/repo/.scratch/online_radius_phash_test"
+    scratch = f"{SCRATCH}/online_radius_phash_test"
     shutil.rmtree(scratch, ignore_errors=True)
 
     # generator ids: {0,3,6,9,12,15} are distinct groups at variant 0
@@ -1552,7 +1553,7 @@ def test_online_embedding_radius_dedup(spark):
         online_embedding_radius_dedup,
     )
 
-    scratch = "/root/repo/.scratch/online_emb_radius_test"
+    scratch = f"{SCRATCH}/online_emb_radius_test"
     shutil.rmtree(scratch, ignore_errors=True)
 
     dim = 16
@@ -1604,7 +1605,7 @@ def test_online_span_dedup_across_waves(spark):
     )
     from python_plugins_spark.streaming.ops import _id_ranged_wave_stream
 
-    scratch = "/root/repo/.scratch/online_span_test"
+    scratch = f"{SCRATCH}/online_span_test"
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch, exist_ok=True)
     run = uuid.uuid4().hex[:8]
