@@ -2,1745 +2,85 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "runs_per_query": 3,
+     "queries": {...}, "sf": ..., "env": {...}}
 
-``value`` is the sum of PER-QUERY MEDIANS over the headline set. Each
-query is fully materialized via a noop-format write (computes EVERY
-output column; no driver-side row transfer inflating the number).
+The headline queries are the 22 ``BENCH_QUERIES``. Each query is fully
+materialized by ``perfbench``'s noop-format write, which computes every
+output column with no driver-side row transfer. Each query runs 3 times, interleaved by round, so a transient load
+spike costs one sample of many queries rather than every sample of one.
+``queries`` holds the per-query medians and ``value`` their sum. ``env``
+records the core count, the load average at start and end, and the CPU
+seconds the hypervisor took from the machine during the run, which is
+what moves the headline on a shared host.
 
-MATERIALIZATION CONVENTION CHANGE (round 2): round 1 used
-``df.count()``, which lets Catalyst prune output columns of
-expression-heavy queries. BENCH_r02 onward uses the noop write and is
-the go-forward baseline; it may read slower than BENCH_r01's 21.985 s
-without any regression, because it times strictly more work. A second
-pass timing every query under the round-1 ``count()`` convention is
-published as ``queries_count_convention`` for the same-convention axis.
-
-MEDIAN-OF-3 (round 4): single-pass timings on this box carry ±30%
-run-to-run noise on sub-second queries, which prior rounds had to
-adjudicate away by argument. Each headline query now runs 3 times;
-``queries`` holds per-query MEDIANS, ``queries_min`` the per-query
-minima, and ``value`` the sum of medians. BENCH_r04 onward is
-median-based; the medians are directly comparable to r2/r3 single-pass
-numbers (a single pass IS a sample of the same distribution — the
-median just removes the noise).
-
-OUTPUT-LINE BUDGET (round 5): the driver records only the last ~2000
-chars of stdout and json-parses the final line; round 4's line outgrew
-that window and was recorded as ``parsed: null``. The final line is now
-size-guarded (<=1800 chars, dropping the bulkiest per-query maps first)
-and the FULL payload is always written to ``bench_detail.json``.
-
-LAKEHOUSE SECTION (round 4): the Delta/Iceberg log layers (~3.5k LoC)
-were correctness-tested but never timed. ``lakehouse_queries`` times
-write/append-past-a-checkpoint/replay-read/CDC-read for both formats
-at the bench SF (single pass each — these are write-heavy and their
-cost is dominated by deterministic IO, not plan noise). Published
-outside the headline total so ``value`` stays comparable round-over-
-round.
+Progress goes to stderr. For a before/after comparison of two commits,
+use paired ``perfbench/run.py`` runs (see perfbench/README.md), not two
+runs of this script.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from python_plugins_spark import SCRATCH  # noqa: E402
+from perfbench.run import cpu_steal_s, nproc
+from perfbench.workloads import materialize_noop
 
 N_RUNS = 3
-_SCRATCH = os.path.join(SCRATCH, "bench_lakehouse")
-
-
-def _env_fingerprint(prev_detail: dict | None) -> dict:
-    """Environment fingerprint (round 7): cross-round bench deltas kept
-    being adjudicated as box noise by hand (r6 burned judge time proving
-    15.69 s vs 12.42 s was load variance). Record the observable state —
-    load average, CPU count, and a fixed-work single-core calibration
-    loop — so any cross-round claim can cite the fingerprint instead of
-    arguing. If calibration deviates >15% from the last committed run,
-    the bench prints a loud warning and stamps ``calib_drift_pct``: the
-    headline delta is then box speed, not engine speed, until proven
-    otherwise."""
-    import hashlib
-
-    env: dict = {
-        "cpu_count": os.cpu_count(),
-        "loadavg_1m_start": round(os.getloadavg()[0], 2),
-    }
-    # Fixed work: 150k md5 digests over a 4 KiB buffer — pure
-    # single-core CPU+allocator, no IO, ~1 s on the reference box.
-    buf = b"\xa5" * 4096
-    t0 = time.perf_counter()
-    h = hashlib.md5()
-    for _ in range(150_000):
-        h = hashlib.md5(buf)
-    env["calib_s"] = round(time.perf_counter() - t0, 3)
-    env["calib_iters"] = 150_000
-    env["calib_check"] = h.hexdigest()[:8]
-    # PARALLEL calibration (round 8): the single-core loop missed a
-    # real drift class — round 8 measured a uniform ~1.19x slowdown
-    # across every query family (pure-JVM TPC-H included, no code in
-    # common with the round's changes) while calib_s matched the prior
-    # run within 4%: the box's MULTI-core throughput was degraded
-    # (co-tenancy / CPU quota), invisible to one core. Same fixed work
-    # on every core at once via multiprocessing — the wall-clock is
-    # the all-cores-busy throughput the Spark local[32] bench actually
-    # experiences.
-    try:
-        import multiprocessing as mp
-
-        ctx = mp.get_context("fork")  # fork: no pickling of the target
-        n = os.cpu_count() or 1
-        procs = [
-            ctx.Process(target=_calib_work, args=(30_000,)) for _ in range(n)
-        ]
-        t0 = time.perf_counter()
-        for p in procs:
-            p.start()
-        for p in procs:
-            p.join()
-        env["calib_par_s"] = round(time.perf_counter() - t0, 3)
-        env["calib_par_procs"] = n
-    except Exception as exc:  # fingerprint never fails the bench
-        print(f"# parallel calibration failed: {exc}", file=sys.stderr)
-    # MEMORY-BANDWIDTH calibration (round 9): a round-9 idle-box run
-    # measured every query family uniformly ~15% slower than round 8
-    # while BOTH CPU calibrations were at-or-faster-than the committed
-    # values — CPU-bound md5 loops live in L1/L2 and cannot see
-    # degraded DRAM/interconnect throughput, which Spark scans and
-    # shuffles are bound by. Fixed work: stream-copy a 256 MiB numpy
-    # array 4x; GB/s recorded. A cross-round headline delta with
-    # stable calib_s but degraded membw_gbps is the BOX, not the
-    # engine.
-    try:
-        import numpy as _np
-
-        buf_mb = 256
-        a = _np.ones(buf_mb * 1024 * 1024 // 8, dtype=_np.float64)
-        b = _np.empty_like(a)
-        _np.copyto(b, a)  # touch/allocate before timing
-        t0 = time.perf_counter()
-        for _ in range(4):
-            _np.copyto(b, a)
-        dt = time.perf_counter() - t0
-        # 4 copies x (read + write) of buf_mb
-        env["membw_gbps"] = round(4 * 2 * buf_mb / 1024 / dt, 2)
-    except Exception as exc:  # fingerprint never fails the bench
-        print(f"# membw calibration failed: {exc}", file=sys.stderr)
-    prev = (prev_detail or {}).get("env", {}).get("calib_s")
-    if prev:
-        drift = (env["calib_s"] - prev) / prev * 100
-        env["calib_prev_s"] = prev
-        env["calib_drift_pct"] = round(drift, 1)
-        if abs(drift) > 15:
-            print(
-                f"# WARNING: single-core calibration drifted {drift:+.1f}% vs "
-                f"the last committed run ({env['calib_s']}s vs {prev}s) — "
-                "cross-round query deltas on this run measure the BOX, not "
-                "the engine.",
-                file=sys.stderr,
-            )
-    prev_par = (prev_detail or {}).get("env", {}).get("calib_par_s")
-    if prev_par and env.get("calib_par_s"):
-        pdrift = (env["calib_par_s"] - prev_par) / prev_par * 100
-        env["calib_par_prev_s"] = prev_par
-        env["calib_par_drift_pct"] = round(pdrift, 1)
-        if abs(pdrift) > 15:
-            print(
-                f"# WARNING: PARALLEL calibration drifted {pdrift:+.1f}% vs "
-                f"the last committed run — all-cores throughput changed; "
-                "cross-round deltas measure the BOX, not the engine.",
-                file=sys.stderr,
-            )
-    print(f"# [env] {env}", file=sys.stderr)
-    return env
-
-
-def _calib_work(iters: int) -> str:
-    """Fixed calibration work unit (module-level so mp can pickle it)."""
-    import hashlib
-
-    buf = b"\xa5" * 4096
-    h = hashlib.md5()
-    for _ in range(iters):
-        h = hashlib.md5(buf)
-    return h.hexdigest()[:8]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-    )
-    prev_detail = None
-    try:
-        with open(detail_path) as fh:
-            prev_detail = json.load(fh)
-    except Exception:
-        pass
-    env = _env_fingerprint(prev_detail)
+    load_start, steal_start = os.getloadavg(), cpu_steal_s()
 
     from python_plugins_spark import get_spark
     from python_plugins_spark.queries import BENCH_QUERIES, QUERIES
 
     spark = get_spark("bench")
 
-    # Warm-up: JIT/codegen + parquet-reader paths, exercised on the
-    # smallest SF so no bench-SF data is cached into the timed runs.
-    # Standard benchmarking practice — the timed numbers then measure
-    # the engine, not JVM startup billed to whichever query runs first.
+    # Warm-up on the smallest SF: JIT, codegen and the parquet reader
+    # paths, so the timed runs measure the engine rather than JVM start-up
+    # billed to whichever query runs first.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm_dir = "/root/testdata/sf0.001"
-
-    def materialize(df) -> int:
-        """Fully compute EVERY output column (BENCH_r02+ convention).
-
-        A bare count() lets Catalyst prune the output columns, so
-        expression-heavy queries were partly un-timed; a noop-format
-        write with an attached observation materializes all columns
-        with zero driver-side row transfer and still yields the row
-        count from the same single pass."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation()
-        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        observed.write.format("noop").mode("overwrite").save()
-        return obs.get["n"]
-
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         for name in BENCH_QUERIES:
             try:
-                materialize(QUERIES[name](spark, warm_dir))
+                materialize_noop(QUERIES[name](spark, warm_dir))
             except Exception as exc:  # never let warm-up kill the bench
                 print(f"# warmup {name} failed: {exc}", file=sys.stderr)
 
-    # Headline pass: N_RUNS samples per query, interleaved by ROUND
-    # (run 0 of every query, then run 1, ...) so a transient load spike
-    # degrades one sample of many queries rather than all samples of
-    # one — the median then rejects it.
     samples: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
     for run in range(N_RUNS):
         for name in BENCH_QUERIES:
-            fn = QUERIES[name]
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = materialize(df)
+            n = materialize_noop(QUERIES[name](spark, sf_dir))
             dt = time.perf_counter() - t0
             samples[name].append(dt)
-            print(
-                f"# [{run + 1}/{N_RUNS}] {name}: {dt:.3f}s ({n} rows)",
-                file=sys.stderr,
-            )
+            print(f"# [{run + 1}/{N_RUNS}] {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
     timings = {n: round(statistics.median(s), 3) for n, s in samples.items()}
-    timings_min = {n: round(min(s), 3) for n, s in samples.items()}
 
-    # Second pass, round-1 ``count()`` convention (column-pruned) — the
-    # same-convention comparison axis vs BENCH_r01. Runs after the noop
-    # pass so codegen/readers are warm for both, biasing neither.
-    count_timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        fn = QUERIES[name]
-        t0 = time.perf_counter()
-        n = fn(spark, sf_dir).count()
-        count_timings[name] = round(time.perf_counter() - t0, 3)
-        print(
-            f"# [count-conv] {name}: {count_timings[name]:.3f}s ({n} rows)",
-            file=sys.stderr,
-        )
-
-    # New-operator showcase pass: timed under the same noop convention
-    # but published OUTSIDE the headline total, so `value` stays
-    # comparable round-over-round while the judge still sees the new
-    # operators' throughput.
-    EXTRA_QUERIES = [
-        "bm25_topk_docs",
-        "hybrid_rrf_retrieval",
-        "semantic_dedup_embeddings",
-        "fuzzy_match_customers",
-        "feature_hashing_docs",
-        "wrangler_recipe_customers",
-        "recursive_cte_amortization",
-        "pipeline_streaming_end_to_end",
-        "sentence_dedup_docs",
-        "url_canonicalize_dedup",
-        "hist_quantile_sketch_orders",
-        "multimodal_wav_rms_real",
-        "msgbus_stream_events",
-        "iceberg_hidden_partition_prune",
-        "pipeline_theta_join_percentiles",
-        "incremental_minhash_ingest",
-        "iceberg_branch_wap",
-        "pipeline_deduplicate_latest",
-        # round-6 operators
-        "dsir_log_weights_docs",
-        "nb_classify_docs",
-        "dsir_resample_docs",
-        "embedding_covariance_matrix",
-        "iceberg_rename_without_rewrite",
-        "delta_generated_columns",
-        "bloom_prefilter_dedup",
-        # round-6b operators
-        "kneser_ney_bigram_docs",
-        "pmi_collocations_docs",
-        "jl_projection_embeddings",
-        "image_jpeg_roundtrip_real",
-        "image_jpeg_color_roundtrip_real",
-        "image_png_roundtrip_real",
-        "image_gif_roundtrip_real",
-        "image_tiff_roundtrip_real",
-        "audio_mulaw_roundtrip_real",
-        "audio_alaw_roundtrip_real",
-        "audio_flac_roundtrip_real",
-        "html_text_extract_docs",
-        "warc_extract_records",
-        "unicode_normalize_docs",
-        "robots_filter_urls",
-        "blocklist_filter_docs",
-        "script_detect_docs",
-        "corpus_version_diff",
-        "zipf_fit_docs",
-        "js_divergence_sources",
-        "pipeline_corpus_curation",
-        "pipeline_validate_errors",
-        # round-8 operators
-        "lang_id_ngram_docs",
-        "crawl_pipeline_end_to_end",
-        "warc_file_source_scan",
-        "gopher_repetition_docs",
-        # round-8b operators (crawl scheduler leg + linear probe)
-        "robots_extras_policy",
-        "warc_binary_routing",
-        "crawl_frontier_schedule",
-        "sitemap_parse_urls",
-        "ridge_probe_chars",
-        "image_dhash_dedup",
-        "audio_fingerprint_dedup",
-        "video_fingerprint_dedup",
-        "image_phash_neardup_pairs",
-        "lang_id_cyrillic_docs",
-        "incremental_phash_ingest",
-        # round-9 operators (script coverage + CJK tier, cross-doc
-        # span removal, Hamming-radius index ingest)
-        "lang_id_scripts_docs",
-        "lang_id_cjk_docs",
-        "cross_doc_span_dedup",
-        "incremental_phash_radius_ingest",
-        "lang_id_arabic_script_docs",
-        "embedding_int8_quantize",
-        "incremental_span_dedup",
-        "lang_id_tiered_docs",
-        "audio_spectral_dedup",
-        # round-10 operators (trained IVF, packed-SQ8 ADC serving,
-        # Devanagari tier; the cost of ann_topk_sq8 is dominated by
-        # the constant ~770-expression quantizer codegen compile,
-        # which amortizes to zero at 100x data)
-        "ann_topk_ivf_trained",
-        "ann_topk_sq8",
-        "lang_id_devanagari_docs",
-        # round-11 operators (production BPE encoder, order-3 KN,
-        # serving-shape exact ANN)
-        "bpe_encode_docs",
-        "kneser_ney_trigram_docs",
-        "ccnet_perplexity_buckets_docs",
-        "ann_serving_exact_topk",
-        "training_shards_end_to_end",
-        "logistic_probe_docs",
-        # round-12 operators (quality-gate capstone, shard files,
-        # the composed pretraining mega-capstone)
-        "quality_gate_end_to_end",
-        "training_shard_files_end_to_end",
-        "pretraining_corpus_end_to_end",
-    ]
-    # Tier tags (round 8): ~50 extras is past eyeballing — per-tier
-    # subtotals make a tier regression visible without reading every
-    # number. Rule-based so new extras classify themselves.
-
-    def _tier(name: str) -> str:
-        if name.startswith(("image_", "audio_")) or "wav" in name:
-            return "codec"
-        if name.startswith(("iceberg_", "delta_")):
-            return "lakehouse"
-        if name.startswith("pipeline_"):
-            return "pipeline"
-        corpus_markers = (
-            "dedup", "minhash", "bm25", "rrf", "dsir", "nb_classify",
-            "kneser", "pmi_", "jl_", "zipf", "js_divergence", "html_",
-            "warc", "unicode", "robots", "blocklist", "script_detect",
-            "corpus_", "crawl_", "lang_id", "feature_hashing",
-            "embedding_", "url_", "sentence_", "bloom_", "gopher",
-            "repetition", "sitemap", "ridge_probe", "phash",
-        )
-        if any(m in name for m in corpus_markers):
-            return "corpus"
-        return "core"
-    # Round-6: the two extras under cross-round adjudication run
-    # median-of-3 like the headline (single-pass extras carry the same
-    # ±30% box noise the headline pass was moved off of in round 4).
-    # Round-7: the codec roundtrips joined them — a single-pass sample
-    # caught a 10x transient stall (14 s for a query that times 1.2 s
-    # standalone and 1.6 s after a fresh headline pass); medians
-    # reject it, and the per-query cost is ~1-2 s so 3 passes are
-    # cheap. The env fingerprint dates any remaining drift.
-    EXTRA_N3 = {
-        "msgbus_stream_events",
-        "incremental_minhash_ingest",
-        # round-9: the Delta-index ingest pair showed 4.4-5.6 s
-        # single-pass spread (index writes + codec passes) — medians
-        # make their cross-round numbers adjudicable
-        "incremental_phash_ingest",
-        "incremental_phash_radius_ingest",
-        "image_jpeg_roundtrip_real",
-        "image_jpeg_color_roundtrip_real",
-        "image_png_roundtrip_real",
-        "image_gif_roundtrip_real",
-        "image_tiff_roundtrip_real",
-        "audio_mulaw_roundtrip_real",
-        "audio_alaw_roundtrip_real",
-        "audio_flac_roundtrip_real",
-        # round-12 (judge ask #2): the two headline_v2 members that
-        # jittered past the 1.5x regression allowance on marginal
-        # boxes as single-pass samples (crawl 5.05 s vs 3.03 s
-        # committed, streaming 3.06 s vs 1.43 s on a +10.9%
-        # calib-drift box) — medians reject the transient like every
-        # other adjudication-prone member
-        "crawl_pipeline_end_to_end",
-        "pipeline_streaming_end_to_end",
-        # round-12b: a clean-window run caught image_dhash_dedup at
-        # 2.37 s (vs 1.27-1.37 s in every neighboring run, nothing in
-        # its path changed) — the single-pass-transient class the
-        # round-7 note documents; medians reject it
-        "image_dhash_dedup",
+    env = {
+        "nproc": nproc(),
+        "loadavg_start": [round(x, 2) for x in load_start],
+        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+        "cpu_steal_s": round(cpu_steal_s() - steal_start, 2),
     }
-    extra_timings: dict[str, float] = {}
-    extra_samples: dict[str, list[float]] = {}
-    extra_rows: dict[str, int] = {}
-    extra_failed: set[str] = set()
-
-    def _time_extra(name: str, fn) -> None:
-        t0 = time.perf_counter()
-        n = materialize(fn(spark, sf_dir))
-        extra_samples.setdefault(name, []).append(time.perf_counter() - t0)
-        extra_rows[name] = n
-
-    # Round 0: one sample of every extra, in registry order.
-    for name in EXTRA_QUERIES:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
-        try:
-            # Round-12 MEASUREMENT FIX (guide §1; declared in
-            # OPTIMIZATION_r12.md, old numbers kept in git history):
-            # single-pass extras were timed COLD — their one sample
-            # charged first-execution plan/codegen/JIT to the query
-            # (measured: multimodal_wav_rms_real 2.4-12.6 s cold vs
-            # 0.93 s steady-state on the same box). The headline pass
-            # has warmed on the smallest SF since round 2 for exactly
-            # this reason; extras now get the same warm pass.
-            # Median-of-3 members skip it (their median already
-            # rejects the one compile-priced sample).
-            if (
-                name not in EXTRA_N3
-                and os.path.isdir(warm_dir)
-                and warm_dir != sf_dir
-            ):
-                try:
-                    materialize(fn(spark, warm_dir))
-                except Exception as exc:
-                    print(f"# extra warmup {name} failed: {exc}",
-                          file=sys.stderr)
-            _time_extra(name, fn)
-        except Exception as exc:  # extras never fail the bench
-            extra_failed.add(name)
-            print(f"# extra {name} failed: {exc}", file=sys.stderr)
-
-    # Rounds 1..N-1: the median-of-3 members only, INTERLEAVED by
-    # round exactly like the headline pass (round 12): their three
-    # samples used to run back-to-back, so one contended box window
-    # swallowed all three and the median passed it through to the
-    # artifact (observed: msgbus_stream_events median 21.4 s in-run
-    # vs 5.0 s standalone minutes later). Spacing the samples across
-    # the whole extras section restores the median's ability to
-    # reject a transient window. Same sample count, same statistic.
-    for _ in range(N_RUNS - 1):
-        for name in EXTRA_QUERIES:
-            if name not in EXTRA_N3 or name in extra_failed:
-                continue
-            fn = QUERIES.get(name)
-            if fn is None:
-                continue
-            try:
-                _time_extra(name, fn)
-            except Exception as exc:
-                extra_failed.add(name)
-                print(f"# extra {name} failed: {exc}", file=sys.stderr)
-
-    for name in EXTRA_QUERIES:
-        runs = extra_samples.get(name)
-        if not runs or name in extra_failed:
-            continue
-        extra_timings[name] = round(statistics.median(runs), 3)
-        print(
-            f"# [extra] {name}: {extra_timings[name]:.3f}s "
-            f"({extra_rows[name]} rows, {len(runs)} run(s))",
-            file=sys.stderr,
-        )
-
-    # HEADLINE V2 (round 9, advisor ask): the stable 22-query headline
-    # predates the corpus/crawl/codec/lakehouse surface (extras now
-    # dwarf it), so a parallel representative set — one or two per
-    # tier of the CURRENT engine — is published alongside it.
-    # v1 stays the cross-round comparability axis; v2 is the number
-    # that reflects what the engine actually is. Members reuse the
-    # medians already measured this run (headline pass or extras
-    # pass); nothing is re-timed, so v2 costs nothing and cannot
-    # drift from the published per-query numbers.
-    HEADLINE_V2 = [
-        "q1_pricing_summary",           # core relational aggregate
-        "q18_big_orders",               # core join/subquery
-        "window_running_qty",           # windows
-        "transform_revenue_agg",        # reference transform surface
-        "minhash_lsh_candidates",       # fuzzy dedup
-        "dedup_exact_documents",        # exact dedup
-        "ann_topk_cosine",              # similarity search
-        "bm25_topk_docs",               # lexical retrieval
-        "lang_id_ngram_docs",           # language ID
-        "gopher_repetition_docs",       # quality filtering
-        "crawl_pipeline_end_to_end",    # crawl capstone
-        "image_jpeg_roundtrip_real",    # codec
-        "image_dhash_dedup",            # perceptual dedup
-        "incremental_minhash_ingest",   # persisted-index ingestion
-        "msgbus_stream_events",         # streaming bus
-        "streaming_tumbling_counts",    # structured streaming
-        "iceberg_branch_wap",           # lakehouse (iceberg)
-        "delta_generated_columns",      # lakehouse (delta)
-        "pipeline_streaming_end_to_end",  # pipeline-spec runner
-        "ridge_probe_chars",            # closed-form training probe
-    ]
-    headline_v2: dict[str, float] = {}
-    for name in HEADLINE_V2:
-        t = timings.get(name, extra_timings.get(name))
-        if t is not None:
-            headline_v2[name] = t
-        else:
-            print(f"# headline_v2 member {name} not measured", file=sys.stderr)
-    headline_v2_total = round(sum(headline_v2.values()), 3)
-    print(
-        f"# [headline-v2] total {headline_v2_total}s over "
-        f"{len(headline_v2)} queries",
-        file=sys.stderr,
-    )
-
-    tier_totals: dict[str, float] = {}
-    for name, t in extra_timings.items():
-        tier = _tier(name)
-        tier_totals[tier] = round(tier_totals.get(tier, 0.0) + t, 3)
-    print(f"# [tier-totals] {tier_totals}", file=sys.stderr)
-
-    msgbus_phases = _bench_msgbus_phases(spark, sf_dir)
-
-    lakehouse_timings = _bench_lakehouse(spark, sf_dir)
-
-    lsh_recall = _bench_lsh_recall(spark, sf_dir)
-
-    lsh_skew = _bench_lsh_skew(spark, sf_dir)
-
-    phash_skew = _bench_phash_skew(spark, sf_dir)
-
-    ann_recall = _bench_ann_recall(spark, sf_dir)
-
-    decontam_recall = _bench_decontam_recall(spark, sf_dir)
-
-    bpe_encoder = _bench_bpe_encoder(spark, sf_dir)
-
-    bpe_train_row = _bench_bpe_train(spark, sf_dir)
-
-    ann_serving = _bench_ann_serving(spark, sf_dir)
-
-    lang_id_accuracy = _bench_lang_id_accuracy(spark)
-
-    scaling = _bench_scaling(spark)
-
-    env["loadavg_1m_end"] = round(os.getloadavg()[0], 2)
-    # END-of-run calibration (round 12): the start fingerprint cannot
-    # see a box that degrades MID-run (observed: a clean start
-    # fingerprint — calib 0.915 s, membw 20 GB/s, loadavg 0.27 — with
-    # the extras pass reading 2-5x standalone values an hour later,
-    # while a hot re-probe read calib 1.158 s). One more fixed-work
-    # loop at the end bounds the box's state over the whole run; a
-    # large start->end drift marks the LATER sections (extras,
-    # instruments) as box-contended in the artifact itself.
-    t0 = time.perf_counter()
-    _calib_work(150_000)
-    env["calib_s_end"] = round(time.perf_counter() - t0, 3)
-
-    total = round(sum(timings.values()), 3)
-    payload = {
+    print(json.dumps({
         "metric": "headline_queries_total_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "runs_per_query": N_RUNS,
         "queries": timings,
-        "queries_min": timings_min,
-        "queries_count_convention": count_timings,
-        "count_convention_total": round(sum(count_timings.values()), 3),
-        "extra_queries": extra_timings,
-        "extra_total": round(sum(extra_timings.values()), 3),
-        "tier_totals": tier_totals,
-        "headline_v2": headline_v2,
-        "headline_v2_total": headline_v2_total,
-        "msgbus_phases": msgbus_phases,
-        "lakehouse_queries": lakehouse_timings,
-        "lakehouse_total": round(sum(lakehouse_timings.values()), 3),
-        "lsh_recall": lsh_recall,
-        "lsh_skew": lsh_skew,
-        "phash_skew": phash_skew,
-        "ann_recall": ann_recall,
-        "decontam_recall": decontam_recall,
-        "bpe_encoder": bpe_encoder,
-        "bpe_train": bpe_train_row,
-        "ann_serving": ann_serving,
-        "lang_id_accuracy": lang_id_accuracy,
-        "scaling": scaling,
-        "env": env,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
-    # Full detail always lands on disk for the judge / cross-round diffs.
-    with open(detail_path, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-
-    # The driver captures only the LAST ~2000 chars of stdout and
-    # json-parses the final line (BENCH_r04 was recorded with
-    # ``parsed: null`` because the round-4 line outgrew that window).
-    # Emit a line that provably fits: drop the bulkiest per-query maps
-    # one at a time until it does — totals and the headline per-query
-    # medians always survive.
-    line_payload = dict(payload)
-    line_payload["detail"] = "bench_detail.json"
-    for droppable in (
-        "scaling",
-        "ann_serving",
-        "lang_id_accuracy",
-        "bpe_train",
-        "bpe_encoder",
-        "msgbus_phases",
-        "decontam_recall",
-        "lsh_skew",
-        "phash_skew",
-        "ann_recall",
-        "lsh_recall",
-        "headline_v2",
-        "env",
-        "queries_count_convention",
-        "extra_queries",
-        "lakehouse_queries",
-        "queries_min",
-        "queries",
-    ):
-        line = json.dumps(line_payload)
-        if len(line) <= 1800:
-            break
-        line_payload.pop(droppable, None)
-    print(json.dumps(line_payload))
+        "env": env,
+    }))
     spark.stop()
-
-
-def _bench_lsh_recall(spark, sf_dir: str) -> dict:
-    """Quantified LSH candidate recall at the bench SF (round 7): the
-    MinHash band construction (8 bands x 4 rows) pins the theoretical
-    S-curve, and the sf0.01 oracle hash-match proves recall there, but
-    no NUMBER stated it per round. Ground truth is the exact
-    inverted-index Jaccard oracle (DuckDB — fully independent of the
-    Spark MinHash machinery); recall = fraction of true >=threshold
-    pairs that the LSH candidate stage surfaces."""
-    out: dict = {}
-    try:
-        import duckdb
-
-        from python_plugins_spark.operators import dedup as D
-        from python_plugins_spark.sources.io import load_table
-
-        threshold = 0.5
-        docs = load_table(spark, "documents", sf_dir)
-        t0 = time.perf_counter()
-        cand = {
-            (r.id_a, r.id_b)
-            for r in D.minhash_lsh_pairs(docs, "text", "doc_id").collect()
-        }
-        cand_s = round(time.perf_counter() - t0, 3)
-        con = duckdb.connect()
-        con.sql(
-            f"CREATE VIEW documents AS FROM '{sf_dir}/documents.parquet'"
-        )
-        t0 = time.perf_counter()
-        truth = {
-            (a, b)
-            for a, b, _j in con.sql(
-                D.ngram_jaccard_pairs_oracle_sql(
-                    "documents", "text", "doc_id", threshold
-                )
-            ).fetchall()
-        }
-        truth_s = round(time.perf_counter() - t0, 3)
-        hit = len(truth & cand)
-        out = {
-            "threshold": threshold,
-            "true_pairs": len(truth),
-            "candidate_pairs": len(cand),
-            "found": hit,
-            "recall": round(hit / len(truth), 4) if truth else 1.0,
-            "candidate_s": cand_s,
-            "exact_baseline_s": truth_s,
-        }
-        print(f"# [lsh-recall] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# lsh recall failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_lsh_skew(spark, sf_dir: str) -> dict:
-    """Skew resilience of the LSH candidate stage, measured per round
-    (round 8): inject 10% byte-identical boilerplate into the corpus
-    (the pathological bucket every crawl has), then time candidate
-    generation uncapped vs with max_bucket. Candidate generation is an
-    array-bucket aggregate, so AQE skew-join does not apply — the cap
-    is the mitigation, and this row proves it (a) bounds the quadratic
-    boilerplate pair blow-up and (b) preserves every clean (non-
-    boilerplate) candidate pair. See
-    test_minhash_skew_cap_bounds_boilerplate for the pytest twin."""
-    out: dict = {}
-    try:
-        from pyspark.sql import functions as F
-
-        from python_plugins_spark.operators import dedup as D
-        from python_plugins_spark.sources.io import load_table
-
-        docs = load_table(spark, "documents", sf_dir)
-        boiler = (
-            "the same cookie banner text repeated on every page of "
-            "this site accept all cookies to continue reading"
-        )
-        skewed = docs.select(
-            "doc_id",
-            F.when(F.col("doc_id") % 10 == 0, F.lit(boiler))
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        t0 = time.perf_counter()
-        uncapped = {
-            (r.id_a, r.id_b)
-            for r in D.minhash_lsh_pairs(skewed, "text", "doc_id").collect()
-        }
-        uncapped_s = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        capped = {
-            (r.id_a, r.id_b)
-            for r in D.minhash_lsh_pairs(
-                skewed, "text", "doc_id", max_bucket=64
-            ).collect()
-        }
-        capped_s = round(time.perf_counter() - t0, 3)
-        is_boiler = lambda i: i % 10 == 0  # noqa: E731
-        clean_u = {p for p in uncapped if not (is_boiler(p[0]) and is_boiler(p[1]))}
-        clean_c = {p for p in capped if not (is_boiler(p[0]) and is_boiler(p[1]))}
-        out = {
-            "boiler_frac": 0.1,
-            "max_bucket": 64,
-            "uncapped_pairs": len(uncapped),
-            "uncapped_s": uncapped_s,
-            "capped_pairs": len(capped),
-            "capped_s": capped_s,
-            "clean_pairs": len(clean_u),
-            "clean_pairs_preserved": clean_c == clean_u,
-        }
-        print(f"# [lsh-skew] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# lsh skew failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_phash_skew(spark, sf_dir: str) -> dict:
-    """Skew resilience of the PERCEPTUAL Hamming band matcher,
-    measured per round (round 9, mirroring lsh_skew): 10% of the
-    corpus gets one constant dHash — the solid-color-placeholder /
-    tracking-pixel cluster every image crawl has — and the rest get
-    diverse 56-bit prints planted in distance-1 pairs. In-bucket pair
-    generation is quadratic in cluster size, so the degenerate bucket
-    dominates uncapped; max_bucket sheds it BEFORE expansion and
-    provably preserves every clean pair. The matcher (not the codec)
-    is what's timed: fingerprints come from formulas, the exact frame
-    the decode stage hands the matcher. pytest twin:
-    test_phash_skew_cap_bounds_degenerate_cluster."""
-    out: dict = {}
-    try:
-        from pyspark.sql import functions as F
-
-        from python_plugins_spark.operators.phash import phash_neardup_pairs
-        from python_plugins_spark.sources.io import load_table
-
-        docs = load_table(spark, "documents", sf_dir).select("doc_id")
-        mask = (1 << 56) - 1
-        h = docs.select(
-            "doc_id",
-            F.when(F.col("doc_id") % 10 == 0, F.lit(0).cast("long"))
-            .otherwise(
-                F.xxhash64(F.floor(F.col("doc_id") / 2))
-                .bitwiseAND(F.lit(mask))
-                .bitwiseXOR((F.col("doc_id") % 2).cast("long"))
-            )
-            .alias("phash"),
-        )
-        t0 = time.perf_counter()
-        uncapped = {
-            (r.id_a, r.id_b)
-            for r in phash_neardup_pairs(h, max_hamming=3).collect()
-        }
-        uncapped_s = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        capped = {
-            (r.id_a, r.id_b)
-            for r in phash_neardup_pairs(
-                h, max_hamming=3, max_bucket=64
-            ).collect()
-        }
-        capped_s = round(time.perf_counter() - t0, 3)
-        is_boiler = lambda i: i % 10 == 0  # noqa: E731
-        clean_u = {p for p in uncapped if not (is_boiler(p[0]) and is_boiler(p[1]))}
-        clean_c = {p for p in capped if not (is_boiler(p[0]) and is_boiler(p[1]))}
-        out = {
-            "boiler_frac": 0.1,
-            "max_bucket": 64,
-            "uncapped_pairs": len(uncapped),
-            "uncapped_s": uncapped_s,
-            "capped_pairs": len(capped),
-            "capped_s": capped_s,
-            "clean_pairs": len(clean_u),
-            "clean_pairs_preserved": clean_c == clean_u,
-        }
-        print(f"# [phash-skew] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# phash skew failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_ann_recall(spark, sf_dir: str) -> dict:
-    """Recall of the APPROXIMATE ANN paths vs the exact blocked
-    top-k, measured per round at the bench SF (round 9, mirroring
-    lsh_recall/decontam_recall): the IVF and PQ registry entries are
-    no-oracle-by-design (approximate), so this row is their
-    driver-visible quality evidence. Ground truth is ann_topk_blocked
-    (exact, distributed); recall = fraction of true (query, neighbor)
-    top-k pairs the approximate path returns. pytest floors:
-    test_ivf_recall, test_pq_recall."""
-    out: dict = {}
-    try:
-        from python_plugins_spark.operators import similarity as S
-        from python_plugins_spark.sources.io import load_table
-
-        emb = load_table(spark, "embeddings", sf_dir)
-        t0 = time.perf_counter()
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ann_topk_blocked(
-                emb, "vec_id", "embedding", 5
-            ).collect()
-        }
-        exact_s = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        ivf = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ivf_ann_topk(
-                emb, "vec_id", "embedding", 5, n_centroids=16, nprobe=4
-            ).collect()
-        }
-        ivf_s = round(time.perf_counter() - t0, 3)
-        out = {
-            "k": 5,
-            "true_pairs": len(exact),
-            "ivf_found": len(exact & ivf),
-            "ivf_recall": round(len(exact & ivf) / len(exact), 4)
-            if exact
-            else 1.0,
-            "exact_s": exact_s,
-            "ivf_s": ivf_s,
-        }
-        # the nprobe knob: the synthetic bench embeddings are
-        # near-uniform (barely cluster), so recall runs ~2x the
-        # scanned fraction — real clustered embeddings do far better;
-        # the row tracks both points of the recall/cost curve across
-        # rounds
-        t0 = time.perf_counter()
-        ivf8 = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ivf_ann_topk(
-                emb, "vec_id", "embedding", 5, n_centroids=16, nprobe=8
-            ).collect()
-        }
-        out["ivf_recall_nprobe8"] = (
-            round(len(exact & ivf8) / len(exact), 4) if exact else 1.0
-        )
-        out["ivf_nprobe8_s"] = round(time.perf_counter() - t0, 3)
-        # TRAINED centroids (round 10): spherical k-means via
-        # ivf_train_centroids replaces the lowest-id convention
-        t0 = time.perf_counter()
-        cents = S.ivf_train_centroids(emb, "embedding", k=16)
-        out["ivf_train_s"] = round(time.perf_counter() - t0, 3)
-        for np_ in (4, 8):
-            t0 = time.perf_counter()
-            tr = {
-                (r.query_id, r.neighbor_id)
-                for r in S.ivf_ann_topk(
-                    emb, "vec_id", "embedding", 5,
-                    n_centroids=16, nprobe=np_, centroids=cents,
-                ).collect()
-            }
-            out[f"ivf_trained_recall_nprobe{np_}"] = (
-                round(len(exact & tr) / len(exact), 4) if exact else 1.0
-            )
-            out[f"ivf_trained_nprobe{np_}_s"] = round(
-                time.perf_counter() - t0, 3
-            )
-        # PQ with exact re-rank over the registry query's 20-query
-        # set — COSINE-consistent serving (L2-normalized frames,
-        # 8-bit codebooks) matching the registry query
-        t0 = time.perf_counter()
-        embn = S.l2_normalized(emb, "embedding").localCheckpoint(eager=True)
-        books = S.pq_train_codebooks(embn, "embedding", dim=64, m=8, k=256)
-        codes = S.pq_encode(embn, "vec_id", "embedding", books)
-        queries = embn.orderBy("vec_id").limit(20)
-        pq = {
-            (r.query_id, r.neighbor_id)
-            for r in S.pq_topk(
-                codes, queries, "vec_id", "embedding", books, kk=5,
-                rerank_vectors=embn,
-            ).collect()
-        }
-        qids = {q for q, _ in pq}
-        exact_q = {p for p in exact if p[0] in qids}
-        out["pq_found"] = len(exact_q & pq)
-        out["pq_true_pairs"] = len(exact_q)
-        out["pq_recall"] = (
-            round(len(exact_q & pq) / len(exact_q), 4) if exact_q else 1.0
-        )
-        out["pq_s"] = round(time.perf_counter() - t0, 3)
-        # CLUSTERED fixture: the testdata embeddings are near-uniform
-        # (no centroid choice can beat random bucket scanning there),
-        # so index QUALITY is measured on planted Gaussian clusters —
-        # the corpus shape real embedding models produce
-        cl = S.clustered_embeddings(
-            spark, n_clusters=20, per_cluster=100, dim=64
-        ).localCheckpoint(eager=True)
-        cl_exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ann_topk_blocked(cl, "vec_id", "embedding", 5).collect()
-        }
-        cl_unt = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ivf_ann_topk(
-                cl, "vec_id", "embedding", 5, n_centroids=16, nprobe=4
-            ).collect()
-        }
-        out["clustered_ivf_untrained_recall"] = round(
-            len(cl_exact & cl_unt) / len(cl_exact), 4
-        )
-        cl_cents = S.ivf_train_centroids(cl, "embedding", k=16)
-        for np_ in (2, 4):
-            cl_tr = {
-                (r.query_id, r.neighbor_id)
-                for r in S.ivf_ann_topk(
-                    cl, "vec_id", "embedding", 5,
-                    n_centroids=16, nprobe=np_, centroids=cl_cents,
-                ).collect()
-            }
-            out[f"clustered_ivf_trained_recall_nprobe{np_}"] = round(
-                len(cl_exact & cl_tr) / len(cl_exact), 4
-            )
-        cln = S.l2_normalized(cl, "embedding").localCheckpoint(eager=True)
-        cl_books = S.pq_train_codebooks(cln, "embedding", dim=64, m=8, k=256)
-        cl_codes = S.pq_encode(cln, "vec_id", "embedding", cl_books)
-        cl_q = cln.orderBy("vec_id").limit(20)
-        cl_pq = {
-            (r.query_id, r.neighbor_id)
-            for r in S.pq_topk(
-                cl_codes, cl_q, "vec_id", "embedding", cl_books, kk=5,
-                rerank_vectors=cln,
-            ).collect()
-        }
-        cl_qids = {q for q, _ in cl_pq}
-        cl_exq = {p for p in cl_exact if p[0] in cl_qids}
-        out["clustered_pq_recall"] = (
-            round(len(cl_exq & cl_pq) / len(cl_exq), 4) if cl_exq else 1.0
-        )
-        print(f"# [ann-recall] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# ann recall failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _synth_scaling_docs(spark, base_dir: str, sizes: list[int]) -> dict:
-    """Deterministic documents-corpus generator for the scaling
-    instrument (round 11, judge ask #3): the driver testdata documents
-    span only 10x (500 -> 5,000 rows), which cannot resolve a
-    super-linear term — minhash_lsh_candidates even fitted -0.32 in
-    r10. This synthesizes a LOOKALIKE corpus (same 31-word vocabulary,
-    same 10..99-token uniform doc lengths, same schema; mild Zipf word
-    weights; 10% of docs are near-duplicates of a recent doc with ~5%
-    token mutation so the dedup families have real candidate work,
-    self-similar across sizes) at 500 / 5,000 / 50,000 docs — two full
-    decades. Smaller sizes are PREFIXES of the largest, so every point
-    measures the same distribution. Seeded RandomState(1106); cost
-    ~2 s driver-side + three parquet writes, rebuilt per run."""
-    import numpy as np
-    import pandas as pd
-
-    vocab = np.array(
-        "join hash row batch scan customer column filter small slow "
-        "merge order vector line data table agg value key stream "
-        "window spark a group part big sort query fast the dup".split()
-    )
-    rng = np.random.RandomState(1106)
-    probs = 1.0 / (np.arange(len(vocab)) + 5.0)
-    probs /= probs.sum()
-    n_max = max(sizes)
-    texts: list[str] = []
-    for i in range(n_max):
-        if i >= 20 and rng.rand() < 0.10:
-            toks = texts[rng.randint(max(0, i - 200), i)].split()
-            toks = [
-                w if rng.rand() >= 0.05 else vocab[rng.randint(len(vocab))]
-                for w in toks
-            ]
-        else:
-            toks = list(
-                vocab[rng.choice(len(vocab), size=rng.randint(10, 100), p=probs)]
-            )
-        texts.append(" ".join(toks))
-    pdf = pd.DataFrame(
-        {
-            "doc_id": np.arange(n_max, dtype=np.int64),
-            "text": texts,
-            "lang": "en",
-            "source": [f"src{i % 20}" for i in range(n_max)],
-        }
-    )
-    pdf["n_chars"] = pdf["text"].str.len().astype("int64")
-    dirs: dict[int, str] = {}
-    for n in sizes:
-        d = f"{base_dir}/n{n}"
-        (
-            spark.createDataFrame(pdf.iloc[:n])
-            .repartition(8)
-            .write.mode("overwrite")
-            .parquet(f"{d}/documents.parquet")
-        )
-        dirs[n] = d
-    return dirs
-
-
-def _bench_scaling(spark) -> dict:
-    """Scaling-curve instrument (round 10; corpus spread widened to
-    100x in round 11): the single-SF bench proves sf0.1 wall-clock,
-    but the 100 TB claim otherwise rests on plan-shape arguments
-    alone. Each flagship is timed at three sizes and the fitted
-    log-log slope of wall time vs PRIMARY-TABLE ROWS is published per
-    query alongside the raw (rows, sec) points.
-
-    SIZES: the TPC-H/embeddings families ride the driver SF dirs
-    (sf0.001/0.01/0.1). The documents families ride the SYNTHETIC
-    lookalike corpus (:func:`_synth_scaling_docs`) at 500 / 5,000 /
-    50,000 docs — a full 100x, two decades — because the driver
-    documents table is identical at sf0.001/0.01 and spans only 10x,
-    which floored r10's corpus exponents into noise (minhash fitted a
-    meaningless -0.32).
-
-    SENSITIVITY, stated honestly and DEMONSTRATED: at these sizes
-    fixed per-query overhead (~0.3-1 s of plan/codegen/scheduling)
-    floors what a cheap-per-row query can show — a near-zero exponent
-    means "overhead-dominated at the largest measured size", not
-    "O(1)". The POSITIVE control is embedding_neardup_exact_baseline:
-    expression cosine over an O(n^2) crossJoin, whose per-pair cost
-    DOES dominate overhead — it measures exponent ~1.96, proving the
-    instrument flags a genuinely quadratic flagship loudly whenever
-    the super-linear term carries real wall-clock. A blow-up too
-    cheap to register at the top size is by the same token not a
-    wall-clock risk until far larger scales, where the plan-shape
-    tests (no CartesianProduct, shuffle budgets, window lint) are the
-    guard. The raw points are published so the per-size wall-clocks
-    stand on their own. Single pass per (query, size): this is a
-    trend instrument, not a cross-round latency axis — the headline
-    medians own that.
-
-    Failure isolation (r10 ADVICE): each query times inside its own
-    try/except — a failure publishes an ``error`` entry for THAT
-    query and the rest of the set still measures; a warm-pass
-    failure is recorded on the entry instead of being swallowed."""
-    import math
-
-    DOC_SIZES = [500, 5_000, 50_000]
-    SCALING_SET = {
-        "q1_pricing_summary": ("sf", "lineitem", 1.0),
-        "minhash_lsh_candidates": ("docs", "documents", 1.0),
-        "cross_doc_span_dedup": ("docs", "documents", 1.0),
-        "image_phash_neardup_pairs": ("docs", "documents", 1.0),
-        "crawl_pipeline_end_to_end": ("docs", "documents", 1.0),
-        # Round 13 (VERDICT r12 ask #5): at sf0.1 every HEADLINE
-        # query's 8-vs-32-core ratio is ~1 — the headline can no
-        # longer resolve parallelism improvements. These corpus-tier
-        # capstones at the 50k-doc synthetic point are where the data
-        # path (not the scheduler) carries the wall-clock, so the
-        # driver's low-core bench run resolves a real core-count
-        # ratio on them (the adjudication surface for §2-class
-        # claims). Additions only; no existing member changed.
-        "gopher_repetition_docs": ("docs", "documents", 1.0),
-        "quality_gate_end_to_end": ("docs", "documents", 1.0),
-        "training_shard_files_end_to_end": ("docs", "documents", 1.0),
-        "ann_topk_cosine": ("sf", "embeddings", 2.0),
-        # the known-quadratic POSITIVE control (size-gated exact
-        # baseline, never a pipeline path): per-pair expression cost
-        # clears the overhead floor, so the quadratic shape IS
-        # measurable — ~1.96 at these SFs
-        "embedding_neardup_exact_baseline": ("sf", "embeddings", 2.0),
-    }
-    out: dict = {}
-    try:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from python_plugins_spark.queries import QUERIES
-
-        sf_dirs = [
-            d
-            for d in (
-                "/root/testdata/sf0.001",
-                "/root/testdata/sf0.01",
-                "/root/testdata/sf0.1",
-            )
-            if os.path.isdir(d)
-        ]
-        if not sf_dirs:
-            print("# scaling: no testdata SF dirs present", file=sys.stderr)
-            return out
-        doc_dirs = _synth_scaling_docs(
-            spark, os.path.join(SCRATCH, "scaling_docs"), DOC_SIZES
-        )
-
-        def _mat(df) -> int:
-            obs = Observation()
-            observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            observed.write.format("noop").mode("overwrite").save()
-            return obs.get["n"]
-
-        for name, (source, table, expected) in SCALING_SET.items():
-            fn = QUERIES.get(name)
-            if fn is None:
-                continue
-            dirs = (
-                sf_dirs if source == "sf"
-                else [doc_dirs[n] for n in DOC_SIZES]
-            )
-            entry: dict = {"table": table, "source": source,
-                           "expected": expected}
-            # untimed warm pass on the smallest size: the first
-            # execution of a query pays JIT/codegen (measured 3.1 s
-            # vs 0.74 s at 10x the data without this), which lands on
-            # the smallest point and corrupts the slope
-            try:
-                _mat(fn(spark, dirs[0]))
-            except Exception as exc:
-                entry["warm_error"] = str(exc)[:160]
-            try:
-                pts = []
-                for d in dirs:
-                    n_rows = (
-                        spark.read.parquet(f"{d}/{table}.parquet").count()
-                    )
-                    t0 = time.perf_counter()
-                    _mat(fn(spark, d))
-                    pts.append(
-                        (n_rows, round(time.perf_counter() - t0, 3))
-                    )
-                # least-squares slope of log t vs log n; duplicate-n
-                # points contribute as repeated samples
-                xs = [math.log(n) for n, _ in pts]
-                ys = [math.log(max(t, 1e-3)) for _, t in pts]
-                mx = sum(xs) / len(xs)
-                my = sum(ys) / len(ys)
-                sxx = sum((x - mx) ** 2 for x in xs)
-                # fewer than 2 distinct sizes -> no slope; publish
-                # null rather than NaN (non-strict JSON) or a fake
-                # number
-                entry["points"] = [{"rows": n, "sec": t} for n, t in pts]
-                entry["exponent"] = (
-                    round(
-                        sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-                        / sxx,
-                        3,
-                    )
-                    if sxx > 0
-                    else None
-                )
-            except Exception as exc:
-                # per-query isolation (r10 ADVICE): one failure must
-                # not drop the remaining queries from the payload
-                entry["error"] = str(exc)[:160]
-            out[name] = entry
-            print(f"# [scaling] {name}: {entry}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# scaling failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_lang_id_accuracy(spark) -> dict:
-    """Held-out language-ID accuracy (round 11, judge ask #4 —
-    mirroring lsh_recall/ann_recall): the fixed 92-sentence held-out
-    set (operators/langid_eval.py, 4 per language x 23 languages,
-    disjoint from every profile corpus), accuracy per TIER published
-    per round, with the misclassified list inline so a regression is
-    diagnosable from the artifact. Deterministic classifier +
-    deterministic sentences -> the pytest floor
-    (test_lang_id_holdout_accuracy) pins the current 1.0 exactly; a
-    profile regression as tiers grow now fails a test and moves this
-    number instead of silently shipping."""
-    out: dict = {}
-    try:
-        from python_plugins_spark.operators.langid_eval import (
-            lang_id_accuracy,
-        )
-
-        out = lang_id_accuracy(spark)
-        print(f"# [lang-id-accuracy] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# lang id accuracy failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_ann_serving(spark, sf_dir: str) -> dict:
-    """ANN serving crossover, MEASURED instead of asserted (round 11,
-    judge ask #2): a fixed 100-query batch at a fixed recall target
-    (>= 0.9) against (a) the exact block-grid scan (ann_topk_queries)
-    and (b) the PERSISTED trained-IVF index (build_ivf_index /
-    search_ivf_index, n_centroids = sqrt(N) per default_n_centroids),
-    at five clustered-corpus sizes up to 320k rows. Publishes per-path
-    median AND min of 3 runs (the spread IS part of the claim),
-    queries/sec, recall@10, index build time, and the corpus size
-    where IVF first wins on this run. Context for the `ann_recall` row's
-    ivf_trained_nprobe8_s ~8 s point: that row runs SELF-search
-    (queries == corpus), which replicates the whole corpus nprobe
-    times through the probe shuffle — the worst case for IVF; this
-    row is the intended bounded-|Q| serving shape, where the index's
-    O(|Q| * nprobe * N / sqrt(N)) work beats exact O(|Q| * N) once N
-    clears Spark's fixed per-job overhead (~1 s on this box)."""
-    out: dict = {}
-    try:
-        import shutil
-        import statistics as _stats
-
-        from pyspark.sql import functions as F
-
-        from python_plugins_spark.operators import similarity as S
-
-        def _mat(df) -> None:
-            df.write.format("noop").mode("overwrite").save()
-
-        K, NPROBE, N_Q = 10, 4, 100
-        # 5k / 20k / 80k / 160k / 320k: the crossover is BOX-STATE
-        # DEPENDENT within the 80-160k band (round 12, judge ask #3 —
-        # one probed-clean run measured exact 2.67 s at 80k with IVF
-        # already ahead at 1.11 s; another read exact 1.02-1.92 s
-        # there, overhead-floored, with the first decisive win at
-        # 160k). The claim published is therefore a BAND ("IVF wins
-        # from 80-160k rows on this box"), each point now carries its
-        # min alongside the median so the spread is in the artifact,
-        # and the 320k point puts the margin well clear of the ~1 s
-        # noise band in every observed box state.
-        sizes = [(50, 100), (100, 200), (200, 400), (400, 400), (400, 800)]
-        crossover_rows = None
-        pts = []
-        for n_clusters, per in sizes:
-            n = n_clusters * per
-            emb = S.clustered_embeddings(
-                spark, n_clusters=n_clusters, per_cluster=per, dim=64
-            ).localCheckpoint(eager=True)
-            # stride-sample the query batch so it spans ALL clusters
-            # (ids are sequential per cluster — limit(100) would take
-            # the whole batch from cluster 0, skewing every probe into
-            # one bucket cogroup and flattering the index)
-            stride = max(1, (n_clusters * per) // N_Q)
-            q = (
-                emb.filter(F.pmod(F.col("vec_id"), F.lit(stride)) == 0)
-                .orderBy("vec_id")
-                .limit(N_Q)
-                .localCheckpoint(eager=True)
-            )
-            _mat(S.ann_topk_queries(emb, q, "vec_id", "embedding", K))  # warm
-            ex = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _mat(S.ann_topk_queries(emb, q, "vec_id", "embedding", K))
-                ex.append(time.perf_counter() - t0)
-            t_exact = _stats.median(ex)
-            path = os.path.join(SCRATCH, f"ann_serving_{n}")
-            shutil.rmtree(path, ignore_errors=True)
-            t0 = time.perf_counter()
-            S.build_ivf_index(
-                emb, path, "vec_id", "embedding", n_centroids=None
-            )
-            t_build = time.perf_counter() - t0
-            _mat(S.search_ivf_index(
-                spark, path, q, "vec_id", "embedding", K, nprobe=NPROBE
-            ))  # warm
-            iv = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _mat(S.search_ivf_index(
-                    spark, path, q, "vec_id", "embedding", K, nprobe=NPROBE
-                ))
-                iv.append(time.perf_counter() - t0)
-            t_ivf = _stats.median(iv)
-            exact_nn: dict = {}
-            for r in S.ann_topk_queries(
-                emb, q, "vec_id", "embedding", K
-            ).collect():
-                exact_nn.setdefault(r.query_id, set()).add(r.neighbor_id)
-            got: dict = {}
-            for r in S.search_ivf_index(
-                spark, path, q, "vec_id", "embedding", K, nprobe=NPROBE
-            ).collect():
-                got.setdefault(r.query_id, set()).add(r.neighbor_id)
-            recall = sum(
-                len(exact_nn[qid] & got.get(qid, set())) / len(exact_nn[qid])
-                for qid in exact_nn
-            ) / len(exact_nn)
-            pt = {
-                "corpus_rows": n,
-                "exact_s": round(t_exact, 3),
-                "exact_s_min": round(min(ex), 3),
-                "ivf_s": round(t_ivf, 3),
-                "ivf_s_min": round(min(iv), 3),
-                "exact_qps": round(N_Q / t_exact, 1),
-                "ivf_qps": round(N_Q / t_ivf, 1),
-                "ivf_build_s": round(t_build, 1),
-                "recall_at_10": round(recall, 4),
-            }
-            pts.append(pt)
-            if crossover_rows is None and t_ivf < t_exact and recall >= 0.9:
-                crossover_rows = n
-            shutil.rmtree(path, ignore_errors=True)
-        out = {
-            "k": K,
-            "nprobe": NPROBE,
-            "n_queries": N_Q,
-            "n_centroids": "sqrt(N)",
-            "points": pts,
-            # first measured win ON THIS RUN; across box states the
-            # crossover sits in the 80-160k band (see docstring)
-            "ivf_wins_from_rows": crossover_rows,
-            "crossover_band_rows": "80k-160k (box-state dependent)",
-        }
-        print(f"# [ann-serving] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# ann serving failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_bpe_encoder(spark, sf_dir: str) -> dict:
-    """BPE-encoder vocabulary-size independence (round 11, clears the
-    r10 weak mark): the production rank-based encoder's per-token cost
-    must NOT grow with the merge-list size — it looks up only the
-    pairs PRESENT in each word. Times corpus encoding with the real 12
-    learned merges and with 12 + 1,012 inert filler merges (pairs over
-    an out-of-alphabet character, so results are identical — appended
-    AFTER the real merges they can never win the rank argmin) and
-    publishes the cost ratio, which should sit ~1.0; the naive
-    apply-every-merge encoder (bpe_encode_reference) is timed at the
-    same 1,024 merges on a BOUNDED 200-doc sample as the contrast —
-    its cost is proportional to |merges|. pytest floor:
-    test_bpe_encoder_vocab_independence."""
-    out: dict = {}
-    try:
-        from pyspark.sql import functions as F
-
-        from python_plugins_spark.functions import tokens
-        from python_plugins_spark.operators.tokenizer import (
-            bpe_encode,
-            bpe_encode_reference,
-            bpe_train,
-        )
-        from python_plugins_spark.sources.io import load_table
-
-        def _mat(df) -> None:
-            df.write.format("noop").mode("overwrite").save()
-
-        docs = load_table(spark, "documents", sf_dir)
-        merges, _ = bpe_train(docs, "text", 12)
-        filler = [(f"¤{i}", f"¤{i}x") for i in range(1012)]
-        big = list(merges) + filler
-        out["n_tokens"] = docs.select(
-            F.sum(F.size(tokens(F.col("text")))).alias("n")
-        ).collect()[0]["n"]
-        _mat(bpe_encode(docs, "text", "doc_id", merges))  # warm/codegen
-        for label, mm in (("merges12", merges), ("merges1024", big)):
-            t0 = time.perf_counter()
-            _mat(bpe_encode(docs, "text", "doc_id", mm))
-            out[f"{label}_s"] = round(time.perf_counter() - t0, 3)
-        out["cost_ratio_1024_vs_12"] = round(
-            out["merges1024_s"] / max(out["merges12_s"], 1e-9), 3
-        )
-        out["tokens_per_sec_1024"] = round(
-            out["n_tokens"] / max(out["merges1024_s"], 1e-9)
-        )
-        # contrast: the naive per-occurrence encoder at the same 1,024
-        # merges, on a bounded sample (it is O(|merges|) per token —
-        # running it corpus-wide at the bench SF would dominate the
-        # whole bench, which is exactly the point)
-        sample = docs.orderBy("doc_id").limit(200).localCheckpoint()
-        n_sample_tokens = sample.select(
-            F.sum(F.size(tokens(F.col("text")))).alias("n")
-        ).collect()[0]["n"]
-        t0 = time.perf_counter()
-        _mat(bpe_encode_reference(sample, "text", "doc_id", big))
-        naive_s = round(time.perf_counter() - t0, 3)
-        out["naive_1024_sample_s"] = naive_s
-        out["naive_tokens_per_sec_1024"] = round(
-            n_sample_tokens / max(naive_s, 1e-9)
-        )
-        print(f"# [bpe-encoder] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# bpe encoder bench failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_bpe_train(spark, sf_dir: str) -> dict:
-    """Vocabulary-scale BPE TRAINING (round 12, judge ask #1): the
-    driver-local merge loop (one distributed word-count pass +
-    incremental heap training — bpe_train(merge_loop='local'), the
-    HF-tokenizers shape) vs the per-round distributed loop whose
-    ~0.2-0.5 s/merge job-scheduling floor made a 32k-merge vocabulary
-    a multi-hour non-starter. Publishes: the local path's total time
-    for 1,000 merges at the bench SF, the distributed loop's measured
-    per-merge cost at 12 merges (and the implied 1k/32k extrapolation
-    — running the per-round loop to 1k in the bench would alone take
-    ~5 minutes, which is exactly the pathology), the number of merges
-    actually learnable from the corpus vocabulary, and a prefix-match
-    bit (the deep local run's first 12 merges equal the distributed
-    12-merge run — the greedy prefix property, so the speedup changes
-    WHEN work happens, never WHAT is learned). Bit-equivalence at
-    equal depth is separately pinned in test_bpe_local_vs_distributed
-    and by the unchanged DuckDB oracles on every bpe_* registry
-    entry."""
-    out: dict = {}
-    try:
-        from python_plugins_spark.operators.tokenizer import bpe_train
-        from python_plugins_spark.sources.io import load_table
-
-        docs = load_table(spark, "documents", sf_dir)
-        t0 = time.perf_counter()
-        m_dist, _ = bpe_train(docs, "text", 12, merge_loop="distributed")
-        dist_s = time.perf_counter() - t0
-        out["distributed_12_s"] = round(dist_s, 3)
-        out["distributed_per_merge_s"] = round(dist_s / 12, 3)
-        out["distributed_1k_extrapolated_s"] = round(dist_s / 12 * 1000, 1)
-        t0 = time.perf_counter()
-        m_loc, _ = bpe_train(docs, "text", 1000, merge_loop="local")
-        out["local_1k_s"] = round(time.perf_counter() - t0, 3)
-        out["local_merges_learned"] = len(m_loc)
-        out["prefix_match_12"] = m_loc[:12] == m_dist
-        out["speedup_at_1k"] = round(
-            out["distributed_1k_extrapolated_s"]
-            / max(out["local_1k_s"], 1e-9),
-            1,
-        )
-        # PRODUCTION-VOCABULARY stress (the judge's actual concern is
-        # 32k merges, and the bench corpus vocabulary exhausts after
-        # ~1k): a deterministic synthetic 50k-distinct-word corpus
-        # (Zipf-ish counts, 6-14 char words over a 12-letter alphabet
-        # — enough pair diversity to sustain deep merging) trained to
-        # 4,000 merges entirely driver-local. This is the merge loop's
-        # own cost at production depth, independent of corpus scan
-        # cost (which stays the one distributed pass regardless).
-        import time as _t
-
-        def _synth_words(n):
-            letters = "etaoinshrdlu"
-            rng_state = 1234567891
-            for i in range(n):
-                rng_state = (rng_state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-                ln = 6 + (rng_state >> 8) % 9
-                w = []
-                s = rng_state
-                for _ in range(ln):
-                    s = (s * 2862933555777941757 + 3037000493) % (1 << 64)
-                    w.append(letters[(s >> 16) % 12])
-                yield "".join(w), 1 + (i * 7919) % 997
-
-        words_df = spark.createDataFrame(
-            [(w, c) for w, c in _synth_words(50_000)], "w string, cnt long"
-        )
-        # feed through the same entry point: a one-column corpus whose
-        # "documents" are the words repeated cnt times would be
-        # wasteful to materialize — instead time the trainer on a
-        # corpus frame that tokenizes to exactly this vocabulary
-        corpus = words_df.selectExpr(
-            "concat_ws(' ', array_repeat(w, cast(least(cnt, 20) as int))) AS text"
-        )
-        t0 = _t.perf_counter()
-        m_big, _ = bpe_train(corpus, "text", 4000, merge_loop="local")
-        out["synthetic_50k_vocab_4k_merges_s"] = round(
-            _t.perf_counter() - t0, 3
-        )
-        out["synthetic_merges_learned"] = len(m_big)
-        print(f"# [bpe-train] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# bpe train bench failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_decontam_recall(spark, sf_dir: str) -> dict:
-    """Cross-corpus decontamination recall, measured per round at the
-    bench SF (round 8, mirroring lsh_recall): ground truth is the
-    exact inverted-index Jaccard baseline restricted to cross-corpus
-    (train x benchmark) pairs, computed in DuckDB — independent of the
-    Spark LSH/verify machinery; recall = fraction of true contaminated
-    pairs the decontam pass surfaces. pytest floor >= 0.95
-    (test_decontam_recall_vs_exact_baseline)."""
-    out: dict = {}
-    try:
-        import duckdb
-
-        from python_plugins_spark.operators import dedup as D
-        from python_plugins_spark.queries import QUERIES
-
-        t0 = time.perf_counter()
-        found = {
-            (r.train_id, r.bench_id)
-            for r in QUERIES["cross_corpus_decontam"](spark, sf_dir).collect()
-        }
-        found_s = round(time.perf_counter() - t0, 3)
-        con = duckdb.connect()
-        con.sql(f"CREATE VIEW documents AS FROM '{sf_dir}/documents.parquet'")
-        t0 = time.perf_counter()
-        truth = {
-            (b if a % 10 == 0 else a, a if a % 10 == 0 else b)
-            for a, b, _j in con.sql(
-                D.ngram_jaccard_pairs_oracle_sql(
-                    "documents", "text", "doc_id", 0.5
-                )
-            ).fetchall()
-            if (a % 10 == 0) != (b % 10 == 0)
-        }
-        truth_s = round(time.perf_counter() - t0, 3)
-        hit = len(truth & found)
-        out = {
-            "threshold": 0.5,
-            "true_pairs": len(truth),
-            "found_pairs": len(found),
-            "found": hit,
-            "recall": round(hit / len(truth), 4) if truth else 1.0,
-            "decontam_s": found_s,
-            "exact_baseline_s": truth_s,
-        }
-        print(f"# [decontam-recall] {out}", file=sys.stderr)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# decontam recall failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_msgbus_phases(spark, sf_dir: str) -> dict[str, float]:
-    """Split msgbus_stream_events (the board's slowest extra) into its
-    phases — produce (executor-side segment writes), drain (streaming
-    read -> in-stream JSON decode -> parquet file sink), aggregate
-    (batch read-back) — so the next optimization targets the real
-    cost, not a guess. Mirrors the registry query exactly."""
-    from pyspark.sql import functions as F
-
-    from python_plugins_spark.sources import msgbus
-
-    out: dict[str, float] = {}
-    try:
-        msgbus.register(spark)
-        root = os.path.join(SCRATCH, "bench_msgbus_phases")
-        shutil.rmtree(root, ignore_errors=True)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        payload = ev.select(
-            F.col("user_id").cast("string").alias("k"),
-            F.to_json(
-                F.struct("event_id", "event_type", "value", "user_id")
-            ).alias("v"),
-            "ts",
-        )
-
-        t0 = time.perf_counter()
-        msgbus.produce_dataframe(
-            payload, root, "events", key_col="k", value_col="v",
-            ts_col="ts", partitions=4,
-        )
-        out["produce_s"] = round(time.perf_counter() - t0, 3)
-
-        drain_dir = os.path.join(root, "_drain_out")
-        ckpt_dir = os.path.join(root, "_drain_ckpt")
-        t0 = time.perf_counter()
-        q = (
-            spark.readStream.format("msgbus")
-            .option("path", root)
-            .option("topic", "events")
-            .load()
-            .select(
-                F.from_json(
-                    F.col("value").cast("string"),
-                    "event_id long, event_type string, value double, user_id long",
-                ).alias("j")
-            )
-            .select("j.*")
-            .writeStream.format("parquet")
-            .option("path", drain_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out["drain_s"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        spark.read.parquet(drain_dir).groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-            F.countDistinct("user_id").alias("users"),
-        ).collect()
-        out["aggregate_s"] = round(time.perf_counter() - t0, 3)
-        for k, v in out.items():
-            print(f"# [msgbus-phase] {k}: {v:.3f}s", file=sys.stderr)
-        shutil.rmtree(root, ignore_errors=True)
-    except Exception as exc:  # the section never fails the bench
-        print(f"# msgbus phases failed: {exc}", file=sys.stderr)
-    return out
-
-
-def _bench_lakehouse(spark, sf_dir: str) -> dict[str, float]:
-    """Time the Delta/Iceberg log layers end-to-end at the bench SF:
-    overwrite, appends crossing a checkpoint boundary, replay read
-    (forcing full log/metadata resolution in a fresh snapshot), and
-    derived CDC. Timings are single-pass (IO-dominated)."""
-    from pyspark.sql import functions as F
-
-    out: dict[str, float] = {}
-
-    def timed(name, fn):
-        try:
-            t0 = time.perf_counter()
-            fn()
-            out[name] = round(time.perf_counter() - t0, 3)
-            print(f"# [lakehouse] {name}: {out[name]:.3f}s", file=sys.stderr)
-        except Exception as exc:  # the section never fails the bench
-            print(f"# lakehouse {name} failed: {exc}", file=sys.stderr)
-
-    base = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    )
-    # 12 equal slices by key range: 1 overwrite + 11 appends crosses
-    # the checkpoint interval (10) exactly once.
-    slices = [base.filter((F.col("o_orderkey") % 12) == i) for i in range(12)]
-
-    import python_plugins_spark.sources.delta_py as dp
-    import python_plugins_spark.sources.iceberg_py as ip
-
-    shutil.rmtree(_SCRATCH, ignore_errors=True)
-    dtbl = os.path.join(_SCRATCH, "delta_orders")
-    itbl = os.path.join(_SCRATCH, "iceberg_orders")
-
-    timed("delta_write_overwrite", lambda: dp.write_delta(slices[0], dtbl, "overwrite"))
-    timed(
-        "delta_appends_through_checkpoint",
-        lambda: [dp.write_delta(s, dtbl, "append") for s in slices[1:]],
-    )
-    timed(
-        "delta_replay_read",
-        lambda: dp.read_delta(spark, dtbl)
-        .groupBy("o_orderstatus").agg(F.count("*"), F.sum("o_totalprice"))
-        .collect(),
-    )
-    timed(
-        "delta_cdc_read",
-        lambda: dp.table_changes(spark, dtbl, 1)
-        .groupBy("_change_type", "_commit_version").count().collect(),
-    )
-
-    timed("iceberg_write_overwrite", lambda: ip.write_iceberg(slices[0], itbl, "overwrite"))
-    timed(
-        "iceberg_appends",
-        lambda: [ip.write_iceberg(s, itbl, "append") for s in slices[1:]],
-    )
-    timed(
-        "iceberg_replay_read",
-        lambda: ip.read_iceberg(spark, itbl)
-        .groupBy("o_orderstatus").agg(F.count("*"), F.sum("o_totalprice"))
-        .collect(),
-    )
-    timed(
-        "iceberg_cdc_read",
-        lambda: ip.table_changes_iceberg(spark, itbl, 2)
-        .groupBy("_change_type", "_commit_snapshot").count().collect(),
-    )
-    # round-4 metadata-layer operations (all metadata-dominated —
-    # their cost must stay flat as the data grows)
-    timed("iceberg_rewrite_manifests", lambda: ip.rewrite_manifests(itbl))
-    timed(
-        "iceberg_branch_write_and_ff",
-        lambda: (
-            ip.create_ref(itbl, "bench_branch", "branch"),
-            ip.write_iceberg(
-                slices[0].limit(1000), itbl, "append", branch="bench_branch"
-            ),
-            ip.fast_forward_main(itbl, "bench_branch"),
-        ),
-    )
-    timed(
-        "delta_column_mapping_rename",
-        lambda: (
-            dp.enable_column_mapping(dtbl),
-            dp.rename_column(dtbl, "o_orderstatus", "status"),
-            dp.read_delta(spark, dtbl).groupBy("status").count().collect(),
-        ),
-    )
-    # round-6 zero-copy forks/imports: the claim is O(metadata), so
-    # the timing itself is the evidence — it must stay flat as the
-    # table grows (compare across SFs)
-    timed(
-        "delta_shallow_clone",
-        lambda: dp.shallow_clone(dtbl, os.path.join(_SCRATCH, "delta_fork")),
-    )
-    timed(
-        "iceberg_snapshot_fork",
-        lambda: ip.snapshot_iceberg(
-            itbl, os.path.join(_SCRATCH, "iceberg_fork")
-        ),
-    )
-    timed(
-        "iceberg_add_files_import",
-        lambda: (
-            ip.write_iceberg(
-                spark.read.parquet(f"{sf_dir}/orders.parquet").limit(0),
-                os.path.join(_SCRATCH, "iceberg_import"), "overwrite",
-            ),
-            ip.add_files_iceberg(
-                os.path.join(_SCRATCH, "iceberg_import"),
-                [f"{sf_dir}/orders.parquet"],
-            ),
-        ),
-    )
-    shutil.rmtree(_SCRATCH, ignore_errors=True)
-    return out
 
 
 if __name__ == "__main__":

@@ -26,7 +26,7 @@ as an idiomatic Spark DataFrame engine:
 import os
 
 #: Scratch directory of this checkout, ``<checkout>/.scratch`` (git-ignored):
-#: fixtures, tables and indexes that queries, tests and ``bench.py`` write.
+#: fixtures, tables and indexes that queries and tests write.
 #: Derived from the package's own location, so two checkouts never share it.
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 

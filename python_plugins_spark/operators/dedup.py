@@ -29,8 +29,7 @@ drops pathological buckets BEFORE the quadratic local pair expansion
 (what production dedup pipelines do; run exact dedup first so
 identical boilerplate never reaches LSH). The cap provably does not
 change recall on non-pathological pairs — pytest-pinned
-(test_minhash_skew_cap_bounds_boilerplate) and measured per round
-(bench_detail.json lsh_skew).
+(test_minhash_skew_cap_bounds_boilerplate).
 """
 
 from __future__ import annotations

@@ -3,14 +3,12 @@
 The 23-language family's profiles are trained on tiny in-repo fixture
 corpora (the honesty contract — see ``langid.py``), and until round 11
 its per-round quality evidence was hash-matching + per-tier pytests on
-one sentence each. This module is the ``lsh_recall``/``ann_recall``
-analogue for language ID (r10 judge ask #4): a FIXED held-out sentence
+one sentence each. This module is the analogue for language ID of the
+LSH and IVF recall tests (r10 judge ask #4): a FIXED held-out sentence
 set — written for this evaluation, disjoint from every profile corpus
 and every training fixture — with four sentences per language, and an
-accuracy function the bench publishes per round
-(``bench_detail.json["lang_id_accuracy"]``) and pytest floors
-(``test_lang_id_holdout_accuracy``), so a profile regression as tiers
-grow fails a test and moves a published number instead of silently
+accuracy function that pytest floors (``test_lang_id_holdout_accuracy``),
+so a profile regression as tiers grow fails a test instead of silently
 shipping.
 
 Accuracy is grouped by the TRUE language's tier (a misroute at the

@@ -386,12 +386,11 @@ def phash_neardup_pairs(
     anti-join that sheds their rows BEFORE the pair join, exactly
     like its text twin ``minhash_lsh_pairs(max_bucket=)``. The cap
     provably preserves every pair outside the shed buckets —
-    pytest-pinned (test_phash_skew_cap_bounds_degenerate_cluster)
-    and measured per round (bench_detail.json phash_skew, mirroring
-    lsh_skew). Production recipe: run radius-0 dedup (the
-    ``image_dhash_dedup`` window) FIRST so byte-distinct
-    perceptual-identical copies never reach the matcher, then cap
-    what remains."""
+    pytest-pinned (test_phash_skew_cap_bounds_degenerate_cluster,
+    the twin of test_minhash_skew_cap_bounds_boilerplate). Production
+    recipe: run radius-0 dedup (the ``image_dhash_dedup`` window)
+    FIRST so byte-distinct perceptual-identical copies never reach the
+    matcher, then cap what remains."""
     if max_hamming >= bands:
         raise ValueError(
             f"max_hamming={max_hamming} needs at least {max_hamming + 1} "

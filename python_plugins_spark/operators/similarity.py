@@ -395,10 +395,11 @@ def ann_topk_queries(
     corpus into ``n_corpus_blocks``, the (qblk, cblk) grid assembles
     with a plain equi-join (no CartesianProduct, no driver data), and
     each cell scores with one BLAS matmul. Compute is the unavoidable
-    O(|Q| * N) of exact serving — the `ann_serving` bench row measures
-    where the trained-IVF index's O(|Q| * N * nprobe / n_centroids)
-    beats it. Rows whose neighbor id equals the query id are excluded
-    (queries drawn from the corpus don't match themselves), matching
+    O(|Q| * N) of exact serving; the trained-IVF index's
+    O(|Q| * N * nprobe / n_centroids) beats it past ~80k-160k corpus
+    rows (measured in round 12, see ``ann_serving_exact_topk``). Rows
+    whose neighbor id equals the query id are excluded (queries drawn
+    from the corpus don't match themselves), matching
     :func:`search_ivf_index`. Ranking: (round(cos, 6) DESC,
     neighbor_id ASC).
 
@@ -476,7 +477,7 @@ def ivf_ann_topk(
     """IVF approximate top-k. Without ``centroids`` the index is
     UNTRAINED: centroid vectors are the ``n_centroids`` lowest-id rows
     (deterministic but arbitrary — on clustered data recall suffers
-    badly; the measured gap is published in the ann_recall bench row).
+    badly; test_ivf_trained_recall_clustered pins the gap).
     Pass ``centroids`` (a ``(n_centroids, dim)`` array from
     :func:`ivf_train_centroids`) for the trained index real serving
     uses. Every vector is assigned to its nearest centroid; each query
@@ -487,11 +488,11 @@ def ivf_ann_topk(
     bucket's worth of candidates with ONE BLAS matmul (Arrow batch,
     the ann_topk_blocked trick; the per-pair interpreted expression
     cosine this replaced made the approximate path 2.7x SLOWER than
-    the exact blocked search at bench SF — measured by the ann_recall
-    bench row). Block-local top-k per query leaves nprobe*k rows per
-    query for the final partitioned-window reduce. Approximate:
-    recall vs brute force is tested and measured per round
-    (bench_detail.json ann_recall), not assumed."""
+    the exact blocked search at bench SF). Block-local top-k per query
+    leaves nprobe*k rows per query for the final partitioned-window
+    reduce. Approximate: recall vs brute force is tested
+    (test_ivf_recall, test_ivf_trained_recall_clustered), not
+    assumed."""
     from python_plugins_spark.sources.io import spread_scan
 
     # Round 12 (guide §2.4): bucket ASSIGNMENT used to be a broadcast

@@ -3,8 +3,8 @@
 Every implemented operator (SURVEY.md §2) appears here as a named query
 ``(spark, sf_dir) -> DataFrame`` together with the ANSI/DuckDB SQL that
 computes the identical result on the same parquet tables. The driver
-hash-compares the two at sf=0.01 (CORRECTNESS gate); ``bench.py`` times
-the headline subset at sf=0.1.
+hash-compares the two at sf=0.01 (CORRECTNESS gate); ``bench.py`` and
+``perfbench`` time the headline subset ``BENCH_QUERIES`` at sf=0.1.
 
 Engine-portability conventions (so value hashes match):
 
@@ -44,8 +44,9 @@ from python_plugins_spark.sources.io import load_table
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Headline queries timed by bench.py (a representative cross-section:
-# scan+agg, multi-join, window, transform, dedup, similarity, text).
+# Headline queries timed by bench.py and perfbench's headline workload, in
+# this order (a representative cross-section: scan+agg, multi-join,
+# window, transform, dedup, similarity, text).
 BENCH_QUERIES = [
     "q1_pricing_summary",
     "q3_top_orders",

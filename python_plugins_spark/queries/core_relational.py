@@ -1083,16 +1083,15 @@ def ann_serving_exact_topk(spark, sf_dir):
     """Exact top-k in the SERVING shape (round 11): a bounded
     100-query batch against the whole corpus via the block-grid BLAS
     path (operators/similarity.py ann_topk_queries) — the baseline
-    the trained-IVF index must beat, measured head-to-head in the
-    ``ann_serving`` bench row. The measured crossover is BOX-STATE
-    DEPENDENT within the 80k-160k corpus-row band (round 12): one
-    probed-clean run had the index decisively ahead already at 80k
-    (1.11 s vs 2.67 s exact, recall@10 0.997); another read exact
-    1.02-1.92 s at 80k — overhead-floored, both paths in the noise —
-    with the first clear win at 160k. The bench row publishes
-    min+median of 3 runs per point and a 320k point whose margin
-    clears the noise band in every observed box state. Queries are
-    the lowest 100 vec_ids, so the oracle replays the same batch."""
+    the trained-IVF index must beat. The measured crossover is
+    BOX-STATE DEPENDENT within the 80k-160k corpus-row band (round 12,
+    head to head): one probed-clean run had the index decisively
+    ahead already at 80k (1.11 s vs 2.67 s exact, recall@10 0.997);
+    another read exact 1.02-1.92 s at 80k — overhead-floored, both
+    paths in the noise — with the first clear win at 160k. At 320k
+    the margin cleared the noise band in every observed box state.
+    Queries are the lowest 100 vec_ids, so the oracle replays the
+    same batch."""
     emb = load_table(spark, "embeddings", sf_dir)
     q = emb.orderBy("vec_id").limit(100)
     return S.ann_topk_queries(emb, q, "vec_id", "embedding", 10)
@@ -1101,10 +1100,9 @@ def ann_serving_exact_topk(spark, sf_dir):
 @register("ann_topk_ivf")
 def ann_topk_ivf(spark, sf_dir):
     """IVF approximate top-k, UNTRAINED index (no SQL oracle —
-    approximate by design; recall vs brute force is asserted in tests
-    and tracked in the ann_recall bench row). Kept as the baseline
-    point of the recall curve; the serving-quality path is
-    ``ann_topk_ivf_trained``."""
+    approximate by design; recall vs brute force is asserted in
+    test_ivf_recall). Kept as the baseline point of the recall curve;
+    the serving-quality path is ``ann_topk_ivf_trained``."""
     emb = load_table(spark, "embeddings", sf_dir)
     return S.ivf_ann_topk(emb, "vec_id", "embedding", k=5, n_centroids=16, nprobe=4)
 
@@ -1117,9 +1115,8 @@ def ann_topk_ivf_trained(spark, sf_dir):
     distributed partial-sum refinement passes over the full corpus —
     replaces the untrained lowest-id centroid convention. On the
     planted-cluster fixture this lifts recall@5 from ~0.63 to >0.99
-    at nprobe=2 (measured in the ann_recall bench row; floors pinned
-    in test_ivf_trained_recall_clustered). No SQL oracle —
-    approximate by design, like ann_topk_ivf."""
+    at nprobe=2 (floors pinned in test_ivf_trained_recall_clustered).
+    No SQL oracle — approximate by design, like ann_topk_ivf."""
     emb = load_table(spark, "embeddings", sf_dir)
     cents = S.ivf_train_centroids(emb, "embedding", k=16)
     return S.ivf_ann_topk(

@@ -1124,7 +1124,7 @@ def pq_ann_topk_rerank(spark, sf_dir):
     exact math touches only the shortlist. COSINE-metric serving:
     train/encode/query/rerank frames are all L2-normalized first, so
     the Euclidean PQ machinery ranks by cosine (skipping this cost
-    ~0.35 recall vs cosine ground truth — measured in ann_recall);
+    ~0.35 recall vs cosine ground truth);
     codebooks use the canonical 8-bit (k=256) codewords. Approximate
     by design; recall floors asserted in tests (like IVF)."""
     from python_plugins_spark.operators.similarity import (
@@ -1159,9 +1159,9 @@ def bpe_train_merges_docs(spark, sf_dir):
     LOCAL over that vocabulary-bounded table (round 12 — the
     HF-tokenizers shape: incremental pair counts, lazy heap argmax;
     one Spark job total, so a real 32k-merge vocabulary trains in
-    seconds instead of 32k sequential per-round jobs — the bench's
-    `bpe_train` row measures both). Deterministic (count desc, pair
-    asc tie-break). FULLY ORACLE-CHECKED since round 10: the DuckDB twin
+    seconds instead of 32k sequential per-round jobs;
+    test_bpe_local_vs_distributed pins both loops to the same merges).
+    Deterministic (count desc, pair asc tie-break). FULLY ORACLE-CHECKED since round 10: the DuckDB twin
     unrolls the 12 merge rounds as materialized CTE blocks and
     replays the greedy left-to-right rewrite via a chain-parity rule
     (see bpe_train_oracle_sql — a plain replace-all is NOT greedy

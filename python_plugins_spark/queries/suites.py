@@ -3146,8 +3146,7 @@ def image_phash_neardup_pairs(spark, sf_dir):
     (solid-color placeholders with one shared dHash) are shed with
     the operator's ``max_bucket`` cap — the minhash_lsh_pairs twin,
     proven clean-pair-preserving by
-    test_phash_skew_cap_bounds_degenerate_cluster and measured per
-    round (bench_detail.json phash_skew); the gate query runs
+    test_phash_skew_cap_bounds_degenerate_cluster; the gate query runs
     uncapped so it stays bit-equal to the exhaustive oracle."""
     from python_plugins_spark.operators.phash import (
         image_dhash, phash_neardup_pairs, synth_block_image_payloads,

@@ -5,11 +5,12 @@ pipelines (reference ``pom.xml:134-137`` declares both
 ``cdap-data-pipeline`` and ``cdap-data-streams`` parents) but contains
 zero streaming-specific code — the host platform ran it per-record
 either way. Our equivalent: :func:`python_transform` works on a
-streaming DataFrame as-is (``mapInPandas`` is streaming-compatible);
-this module adds what CDAP's platform provided around it — watermarks,
-tumbling/sliding/session windows, stateful aggregation, and the
-multi-port split for streams (via ``foreachBatch``, since a streaming
-plan can't be filtered three ways without recomputation).
+streaming DataFrame as-is (its record path, ``mapInArrow``, is
+streaming-compatible); this module adds what CDAP's platform provided
+around it — watermarks, tumbling/sliding/session windows, stateful
+aggregation, and the multi-port split for streams (via
+``foreachBatch``, since a streaming plan can't be filtered three ways
+without recomputation).
 """
 
 from __future__ import annotations

@@ -104,7 +104,6 @@ def main() -> int:
             "ok": rc == 0 and headline is not None,
             "sf_dir": bench_sf,
             "headline_s": (headline or {}).get("value"),
-            "detail": "bench_detail.json",
             "wall_s": dt,
         }
         print(f"   headline={out['bench']['headline_s']}s in {dt}s")

@@ -100,8 +100,7 @@ def test_minhash_lsh_recall_vs_exact_baseline(spark, sf_dir):
     independent of the Spark MinHash machinery. (8 bands x 4 rows gives
     P(candidate) = 1-(1-s^4)^8 ~ 0.93 at s=0.5 per pair and >0.999 at
     s=0.7; the corpus' planted near-dups sit well above threshold, so
-    the empirical number should be 1.0 — bench.py publishes the same
-    measurement per round at the bench SF.)"""
+    the empirical number should be 1.0.)"""
     import duckdb
 
     docs = load_table(spark, "documents", sf_dir)
@@ -127,9 +126,7 @@ def test_decontam_recall_vs_exact_baseline(spark, sf_dir):
     LSH-candidates -> exact-Jaccard decontam pass must surface >=95%
     of the TRUE cross-corpus (train x benchmark) Jaccard>=0.5 pairs,
     measured against the exact inverted-index baseline computed in
-    DuckDB — independent of the Spark machinery. bench.py publishes
-    the same measurement per round at the bench SF
-    (bench_detail.json decontam_recall)."""
+    DuckDB — independent of the Spark machinery."""
     import duckdb
 
     from python_plugins_spark.queries import QUERIES
@@ -1271,9 +1268,8 @@ def test_bpe_local_vs_distributed(spark):
     adversarial a==b-heavy corpus where greedy-rewrite parity matters,
     (b) a byte-level non-ASCII corpus, and (c) deep vocabularies (the
     local path's merge count exceeding what the fixture supports ends
-    identically). Also pins the greedy prefix property the bench's
-    bpe_train row relies on: the first k merges of an n>k-merge run
-    equal the k-merge run."""
+    identically). Also pins the greedy prefix property: the first k
+    merges of an n>k-merge run equal the k-merge run."""
     import random
 
     from python_plugins_spark.operators.tokenizer import (
@@ -4247,7 +4243,7 @@ def test_lang_id_holdout_accuracy(spark):
     # HARD subset (round 12, judge ask #7): short/noisy/mixed cases
     # where the instrument is EXPECTED below 1.0 — pinned exactly
     # (deterministic classifier + fixed set), so profile work that
-    # moves it shows up here and in the published bench row. Current
+    # moves it shows up here. Current
     # state: mixed (code-switching) nearly solved, short fragments
     # and digit-diluted lines confuse within-script neighbors
     # (ru/uk/bg, the sv cluster, ne->hi).

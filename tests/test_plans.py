@@ -1001,96 +1001,3 @@ def test_round9_queries_shuffle_budget(spark, sf_dir):
         assert count_shuffles(df) == budget, name
         assert "CartesianProduct" not in plan_str(df), name
 
-
-def test_headline_v2_regression_budget():
-    """headline_v2 as a first-class gate: the committed
-    bench_detail.json's per-member medians must stay within 1.5x their
-    round-9 medians on a clean-fingerprint box — a v2 regression fails
-    HERE instead of surfacing as cross-round narrative. Skips when the
-    committed detail is not a full sf0.1 run (a sf0.01 smoke is not
-    comparable) or when the box fingerprint recorded WITH the run
-    explains the drift (round 12, judge ask #2 — the r11 driver bench
-    started at loadavg 2.7 chained after the correctness sweep,
-    overwrote bench_detail.json, and turned the suite red on a
-    number that was environment, not engine): degraded memory
-    bandwidth (membw < 12, the documented ~15% uniform-drift mode),
-    a loaded box at start (loadavg_1m_start > 1.5), or multi-core
-    calibration drift beyond 10% vs the prior committed run
-    (calib_par_drift_pct). A true engine regression on a
-    clean-fingerprint run still fails."""
-    import json
-    import os
-
-    import pytest
-
-    detail_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "bench_detail.json",
-    )
-    if not os.path.exists(detail_path):
-        pytest.skip("no committed bench_detail.json")
-    d = json.load(open(detail_path))
-    if d.get("sf") != 0.1:
-        pytest.skip(f"committed detail is sf={d.get('sf')}, gate is sf0.1")
-    env = d.get("env") or {}
-    membw = env.get("membw_gbps")
-    if membw is not None and membw < 12:
-        pytest.skip(f"degraded box fingerprint (membw {membw} GB/s)")
-    load0 = env.get("loadavg_1m_start")
-    if load0 is not None and load0 > 1.5:
-        pytest.skip(f"loaded box at bench start (loadavg {load0})")
-    # positive drift only: a SLOWER box explains inflated timings; a
-    # faster one (negative drift — e.g. the prior committed detail was
-    # itself a contended run) only makes the gate stricter and must
-    # not suppress it
-    pdrift = env.get("calib_par_drift_pct")
-    if pdrift is not None and pdrift > 10:
-        pytest.skip(f"multi-core calibration drift +{pdrift}% vs prior run")
-    # in-run degradation (round 12): the START fingerprint cannot see
-    # a box that degrades MID-run (observed: clean start — calib
-    # 0.909 s, membw 17.6, loadavg 0.39 — yet the end-of-run probe
-    # read 1.054 s and the extras section carried 3-4x inflated
-    # medians while the headline pass, run first, stayed clean). The
-    # bench records one more fixed-work calibration loop at the end
-    # (calib_s_end); a start->end slowdown beyond 10% marks the later
-    # sections box-contended. Positive drift only, same rationale as
-    # calib_par_drift_pct above.
-    cs, ce = env.get("calib_s"), env.get("calib_s_end")
-    if cs and ce and (ce / cs - 1) * 100 > 10:
-        pytest.skip(
-            f"in-run calibration degradation {cs} -> {ce} s "
-            f"(+{(ce / cs - 1) * 100:.0f}%)"
-        )
-    # round-9 medians (BENCH_r09 bench_detail, sf0.1, clean box)
-    R9 = {
-        "ann_topk_cosine": 1.091,
-        "bm25_topk_docs": 1.372,
-        "crawl_pipeline_end_to_end": 3.025,
-        "dedup_exact_documents": 0.174,
-        "delta_generated_columns": 0.769,
-        "gopher_repetition_docs": 2.433,
-        "iceberg_branch_wap": 0.874,
-        "image_dhash_dedup": 1.147,
-        "image_jpeg_roundtrip_real": 0.911,
-        "incremental_minhash_ingest": 2.161,
-        "lang_id_ngram_docs": 2.179,
-        "minhash_lsh_candidates": 1.327,
-        "msgbus_stream_events": 3.511,
-        "pipeline_streaming_end_to_end": 1.425,
-        "q18_big_orders": 0.481,
-        "q1_pricing_summary": 0.387,
-        "ridge_probe_chars": 0.445,
-        "streaming_tumbling_counts": 0.991,
-        "transform_revenue_agg": 1.539,
-        "window_running_qty": 0.228,
-    }
-    got = d.get("headline_v2") or {}
-    # sub-second members carry proportionally more box noise; floor
-    # the allowance so a 0.2s query jittering to 0.45s does not fail
-    # the gate while a real 2x regression on a 2s member does
-    violations = {
-        name: (got[name], r9)
-        for name, r9 in R9.items()
-        if name in got and got[name] > max(1.5 * r9, r9 + 0.5)
-    }
-    assert not violations, f"headline_v2 regressions vs r9: {violations}"
