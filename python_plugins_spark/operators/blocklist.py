@@ -14,7 +14,7 @@ shape depends on the pattern-set size:
   for curated lists up to a few hundred phrases — the plan grows
   linearly with the list.
 - **Aho-Corasick path** (``mode="ac"``) — one automaton pass per
-  document inside an Arrow-batched ``mapInPandas``; cost is
+  document inside one Arrow row map (``transform.map_rows``); cost is
   O(text + matches) INDEPENDENT of the pattern count, the scale path
   for 100k-phrase lists where a per-phrase expression (or a regex
   alternation) explodes. Counts are de-overlapped per phrase
@@ -34,11 +34,11 @@ both paths are zero-shuffle narrow maps over the scan.
 from __future__ import annotations
 
 from collections import deque
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from python_plugins_spark.operators.transform import map_rows
 
 
 def _occurrence_expr(text_col: str, phrase: str):
@@ -152,28 +152,18 @@ def blocklist_counts(
         )
     if mode != "ac":
         raise ValueError(f"unknown blocklist mode {mode!r}")
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("hits_total", T.LongType()),
-            T.StructField("n_phrases_hit", T.LongType()),
-            T.StructField("blocked", T.BooleanType()),
-        ]
-    )
     phrase_list = list(phrases)
+    ac = None
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = AhoCorasick(phrase_list)  # built once per task
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                counts = ac.count_nonoverlapping(text or "")
-                out[id_col].append(int(rid))
-                out["hits_total"].append(sum(counts))
-                out["n_phrases_hit"].append(sum(1 for c in counts if c))
-                out["blocked"].append(any(counts))
-            yield pd.DataFrame(out)
+    def scan(rid, text):
+        nonlocal ac
+        if ac is None:  # each task unpickles its own scan: built once per task
+            ac = AhoCorasick(phrase_list)
+        counts = ac.count_nonoverlapping(text or "")
+        yield rid, sum(counts), sum(1 for c in counts if c), any(counts)
 
-    return df.select(id_col, text_col).mapInPandas(scan, schema)
+    return map_rows(
+        df, [id_col, text_col],
+        f"`{id_col}` long, hits_total long, n_phrases_hit long, blocked boolean",
+        scan,
+    )

@@ -28,7 +28,8 @@ import struct
 
 import numpy as np
 
-from python_plugins_spark.operators.multimodal import map_rows, synth_payloads
+from python_plugins_spark.operators.multimodal import synth_payloads
+from python_plugins_spark.operators.transform import map_rows
 
 _BLOCK = 4096
 

@@ -17,7 +17,7 @@ sample) written and parsed here — the stdlib ``wave`` module only
 does PCM, so the chunk walk is hand-rolled like the round-4 parser.
 
 Spark shape: per-row functions in the Arrow-batched
-``multimodal.map_rows``, vectorized numpy companding (no per-sample
+``transform.map_rows``, vectorized numpy companding (no per-sample
 Python), zero shuffles.
 """
 
@@ -27,9 +27,8 @@ import struct
 
 import numpy as np
 
-from python_plugins_spark.operators.multimodal import (
-    map_rows, synth_pcm16_array, synth_payloads,
-)
+from python_plugins_spark.operators.multimodal import synth_pcm16_array, synth_payloads
+from python_plugins_spark.operators.transform import map_rows
 
 _BIAS = 0x84  # 132
 _CLIP14 = 8159  # 14-bit clip after the >>2 scaling

@@ -18,7 +18,7 @@ EXACT RGB pixels (palette indirection, but lossless) — the registry
 query ``image_gif_roundtrip_real`` reuses the same generator-formula
 oracle as BMP/PPM/PNG: four wire formats, one SQL statement. Spark
 integration is the standard shape: per-row functions in the
-Arrow-batched ``multimodal.map_rows``.
+Arrow-batched ``transform.map_rows``.
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ implements the core extraction with nothing but ``html.parser``:
 - whitespace is normalized per text line (runs collapse, blank lines
   drop) — the shape quality filters downstream expect.
 
-Spark integration is an Arrow-batched ``mapInPandas`` stage — one
+Spark integration is one Arrow row map (``transform.map_rows``) — one
 narrow map, zero shuffles, bytes cross the JVM boundary per batch.
 
 The registry query (``html_text_extract_docs``) gets an EXACT oracle
@@ -27,10 +27,9 @@ without parsing any HTML.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
+from python_plugins_spark.operators.transform import map_rows
 
 _SKIP = {"script", "style", "template"}
 _BLOCK = {
@@ -94,22 +93,7 @@ def extract_text_column(
     df, html_col: str = "html", id_col: str = "doc_id"
 ):
     """Arrow-batched extraction: (id, html) -> (id, text)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
+    return map_rows(
+        df, [id_col, html_col], f"`{id_col}` long, text string",
+        lambda rid, html: [(rid, extract_text(html))],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: [int(i) for i in pdf[id_col]],
-                    "text": [extract_text(h) for h in pdf[html_col]],
-                }
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, schema)

@@ -35,7 +35,7 @@ reproduce the DC-only quantization chain in closed form.
 
 Spark integration is the repo's standard multimodal shape: payloads
 are synthesized and decoded by per-row functions inside the
-Arrow-batched ``multimodal.map_rows`` (see ``synth_jpeg_payloads`` /
+Arrow-batched ``transform.map_rows`` (see ``synth_jpeg_payloads`` /
 ``decode_jpeg_block_means``),
 bytes cross the JVM boundary once per batch. At 100 TB both stages
 are narrow maps — no shuffle anywhere in the codec path.
@@ -47,7 +47,8 @@ import functools as _functools
 
 import numpy as np
 
-from python_plugins_spark.operators.multimodal import map_rows, synth_payloads
+from python_plugins_spark.operators.multimodal import synth_payloads
+from python_plugins_spark.operators.transform import map_rows
 
 # ---------------------------------------------------------------- tables
 

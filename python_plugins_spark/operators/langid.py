@@ -857,10 +857,32 @@ def lang_id_cyrillic(
     CYRILLIC_CORPORA. Same Arrow-batched sequential left-fold as the
     Latin flagship (bit-identical to the oracle's list_reduce), zero
     shuffles."""
+    return _trigram_lang_id(
+        df, text_col, id_col, carry, CYR_LANGS, _CYR_LOGP, _CYR_OOV, ()
+    )
+
+
+def _trigram_lang_id(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    carry: list[str] | None,
+    langs: tuple[str, ...],
+    logp: dict[str, list[float]],
+    oov: list[float],
+    overrides: tuple[tuple[str, str], ...],
+) -> DataFrame:
+    """The per-script trigram NB shared by the Cyrillic, CJK and
+    Devanagari tiers: (id, carry..., pred_lang, n_trigrams, margin,
+    score_<lang>...). A scalar ``pandas_udf`` folds each text's
+    trigrams over the profile matrix (bit-identical to the oracle's
+    list_reduce); the argmax, margin and output are JVM expressions.
+    ``overrides`` are ``(character class, lang)`` presence rules that
+    decide before the model, in order (a unique-script fact, e.g.
+    Hangul -> 'ko'); their counts are JVM regexp expressions."""
     carry = [c for c in (carry or []) if c != id_col]
     df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
-    logp, oov, nl = _CYR_LOGP, _CYR_OOV, len(CYR_LANGS)
-
+    nl = len(langs)
     idx_map, mat = _profile_matrix(logp, oov)
 
     @F.pandas_udf("array<double>")
@@ -878,19 +900,24 @@ def lang_id_cyrillic(
     d = df.select(
         F.col(id_col),
         *[F.col(c) for c in carry],
+        F.col(text_col).alias("_t"),
         _score(F.col(text_col)).alias("_r"),
     ).select(
-        id_col, *carry,
+        id_col, *carry, "_t",
         F.element_at("_r", 1).cast("long").alias("n_trigrams"),
         F.slice("_r", 2, nl).alias("_sc"),
     )
-    sc = {lang: F.element_at("_sc", j + 1) for j, lang in enumerate(CYR_LANGS)}
+    sc = {lang: F.element_at("_sc", j + 1) for j, lang in enumerate(langs)}
     best = F.lit(None).cast("string")
     for j in range(nl - 1, -1, -1):
-        lang = CYR_LANGS[j]
-        others = [sc[o] for o in CYR_LANGS if o != lang]
+        lang = langs[j]
+        others = [sc[o] for o in langs if o != lang]
         best = F.when(sc[lang] >= F.greatest(*others), F.lit(lang)).otherwise(best)
-    pred = F.when(F.col("n_trigrams") == 0, F.lit("unknown")).otherwise(best)
+    pred = F.when(F.col("n_trigrams") == 0, F.lit("unknown"))
+    for chars, lang in overrides:
+        present = F.length(F.regexp_replace(F.col("_t"), f"[^{chars}]", "")) > 0
+        pred = pred.when(present, F.lit(lang))
+    pred = pred.otherwise(best)
     srt = F.sort_array("_sc", asc=False)
     margin = F.when(
         F.col("n_trigrams") > 0,
@@ -903,7 +930,7 @@ def lang_id_cyrillic(
         pred.alias("pred_lang"),
         "n_trigrams",
         F.round(margin, 6).alias("margin"),
-        *[F.round(sc[lang], 4).alias(f"score_{lang}") for lang in CYR_LANGS],
+        *[F.round(sc[lang], 4).alias(f"score_{lang}") for lang in langs],
     )
 
 
@@ -1069,65 +1096,9 @@ def lang_id_cjk(
     character choice. Same Arrow-batched sequential left-fold as the
     Latin flagship (bit-identical to the oracle's list_reduce), zero
     shuffles; the presence counts are JVM regexp expressions."""
-    carry = [c for c in (carry or []) if c != id_col]
-    df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
-    logp, oov, nl = _CJK_LOGP, _CJK_OOV, len(CJK_LANGS)
-
-    idx_map, mat = _profile_matrix(logp, oov)
-
-    @F.pandas_udf("array<double>")
-    def _score(col: pd.Series) -> pd.Series:
-        out = []
-        for text in col:
-            tgs = (
-                char_trigrams(text)
-                if text is not None and text.strip()
-                else []
-            )
-            out.append([float(len(tgs))] + _fold_scores(tgs, idx_map, mat))
-        return pd.Series(out)
-
-    d = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.col(text_col).alias("_t"),
-        _score(F.col(text_col)).alias("_r"),
-    ).select(
-        id_col, *carry, "_t",
-        F.element_at("_r", 1).cast("long").alias("n_trigrams"),
-        F.slice("_r", 2, nl).alias("_sc"),
-    )
-    sc = {lang: F.element_at("_sc", j + 1) for j, lang in enumerate(CJK_LANGS)}
-    best = F.lit(None).cast("string")
-    for j in range(nl - 1, -1, -1):
-        lang = CJK_LANGS[j]
-        others = [sc[o] for o in CJK_LANGS if o != lang]
-        best = F.when(sc[lang] >= F.greatest(*others), F.lit(lang)).otherwise(best)
-    cnt = {
-        k: F.length(
-            F.regexp_replace(F.col("_t"), f"[^{SCRIPT_RANGES[k]}]", "")
-        )
-        for k in ("hangul", "kana")
-    }
-    pred = (
-        F.when(F.col("n_trigrams") == 0, F.lit("unknown"))
-        .when(cnt["hangul"] > 0, F.lit("ko"))
-        .when(cnt["kana"] > 0, F.lit("ja"))
-        .otherwise(best)
-    )
-    srt = F.sort_array("_sc", asc=False)
-    margin = F.when(
-        F.col("n_trigrams") > 0,
-        (F.element_at(srt, 1) - F.element_at(srt, 2))
-        / F.col("n_trigrams").cast("double"),
-    ).otherwise(F.lit(0.0))
-    return d.select(
-        id_col,
-        *carry,
-        pred.alias("pred_lang"),
-        "n_trigrams",
-        F.round(margin, 6).alias("margin"),
-        *[F.round(sc[lang], 4).alias(f"score_{lang}") for lang in CJK_LANGS],
+    return _trigram_lang_id(
+        df, text_col, id_col, carry, CJK_LANGS, _CJK_LOGP, _CJK_OOV,
+        ((SCRIPT_RANGES["hangul"], "ko"), (SCRIPT_RANGES["kana"], "ja")),
     )
 
 
@@ -1428,61 +1399,9 @@ def lang_id_devanagari(
     sequential left-fold as the Latin flagship (bit-identical to the
     oracle's list_reduce), zero shuffles; the presence count is a
     JVM regexp expression."""
-    carry = [c for c in (carry or []) if c != id_col]
-    df = spread_scan(df)  # §2.5 — no-op on already-parallel inputs
-    logp, oov, nl = _DEV_LOGP, _DEV_OOV, len(DEV_LANGS)
-
-    idx_map, mat = _profile_matrix(logp, oov)
-
-    @F.pandas_udf("array<double>")
-    def _score(col: pd.Series) -> pd.Series:
-        out = []
-        for text in col:
-            tgs = (
-                char_trigrams(text)
-                if text is not None and text.strip()
-                else []
-            )
-            out.append([float(len(tgs))] + _fold_scores(tgs, idx_map, mat))
-        return pd.Series(out)
-
-    d = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.col(text_col).alias("_t"),
-        _score(F.col(text_col)).alias("_r"),
-    ).select(
-        id_col, *carry, "_t",
-        F.element_at("_r", 1).cast("long").alias("n_trigrams"),
-        F.slice("_r", 2, nl).alias("_sc"),
-    )
-    sc = {lang: F.element_at("_sc", j + 1) for j, lang in enumerate(DEV_LANGS)}
-    best = F.lit(None).cast("string")
-    for j in range(nl - 1, -1, -1):
-        lang = DEV_LANGS[j]
-        others = [sc[o] for o in DEV_LANGS if o != lang]
-        best = F.when(sc[lang] >= F.greatest(*others), F.lit(lang)).otherwise(best)
-    n_lla = F.length(
-        F.regexp_replace(F.col("_t"), f"[^{MARATHI_LLA}]", "")
-    )
-    pred = (
-        F.when(F.col("n_trigrams") == 0, F.lit("unknown"))
-        .when(n_lla > 0, F.lit("mr"))
-        .otherwise(best)
-    )
-    srt = F.sort_array("_sc", asc=False)
-    margin = F.when(
-        F.col("n_trigrams") > 0,
-        (F.element_at(srt, 1) - F.element_at(srt, 2))
-        / F.col("n_trigrams").cast("double"),
-    ).otherwise(F.lit(0.0))
-    return d.select(
-        id_col,
-        *carry,
-        pred.alias("pred_lang"),
-        "n_trigrams",
-        F.round(margin, 6).alias("margin"),
-        *[F.round(sc[lang], 4).alias(f"score_{lang}") for lang in DEV_LANGS],
+    return _trigram_lang_id(
+        df, text_col, id_col, carry, DEV_LANGS, _DEV_LOGP, _DEV_OOV,
+        ((MARATHI_LLA, "mr"),),
     )
 
 

@@ -6,9 +6,10 @@ The engine's convention for image/audio/video data at 100 TB scale:
 - a sibling ``StructType`` column carries typed metadata
   (``n_bytes``, ``content_md5``, ``mime``),
 - decode / feature-extraction / synthesis run through one Arrow-
-  batched row map (:func:`map_rows`, on ``mapInArrow``) so the bytes
-  cross the JVM<->Python boundary once per batch, never per row. Each
-  codec keeps only its per-row function and its output schema.
+  batched row map (``transform.map_rows``, on ``mapInArrow``) so the
+  bytes cross the JVM<->Python boundary once per batch, never per
+  row. Each codec keeps only its per-row function and its output
+  schema.
 
 External codec libraries (PIL/opencv/ffmpeg) are not in this
 container. The one format still needing them (MP3) keeps the STUB:
@@ -36,17 +37,14 @@ independent of the byte-level codecs entirely.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from python_plugins_spark.operators.transform import (
-    _arrow_schema, _column_values, _to_array,
-)
+from python_plugins_spark.operators.transform import map_rows
 
 METADATA_TYPE = T.StructType(
     [
@@ -175,38 +173,6 @@ def fanout_ids(df, id_col: str):
     actual bytes."""
     ids = df.select(id_col)
     return ids.repartition(ids.sparkSession.sparkContext.defaultParallelism)
-
-
-def _row_map(fn: Callable[..., Iterable[tuple]], schema: pa.Schema):
-    """The worker side of :func:`map_rows`: each Arrow batch in becomes
-    one batch under ``schema`` out, holding every tuple ``fn`` yields
-    for the batch's rows, in order."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = [out for row in zip(*map(_column_values, batch.columns)) for out in fn(*row)]
-            columns = list(zip(*rows, strict=True)) or [()] * len(schema)
-            yield pa.RecordBatch.from_arrays(
-                [_to_array(list(v), t) for v, t in zip(columns, schema.types)], schema=schema
-            )
-
-    return run
-
-
-def map_rows(
-    df: DataFrame, cols: list[str], ddl: str, fn: Callable[..., Iterable[tuple]]
-) -> DataFrame:
-    """Run ``fn`` on every row of ``df.select(*cols)`` in one narrow
-    ``mapInArrow`` pass: ``fn(*values)`` gets one row's plain Python
-    values (``bytes`` for binary, ``None`` for null) and yields zero or
-    more tuples in the field order of the DDL schema ``ddl``. Values
-    cross through the record transform's codec
-    (``transform._column_values`` in, ``transform._to_array`` out, which
-    is Spark's own pandas-UDF output rule), so the engine's per-record
-    Python paths share one Arrow<->Python value rule."""
-    schema = T._parse_datatype_string(ddl)
-    run = _row_map(fn, _arrow_schema(df.sparkSession, schema))
-    return df.select(*cols).mapInArrow(run, schema)
 
 
 def synth_payloads(df: DataFrame, id_col: str, encode: Callable[[int], bytes]) -> DataFrame:

@@ -19,7 +19,7 @@ replay the hash bit-for-bit from generating formulas):
   56-bit hash — inside BIGINT.
 
 Spark shape: decode + hash is an Arrow-batched narrow map over the
-payload scan (``multimodal.map_rows``, on ``mapInArrow``;
+payload scan (``transform.map_rows``, on ``mapInArrow``;
 embarrassingly parallel, zero shuffles); the radius-0 dedup verdict
 is ONE hash-partitioned window over the 8-byte fingerprint — the same
 one-shuffle shape as exact text dedup, at any corpus size.
@@ -37,9 +37,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_plugins_spark.operators.multimodal import (
-    _wav_pcm_array, bmp_bytes_array, map_rows, parse_bmp_array, parse_ppm_array,
+    _wav_pcm_array, bmp_bytes_array, parse_bmp_array, parse_ppm_array,
     ppm_bytes_array, synth_payloads, wav_bytes,
 )
+from python_plugins_spark.operators.transform import map_rows
 from python_plugins_spark.session import stage_checkpoint
 
 

@@ -21,7 +21,7 @@ PNG is LOSSLESS, so unlike JPEG the registry roundtrip query
 against the same generator-formula oracle the BMP and PPM queries use
 — the three wire formats cross-validate byte-for-byte through one
 shared SQL oracle. Spark integration is the standard multimodal
-shape: per-row functions in the Arrow-batched ``multimodal.map_rows``,
+shape: per-row functions in the Arrow-batched ``transform.map_rows``,
 bytes cross the JVM boundary once per batch, zero shuffles.
 """
 

@@ -22,17 +22,18 @@ honest implementation is the spec one:
   no matching rule means allowed; an empty pattern matches nothing.
 
 Spark shape: robots files are per-DOMAIN — a handful of distinct
-strings however many URLs flow through — so the batch operator memoizes
-the parsed rule set per distinct robots text inside each Arrow batch
-and the whole filter is a zero-shuffle narrow map.
+strings however many URLs flow through — so the operators memoize the
+parse per distinct robots text in each Python worker
+(``functools.lru_cache``), and each is one zero-shuffle Arrow row map
+(``transform.map_rows``).
 """
 
 from __future__ import annotations
 
+import functools
 import re
-from collections.abc import Iterator
 
-import pandas as pd
+from python_plugins_spark.operators.transform import map_rows
 
 _RULE_RE_CACHE: dict[str, re.Pattern] = {}
 
@@ -168,6 +169,18 @@ def parse_robots_extras(text: str) -> tuple[list[str], dict[str, float]]:
 # ------------------------------------------------------- Spark operators
 
 
+@functools.lru_cache(maxsize=1024)
+def _policy(text: str):
+    """:func:`parse_robots` once per distinct text in each worker."""
+    return parse_robots(text)
+
+
+@functools.lru_cache(maxsize=1024)
+def _extras(text: str, agent: str) -> tuple[list[str], float | None]:
+    """(sitemaps, binding crawl delay) once per distinct text in each worker."""
+    return parse_robots_extras(text)[0], select_crawl_delay(text, agent)
+
+
 def robots_filter(
     df,
     path_col: str = "path",
@@ -176,42 +189,31 @@ def robots_filter(
     out_col: str = "allowed",
 ):
     """Append the RFC 9309 verdict for each (path, robots_txt) row.
-    Parsed rule sets are memoized per distinct robots text within each
-    Arrow batch (robots files are per-domain: few distinct values,
+    Parsed rule sets are memoized per distinct robots text in each
+    Python worker (robots files are per-domain: few distinct values,
     many URLs). Zero shuffles."""
     from pyspark.sql import types as T
 
-    fields = [f for f in df.schema.fields]
-    schema = T.StructType(fields + [T.StructField(out_col, T.BooleanType())])
-    cols = [f.name for f in fields]
+    cols = df.columns
+    schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.BooleanType())])
+    i_txt, i_path = cols.index(robots_col), cols.index(path_col)
 
-    def judge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, object] = {}
-        for pdf in batches:
-            def verdict(row):
-                txt = row[robots_col]
-                if txt is None or (isinstance(txt, float) and pd.isna(txt)):
-                    # RFC 9309 §2.3.1.3: an UNAVAILABLE robots.txt means
-                    # the crawler "MAY access any resources" — NULL policy
-                    # text is a clean per-row allow, not a crash.
-                    return True
-                path = row[path_col]
-                if path is None or (isinstance(path, float) and pd.isna(path)):
-                    raise ValueError(
-                        f"robots_filter: NULL {path_col!r} in row "
-                        f"{dict(row)!r} — a URL path is required"
-                    )
-                groups = memo.get(txt)
-                if groups is None:
-                    groups = parse_robots(txt)
-                    memo[txt] = groups
-                return robots_allowed(groups, agent, path)
+    def judge(*row):
+        txt, path = row[i_txt], row[i_path]
+        if txt is None:
+            # RFC 9309 §2.3.1.3: an UNAVAILABLE robots.txt means the
+            # crawler "MAY access any resources" — NULL policy text is
+            # a clean per-row allow, not a crash.
+            yield (*row, True)
+        elif path is None:
+            raise ValueError(
+                f"robots_filter: NULL {path_col!r} in row "
+                f"{dict(zip(cols, row))!r} — a URL path is required"
+            )
+        else:
+            yield (*row, robots_allowed(_policy(txt), agent, path))
 
-            out = pdf[cols].copy()
-            out[out_col] = pdf.apply(verdict, axis=1) if len(pdf) else []
-            yield out
-
-    return df.mapInPandas(judge, schema)
+    return map_rows(df, cols, schema, judge)
 
 
 def select_crawl_delay(text: str, agent: str) -> float | None:
@@ -246,14 +248,12 @@ def robots_extras(
     ``crawl_delay`` (NULL when the selected group declares none).
     NULL policy text yields no sitemaps and no delay (RFC 9309
     unavailable-policy: nothing binds). Parsed extras are memoized per
-    distinct robots text within each Arrow batch (robots files are
+    distinct robots text in each Python worker (robots files are
     per-domain: few distinct values, many URLs); zero shuffles."""
     from pyspark.sql import types as T
 
-    keep = carry if carry is not None else [
-        f.name for f in df.schema.fields
-    ]
-    fields = [f for f in df.schema.fields if f.name in set(keep)]
+    keep = set(carry if carry is not None else df.columns)
+    fields = [f for f in df.schema.fields if f.name in keep]
     schema = T.StructType(
         fields
         + [
@@ -262,31 +262,10 @@ def robots_extras(
             T.StructField("crawl_delay", T.DoubleType()),
         ]
     )
-    cols = [f.name for f in fields]
-    in_cols = list(dict.fromkeys(cols + [robots_col]))
 
-    def extras(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, tuple[list[str], float | None]] = {}
-        for pdf in batches:
-            maps, counts, delays = [], [], []
-            for txt in pdf[robots_col]:
-                if txt is None or (isinstance(txt, float) and pd.isna(txt)):
-                    maps.append([])
-                    counts.append(0)
-                    delays.append(None)
-                    continue
-                got = memo.get(txt)
-                if got is None:
-                    sitemaps, _ = parse_robots_extras(txt)
-                    got = (sitemaps, select_crawl_delay(txt, agent))
-                    memo[txt] = got
-                maps.append(got[0])
-                counts.append(len(got[0]))
-                delays.append(got[1])
-            out = pdf[cols].copy()
-            out["sitemaps"] = maps
-            out["n_sitemaps"] = pd.array(counts, dtype="int32")
-            out["crawl_delay"] = pd.array(delays, dtype="float64")
-            yield out
+    def extras(*row):
+        *carried, txt = row
+        sitemaps, delay = _extras(txt, agent) if txt is not None else ([], None)
+        yield (*carried, sitemaps, len(sitemaps), delay)
 
-    return df.select(*in_cols).mapInPandas(extras, schema)
+    return map_rows(df, [f.name for f in fields] + [robots_col], schema, extras)

@@ -4,14 +4,15 @@ stopped at the per-(shard, source) manifest; a training job reads
 shard files).
 
 Pattern: the :func:`~python_plugins_spark.operators.warc.write_warc_files`
-shape — executor-side writes via ``applyInPandas`` per shard group,
+shape — executor-side writes via ``applyInArrow`` per shard group,
 wrapped in the stage -> audit -> publish flow:
 
-- **WRITE**: each shard group sorts by doc id and writes ONE parquet
-  file ``shard-NNNNN.parquet`` into a staging directory (pyarrow,
-  executor-side — no row ever transits the driver). File CONTENT is
-  deterministic (fixed row order, fixed schema); the returned frame is
-  the write manifest (shard, file, n_docs, total_tokens).
+- **WRITE**: each shard group sorts by doc id and writes its Arrow
+  table as ONE parquet file ``shard-NNNNN.parquet`` into a staging
+  directory (pyarrow, executor-side — no row ever transits the
+  driver). File CONTENT is deterministic (fixed row order, fixed
+  schema); the returned frame is the write manifest (shard, file,
+  n_docs, total_tokens).
 - **AUDIT**: the staged files are read back with a native Spark scan
   and their per-shard (row count, token sum) compared against the
   write manifest — a torn or dropped file fails HERE, before anything
@@ -38,10 +39,11 @@ from __future__ import annotations
 import os
 import shutil
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def write_training_shards(
@@ -64,39 +66,18 @@ def write_training_shards(
     shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(staging, exist_ok=True)
 
-    cols = sharded.columns
-    man_schema = T.StructType(
-        [
-            T.StructField("shard", T.LongType()),
-            T.StructField("file", T.StringType()),
-            T.StructField("n_docs", T.LongType()),
-            T.StructField("total_tokens", T.LongType()),
-        ]
-    )
-
-    def write_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        (shard,) = key
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        path = os.path.join(staging, f"shard-{int(shard):05d}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(pdf[cols], preserve_index=False),
-            path,
-        )
-        return pd.DataFrame(
-            {
-                "shard": [int(shard)],
-                "file": [path],
-                "n_docs": [len(pdf)],
-                "total_tokens": [int(pdf["n_pieces"].sum())],
-            }
-        )
+    def write_shard(key, table):
+        shard = key[0].as_py()
+        path = os.path.join(staging, f"shard-{shard:05d}.parquet")
+        pq.write_table(table.sort_by(id_col), path)
+        return pa.table({
+            "shard": [shard], "file": [path], "n_docs": [table.num_rows],
+            "total_tokens": [pc.sum(table["n_pieces"]).as_py() or 0],
+        })
 
     manifest = (
         sharded.groupBy(shard_col)
-        .applyInPandas(write_shard, man_schema)
+        .applyInArrow(write_shard, "shard long, file string, n_docs long, total_tokens long")
         .collect()  # bounded: one row per shard
     )
 

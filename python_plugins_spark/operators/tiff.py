@@ -17,7 +17,7 @@ scientific pipelines actually move raw arrays in. Scope:
 Lossless by definition — the registry query reuses the shared
 generator-formula oracle (five wire formats, one SQL statement).
 Spark integration is the standard shape: per-row functions in the
-Arrow-batched ``multimodal.map_rows``.
+Arrow-batched ``transform.map_rows``.
 """
 
 from __future__ import annotations

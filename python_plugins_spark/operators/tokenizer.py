@@ -18,7 +18,7 @@ Shape, designed for a 100 TB corpus:
    vocabulary costs ONE Spark job plus seconds of driver time —
    instead of 32k sequential driver-coordinated jobs whose ~0.2-0.5 s
    scheduling floor alone is hours. The round-10 per-round
-   distributed loop (one tiny aggregate-argmax + mapInPandas rewrite
+   distributed loop (one tiny aggregate-argmax + Arrow row-map rewrite
    job per merge) is kept as ``merge_loop="distributed"`` — the
    escape hatch for a pathological corpus whose distinct-word table
    exceeds driver memory — and the two paths are pinned bit-identical
@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from python_plugins_spark.functions import tokens
+from python_plugins_spark.operators.transform import map_rows
 from python_plugins_spark.sources.io import scan_width
 
 _EOW = "</w>"  # end-of-word marker (the standard BPE convention)
@@ -202,23 +203,9 @@ def bpe_train(
         merges.append((a, b))
         rows_out.append((rank, a, b, a + b, int(n)))
 
-        def apply_merge(batches, a=a, b=b):
-            import pandas as pd
-
-            for pdf in batches:
-                pdf["sym"] = [
-                    _merge_pair_in_seq(list(s), a, b) for s in pdf["sym"]
-                ]
-                yield pdf
-
-        new_vocab = vocab.mapInPandas(
-            apply_merge,
-            T.StructType(
-                [
-                    T.StructField("sym", T.ArrayType(T.StringType())),
-                    T.StructField("cnt", T.LongType()),
-                ]
-            ),
+        new_vocab = map_rows(
+            vocab, ["sym", "cnt"], "sym array<string>, cnt long",
+            lambda s, c, a=a, b=b: [(_merge_pair_in_seq(s, a, b), c)],
         ).cache()  # lazy: next round's argmax materializes it
         prev = vocab
         vocab = new_vocab
@@ -401,7 +388,7 @@ def bpe_encode(df: DataFrame, text_col: str, id_col: str, merges,
        training, so every corpus word is in the trained vocabulary by
        construction.
     2. Encode each DISTINCT word exactly once (``distinct`` +
-       mapInPandas over the vocabulary-sized word table) with the
+       one Arrow row map over the vocabulary-sized word table) with the
        rank-based merge loop (:func:`_rank_encode_word` — cost
        independent of |merges|). Zipf: the top ~10k distinct words
        cover most of the token stream, so this is ~10-100x less
@@ -425,31 +412,9 @@ def bpe_encode(df: DataFrame, text_col: str, id_col: str, merges,
         F.posexplode(tokens(F.col(text_col))).alias("pos", "w"),
     ).filter(F.length("w") > 0)
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("w", T.StringType()),
-            T.StructField("sym", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def encode_distinct(batches, _ranks=ranks, _bl=byte_level):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "sym": [
-                        _rank_encode_word(w, _ranks, _bl) for w in pdf["w"]
-                    ],
-                }
-            )
-
     # Scale-adaptive repartition between the distinct and the encode
     # pass (round 13): AQE coalesces the byte-tiny distinct to ONE
-    # partition, so the rank-encode mapInPandas (this operator's only
+    # partition, so the rank-encode row map (this operator's only
     # Python CPU) runs single-task — ~30 s of serial Python per encode
     # at a web-scale vocabulary (~1e6 words x ~30 us). It fires only
     # when the INPUT is a scan at least as wide as the cluster
@@ -461,7 +426,10 @@ def bpe_encode(df: DataFrame, text_col: str, id_col: str, merges,
     encoded = words.select("w").distinct()
     if (scan_width(df) or 0) >= parallelism:
         encoded = encoded.repartition(parallelism)
-    encoded = encoded.mapInPandas(encode_distinct, enc_schema)
+    encoded = map_rows(
+        encoded, ["w"], "w string, sym array<string>",
+        lambda w: [(w, _rank_encode_word(w, ranks, byte_level))],
+    )
 
     assembled = (
         words.join(encoded, "w")

@@ -54,7 +54,7 @@ from __future__ import annotations
 import functools
 import logging
 import traceback
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from datetime import timezone
 from typing import TYPE_CHECKING, Any
@@ -350,6 +350,42 @@ def _arrow_schema(spark, schema: T.StructType) -> pa.Schema:
     Python workers read (``spark.sql.execution.arrow.useLargeVarTypes``)."""
     large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
     return to_arrow_schema(schema, prefers_large_types=large.lower() == "true")
+
+
+def _row_map(fn: Callable[..., Iterable[tuple]], schema: pa.Schema):
+    """The worker side of :func:`map_rows`: each Arrow batch in becomes
+    one batch under ``schema`` out, holding every tuple ``fn`` yields
+    for the batch's rows, in order."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [out for row in zip(*map(_column_values, batch.columns)) for out in fn(*row)]
+            columns = list(zip(*rows, strict=True)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [_to_array(list(v), t) for v, t in zip(columns, schema.types)], schema=schema
+            )
+
+    return run
+
+
+def map_rows(
+    df: DataFrame,
+    cols: list[str],
+    schema: str | T.StructType,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """Run ``fn`` on every row of ``df.select(*cols)`` in one narrow
+    ``mapInArrow`` pass: ``fn(*values)`` gets one row's plain Python
+    values (``int`` for integers, ``bytes`` for binary, ``None`` for
+    null) and yields zero or more tuples in the field order of
+    ``schema`` (DDL or ``StructType``). Values cross through the record
+    transform's codec (:func:`_column_values` in, :func:`_to_array`
+    out), so every per-row Python map in the engine shares one
+    Arrow<->Python value rule."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    run = _row_map(fn, _arrow_schema(df.sparkSession, schema))
+    return df.select(*cols).mapInArrow(run, schema)
 
 
 def _records_to_batch(

@@ -18,8 +18,9 @@ body) inside the WARC payload. This module implements both directions:
   prevent), and HTTP envelope split for response records.
 
 Spark shape: the standard multimodal convention — archives are opaque
-``binary`` payloads, synthesis and extraction run in Arrow-batched
-``mapInPandas`` narrow maps, zero shuffles at any corpus size. The
+``binary`` payloads, synthesis and extraction are per-row functions in
+one Arrow row map (``transform.map_rows``), zero shuffles at any
+corpus size. The
 registry query (``warc_extract_records``) hash-checks the extracted
 HTTP body bytes (md5) against a DuckDB oracle that reconstructs the
 same bytes from the table columns — byte-exact extraction, not
@@ -29,10 +30,10 @@ plausible extraction.
 from __future__ import annotations
 
 import gzip
+import hashlib
 import io
-from collections.abc import Iterator
 
-import pandas as pd
+from python_plugins_spark.operators.transform import map_rows
 
 _CRLF = b"\r\n"
 
@@ -159,6 +160,29 @@ def _split_http(payload: bytes) -> dict:
 # ------------------------------------------------------- Spark operators
 
 
+_ID = {"warcinfo": "info", "request": "req", "response": "resp"}
+_INFO = b"software: python_plugins_spark warc writer\r\n"
+
+
+def _record(wtype: str, tag, payload: bytes, uri: str | None = None) -> tuple[dict, bytes]:
+    """One ``(headers, payload)`` record of the writer's crawl
+    exchanges; only ``warcinfo`` records have no target URI."""
+    headers = {"WARC-Type": wtype, "WARC-Record-ID": f"<urn:uuid:{_ID[wtype]}-{tag}>"}
+    if uri is None:
+        headers["Content-Type"] = "application/warc-fields"
+    else:
+        headers["WARC-Target-URI"] = uri
+        headers["Content-Type"] = f"application/http;msgtype={wtype}"
+    return headers, payload
+
+
+def _http_200(ctype: str, body: bytes) -> bytes:
+    return (
+        f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\nContent-Length: {len(body)}".encode("ascii")
+        + _CRLF + _CRLF + body
+    )
+
+
 def synth_warc_payloads(
     df,
     id_col: str = "doc_id",
@@ -177,91 +201,26 @@ def synth_warc_payloads(
     stages consume what the parser actually recovered. A BINARY
     ``body_col`` is served byte-exact (real crawls carry images/PDFs,
     not just text); ``ctype_col`` overrides the served HTTP
-    Content-Type per row."""
-    from pyspark.sql import types as T
+    Content-Type per row. One Arrow row map (``transform.map_rows``)."""
+    in_cols = [id_col, "source", body_col or "text"] + [c for c in (path_col, ctype_col) if c]
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    in_cols = [id_col, "source"]
-    in_cols.append(body_col if body_col else "text")
-    if path_col:
-        in_cols.append(path_col)
-    if ctype_col:
-        in_cols.append(ctype_col)
+    def synth(rid, source, text, *opt):
+        path = opt[0] if path_col else f"/doc/{rid}"
+        if body_col:
+            body = text if isinstance(text, bytes) else str(text).encode("utf-8")
+            served = str(opt[-1]) if ctype_col else "text/html; charset=utf-8"
+        else:
+            body = f"doc {rid} from {source}\r\n\r\n{text}".encode("utf-8")
+            served = "text/plain; charset=utf-8"
+        uri = f"http://{source}.example{path}"
+        req = f"GET {path} HTTP/1.1\r\nHost: {source}.example\r\n\r\n".encode()
+        yield rid, build_warc([
+            _record("warcinfo", rid, _INFO),
+            _record("request", rid, req, uri),
+            _record("response", rid, _http_200(served, body), uri),
+        ])
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for tup in pdf[in_cols].itertuples(index=False):
-                row = dict(zip(in_cols, tup))
-                rid = int(row[id_col])
-                source = row["source"]
-                text = row[body_col] if body_col else row["text"]
-                path = row[path_col] if path_col else f"/doc/{rid}"
-                uri = f"http://{source}.example{path}"
-                if body_col:
-                    if isinstance(text, (bytes, bytearray, memoryview)):
-                        body = bytes(text)
-                    else:
-                        body = str(text).encode("utf-8")
-                    served = (
-                        str(row[ctype_col])
-                        if ctype_col
-                        else "text/html; charset=utf-8"
-                    )
-                    ctype = f"Content-Type: {served}\r\n".encode("ascii")
-                else:
-                    body = (
-                        f"doc {rid} from {source}\r\n\r\n{text}".encode("utf-8")
-                    )
-                    ctype = b"Content-Type: text/plain; charset=utf-8\r\n"
-                http = (
-                    b"HTTP/1.1 200 OK\r\n"
-                    + ctype
-                    + f"Content-Length: {len(body)}".encode()
-                    + _CRLF + _CRLF + body
-                )
-                req = (
-                    f"GET {path} HTTP/1.1\r\nHost: {source}.example"
-                    .encode() + _CRLF + _CRLF
-                )
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "warcinfo",
-                            "WARC-Record-ID": f"<urn:uuid:info-{rid}>",
-                            "Content-Type": "application/warc-fields",
-                        },
-                        b"software: python_plugins_spark warc writer\r\n",
-                    ),
-                    (
-                        {
-                            "WARC-Type": "request",
-                            "WARC-Record-ID": f"<urn:uuid:req-{rid}>",
-                            "WARC-Target-URI": uri,
-                            "Content-Type": "application/http;msgtype=request",
-                        },
-                        req,
-                    ),
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Record-ID": f"<urn:uuid:resp-{rid}>",
-                            "WARC-Target-URI": uri,
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        http,
-                    ),
-                ]
-                ids.append(rid)
-                payloads.append(build_warc(recs))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return df.select(*in_cols).mapInPandas(synth, schema)
+    return map_rows(df, in_cols, f"`{id_col}` long, payload binary", synth)
 
 
 def write_warc_files(df, out_dir: str, id_col: str = "doc_id"):
@@ -269,69 +228,60 @@ def write_warc_files(df, out_dir: str, id_col: str = "doc_id"):
     concatenation of its documents' 3-record exchanges as per-record
     gzip members (the CommonCrawl archive layout), records ordered by
     id and mtime pinned to 0, so the archive BYTES are deterministic
-    across runs. Executor-side writes (applyInPandas per group); the
+    across runs. Executor-side writes (``applyInArrow`` per group); the
     returned frame is the write manifest (source, file, n_docs)."""
     import os
 
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
-    schema = T.StructType(
-        [
-            T.StructField("source", T.StringType()),
-            T.StructField("file", T.StringType()),
-            T.StructField("n_docs", T.LongType()),
-        ]
-    )
-
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (source,) = key
-        pdf = pdf.sort_values(id_col)
-        recs = [
-            (
-                {
-                    "WARC-Type": "warcinfo",
-                    "WARC-Record-ID": f"<urn:uuid:info-{source}>",
-                    "Content-Type": "application/warc-fields",
-                },
-                b"software: python_plugins_spark warc writer\r\n",
-            )
-        ]
-        for rid, text in zip(pdf[id_col], pdf["text"]):
-            rid = int(rid)
-            uri = f"http://{source}.example/doc/{rid}"
+    def write_group(key, table):
+        source = key[0].as_py()
+        table = table.sort_by(id_col)
+        recs = [_record("warcinfo", source, _INFO)]
+        for rid, text in zip(table[id_col].to_pylist(), table["text"].to_pylist()):
             body = f"doc {rid} from {source}\r\n\r\n{text}".encode("utf-8")
-            http = (
-                b"HTTP/1.1 200 OK\r\n"
-                b"Content-Type: text/plain; charset=utf-8\r\n"
-                + f"Content-Length: {len(body)}".encode()
-                + _CRLF + _CRLF + body
-            )
-            recs.append(
-                (
-                    {
-                        "WARC-Type": "response",
-                        "WARC-Record-ID": f"<urn:uuid:resp-{rid}>",
-                        "WARC-Target-URI": uri,
-                        "Content-Type": "application/http;msgtype=response",
-                    },
-                    http,
-                )
-            )
+            http = _http_200("text/plain; charset=utf-8", body)
+            recs.append(_record("response", rid, http, f"http://{source}.example/doc/{rid}"))
         path = os.path.join(out_dir, f"crawl-{source}.warc.gz")
         with open(path, "wb") as fh:
             fh.write(build_warc(recs))
-        return pd.DataFrame(
-            {"source": [source], "file": [path], "n_docs": [len(pdf)]}
-        )
+        return pa.table({"source": [source], "file": [path], "n_docs": [table.num_rows]})
 
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     return (
         df.select(id_col, "source", "text")
         .groupBy("source")
-        .applyInPandas(write_group, schema)
+        .applyInArrow(write_group, "source string, file string, n_docs long")
     )
+
+
+def _decode_body(raw: bytes) -> tuple[str, bool]:
+    """UTF-8 decode with a validity flag: real crawls carry binary
+    responses (images, PDFs), which must FLAG, not crash — invalid
+    sequences become U+FFFD and body_utf8_ok goes false so a
+    downstream gate can route them (valid text is untouched)."""
+    try:
+        return raw.decode("utf-8"), True
+    except UnicodeDecodeError:
+        return raw.decode("utf-8", "replace"), False
+
+
+def _head(r: dict) -> tuple:
+    """(target URI, HTTP status, Content-Type) of a response record."""
+    return (
+        r["headers"]["WARC-Target-URI"],
+        int(r["http_status"]),
+        r.get("http_headers", {}).get("content-type"),
+    )
+
+
+def _one_response(payload: bytes) -> tuple[list[dict], dict]:
+    """Every record of a one-exchange archive, and its one response."""
+    recs = parse_warc(payload)
+    resp = [r for r in recs if r["headers"].get("WARC-Type") == "response"]
+    if len(resp) != 1:
+        raise ValueError(f"expected exactly one response record, got {len(resp)}")
+    return recs, resp[0]
 
 
 def read_warc(spark, path: str):
@@ -347,60 +297,25 @@ def read_warc(spark, path: str):
     the file path named; binary (non-UTF-8) bodies flag
     ``body_utf8_ok = false`` with the HTTP Content-Type surfaced so a
     downstream gate can route them."""
-    import hashlib
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("warc_file", T.StringType()),
-            T.StructField("target_uri", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("body_bytes", T.LongType()),
-            T.StructField("body_md5", T.StringType()),
-            T.StructField("body", T.StringType()),
-            T.StructField("body_utf8_ok", T.BooleanType()),
-        ]
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    recs = parse_warc(bytes(content))
-                except ValueError as exc:
-                    raise ValueError(f"{fpath}: {exc}") from exc
-                for r in recs:
-                    if r["headers"].get("WARC-Type") != "response":
-                        continue
-                    body, ok = _decode_body(r["body"])
-                    out["warc_file"].append(fpath)
-                    out["target_uri"].append(r["headers"]["WARC-Target-URI"])
-                    out["http_status"].append(int(r["http_status"]))
-                    out["content_type"].append(
-                        r.get("http_headers", {}).get("content-type")
-                    )
-                    out["body_bytes"].append(len(r["body"]))
-                    out["body_md5"].append(hashlib.md5(r["body"]).hexdigest())
-                    out["body"].append(body)
-                    out["body_utf8_ok"].append(ok)
-            yield pd.DataFrame(out)
+    def parse(fpath, content):
+        try:
+            recs = parse_warc(content)
+        except ValueError as exc:
+            raise ValueError(f"{fpath}: {exc}") from exc
+        for r in recs:
+            if r["headers"].get("WARC-Type") == "response":
+                body = r["body"]
+                yield (fpath, *_head(r), len(body), hashlib.md5(body).hexdigest(),
+                       *_decode_body(body))
 
     files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(parse, schema)
-
-
-def _decode_body(raw: bytes) -> tuple[str, bool]:
-    """UTF-8 decode with a validity flag: real crawls carry binary
-    responses (images, PDFs), which must FLAG, not crash — invalid
-    sequences become U+FFFD and body_utf8_ok goes false so a
-    downstream gate can route them (valid text is untouched)."""
-    try:
-        return raw.decode("utf-8"), True
-    except UnicodeDecodeError:
-        return raw.decode("utf-8", "replace"), False
+    return map_rows(
+        files, ["path", "content"],
+        "warc_file string, target_uri string, http_status int, content_type string, "
+        "body_bytes long, body_md5 string, body string, body_utf8_ok boolean",
+        parse,
+    )
 
 
 def extract_warc_bodies(
@@ -414,47 +329,18 @@ def extract_warc_bodies(
     ``body_utf8_ok = false`` (U+FFFD replacement) instead of crashing,
     with the Content-Type surfaced so a downstream gate can route
     non-text records. Arrow-batched narrow map; zero shuffles."""
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("target_uri", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("body", T.StringType()),
-            T.StructField("body_bytes", T.LongType()),
-            T.StructField("body_utf8_ok", T.BooleanType()),
-        ]
+    def extract(rid, payload):
+        _, r = _one_response(payload)
+        body, ok = _decode_body(r["body"])
+        yield (rid, *_head(r), body, len(r["body"]), ok)
+
+    return map_rows(
+        df, [id_col, payload_col],
+        f"`{id_col}` long, target_uri string, http_status int, content_type string, "
+        "body string, body_bytes long, body_utf8_ok boolean",
+        extract,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                recs = parse_warc(bytes(payload))
-                resp = [
-                    r for r in recs
-                    if r["headers"].get("WARC-Type") == "response"
-                ]
-                if len(resp) != 1:
-                    raise ValueError(
-                        f"expected exactly one response record, got {len(resp)}"
-                    )
-                r = resp[0]
-                body, ok = _decode_body(r["body"])
-                out[id_col].append(int(rid))
-                out["target_uri"].append(r["headers"]["WARC-Target-URI"])
-                out["http_status"].append(int(r["http_status"]))
-                out["content_type"].append(
-                    r.get("http_headers", {}).get("content-type")
-                )
-                out["body"].append(body)
-                out["body_bytes"].append(len(r["body"]))
-                out["body_utf8_ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(extract, schema)
 
 
 def extract_warc_records(df, id_col: str = "doc_id", payload_col: str = "payload"):
@@ -462,48 +348,16 @@ def extract_warc_records(df, id_col: str = "doc_id", payload_col: str = "payload
     record's target URI, HTTP status, Content-Type, exact body octet
     count, body md5 (the byte-exactness witness), and the UTF-8
     validity flag a binary-vs-text router branches on."""
-    import hashlib
 
-    from pyspark.sql import types as T
+    def extract(rid, payload):
+        recs, r = _one_response(payload)
+        body = r["body"]
+        yield (rid, len(recs), *_head(r), len(body), hashlib.md5(body).hexdigest(),
+               _decode_body(body)[1])
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("n_records", T.IntegerType()),
-            T.StructField("target_uri", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("body_bytes", T.LongType()),
-            T.StructField("body_md5", T.StringType()),
-            T.StructField("body_utf8_ok", T.BooleanType()),
-        ]
+    return map_rows(
+        df, [id_col, payload_col],
+        f"`{id_col}` long, n_records int, target_uri string, http_status int, "
+        "content_type string, body_bytes long, body_md5 string, body_utf8_ok boolean",
+        extract,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                recs = parse_warc(bytes(payload))
-                resp = [
-                    r for r in recs
-                    if r["headers"].get("WARC-Type") == "response"
-                ]
-                if len(resp) != 1:
-                    raise ValueError(
-                        f"expected exactly one response record, got {len(resp)}"
-                    )
-                r = resp[0]
-                _, utf8_ok = _decode_body(r["body"])
-                out[id_col].append(int(rid))
-                out["n_records"].append(len(recs))
-                out["target_uri"].append(r["headers"]["WARC-Target-URI"])
-                out["http_status"].append(int(r["http_status"]))
-                out["content_type"].append(
-                    r.get("http_headers", {}).get("content-type")
-                )
-                out["body_bytes"].append(len(r["body"]))
-                out["body_md5"].append(hashlib.md5(r["body"]).hexdigest())
-                out["body_utf8_ok"].append(utf8_ok)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(extract, schema)

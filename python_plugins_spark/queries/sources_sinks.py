@@ -1490,7 +1490,7 @@ def training_shard_files_end_to_end(spark, sf_dir):
     consumes FILES, not a manifest): the same clean->dedup->encode->
     pack->shard pipeline, then ``operators/shards.py
     write_training_shards`` writes ONE parquet file per shard —
-    executor-side (applyInPandas per shard group, the write_warc_files
+    executor-side (applyInArrow per shard group, the write_warc_files
     pattern), rows sorted by doc_id, carrying the encoded ``pieces``
     payload plus (source, n_pieces, bin) — through stage -> AUDIT
     (read-back per-shard counts must equal the writers' report) ->

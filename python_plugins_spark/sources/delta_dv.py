@@ -25,11 +25,12 @@ Public-protocol shapes implemented here
   (:mod:`.roaring` implements the bitmap serialization itself).
 
 Scale design: DV *decode is executor-side*. ``deleted_rows_df`` turns
-the descriptor list into a tiny DataFrame and ``mapInPandas`` opens
-each sidecar on the worker that needs it, emitting (file, row_index)
-pairs — the driver never holds a bitmap, so a 100 TB table where a
-DELETE touched a million files ships a million 50-byte descriptors,
-not a million bitmaps, through the plan. The anti-join back to the
+the descriptor list into a tiny DataFrame and one Arrow row map
+(``transform.map_rows``) opens each sidecar on the worker that needs
+it, emitting (file, row_index) pairs — the driver never holds a
+bitmap, so a 100 TB table where a DELETE touched a million files
+ships a million 50-byte descriptors, not a million bitmaps, through
+the plan. The anti-join back to the
 scan is an equi-join on (file name, ``_metadata.row_index``) — Spark's
 stable per-file row numbering, the same row-id a native DV reader
 keys on.
@@ -44,6 +45,8 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from python_plugins_spark.operators.transform import map_rows
 
 from .roaring import deserialize_rba, dv_frame, dv_unframe, serialize_rba
 
@@ -176,49 +179,22 @@ def deleted_rows_df(
     spark: SparkSession, table_path: str, dv_adds: dict[str, dict]
 ) -> DataFrame:
     """(data file name, deleted row index) pairs for every add that
-    carries a deletionVector — decoded on EXECUTORS via mapInPandas
-    (one descriptor row in, its bitmap's indices out), so driver
-    memory is O(#files), not O(#deleted rows)."""
-    import pandas as pd
-
+    carries a deletionVector — decoded on EXECUTORS in one Arrow row
+    map (one descriptor row in, one row per deleted index out), so
+    driver memory is O(#files), not O(#deleted rows)."""
     desc_rows = [
-        (
-            path,
-            d["storageType"],
-            d["pathOrInlineDv"],
-            d.get("offset", 0),
-            d["sizeInBytes"],
-        )
+        (path, d["storageType"], d["pathOrInlineDv"], d.get("offset", 0), d["sizeInBytes"])
         for path, d in ((p, a["deletionVector"]) for p, a in dv_adds.items())
     ]
-    desc_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("st", T.StringType()),
-            T.StructField("blob", T.StringType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("size", T.LongType()),
-        ]
-    )
-    descs = spark.createDataFrame(desc_rows, desc_schema).repartition(
-        max(1, min(len(desc_rows), 32))
-    )
+    descs = spark.createDataFrame(
+        desc_rows, "path string, st string, blob string, offset long, size long"
+    ).repartition(max(1, min(len(desc_rows), 32)))
 
-    def expand(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                desc = {
-                    "storageType": row.st,
-                    "pathOrInlineDv": row.blob,
-                    "offset": int(row.offset),
-                    "sizeInBytes": int(row.size),
-                }
-                idx = load_dv(table_path, desc)
-                yield pd.DataFrame(
-                    {"__dv_file": [row.path] * len(idx), "__dv_idx": idx}
-                )
+    def expand(path, st, blob, offset, size):
+        desc = {"storageType": st, "pathOrInlineDv": blob, "offset": offset, "sizeInBytes": size}
+        return ((path, i) for i in load_dv(table_path, desc))
 
-    return descs.mapInPandas(expand, schema=_DELETED_SCHEMA)
+    return map_rows(descs, descs.columns, _DELETED_SCHEMA, expand)
 
 
 def apply_dvs(

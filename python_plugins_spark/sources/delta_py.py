@@ -1789,7 +1789,7 @@ def delete_delta(
     gets the union of old + new indices (decoded executor-side).
 
     Scale design: the per-file bitmap is built and its sidecar written
-    by ``applyInPandas`` ON THE EXECUTOR holding that file's matched
+    by ``applyInArrow`` ON THE EXECUTOR holding that file's matched
     rows — the driver sees only O(#touched files) descriptor rows, so
     a delete touching a million files never ships row indices through
     the driver. (Single sidecar per file per delete; tiny bitmaps go
@@ -1799,8 +1799,6 @@ def delete_delta(
     rewritten without the matched rows (no reader feature required;
     reads stay pure parquet scans)."""
     from pyspark.sql import functions as F
-
-    from .delta_dv import load_dv, write_dv_file
 
     if mode not in ("dv", "rewrite"):
         raise ValueError(f"mode must be dv|rewrite, got {mode!r}")
@@ -1824,91 +1822,16 @@ def delete_delta(
         matched = live.filter(F.expr(predicate))
 
         new_dv_files: list[str] = []
-        # __file is the BASENAME (uuid-unique); active keys are
-        # table-relative paths (with hive partition dirs) — translate
-        name_to_rel = {os.path.basename(p): p for p in active}
         if mode == "dv":
-            old_descs = {
-                os.path.basename(p): a["deletionVector"]
-                for p, a in active.items()
-                if a.get("deletionVector")
-            }
-
-            desc_schema = T.StructType(
-                [
-                    T.StructField("path", T.StringType()),
-                    T.StructField("desc_json", T.StringType()),
-                ]
-            )
-
-            def build_dv(pdf):
-                import pandas as pd
-
-                fname = pdf["__file"].iloc[0]
-                idx = set(int(i) for i in pdf["__idx"])
-                old = old_descs.get(fname)
-                if old is not None:
-                    idx.update(load_dv(table_path, old))
-                descs = write_dv_file(table_path, {fname: sorted(idx)})
-                return pd.DataFrame(
-                    {"path": [fname], "desc_json": [json.dumps(descs[fname])]}
-                )
-
-            desc_rows = (
-                matched.select("__file", "__idx")
-                .groupBy("__file")
-                .applyInPandas(build_dv, schema=desc_schema)
-                .collect()
-            )
-            if not desc_rows:
+            touched_descs, new_dv_files = _write_dvs(matched, table_path, active)
+            if not touched_descs:
                 return read_version
-            touched_descs = {
-                name_to_rel[r["path"]]: json.loads(r["desc_json"])
-                for r in desc_rows
-            }
-            new_dv_files = [
-                os.path.join(table_path, _dv_sidecar_name(d))
-                for d in touched_descs.values()
-                if d["storageType"] == "u"
-            ]
-
-            actions: list[dict] = []
-            proto = state.protocol or {}
-            rf = set(proto.get("readerFeatures") or [])
-            if proto.get("minReaderVersion", 1) < 3 or "deletionVectors" not in rf:
-                actions.append(
-                    {
-                        "protocol": {
-                            "minReaderVersion": 3,
-                            "minWriterVersion": 7,
-                            "readerFeatures": sorted(rf | {"deletionVectors"}),
-                            "writerFeatures": sorted(
-                                set(proto.get("writerFeatures") or [])
-                                | {"deletionVectors"}
-                            ),
-                        }
-                    }
-                )
-            for p, desc in sorted(touched_descs.items()):
-                old_add = active[p]
-                new_add = {
-                    k: v for k, v in old_add.items() if k != "deletionVector"
-                }
-                new_add["dataChange"] = True
-                new_add["modificationTime"] = now_ms
-                new_add["deletionVector"] = desc
-                actions.append(
-                    {
-                        "remove": {
-                            "path": p,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-                actions.append({"add": new_add})
+            actions = _dv_actions(state, touched_descs, now_ms)
             adds_staged: list[dict] = []
         else:
+            # __file is the BASENAME (uuid-unique); active keys are
+            # table-relative paths (with hive partition dirs) — translate
+            name_to_rel = {os.path.basename(p): p for p in active}
             touched_rows = matched.select("__file").distinct().collect()
             touched = sorted(name_to_rel[r["__file"]] for r in touched_rows)
             if not touched:
@@ -1957,6 +1880,83 @@ def _dv_sidecar_name(desc: dict) -> str:
     from .delta_dv import descriptor_path
 
     return os.path.basename(descriptor_path("", desc))
+
+
+def _write_dvs(
+    matched: DataFrame, table_path: str, active: dict[str, dict]
+) -> tuple[dict[str, dict], list[str]]:
+    """Deletion vectors for the ``(__file, __idx)`` rows of ``matched``:
+    each touched file's bitmap (its matched indices plus its existing
+    DV, if any) is built and its sidecar written by ``applyInArrow`` ON
+    THE EXECUTOR holding that file's rows, so the driver sees only
+    O(#touched files) descriptors. Returns ``({table-relative path:
+    new descriptor}, [new sidecar paths])``."""
+    import pyarrow as pa
+
+    from .delta_dv import load_dv, write_dv_file
+
+    # __file is the BASENAME (uuid-unique); active keys are
+    # table-relative paths (with hive partition dirs) — translate
+    name_to_rel = {os.path.basename(p): p for p in active}
+    old_descs = {
+        os.path.basename(p): a["deletionVector"]
+        for p, a in active.items()
+        if a.get("deletionVector")
+    }
+
+    def build_dv(key, table):
+        fname = key[0].as_py()
+        idx = set(table["__idx"].to_pylist())
+        if fname in old_descs:
+            idx.update(load_dv(table_path, old_descs[fname]))
+        desc = write_dv_file(table_path, {fname: sorted(idx)})[fname]
+        return pa.table({"path": [fname], "desc_json": [json.dumps(desc)]})
+
+    rows = (
+        matched.select("__file", "__idx")
+        .groupBy("__file")
+        .applyInArrow(build_dv, "path string, desc_json string")
+        .collect()
+    )
+    descs = {name_to_rel[r["path"]]: json.loads(r["desc_json"]) for r in rows}
+    sidecars = [
+        os.path.join(table_path, _dv_sidecar_name(d))
+        for d in descs.values()
+        if d["storageType"] == "u"
+    ]
+    return descs, sidecars
+
+
+def _dv_actions(state, touched_descs: dict[str, dict], now_ms: int) -> list[dict]:
+    """The commit actions that put ``touched_descs`` on their files:
+    the ``deletionVectors`` protocol upgrade on first use, then a
+    remove + re-add carrying the new descriptor per touched file."""
+    actions: list[dict] = []
+    proto = state.protocol or {}
+    rf = set(proto.get("readerFeatures") or [])
+    if proto.get("minReaderVersion", 1) < 3 or "deletionVectors" not in rf:
+        actions.append(
+            {
+                "protocol": {
+                    "minReaderVersion": 3,
+                    "minWriterVersion": 7,
+                    "readerFeatures": sorted(rf | {"deletionVectors"}),
+                    "writerFeatures": sorted(
+                        set(proto.get("writerFeatures") or []) | {"deletionVectors"}
+                    ),
+                }
+            }
+        )
+    for p, desc in sorted(touched_descs.items()):
+        new_add = {k: v for k, v in state.active[p].items() if k != "deletionVector"}
+        new_add["dataChange"] = True
+        new_add["modificationTime"] = now_ms
+        new_add["deletionVector"] = desc
+        actions.append(
+            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
+        )
+        actions.append({"add": new_add})
+    return actions
 
 
 # -------------------------------------------------------------- merge
@@ -2513,8 +2513,6 @@ def update_delta(
     small parquet of updated rows plus tiny bitmaps."""
     from pyspark.sql import functions as F
 
-    from .delta_dv import load_dv, write_dv_file
-
     bad = predicate is None or not isinstance(set_exprs, dict) or not set_exprs
     if bad:
         raise ValueError("update_delta needs a predicate and a non-empty set_exprs")
@@ -2559,87 +2557,14 @@ def update_delta(
         if not adds_staged:
             return read_version
 
-        # DVs for the matched rows' OLD positions (union with existing).
-        # __file is the basename; active keys are table-relative paths
-        name_to_rel = {os.path.basename(p): p for p in active}
-        old_descs = {
-            os.path.basename(p): a["deletionVector"]
-            for p, a in active.items()
-            if a.get("deletionVector")
-        }
-        desc_schema = T.StructType(
-            [
-                T.StructField("path", T.StringType()),
-                T.StructField("desc_json", T.StringType()),
-            ]
-        )
-
-        def build_dv(pdf):
-            import pandas as pd
-
-            fname = pdf["__file"].iloc[0]
-            idx = set(int(i) for i in pdf["__idx"])
-            old = old_descs.get(fname)
-            if old is not None:
-                idx.update(load_dv(table_path, old))
-            descs = write_dv_file(table_path, {fname: sorted(idx)})
-            return pd.DataFrame(
-                {"path": [fname], "desc_json": [json.dumps(descs[fname])]}
-            )
-
-        desc_rows = (
-            matched.select("__file", "__idx")
-            .groupBy("__file")
-            .applyInPandas(build_dv, schema=desc_schema)
-            .collect()
-        )
-        if not desc_rows:
+        # DVs for the matched rows' OLD positions (union with existing)
+        touched_descs, new_dv_files = _write_dvs(matched, table_path, active)
+        if not touched_descs:
             # predicate matched nothing after all (race with the write
             # above staging empty parts shouldn't happen, but be safe)
             unstage(table_path, [a["add"]["path"] for a in adds_staged])
             return read_version
-        touched_descs = {
-            name_to_rel[r["path"]]: json.loads(r["desc_json"]) for r in desc_rows
-        }
-        new_dv_files = [
-            os.path.join(table_path, _dv_sidecar_name(d))
-            for d in touched_descs.values()
-            if d["storageType"] == "u"
-        ]
-
-        actions: list[dict] = []
-        proto = state.protocol or {}
-        rf = set(proto.get("readerFeatures") or [])
-        if proto.get("minReaderVersion", 1) < 3 or "deletionVectors" not in rf:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(rf | {"deletionVectors"}),
-                        "writerFeatures": sorted(
-                            set(proto.get("writerFeatures") or [])
-                            | {"deletionVectors"}
-                        ),
-                    }
-                }
-            )
-        for p, desc in sorted(touched_descs.items()):
-            old_add = active[p]
-            new_add = {k: v for k, v in old_add.items() if k != "deletionVector"}
-            new_add["dataChange"] = True
-            new_add["modificationTime"] = now_ms
-            new_add["deletionVector"] = desc
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-            actions.append({"add": new_add})
+        actions = _dv_actions(state, touched_descs, now_ms)
         actions.extend(adds_staged)
 
         commit = os.path.join(_log_path(table_path), f"{read_version + 1:020d}.json")

@@ -1461,13 +1461,13 @@ def test_wrangler_mask_shorter_than_n(spark):
 
 
 def test_row_map_batches():
-    """The codec row map's worker side, without Spark: an empty batch
+    """The Arrow row map's worker side, without Spark: an empty batch
     gives a typed empty batch; a row yields 0, 1 or 4 output rows, in
     order; a Python int fills an IntegerType (int32) field; a null
     payload reaches the row function as None."""
     import pyarrow as pa
 
-    from python_plugins_spark.operators.multimodal import _row_map
+    from python_plugins_spark.operators.transform import _row_map
 
     out_schema = pa.schema([("doc_id", pa.int64()), ("k", pa.int32()), ("payload", pa.binary())])
     seen = []
@@ -2676,6 +2676,19 @@ def test_html_extract_parser_cases():
     assert extract_text("<p>  a\t\tb   c  </p>") == "a b c"
 
 
+def test_extract_text_column_null_id(spark):
+    """The Spark wrapper of the extractor returns one (id, text) row
+    per input row, a NULL id included."""
+    from python_plugins_spark.operators.html_extract import extract_text_column
+
+    df = spark.createDataFrame(
+        [(1, "<p>a &amp; b</p><script>x</script>"), (None, "<b>bold</b> tail")],
+        "doc_id long, html string",
+    )
+    got = {r.doc_id: r.text for r in extract_text_column(df).collect()}
+    assert got == {1: "a & b", None: "bold tail"}
+
+
 def test_zipf_and_jsd_against_pure_python(spark):
     """Both corpus statistics recomputed with Counters/math only."""
     import math
@@ -3151,14 +3164,15 @@ def test_flac_truncation_always_valueerror():
 
 def test_blocklist_null_text_and_empty_phrases(spark):
     """NULL text counts as zero hits / not blocked on BOTH paths
-    (the expression path coalesces; the ac path coerces) — and an
-    empty phrase list refuses loudly instead of IndexError (ADVICE r7)."""
+    (the expression path coalesces; the ac path coerces), a NULL id
+    gets its row on both paths — and an empty phrase list refuses
+    loudly instead of IndexError (ADVICE r7)."""
     import pytest
 
     from python_plugins_spark.operators.blocklist import blocklist_counts
 
     df = spark.createDataFrame(
-        [(0, "a cab ride"), (1, None), (2, "")],
+        [(0, "a cab ride"), (1, None), (2, ""), (None, "cab")],
         "doc_id long, text string",
     )
     sub = ["cab", "ride"]
@@ -3167,7 +3181,9 @@ def test_blocklist_null_text_and_empty_phrases(spark):
             r.doc_id: (r.hits_total, r.n_phrases_hit, r.blocked)
             for r in blocklist_counts(df, sub, mode=mode).collect()
         }
-        assert got == {0: (2, 2, True), 1: (0, 0, False), 2: (0, 0, False)}, mode
+        assert got == {
+            0: (2, 2, True), 1: (0, 0, False), 2: (0, 0, False), None: (1, 1, True),
+        }, mode
     for mode in ("expr", "ac"):
         with pytest.raises(ValueError, match="non-empty"):
             blocklist_counts(df, [], mode=mode)
@@ -3176,25 +3192,28 @@ def test_blocklist_null_text_and_empty_phrases(spark):
 def test_robots_filter_null_policy(spark):
     """NULL robots_txt is a clean per-row ALLOW (RFC 9309 §2.3.1.3:
     unavailable policy file -> may access any resource); a NULL path is
-    a loud per-row ValueError naming the column (ADVICE r7)."""
+    a loud per-row ValueError naming the column (ADVICE r7). Carried
+    columns pass through exactly: a nullable long above 2**53 keeps
+    its value, and its NULL stays NULL."""
     import pytest
 
     from python_plugins_spark.operators.robots import robots_filter
 
+    big = 2**53 + 1
     df = spark.createDataFrame(
         [
-            (0, "/a/x", "User-agent: *\nDisallow: /a"),
-            (1, "/a/x", None),
-            (2, "/open", None),
+            (0, "/a/x", "User-agent: *\nDisallow: /a", big),
+            (1, "/a/x", None, None),
+            (2, "/open", None, 7),
         ],
-        "doc_id long, path string, robots_txt string",
-    )
-    got = {r.doc_id: r.allowed for r in robots_filter(df).collect()}
-    assert got == {0: False, 1: True, 2: True}
+        "doc_id long, path string, robots_txt string, n long",
+    ).coalesce(1)  # one batch holds the big value and the NULL
+    got = {r.doc_id: (r.allowed, r.n) for r in robots_filter(df).collect()}
+    assert got == {0: (False, big), 1: (True, None), 2: (True, 7)}
 
     bad = spark.createDataFrame(
-        [(9, None, "User-agent: *\nDisallow: /a")],
-        "doc_id long, path string, robots_txt string",
+        [(9, None, "User-agent: *\nDisallow: /a", None)],
+        "doc_id long, path string, robots_txt string, n long",
     )
     with pytest.raises(Exception, match="NULL 'path'"):
         robots_filter(bad).collect()
@@ -3571,24 +3590,28 @@ def test_select_crawl_delay_rfc_group_selection():
 def test_robots_extras_operator(spark):
     """The Spark wrapper: sitemaps + group-selected delay per row,
     NULL policy text yields empty extras (RFC 9309 unavailable-policy:
-    nothing binds), carried columns pass through."""
+    nothing binds), carried columns pass through exactly (a nullable
+    long above 2**53 and its NULL)."""
     from python_plugins_spark.operators.robots import robots_extras
 
+    big = 2**53 + 1
     rows = [
         (
             1,
             "Sitemap: https://x.example/s.xml\nUser-agent: graftbot\n"
             "Crawl-delay: 1.5\nDisallow: /x\n",
+            big,
         ),
-        (2, None),
+        (2, None, None),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, robots_txt string")
+    df = spark.createDataFrame(rows, "doc_id long, robots_txt string, n long").coalesce(1)
     got = {
         r.doc_id: r
         for r in robots_extras(
-            df, "robots_txt", agent="graftbot/1.0", carry=["doc_id"]
+            df, "robots_txt", agent="graftbot/1.0", carry=["doc_id", "n"]
         ).collect()
     }
+    assert got[1].n == big and got[2].n is None
     assert got[1].sitemaps == ["https://x.example/s.xml"]
     assert got[1].n_sitemaps == 1 and got[1].crawl_delay == 1.5
     assert got[2].sitemaps == [] and got[2].n_sitemaps == 0

@@ -1427,10 +1427,11 @@ def test_pipeline_langid_and_repetition_stages(spark, tmp_path):
 def test_pipeline_streaming_crawl_ingest(spark, tmp_path):
     """The crawl front-door stages are STREAMING-capable: the same
     warc_extract -> sql -> robots_filter -> html_extract ->
-    nfc_normalize chain runs over a streaming file source (mapInPandas
-    and pandas UDFs are narrow, so the chain needs no state), draining
-    to the expected surviving rows — continuous ingestion of landing
-    archives with zero changes to the stage implementations."""
+    nfc_normalize chain runs over a streaming file source (Arrow row
+    maps and a scalar pandas UDF are narrow, so the chain needs no
+    state), draining to the expected surviving rows — continuous
+    ingestion of landing archives with zero changes to the stage
+    implementations."""
     from python_plugins_spark.operators import warc as W
 
     rows = [

@@ -660,8 +660,10 @@ def test_codec_queries_plan_shapes(spark, sf_dir):
         shuffling would move the corpus; parallelism comes from input
         splits, which a real crawl store has plenty of.
 
-    (c) every query that reaches a codec map runs it on ``mapInArrow``
-        and never on ``mapInPandas``."""
+    (c) every query that reaches a per-row Python map (codec, crawl,
+        tokenizer, Delta deletion vectors) runs it on ``mapInArrow``
+        and never on ``mapInPandas``; no grouped map runs on
+        ``applyInPandas``."""
     from python_plugins_spark.plans import physical_plan, plan_str
     from python_plugins_spark.queries import QUERIES
 
@@ -703,10 +705,10 @@ def test_codec_queries_plan_shapes(spark, sf_dir):
         assert "Exchange" not in plan, f"{name} shuffles payload rows"
         assert "CartesianProduct" not in plan, name
 
-    # (c) every codec synthesizer, decoder and fingerprinter is one
-    # Arrow row map (multimodal.map_rows): no pandas step. Three of
-    # these queries checkpoint or write the hashed frame while they
-    # build, so the plans of the executions the build ran count too.
+    # (c) every per-row map is one Arrow row map (transform.map_rows)
+    # and every grouped writer one applyInArrow: no pandas step. Some
+    # of these queries checkpoint, write or commit while they build,
+    # so the plans of the executions the build ran count too.
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark._jsparkSession.sparkContext().listenerBus()
 
@@ -718,7 +720,7 @@ def test_codec_queries_plan_shapes(spark, sf_dir):
         execs = store.executionsList(int(store.executionsCount()) - n, n) if n else None
         return [execs.apply(i) for i in range(n)]
 
-    for name in CODEC_MAP_QUERIES:
+    for name in ROW_MAP_QUERIES:
         before = max((int(e.executionId()) for e in newest_executions()), default=-1)
         df = QUERIES[name](spark, sf_dir)
         plans = [physical_plan(df)] + [
@@ -728,9 +730,12 @@ def test_codec_queries_plan_shapes(spark, sf_dir):
         ]
         assert any("MapInArrow" in p for p in plans), f"{name}: no MapInArrow"
         assert not any("MapInPandas" in p for p in plans), f"{name}: MapInPandas"
+        assert not any("FlatMapGroupsInPandas" in p for p in plans), (
+            f"{name}: FlatMapGroupsInPandas"
+        )
 
 
-CODEC_MAP_QUERIES = (
+ROW_MAP_QUERIES = (
     "multimodal_fake_decode",
     "multimodal_wav_rms_real",
     "image_bmp_patch_real",
@@ -750,6 +755,20 @@ CODEC_MAP_QUERIES = (
     "audio_fingerprint_dedup",
     "audio_spectral_dedup",
     "video_fingerprint_dedup",
+    # crawl
+    "html_text_extract_docs",
+    "warc_extract_records",
+    "warc_file_source_scan",
+    "warc_binary_routing",
+    "robots_filter_urls",
+    "robots_extras_policy",
+    "crawl_pipeline_end_to_end",
+    "crawl_frontier_schedule",
+    # tokenizer
+    "bpe_encode_docs",
+    "training_shard_files_end_to_end",
+    # Delta deletion vectors
+    "delta_deletion_vector_read",
 )
 
 
